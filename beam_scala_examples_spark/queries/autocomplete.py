@@ -13,11 +13,14 @@ replacement for the reference's hand-rolled fanout (SURVEY §4).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.text import all_prefixes, tokenize
 from ..operators.topk import top_k_per_key
+from ..session import hold
 from ..tables import load
 
 TOP_K = 3  # reference default is 10; fixture vocabulary is small
@@ -58,11 +61,6 @@ def q05_autocomplete_branches(spark: SparkSession, sf_dir: str) -> DataFrame:
     return small.unionByName(large)
 
 
-# Persisted per-level tops of the last recursive run; popped and
-# unpersisted on the next call (same discipline as llmdata's caches).
-_RECURSIVE_CACHE: dict = {}
-
-
 def q05_autocomplete_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3 — the reference's *recursive* top-K
     (``complete/AutoComplete.scala:263-321``, "cheaper but higher
@@ -82,15 +80,23 @@ def q05_autocomplete_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles of ≤ K·|prefixes_L| rows — the reference's documented
     latency/cost tradeoff, useful when the prefix fan-out dominates.
     """
-    for df in _RECURSIVE_CACHE.pop("levels", []):
-        df.unpersist(blocking=False)
+    # the dictionary and every level stay persisted until the next call
+    levels = hold(
+        "minhash/autocomplete_levels", lambda: _recursive_levels(spark, sf_dir)
+    )[1:]
+    if not levels:
+        return spark.createDataFrame([], "prefix string, word string, cnt long")
+    return reduce(DataFrame.unionByName, levels)
 
+
+def _recursive_levels(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
+    """The persisted word dictionary, then each level's persisted top-K
+    from the longest prefix length down to 1."""
     docs = load(spark, sf_dir, "documents")
     # Round 11 (guide §2.1): every level's ``exact`` branch re-derived
     # the tokenize + groupBy dictionary from the corpus (max_len parquet
     # scans — 44 in the before-plan); the aggregated dictionary is
-    # O(vocab) small, so pin it once per call (released with the levels
-    # on the next call).
+    # O(vocab) small, so pin it once per call.
     counts = (
         tokenize(docs, "text")
         .groupBy("word")
@@ -101,7 +107,6 @@ def q05_autocomplete_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     persisted: list[DataFrame] = [counts]
     tops: DataFrame | None = None  # winners at level L+1
-    out: DataFrame | None = None
     for level_len in range(max_len, 0, -1):
         exact = counts.filter(F.length("word") == level_len)
         cand = exact if tops is None else tops.select("word", "cnt").unionByName(exact)
@@ -119,11 +124,7 @@ def q05_autocomplete_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         persisted.append(level)
         tops = level
-        out = level if out is None else out.unionByName(level)
-    _RECURSIVE_CACHE["levels"] = persisted
-    if out is None:
-        return spark.createDataFrame([], "prefix string, word string, cnt long")
-    return out
+    return persisted
 
 
 QUERIES = {

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import hold, memo
 from ..tables import load
 from .llmdata import (
     _DUCK_H,
@@ -72,12 +73,6 @@ NB_LEN_BUCKET = 8        # n_tokens div 8, capped at 16 buckets
 NB_LEN_CAP = 16
 DSIR_BUCKETS = 1024      # hashed-bigram feature space
 DSIR_SAMPLE_K = 100
-
-# Session memos (the winnow_prints_memo lifecycle, released by
-# session.clear_session_memos): one NB training pass / one DSIR LM
-# build per (applicationId, sf_dir), shared by every consumer.
-_CLS_MEMO: dict = {}
-_DSIR_W_MEMO: dict = {}
 
 
 # --------------------------------------------------------------------------
@@ -284,14 +279,11 @@ def text_quality_nb_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     property that makes the cheap-model sweep over the other 99% of a
     100 TB corpus worth running.
 
-    Session-memoized (the ``winnow_prints_memo`` idiom): four
-    registered consumers (classify, confusion, calibration, the
-    model-gated corpus build) share ONE training pass per
-    (application, sf_dir); the persisted relation is the slim eval-
-    split prediction table.  Released by
-    ``session.clear_session_memos``."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    if key not in _CLS_MEMO:
+    A session memo: four registered consumers (classify, confusion,
+    calibration, the model-gated corpus build) share ONE training pass;
+    the persisted relation is the slim eval-split prediction table."""
+
+    def build() -> DataFrame:
         docs = load(spark, sf_dir, "documents")
         train = docs.filter(F.expr(_TRAIN_PRED_SPARK))
         eval_docs = docs.filter(~F.expr(_TRAIN_PRED_SPARK))
@@ -300,12 +292,13 @@ def text_quality_nb_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         truth = quality_label(eval_docs).select(
             "doc_id", F.col("label").alias("label_true")
         )
-        _CLS_MEMO[key] = (
+        return (
             preds.join(truth, "doc_id")
             .select("doc_id", "label_true", "label_pred", "margin_mu")
             .persist()
         )
-    return _CLS_MEMO[key]
+
+    return memo("nb_classifier/preds", spark, sf_dir, build)
 
 
 QUERIES["text_quality_nb_classify"] = text_quality_nb_classify
@@ -503,18 +496,6 @@ def dsir_bucket_counts(docs: DataFrame) -> DataFrame:
     )
 
 
-# last persisted bucket-count DataFrame PER CONSUMER (the
-# dedup_minhash_pairs bounded-cache idiom: the relation feeds THREE
-# legs — raw LM, target LM, per-doc weights — and without a persist
-# each leg re-runs the tokenize+explode; measured 8.5 s -> lower at
-# 16x inflation).  Round-9 ADVICE fix: a single slot made interleaved
-# consumers (the batch memo and live DsirIngestSink.weights() serves)
-# unpersist each other's relation — each consumer now replaces only
-# its OWN previous persist; the dict stays bounded by live consumers
-# and clear_session_memos() releases them all.
-_DSIR_CACHE: dict = {}
-
-
 def dsir_weights_from_counts(
     bbc: DataFrame, reg: DataFrame, cache_key="batch"
 ) -> DataFrame:
@@ -523,13 +504,11 @@ def dsir_weights_from_counts(
     registry.  Builds the target (label = 'keep') and raw bucket LMs,
     then each doc's Laplace-smoothed log importance ratio — used by
     the batch query AND served from the streaming sink's merged logs,
-    so the two are equal by construction.  ``cache_key`` scopes the
-    persisted three-leg intermediate to the calling consumer."""
-    prev = _DSIR_CACHE.pop(cache_key, None)
-    if prev is not None:
-        prev.unpersist(blocking=False)
-    bbc = bbc.persist()
-    _DSIR_CACHE[cache_key] = bbc
+    so the two are equal by construction.  ``bbc`` feeds three legs
+    (raw LM, target LM, per-doc weights), so it is persisted and held
+    per ``cache_key``: each consumer (the batch memo, each live
+    ``DsirIngestSink``) replaces only its own previous relation."""
+    bbc = hold(f"dsir_counts/{cache_key}", bbc.persist)
     keepers = reg.filter("label = 'keep'").select("doc_id")
     rcnt = bbc.groupBy("b").agg(F.sum("c").alias("r"))
     tcnt = (
@@ -602,16 +581,16 @@ def sample_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized legs are the bigram explode and ONE map-side-combined
     per-doc aggregate.
 
-    Session-memoized like the classifier: the weight relation (O(docs)
-    slim rows — the winnow-prints size class) feeds both the weights
-    query and the resample; one LM build per (application, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    if key not in _DSIR_W_MEMO:
+    A session memo like the classifier: the weight relation (O(docs)
+    slim rows) feeds both the weights query and the resample."""
+
+    def build() -> DataFrame:
         docs = load(spark, sf_dir, "documents")
-        _DSIR_W_MEMO[key] = dsir_weights_from_counts(
+        return dsir_weights_from_counts(
             dsir_bucket_counts(docs), dsir_doc_registry(docs)
         ).persist()
-    return _DSIR_W_MEMO[key]
+
+    return memo("dsir_weights/weights", spark, sf_dir, build)
 
 
 QUERIES["sample_dsir_weights"] = sample_dsir_weights

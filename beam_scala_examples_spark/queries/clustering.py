@@ -40,6 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import hold, memo
 from ..tables import load
 from .llmdata import EMB_DIM
 
@@ -82,29 +83,16 @@ def _assign(emb: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFra
     )
 
 
-# keeps the repartitioned corpus cached for the lifetime of the returned
-# plan (same pattern as llmdata._MINHASH_CACHE); re-running the query
-# pops the stale entry so the ContextCleaner reclaims the old blocks
-_KM_CACHE: dict[str, DataFrame] = {}
-
-# Session-level memo for the deterministic trainers: every call site
-# trains on the identical relation (the full embeddings table at
-# sf_dir), so the result is a pure function of (trainer, sf_dir) —
-# plain Python lists, no Spark state.  Twins of the same rung
-# (sim_*_topk / sim_*_recall) and composite reports retrained identical
-# codebooks each call, which made the iterative Lloyd job chains the
-# dominant — and noisiest — cost in the bench (round-3 verdict:
-# sim_ivfpq_recall swung 2.9 s <-> 11.1 s on identical code).  Training
-# once per session is also the honest serving posture: an index is
-# trained once and queried many times.
-_TRAIN_MEMO: dict = {}
-
-
-def _trained(kind: str, sf_dir: str, trainer, emb: DataFrame):
-    key = (kind, sf_dir.rstrip("/"))
-    if key not in _TRAIN_MEMO:
-        _TRAIN_MEMO[key] = trainer(emb)
-    return _TRAIN_MEMO[key]
+def _trained(kind: str, spark: SparkSession, sf_dir: str, trainer,
+             emb: DataFrame):
+    """The codebook ``trainer(emb)`` fits on the sf_dir embeddings, a
+    session memo: every call site trains on the identical relation, so
+    twins of the same rung (sim_*_topk / sim_*_recall) and composite
+    reports share one deterministic training — an index is trained once
+    and queried many times.  Plain Python lists, no Spark state."""
+    return memo(
+        f"trained_codebooks/{kind}", spark, sf_dir, lambda: trainer(emb)
+    )
 
 
 def _kmeans_train(emb: DataFrame) -> list[tuple[int, list[float]]]:
@@ -140,53 +128,35 @@ def _kmeans_train(emb: DataFrame) -> list[tuple[int, list[float]]]:
 
 def _emb_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The slim (vec_id, embedding) corpus, repartitioned and persisted
-    ONCE per (application, sf_dir).
-
-    Round 9: emb_kmeans and emb_outliers each rebuilt (unpersist +
-    repartition + persist) this identical relation PER CALL — measured
-    ~0.4 s/call of pure cache churn at sf0.1, and the round-8 bench
-    band flags traced to exactly this (per-query timings depended on
-    which consumer had last replaced the persist).  The corpus is
-    deterministic per sf_dir, so it is a true memo: every trainer /
-    assigner / outlier pass serves from one persisted copy;
-    ``session.clear_session_memos`` releases it.  The corpus is
-    scanned 2*ITERS+1 times by Lloyd alone and the source may be a
-    single parquet file — spreading it across the cluster once is the
-    posture that holds at 100x.  Safe under README rule 3: every
+    as a session memo: every trainer / assigner / outlier pass serves
+    from one copy, and Lloyd alone scans it 2*ITERS+1 times from what
+    may be a single parquet file.  Safe under README rule 3: every
     recompute sums exact fixed-point longs, bit-identical across
     partitionings."""
-    key = ("corpus", spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    if key not in _KM_CACHE:
-        _KM_CACHE[key] = (
+    return memo(
+        "kmeans_corpora/corpus", spark, sf_dir,
+        lambda: (
             load(spark, sf_dir, "embeddings")
             .select("vec_id", "embedding")
             .repartition(spark.sparkContext.defaultParallelism, "vec_id")
             .persist()
-        )
-    return _KM_CACHE[key]
+        ),
+    )
 
 
 def _km_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cluster, embedding) under the TRAINED kmeans codebook,
-    persisted once per (application, sf_dir).
+    a session memo: eight consumers (kmeans / outliers / balance /
+    purity / the IVF and PRF rungs) share one Arrow assignment pass,
+    the most variable leg in a query's time; downstream reads are pure
+    JVM passes over the cached rows."""
 
-    Round 9: eight consumers (kmeans / outliers / balance / purity /
-    the IVF and PRF rungs) each re-ran the Arrow assignment pass per
-    call — and that pandas-UDF leg's Python-worker scheduling is the
-    bench's largest variance source (bench_detail's memo_state traced
-    the round-8 band flags to exactly this).  The assignment is
-    deterministic (memoized codebook, README-rule-3 exact distance),
-    so one pass serves every consumer; downstream reps are pure JVM
-    passes over the cached rows.  ``clear_session_memos`` releases
-    it with the rest of _KM_CACHE."""
-    key = (
-        "kmassign", spark.sparkContext.applicationId, sf_dir.rstrip("/")
-    )
-    if key not in _KM_CACHE:
+    def build() -> DataFrame:
         emb = _emb_corpus(spark, sf_dir)
-        cents = _trained("kmeans", sf_dir, _kmeans_train, emb)
-        _KM_CACHE[key] = _assign(emb, cents).persist()
-    return _KM_CACHE[key]
+        cents = _trained("kmeans", spark, sf_dir, _kmeans_train, emb)
+        return _assign(emb, cents).persist()
+
+    return memo("kmeans_corpora/kmassign", spark, sf_dir, build)
 
 
 def _ivf_stride_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -219,21 +189,13 @@ def _ivf_stride_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_stride_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, cid) under the STRIDE coarse quantizer, persisted once
-    per (application, sf_dir) — the inverted-list index the stride-IVF
-    rungs serve from.
+    """(vec_id, cid) under the STRIDE coarse quantizer — the
+    inverted-list index the stride-IVF rungs serve from, a session memo:
+    the corpus x centroids argmax (a BroadcastNestedLoopJoin plus a wide
+    aggregate) is index build, not serve work, shared by
+    ``sim_ivf_topk``, ``sim_ivfpq_topk`` and their recall twins."""
 
-    Round 11 (guide §1.2/§2.4): ``sim_ivf_topk`` and ``sim_ivfpq_topk``
-    each re-ran the corpus x centroids argmax (a BroadcastNestedLoopJoin
-    plus a wide aggregate) on EVERY serve rep, inside every recall twin
-    — the assignment is a pure deterministic function of the corpus, so
-    it is index build, not serve work.  Same memo/lifecycle pattern as
-    ``_km_assigned`` (the trained-cell twin); priced as a train leg in
-    ``bench.train_warmup``; ``session.clear_session_memos`` releases it."""
-    key = (
-        "ivfstride", spark.sparkContext.applicationId, sf_dir.rstrip("/")
-    )
-    if key not in _KM_CACHE:
+    def build() -> DataFrame:
         from .llmdata import _SPARK_DOT
 
         emb = _emb_corpus(spark, sf_dir)
@@ -241,7 +203,7 @@ def _ivf_stride_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
         base = emb.select("vec_id", "embedding", norm.alias("nrm"))
         cent = _ivf_stride_cents(spark, sf_dir)
         cdot = F.expr(_SPARK_DOT.format(a="embedding", b="ce"))
-        _KM_CACHE[key] = (
+        return (
             base.join(F.broadcast(cent))
             .select(
                 "vec_id",
@@ -258,35 +220,28 @@ def _ivf_stride_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .persist()
         )
-    return _KM_CACHE[key]
+
+    return memo("kmeans_corpora/ivfstride", spark, sf_dir, build)
 
 
 def _pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, m, pqc): the exploded PQ code relation under the session
-    codebooks, persisted once per (application, sf_dir).
+    codebooks, a session memo: the codes are the stored index (a
+    production store encodes once at ingest), so every PQ rung
+    (sim_pq_topk, sim_ivfpq_topk, both trained twins, the re-rank sweep
+    and their recall twins) reads this slim 3-int relation instead of
+    re-running the Arrow encode kernel."""
 
-    Round 11 (guide §1.2/§4): every PQ rung (sim_pq_topk,
-    sim_ivfpq_topk, both trained twins, the re-rank sweep — plus each
-    one's recall twin) re-ran the ArrowEvalPython encode kernel over
-    the corpus per serve rep.  The codes ARE the stored index — a
-    production store encodes once at ingest and scans the integer code
-    column at serve — so the encode is priced as a train leg
-    (``bench.train_warmup``) and every serve plan reads this slim
-    3-int relation from the block cache.  Deterministic (memoized
-    codebooks, exact argmin), so rebuilds are bit-identical;
-    ``session.clear_session_memos`` releases it."""
-    key = (
-        "pqcodes", spark.sparkContext.applicationId, sf_dir.rstrip("/")
-    )
-    if key not in _KM_CACHE:
+    def build() -> DataFrame:
         emb = _emb_corpus(spark, sf_dir)
-        cents = _trained("pq", sf_dir, _pq_train, emb)
-        _KM_CACHE[key] = (
+        cents = _trained("pq", spark, sf_dir, _pq_train, emb)
+        return (
             _pq_encode(emb, cents)
             .select("vec_id", F.posexplode("codes").alias("m", "pqc"))
             .persist()
         )
-    return _KM_CACHE[key]
+
+    return memo("kmeans_corpora/pqcodes", spark, sf_dir, build)
 
 
 def emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -383,16 +338,12 @@ def dedup_semantic_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign = emb_kmeans(spark, sf_dir)
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    prev = _KM_CACHE.pop("sem_base", None)
-    if prev is not None:
-        prev.unpersist()
     # The self-join references this subplan twice and AQE does not reuse
     # query stages across self-join aliases — persist the assigned base
     # so the (Arrow-kernel) final assignment pass runs once, not twice.
-    base = emb.join(assign, "vec_id").select(
+    base = hold("kmeans_corpora/sem_base", emb.join(assign, "vec_id").select(
         "vec_id", "cluster", "embedding", norm.alias("nrm")
-    ).persist()
-    _KM_CACHE["sem_base"] = base
+    ).persist)
     a = base.alias("a")
     b = base.alias("b")
     dot = F.expr(_SPARK_DOT.format(a="a.embedding", b="b.embedding"))
@@ -651,33 +602,25 @@ def _pca_power(cov: DataFrame) -> DataFrame:
 
 
 def _pca_cov_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 64x64 covariance relation, built once per (application,
-    sf_dir).
-
-    Round 11 (guide §1.2 build-vs-serve): FOUR consumers (the top-
-    component, projection, variance-explained and ABTT queries) each
-    re-ran the corpus Gram — a DIM²-fanout self-join over the whole
-    embedding table — per call.  The covariance (like the eigenvector
-    below) is a fitted model artifact: a production pipeline fits the
-    PCA basis once per corpus and applies it everywhere, exactly the
-    kmeans/PQ-codebook posture (``_trained``), so the build is priced
-    as a train leg in ``bench.train_warmup``.  localCheckpoint-backed
-    (already materialized — no extra persist); keyed by (applicationId,
-    sf_dir); ``session.clear_session_memos`` releases the entry."""
-    key = ("pcacov", spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    if key not in _KM_CACHE:
-        _KM_CACHE[key] = _pca_cov(spark, sf_dir)
-    return _KM_CACHE[key]
+    """The 64x64 covariance relation, a session memo: four consumers
+    (the top-component, projection, variance-explained and ABTT
+    queries) share the corpus Gram, a DIM²-fanout self-join, and the
+    covariance is a fitted model artifact like the kmeans/PQ codebooks
+    (``_trained``).  localCheckpoint-backed, so no extra persist."""
+    return memo(
+        "kmeans_corpora/pcacov", spark, sf_dir,
+        lambda: _pca_cov(spark, sf_dir),
+    )
 
 
 def _pca_v_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fixed-point top eigenvector (dim, v_micro), computed once per
-    (application, sf_dir) over the memoized covariance — the other half
-    of the fitted PCA artifact (see ``_pca_cov_memo``)."""
-    key = ("pcav", spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    if key not in _KM_CACHE:
-        _KM_CACHE[key] = _pca_power(_pca_cov_memo(spark, sf_dir))
-    return _KM_CACHE[key]
+    """The fixed-point top eigenvector (dim, v_micro) over the memoized
+    covariance — the other half of the fitted PCA artifact (see
+    ``_pca_cov_memo``)."""
+    return memo(
+        "kmeans_corpora/pcav", spark, sf_dir,
+        lambda: _pca_power(_pca_cov_memo(spark, sf_dir)),
+    )
 
 
 def emb_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1165,7 +1108,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _emb_corpus(spark, sf_dir)
 
-    cents = _trained("pq", sf_dir, _pq_train, emb)
+    cents = _trained("pq", spark, sf_dir, _pq_train, emb)
     codes = _pq_codes(spark, sf_dir).select(
         "vec_id", "m", F.col("pqc").alias("cid")
     )
@@ -1450,7 +1393,7 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # PQ codebooks + codes (identical trainer/encoder to sim_pq_topk;
     # codes served from the persisted session index — round 11)
-    cents = _trained("pq", sf_dir, _pq_train, emb)
+    cents = _trained("pq", spark, sf_dir, _pq_train, emb)
     codes = _pq_codes(spark, sf_dir)
     cdf = spark.createDataFrame(
         [(m, cid, vec) for m, lst in cents.items() for cid, vec in lst],
@@ -1651,7 +1594,7 @@ def sim_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.topk import top_k_per_key
 
     emb = _emb_corpus(spark, sf_dir)
-    cents = _trained("kmeans", sf_dir, _kmeans_train, emb)
+    cents = _trained("kmeans", spark, sf_dir, _kmeans_train, emb)
     assign = _km_assigned(spark, sf_dir)  # (vec_id, cluster, embedding)
     norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
     assign = assign.select(
@@ -1827,7 +1770,7 @@ def _filtered_ivf_for(
     from ..operators.topk import top_k_per_key
 
     emb = _emb_corpus(spark, sf_dir)
-    cents = _trained("kmeans", sf_dir, _kmeans_train, emb)
+    cents = _trained("kmeans", spark, sf_dir, _kmeans_train, emb)
     norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
     assign = (
         _km_assigned(spark, sf_dir)
@@ -1968,7 +1911,7 @@ def sim_filtered_selectivity_sweep(
     from ..operators.topk import top_k_per_key
 
     emb = _emb_corpus(spark, sf_dir)
-    cents = _trained("kmeans", sf_dir, _kmeans_train, emb)
+    cents = _trained("kmeans", spark, sf_dir, _kmeans_train, emb)
     norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
     allowed = (
         load(spark, sf_dir, "documents")
@@ -2197,7 +2140,7 @@ def sim_filtered_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     if groups["ivf"]:
-        cents = _trained("kmeans", sf_dir, _kmeans_train, emb)
+        cents = _trained("kmeans", spark, sf_dir, _kmeans_train, emb)
         allowed = docs.filter(
             F.col("lang").isin(groups["ivf"])
         ).select("lang", F.col("doc_id").alias("vec_id"))
@@ -2455,14 +2398,14 @@ def _ivfpq_trained_scored(spark: SparkSession, sf_dir: str):
 
     emb = _emb_corpus(spark, sf_dir)
 
-    kcents = _trained("kmeans", sf_dir, _kmeans_train, emb)
+    kcents = _trained("kmeans", spark, sf_dir, _kmeans_train, emb)
     assign = _km_assigned(spark, sf_dir).select("vec_id", "cluster")
     kdf = spark.createDataFrame(
         [(cid, vec) for cid, vec in kcents],
         "cluster bigint, kc array<double>",
     )
 
-    pqcents = _trained("pq", sf_dir, _pq_train, emb)
+    pqcents = _trained("pq", spark, sf_dir, _pq_train, emb)
     codes = _pq_codes(spark, sf_dir)
     cdf = spark.createDataFrame(
         [(m, cid, vec) for m, lst in pqcents.items() for cid, vec in lst],
@@ -2682,7 +2625,7 @@ def sim_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.topk import top_k_per_key
 
     emb = _emb_corpus(spark, sf_dir)
-    kcents = _trained("kmeans", sf_dir, _kmeans_train, emb)
+    kcents = _trained("kmeans", spark, sf_dir, _kmeans_train, emb)
     norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
     assign = _km_assigned(spark, sf_dir).select(
         "vec_id", "cluster", "embedding", norm.alias("nrm")
@@ -2867,7 +2810,7 @@ def emb_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: centroids broadcast (KM_K rows), one narrow corpus pass,
     top-N rides WindowGroupLimit/TakeOrdered."""
     emb = _emb_corpus(spark, sf_dir)
-    cents = _trained("kmeans", sf_dir, _kmeans_train, emb)
+    cents = _trained("kmeans", spark, sf_dir, _kmeans_train, emb)
     assign = _km_assigned(spark, sf_dir).select("vec_id", "cluster", "embedding")
     cdf = spark.createDataFrame(
         [(cid, vec) for cid, vec in cents],
@@ -2977,7 +2920,7 @@ def sim_pq_rerank_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical relation (guide §5.3)
     emb = _emb_corpus(spark, sf_dir)
 
-    cents = _trained("pq", sf_dir, _pq_train, emb)
+    cents = _trained("pq", spark, sf_dir, _pq_train, emb)
     codes = _pq_codes(spark, sf_dir).select(
         "vec_id", "m", F.col("pqc").alias("cid")
     )
@@ -3414,7 +3357,7 @@ def sim_range_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _emb_corpus(spark, sf_dir)
-    cents = _trained("kmeans", sf_dir, _kmeans_train, emb)
+    cents = _trained("kmeans", spark, sf_dir, _kmeans_train, emb)
     norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
     assign = _km_assigned(spark, sf_dir).select(
         "vec_id", "cluster", "embedding", norm.alias("nrm")
@@ -3914,7 +3857,7 @@ def sim_prf_expand_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: centroids are bounded (KM_K rows) and broadcast; the corpus
     leg is the k-means assignment (one narrow Arrow pass, shared with
-    every trained rung via ``_TRAIN_MEMO``) filtered to probed cells —
+    every trained rung via ``_trained``) filtered to probed cells —
     the corpus is never fully scored; top-k rides WindowGroupLimit.
     Measured recall vs the exact PRF ranking: ``sim_prf_ivf_recall``
     (docs/SCALE.md)."""
@@ -3928,7 +3871,7 @@ def _prf_serve_ivf(
     (see :func:`_prf_rerank_exact` for why the centroid is a
     parameter)."""
     emb = _emb_corpus(spark, sf_dir)
-    cents = _trained("kmeans", sf_dir, _kmeans_train, emb)
+    cents = _trained("kmeans", spark, sf_dir, _kmeans_train, emb)
     assign = _km_assigned(spark, sf_dir)  # (vec_id, cluster, embedding)
     # cell means quantized by the SAME fixed-scale rounding as the
     # query centroid — Spark round() (HALF_UP) == DuckDB round() (half
@@ -4116,7 +4059,7 @@ def sim_prf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.topk import top_k_per_key
 
     emb = _emb_corpus(spark, sf_dir)
-    cents = _trained("kmeans", sf_dir, _kmeans_train, emb)
+    cents = _trained("kmeans", spark, sf_dir, _kmeans_train, emb)
     assign = _km_assigned(spark, sf_dir)
     # round 12 (guide §2.1): ONE Rocchio centroid (checkpointed,
     # O(queries) rows) feeds the probe ranking, the candidate scan AND

@@ -35,6 +35,7 @@ from pyspark.sql.window import Window
 
 from ..operators.carry import sharded_prefix_sum, sharded_row_number
 from ..operators.topk import top_k_per_key
+from ..session import hold, memo
 from ..tables import load
 
 # --------------------------------------------------------------------------
@@ -47,9 +48,8 @@ _rng = random.Random(42)
 MH_A = [(_rng.randrange(1, 1 << 20) | 1) for _ in range(N_HASHES)]
 MH_B = [_rng.randrange(0, MH_P) for _ in range(N_HASHES)]
 
-JACCARD_THRESHOLD = 0.3
-# last persisted signature DataFrame (see dedup_minhash_pairs docstring)
-_MINHASH_CACHE: dict = {}
+JACCARD_THRESHOLD_PCT = 30  # exact integer percent, for integer guards
+JACCARD_THRESHOLD = JACCARD_THRESHOLD_PCT / 100
 TOPK_NEIGHBORS = 5
 N_QUERY_VECS = 10
 EMB_DIM = 64
@@ -163,37 +163,24 @@ def minhash_buckets(docs: DataFrame) -> DataFrame:
 
 
 def _minhash_sig_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The (doc_id, m0..m15) MinHash signature STORE, persisted once per
-    (application, sf_dir).
-
-    Round 11 (guide §1.2/§2.4): five batch consumers (the LSH bucket
-    query, the candidate pair join, both novelty variants, the banding
-    sweep, the cost report) each re-ran the shingle-explode →
-    16-way-min aggregation per call — with the pair queries re-running
-    it once more per rep through the one-live-entry persist churn.  A
-    signature store is computed once at ingest in production (the
-    streaming twin ``NearDupIngestSink`` maintains exactly this
-    registry incrementally), so one persisted O(docs) fixed-width
-    relation serves every consumer.  Deterministic (exact integer
-    min-hashes), so rebuilds are bit-identical;
-    ``session.clear_session_memos`` releases it."""
-    key = (
-        "mhsigs", spark.sparkContext.applicationId, sf_dir.rstrip("/")
+    """The (doc_id, m0..m15) MinHash signature store, a session memo:
+    five consumers (the LSH bucket query, the candidate pair join, both
+    novelty variants, the banding sweep, the cost report) share one
+    shingle-explode → 16-way-min aggregation, as a production store
+    computes signatures once at ingest (the streaming twin
+    ``NearDupIngestSink`` maintains exactly this registry)."""
+    return memo(
+        "minhash/mhsigs", spark, sf_dir,
+        lambda: _minhash_sigs(spark, sf_dir).persist(),
     )
-    if key not in _MINHASH_CACHE:
-        _MINHASH_CACHE[key] = _minhash_sigs(spark, sf_dir).persist()
-    return _MINHASH_CACHE[key]
 
 
 def _simhash60_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The (doc_id, sig) 60-bit SimHash fingerprint store, persisted
-    once per (application, sf_dir) — same round-11 signature-store
-    posture as ``_minhash_sig_memo`` (consumers: the Hamming pair
-    join, the method-agreement report, the cost report)."""
-    key = (
-        "simhash60", spark.sparkContext.applicationId, sf_dir.rstrip("/")
-    )
-    if key not in _MINHASH_CACHE:
+    """The (doc_id, sig) 60-bit SimHash fingerprint store, a session
+    memo for the same reason as ``_minhash_sig_memo`` (consumers: the
+    Hamming pair join, the method-agreement report, the cost report)."""
+
+    def build() -> DataFrame:
         docs = load(spark, sf_dir, "documents")
         toks = (
             docs.select(
@@ -202,10 +189,9 @@ def _simhash60_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .withColumn("h", F.expr(_SPARK_H60.format(col="word")))
         )
-        _MINHASH_CACHE[key] = _simhash_signatures(
-            toks, SIMHASH_PAIR_BITS
-        ).persist()
-    return _MINHASH_CACHE[key]
+        return _simhash_signatures(toks, SIMHASH_PAIR_BITS).persist()
+
+    return memo("minhash/simhash60", spark, sf_dir, build)
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -367,24 +353,14 @@ def data_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _jaccard_pairs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The verified near-dup pair store (doc1, doc2, jaccard), persisted
-    once per (application, sf_dir).
+    """The verified near-dup pair store (doc1, doc2, jaccard, i, n1,
+    n2), a session memo: the exact-Jaccard verify (a shingle self-join)
+    feeds seven consumers (the components chain and through it
+    survivors + the three corpus builds, the LSH eval truth, the
+    banding-sweep truth, the method-agreement report), and in
+    production it is an ingest-time dedup index built once per corpus."""
 
-    Round 11 (guide §1.2 build-vs-serve): the exact-Jaccard verify — a
-    shingle self-join — re-ran per call inside SEVEN consumers (the
-    components chain and through it survivors + the three corpus
-    builds, the LSH eval truth, the banding-sweep truth with its own
-    per-call persist churn, the method-agreement report).  The verified
-    pair set is an ingest-time dedup-index artifact (the verify step
-    after LSH runs once per corpus in production), so it is built once
-    and priced as a train leg in ``bench.train_warmup``; O(near-dup
-    pairs) slim rows.  Deterministic (exact integer shingle hashes), so
-    rebuilds are bit-identical; ``session.clear_session_memos``
-    releases it."""
-    key = (
-        "jacpairs", spark.sparkContext.applicationId, sf_dir.rstrip("/")
-    )
-    if key not in _MINHASH_CACHE:
+    def build() -> DataFrame:
         sh = _shingles(spark, sf_dir).select("doc_id", "shingle")
         sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
         a = sh.alias("a")
@@ -413,7 +389,7 @@ def _jaccard_pairs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
         # integer-predicate consumers (the threshold curve) read the
         # store instead of re-running the self-join; value consumers
         # project them away.
-        _MINHASH_CACHE[key] = (
+        return (
             inter.join(s1, "doc1")
             .join(s2, "doc2")
             .filter(jac >= JACCARD_THRESHOLD)
@@ -427,7 +403,8 @@ def _jaccard_pairs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .persist()
         )
-    return _MINHASH_CACHE[key]
+
+    return memo("minhash/jacpairs", spark, sf_dir, build)
 
 
 def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -443,28 +420,19 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cc_labels_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The near-dup cluster label store (doc_id, component), computed
-    once per (application, sf_dir).
+    """The near-dup cluster label store (doc_id, component), a session
+    memo: the pointer-jumping fixpoint feeds ``dedup_components``,
+    ``dedup_survivors`` and the three corpus builds, and the cluster map
+    is the dedup index a production pipeline resolves once per corpus.
+    Labels are localCheckpoint-backed, so no extra persist."""
 
-    Round 11: the pointer-jumping fixpoint (multiple shuffle rounds +
-    eager checkpoints per round) re-ran on EVERY call of
-    ``dedup_components`` — and through it in ``dedup_survivors`` and
-    each of the three corpus builds.  The cluster map is the dedup
-    index a production pipeline resolves once per corpus, so it is
-    built once and priced as a train leg (``bench.train_warmup``).
-    Labels are localCheckpoint-backed (already materialized — no extra
-    persist needed); keyed by (applicationId, sf_dir) so one sf_dir's
-    labels can never serve another (round-6 verdict finding 4);
-    ``session.clear_session_memos`` releases the entry."""
-    key = ("cc_labels", spark.sparkContext.applicationId,
-           sf_dir.rstrip("/"))
-    if key not in _MINHASH_CACHE:
+    def build() -> DataFrame:
         from ..operators.graph import connected_components
 
         pairs = _jaccard_pairs_memo(spark, sf_dir).select("doc1", "doc2")
-        labels, _rounds = connected_components(pairs)
-        _MINHASH_CACHE[key] = labels
-    return _MINHASH_CACHE[key]
+        return connected_components(pairs)[0]
+
+    return memo("minhash/cc_labels", spark, sf_dir, build)
 
 
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3321,32 +3289,22 @@ ORACLE["text_bpe_merge_candidates"] = f"""
 
 N_BPE_MERGES = 16
 
-# keeps the character-split vocabulary persisted for the training rounds
-_BPE_CACHE: dict[str, DataFrame] = {}
-
-# Session memo for the learned merge rules — the ``_trained`` pattern
-# (clustering.py) applied to BPE: training is N_BPE_MERGES rounds of
-# pair-count jobs with a driver collect each, identical for every
-# caller in a session, while the rules themselves are O(rounds) driver
-# rows (the k-means-centroid sanction).  text_bpe_encode, data_pack_bpe
-# and text_bpe_fertility all re-apply the memoized rules to a fresh
-# vocabulary — deterministic string ops, so results are bit-identical
-# to retraining.  Keyed by applicationId so a stopped session's rules
-# are never served to a new one (they would still be correct — the
-# training is deterministic — but the discipline is uniform).
-_BPE_MERGE_MEMO: dict = {}
-
 
 def _bpe_merges(spark: SparkSession, sf_dir: str,
                 vocab: DataFrame) -> list:
-    """The learned (a, b) merge rules, trained once per (application,
-    sf_dir): each round counts adjacent symbol pairs over the CURRENT
-    vocabulary (one map-side-combined aggregate + a 1-row collect) and
-    applies the winner before the next round — the loop
-    ``text_bpe_encode`` always ran, factored behind the memo."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    if key in _BPE_MERGE_MEMO:
-        return _BPE_MERGE_MEMO[key]
+    """The learned (a, b) merge rules, a session memo (the ``_trained``
+    pattern applied to BPE): training is N_BPE_MERGES rounds of
+    pair-count jobs with a driver collect each, identical for every
+    caller (text_bpe_encode, data_pack_bpe, text_bpe_fertility), while
+    the rules are O(rounds) driver rows.  Each round counts adjacent
+    symbol pairs over the CURRENT vocabulary and applies the winner
+    before the next round."""
+    return memo(
+        "bpe_merges/merges", spark, sf_dir, lambda: _bpe_train(vocab)
+    )
+
+
+def _bpe_train(vocab: DataFrame) -> list:
     merges: list = []
     cur = vocab
     for _ in range(N_BPE_MERGES):
@@ -3378,7 +3336,6 @@ def _bpe_merges(spark: SparkSession, sf_dir: str,
             "s",
             F.replace(F.col("s"), F.lit(f" {a} {b} "), F.lit(f" {a}{b} ")),
         )
-    _BPE_MERGE_MEMO[key] = merges
     return merges
 
 
@@ -3418,10 +3375,8 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = docs.select(
         "doc_id", F.explode(F.expr(_SPARK_TOKS)).alias("tok")
     )
-    prev = _BPE_CACHE.pop("vocab", None)
-    if prev is not None:
-        prev.unpersist()
-    vocab = (
+    # persisted for the training rounds; replaced by the next call
+    vocab = hold("bpe_merges/vocab", (
         stream.groupBy("tok")
         .agg(F.count("*").alias("freq"))
         .select(
@@ -3431,9 +3386,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(" "), F.regexp_replace("tok", "(.)", "$1 ")
             ).alias("s"),
         )
-        .persist()
-    )
-    _BPE_CACHE["vocab"] = vocab
+    ).persist)
     cur = vocab
     for a, b in _bpe_merges(spark, sf_dir, vocab):
         cur = cur.withColumn(
@@ -4203,10 +4156,10 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BECAUSE min(DEDUP_CURVE_THRESHOLDS)/100 >= JACCARD_THRESHOLD —
     # lowering a curve threshold below the store's cutoff would silently
     # undercount.  Enforced here so a future threshold edit fails loudly.
-    assert min(DEDUP_CURVE_THRESHOLDS) >= JACCARD_THRESHOLD * 100, (
+    assert min(DEDUP_CURVE_THRESHOLDS) >= JACCARD_THRESHOLD_PCT, (
         "dedup_threshold_curve serves from _jaccard_pairs_memo, which "
         f"pre-filters at jaccard >= {JACCARD_THRESHOLD}; curve thresholds "
-        f"below {JACCARD_THRESHOLD * 100}% need the full self-join"
+        f"below {JACCARD_THRESHOLD_PCT}% need the full self-join"
     )
     jacc = _jaccard_pairs_memo(spark, sf_dir).select("i", "n1", "n2")
     # integer predicate: J >= t/100  <=>  100*i >= t*(n1+n2-i)
@@ -6633,20 +6586,6 @@ array_join(
 """
 
 
-# Session memo for the constructed corpus — the ``_trained`` pattern
-# (clustering.py) applied to text_structured.  The construction is a
-# deterministic md5-salting codegen pass, so re-evaluating it per
-# consumer (text_gopher_filter_full, text_line_dedup each rebuild it;
-# text_line_dedup references it TWICE through its owner-count join) is
-# pure recompute.  One persisted (doc_id, struct_text) relation per
-# (application, sf_dir) serves them all — the honest serving posture
-# too: a corpus is constructed once and audited many times.  Default
-# MEMORY_AND_DISK storage, so a 100 TB corpus spills instead of OOMing;
-# keyed by applicationId so a stopped session's DataFrame is never
-# served to a new one.
-_STRUCT_MEMO: dict = {}
-
-
 def structured_relation(docs: DataFrame) -> DataFrame:
     """(doc_id, struct_text) from any (doc_id, text) relation — the
     deterministic structured-text construction as a relation-level
@@ -6663,10 +6602,12 @@ def text_structured(spark: SparkSession, sf_dir: str) -> DataFrame:
     bullet lists, ellipsis endings, symbols, digits — built from the
     prose fixture (see the block comment above).  Registered with its
     own oracle so the construction string is hash-pinned byte-for-byte
-    across engines.  One narrow codegen pass, no shuffle; persisted once
-    per session (``_STRUCT_MEMO``) so every consumer shares the build."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    if key not in _STRUCT_MEMO:
+    across engines.  One narrow codegen pass, no shuffle; a session memo
+    because text_gopher_filter_full and text_line_dedup (twice, through
+    its owner-count join) would each re-run the construction — a corpus
+    is constructed once and audited many times."""
+
+    def build() -> DataFrame:
         # The fixture is a single parquet file -> a single scan task, which
         # would serialize the whole construction pass; spread the docs
         # across the cluster first (the construction is per-row
@@ -6676,8 +6617,9 @@ def text_structured(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = load(spark, sf_dir, "documents").repartition(
             spark.sparkContext.defaultParallelism, "doc_id"
         )
-        _STRUCT_MEMO[key] = structured_relation(docs).persist()
-    return _STRUCT_MEMO[key]
+        return structured_relation(docs).persist()
+
+    return memo("struct/corpus", spark, sf_dir, build)
 
 
 def text_gopher_filter_full(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8263,55 +8205,41 @@ def winnow_regions_relation(docs: DataFrame) -> DataFrame:
     return winnow_regions_from_prints(winnow_print_positions(docs))
 
 
-# Session memo for the positioned-print relation over the sf_dir corpus
-# (round-7, verdict #2): data_dataset_card, text_winnow_regions, and
-# text_winnow_coverage each consume the same positioned prints — the
-# tokenize→hash→window-min scan is the expensive half of every winnow
-# pass, so it is built ONCE per (applicationId, sf_dir) and persisted,
-# exactly like ``_STRUCT_MEMO``.  Streaming sinks keep building prints
-# per micro-batch from ``winnow_print_positions`` directly (their input
-# is the batch, not the corpus).  Released by
-# ``session.clear_session_memos()``.
-_WINNOW_PRINT_MEMO: dict = {}
-
-
 def winnow_prints_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized :func:`winnow_print_positions` over the sf_dir
-    documents corpus — (doc_id, fp, pos) slim int64 triples, persisted
-    once and shared by every batch winnow consumer."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    if key not in _WINNOW_PRINT_MEMO:
+    documents corpus — (doc_id, fp, pos) slim int64 triples.  Every batch
+    winnow consumer (data_dataset_card, text_winnow_regions,
+    text_winnow_coverage) reads the same prints, and the
+    tokenize→hash→window-min scan is the expensive half of every winnow
+    pass.  Streaming sinks build prints per micro-batch from
+    ``winnow_print_positions`` directly (their input is the batch)."""
+
+    def build() -> DataFrame:
         # single-file fixture -> spread the scan before the per-row
         # selection pass (deterministic per-row, so partitioning cannot
         # change the prints) — the text_structured discipline
         docs = load(spark, sf_dir, "documents").repartition(
             spark.sparkContext.defaultParallelism, "doc_id"
         )
-        _WINNOW_PRINT_MEMO[key] = winnow_print_positions(docs).persist()
-    return _WINNOW_PRINT_MEMO[key]
+        return winnow_print_positions(docs).persist()
+
+    return memo("winnow_prints/prints", spark, sf_dir, build)
 
 
 def _winnow_regions_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The copy-region store (doc_a, doc_b, start_a, start_b,
-    length_tokens, n_prints), computed once per (application, sf_dir).
-
-    Round 11 (guide §1.2 build-vs-serve): the match/island pass over
-    the positioned prints — a prints self-join plus two windows — re-ran
-    per call inside FIVE consumers (the regions query itself, the
-    per-doc and per-source coverage views, the dataset card's region
-    members, the copyaware corpus build).  WHERE the copies are is the
-    same ingest-time dedup-index artifact as the verified Jaccard pair
-    store (``_jaccard_pairs_memo``), so it is built once and priced as
-    a train leg in ``bench.train_warmup``; O(regions) slim int64 rows,
-    localCheckpoint-backed (materialized — no extra persist), keyed by
-    (applicationId, sf_dir); ``session.clear_session_memos`` releases
-    the entry."""
-    key = ("regions", spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    if key not in _WINNOW_PRINT_MEMO:
-        _WINNOW_PRINT_MEMO[key] = winnow_regions_from_prints(
+    length_tokens, n_prints), a session memo: the match/island pass (a
+    prints self-join plus two windows) feeds five consumers (the regions
+    query, the per-doc and per-source coverage views, the dataset card's
+    region members, the copyaware corpus build), and where the copies
+    are is an ingest-time dedup index like ``_jaccard_pairs_memo``.
+    localCheckpoint-backed, so no extra persist."""
+    return memo(
+        "winnow_prints/regions", spark, sf_dir,
+        lambda: winnow_regions_from_prints(
             winnow_prints_memo(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-    return _WINNOW_PRINT_MEMO[key]
+        ).localCheckpoint(eager=True),
+    )
 
 
 def winnow_regions_from_prints(prints: DataFrame) -> DataFrame:
@@ -8500,27 +8428,22 @@ def _phash_image_corpus(docs: DataFrame) -> DataFrame:
 
 def _phash_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(img_id, phash) over the constructed image corpus — render each
-    row's text to a real BMP, then hash the parsed raster.
+    row's text to a real BMP, then hash the parsed raster.  A session
+    memo: the perceptual hashes are the stored image index (a production
+    store hashes at ingest), shared by every pHash rung."""
 
-    Round 11 (guide §1.2 build-vs-serve): computed once per
-    (application, sf_dir) — the perceptual hashes ARE the stored image
-    index (a production store hashes at ingest and serves the slim
-    int64 relation), yet every pHash rung re-rendered and re-hashed the
-    corpus per call.  Same memo/lifecycle pattern as ``_pq_codes``;
-    priced as a train leg in ``bench.train_warmup``;
-    ``session.clear_session_memos`` releases the entry."""
-    key = ("phash", spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    if key not in _MINHASH_CACHE:
+    def build() -> DataFrame:
         from ..operators.multimodal import (
             attach_bmp_payload_keyed,
             phash_bmp_metadata,
         )
 
         docs = load(spark, sf_dir, "documents")
-        _MINHASH_CACHE[key] = phash_bmp_metadata(
+        return phash_bmp_metadata(
             attach_bmp_payload_keyed(_phash_image_corpus(docs))
         ).localCheckpoint(eager=True)
-    return _MINHASH_CACHE[key]
+
+    return memo("minhash/phash", spark, sf_dir, build)
 
 
 def multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9098,20 +9021,15 @@ def multimodal_phash_components(
     CTE min-reachable-id, so the iterative op stays hash-checked."""
     from ..operators.graph import connected_components
 
-    # round 11: a true session memo (the image cluster map is the same
-    # ingest-time dedup-index artifact as ``_cc_labels_memo``, which
-    # replaced this key's old pop-then-store lifetime holder on the
-    # text rung; the fixpoint is priced as a train leg in
-    # ``bench.train_warmup``)
-    key = ("phash_cc_labels", spark.sparkContext.applicationId,
-           sf_dir.rstrip("/"))
-    if key not in _MINHASH_CACHE:
+    # a session memo: the image cluster map is the same ingest-time
+    # dedup index as ``_cc_labels_memo``
+    def build() -> DataFrame:
         pairs = multimodal_phash_pairs(spark, sf_dir).select(
             F.col("img_a").alias("doc1"), F.col("img_b").alias("doc2")
         )
-        labels, _rounds = connected_components(pairs)
-        _MINHASH_CACHE[key] = labels
-    labels = _MINHASH_CACHE[key]
+        return connected_components(pairs)[0]
+
+    labels = memo("minhash/phash_cc_labels", spark, sf_dir, build)
     return labels.select(
         F.col("doc_id").alias("img_id"),
         "component",
@@ -9366,24 +9284,21 @@ def _video_corpus(docs: DataFrame) -> DataFrame:
 def _video_scene_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vid_id, scene_idx, scene_len, sig) over the constructed video
     corpus — render each row's text to a real Y4M stream, segment into
-    scenes, sign each keyframe.  Round 11: computed once per
-    (application, sf_dir) — the scene signatures are the stored video
-    index (ingest-time encode), shared by the scenes query, the pair
-    self-join's two sides and the CC rung; priced as a train leg
-    (``bench.train_warmup``), released by ``clear_session_memos``."""
+    scenes, sign each keyframe.  A session memo: the scene signatures
+    are the stored video index (ingest-time encode), shared by the
+    scenes query, the pair self-join's two sides and the CC rung."""
     from ..operators.multimodal import (
         attach_y4m_payload_keyed,
         scene_keyframes_y4m_metadata,
     )
 
-    key = ("videoscene", spark.sparkContext.applicationId,
-           sf_dir.rstrip("/"))
-    if key not in _MINHASH_CACHE:
+    def build() -> DataFrame:
         docs = load(spark, sf_dir, "documents")
-        _MINHASH_CACHE[key] = scene_keyframes_y4m_metadata(
+        return scene_keyframes_y4m_metadata(
             attach_y4m_payload_keyed(_video_corpus(docs))
         ).localCheckpoint(eager=True)
-    return _MINHASH_CACHE[key]
+
+    return memo("minhash/videoscene", spark, sf_dir, build)
 
 
 def multimodal_video_scenes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9567,18 +9482,15 @@ def multimodal_video_components(
     rounds); oracle: recursive min-reachable-id CTE."""
     from ..operators.graph import connected_components
 
-    # round 11: a true session memo (the video cluster map is the same
-    # ingest-time dedup-index artifact as ``_cc_labels_memo``; the
-    # fixpoint is priced as a train leg in ``bench.train_warmup``)
-    key = ("video_cc_labels", spark.sparkContext.applicationId,
-           sf_dir.rstrip("/"))
-    if key not in _MINHASH_CACHE:
+    # a session memo: the video cluster map is the same ingest-time
+    # dedup index as ``_cc_labels_memo``
+    def build() -> DataFrame:
         pairs = multimodal_video_pairs(spark, sf_dir).select(
             F.col("vid_a").alias("doc1"), F.col("vid_b").alias("doc2")
         )
-        labels, _rounds = connected_components(pairs)
-        _MINHASH_CACHE[key] = labels
-    labels = _MINHASH_CACHE[key]
+        return connected_components(pairs)[0]
+
+    labels = memo("minhash/video_cc_labels", spark, sf_dir, build)
     return labels.select(
         F.col("doc_id").alias("vid_id"),
         "component",
@@ -9718,22 +9630,20 @@ def _audio_corpus(docs: DataFrame) -> DataFrame:
 def _audio_fp_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(aud_id, frame_idx, code) over the constructed audio corpus —
     render each row's text to a real WAV, fingerprint the decoded PCM.
-    Round 11: computed once per (application, sf_dir) — the codes are
-    the stored audio index (ingest-time encode), shared by the word
-    packer / pair join / recall rung; priced as a train leg
-    (``bench.train_warmup``), released by ``clear_session_memos``."""
+    A session memo: the codes are the stored audio index (ingest-time
+    encode), shared by the word packer / pair join / recall rung."""
     from ..operators.multimodal import (
         attach_wav_payload_keyed,
         fingerprint_wav_metadata,
     )
 
-    key = ("audiofp", spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    if key not in _MINHASH_CACHE:
+    def build() -> DataFrame:
         docs = load(spark, sf_dir, "documents")
-        _MINHASH_CACHE[key] = fingerprint_wav_metadata(
+        return fingerprint_wav_metadata(
             attach_wav_payload_keyed(_audio_corpus(docs))
         ).localCheckpoint(eager=True)
-    return _MINHASH_CACHE[key]
+
+    return memo("minhash/audiofp", spark, sf_dir, build)
 
 
 def multimodal_audio_fingerprint(
@@ -11317,21 +11227,15 @@ def _graph_search(base: DataFrame, edges: DataFrame,
     return visited
 
 
-_GRAPH_EDGE_MEMO: dict = {}
-
-
 def _graph_edges_memo(spark: SparkSession, sf_dir: str,
                       base: DataFrame) -> DataFrame:
-    """The built kNN graph, persisted ONCE per (application, sf_dir) —
-    the graph IS the index (trained once, queried many), exactly the
-    _TRAIN_MEMO/_KM_CACHE serving posture; all three graph queries and
-    every search round share one build.  Released by
-    ``session.clear_session_memos``; rebuilds bit-identical (the build
-    is deterministic)."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    if key not in _GRAPH_EDGE_MEMO:
-        _GRAPH_EDGE_MEMO[key] = _graph_edges(base).persist()
-    return _GRAPH_EDGE_MEMO[key]
+    """The built kNN graph, a session memo: the graph is the index
+    (trained once, queried many), shared by all three graph queries and
+    every search round."""
+    return memo(
+        "graph_ann_edges/knn", spark, sf_dir,
+        lambda: _graph_edges(base).persist(),
+    )
 
 
 def _graph_visited(spark: SparkSession, sf_dir: str) -> DataFrame:

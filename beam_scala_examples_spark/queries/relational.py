@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 
 from ..operators.agg import cents
 from ..operators.topk import top_k_per_key
+from ..session import memo
 from ..tables import load
 
 
@@ -1044,42 +1045,39 @@ def star_part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pagerank_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The UN-thresholded directed co-purchase pair list PageRank ranks
-    over, hash-partitioned by src and persisted once per (application,
-    sf_dir) — the round-9 memo idiom: the basket self-join + distinct
-    is the expensive leg and is deterministic per sf_dir, so repeated
-    rank computations (bench reps, multi-consumer sessions) pay it
-    once.  ``clear_session_memos`` releases it via _LPA_CACHE."""
-    key = ("prpairs", spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    if key in _LPA_CACHE:
-        return _LPA_CACHE[key]
-    # round 11: symmetrize the shared weighted pair memo — canonical
-    # pairs are unique, so the union IS the distinct != pair set
-    und = _copurchase_weighted(spark, sf_dir).select("p1", "p2")
-    sym = und.select(
-        F.col("p1").alias("src"), F.col("p2").alias("dst")
-    ).unionByName(
-        und.select(F.col("p2").alias("src"), F.col("p1").alias("dst"))
-    )
-    # round 11: layout width from the measured edge count (the
-    # pagerank_int / connected_components discipline) — the rank loop's
-    # 18 rounds each run stages over this relation, so a small graph
-    # must not pay a 32-way layout per round.  Round 12 (r11 ADVICE):
-    # persist-then-count so the width probe and the layout
-    # materialization share one evaluation of the upstream union.
-    staged = sym.persist()
-    n_edges = staged.count()
-    np_ = max(
-        1,
-        min(
-            spark.sparkContext.defaultParallelism,
-            n_edges // 50_000 + 1,
-        ),
-    )
-    pairs = staged.repartition(np_, "src").persist()
-    pairs.count()  # materialize the layout from the staging cache
-    staged.unpersist(blocking=False)
-    _LPA_CACHE[key] = pairs
-    return pairs
+    over, hash-partitioned by src, a session memo: the symmetrized pair
+    layout feeds every one of the rank loop's rounds, and repeated rank
+    computations pay it once."""
+
+    def build() -> DataFrame:
+        # symmetrize the shared weighted pair memo — canonical pairs
+        # are unique, so the union IS the distinct != pair set
+        und = _copurchase_weighted(spark, sf_dir).select("p1", "p2")
+        sym = und.select(
+            F.col("p1").alias("src"), F.col("p2").alias("dst")
+        ).unionByName(
+            und.select(F.col("p2").alias("src"), F.col("p1").alias("dst"))
+        )
+        # layout width from the measured edge count (the pagerank_int /
+        # connected_components discipline) — the rank loop's 18 rounds
+        # each run stages over this relation, so a small graph must not
+        # pay a wide layout per round.  Persist-then-count so the width
+        # probe and the layout share one evaluation of the union.
+        staged = sym.persist()
+        n_edges = staged.count()
+        np_ = max(
+            1,
+            min(
+                spark.sparkContext.defaultParallelism,
+                n_edges // 50_000 + 1,
+            ),
+        )
+        pairs = staged.repartition(np_, "src").persist()
+        pairs.count()  # materialize the layout from the staging cache
+        staged.unpersist(blocking=False)
+        return pairs
+
+    return memo("lpa_edges/prpairs", spark, sf_dir, build)
 
 
 QUERIES["star_part_pagerank"] = star_part_pagerank
@@ -1935,12 +1933,6 @@ ORACLE["star_item_similarity"] = f"""
 LPA_ROUNDS = 3
 LPA_MIN_SUPPORT = 2
 
-# one live cached edge relation PER CONSUMER (see dedup_minhash_pairs
-# for the one-entry discipline rationale: the contract returns a lazy
-# DataFrame, so the previous invocation's cache entry is dropped on the
-# next call)
-_LPA_CACHE: dict = {}
-
 
 def _copurchase_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(p1, p2, w): the canonical (p1 < p2) co-purchase pair counts —
@@ -1953,30 +1945,28 @@ def _copurchase_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     directions), the LPA/assortativity/k-core edge memo (threshold,
     symmetrized) and the PageRank pair memo (no counts, symmetrized).
     Every variant is a projection/filter/symmetrization of THIS
-    relation, so the join is now paid once per (application, sf_dir)
-    — the same memo idiom as the round-9 edge list, one level lower.
-    ``session.clear_session_memos`` releases it via _LPA_CACHE."""
-    key = ("wpairs", spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    if key in _LPA_CACHE:
-        return _LPA_CACHE[key]
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = li.alias("a")
-    b = li.alias("b")
-    und = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(
-            F.col("a.l_partkey").alias("p1"), F.col("b.l_partkey").alias("p2")
+    relation, so it is a session memo and the join is paid once."""
+
+    def build() -> DataFrame:
+        li = (
+            load(spark, sf_dir, "lineitem")
+            .select("l_orderkey", "l_partkey")
+            .distinct()
         )
-        .agg(F.count("*").alias("w"))
-        .persist()
-    )
-    _LPA_CACHE[key] = und
-    return und
+        a = li.alias("a")
+        b = li.alias("b")
+        return (
+            a.join(b, "l_orderkey")
+            .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
+            .groupBy(
+                F.col("a.l_partkey").alias("p1"),
+                F.col("b.l_partkey").alias("p2"),
+            )
+            .agg(F.count("*").alias("w"))
+            .persist()
+        )
+
+    return memo("lpa_edges/wpairs", spark, sf_dir, build)
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1984,34 +1974,25 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph every structure metric here runs on (LPA, assortativity,
     k-core).
 
-    Round 9: session-memoized per (application, sf_dir).  The previous
-    per-consumer replace-cache only deduplicated references WITHIN one
-    call — every graph query re-ran the basket self-join (the expensive
-    Sigma|basket|^2 leg, measured 2-3 s/call at sf0.1), which is what
-    the round-8 bench band flags on untouched graph queries actually
-    were.  The edge list is deterministic per sf_dir, so one persisted
-    derivation serves LPA, assortativity, and k-core alike;
-    ``session.clear_session_memos`` releases it.  At 100x this is the
-    difference between one co-occurrence shuffle per SESSION and one
-    per METRIC.  Round 11: built from the shared weighted pair memo
-    instead of its own basket self-join."""
-    key = ("edges", spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    if key in _LPA_CACHE:
-        return _LPA_CACHE[key]
-    und = (
-        _copurchase_weighted(spark, sf_dir)
-        .filter(F.col("w") >= LPA_MIN_SUPPORT)
-        .select("p1", "p2")
-    )
-    ed = (
-        und.select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
-        .unionByName(
-            und.select(F.col("p2").alias("src"), F.col("p1").alias("dst"))
+    A session memo built from the shared weighted pair memo: one
+    persisted derivation serves LPA, assortativity, and k-core alike —
+    one co-occurrence shuffle per session, not one per metric."""
+
+    def build() -> DataFrame:
+        und = (
+            _copurchase_weighted(spark, sf_dir)
+            .filter(F.col("w") >= LPA_MIN_SUPPORT)
+            .select("p1", "p2")
         )
-        .persist()
-    )
-    _LPA_CACHE[key] = ed
-    return ed
+        return (
+            und.select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
+            .unionByName(
+                und.select(F.col("p2").alias("src"), F.col("p1").alias("dst"))
+            )
+            .persist()
+        )
+
+    return memo("lpa_edges/edges", spark, sf_dir, build)
 
 
 def _copurchase_edges_cte(materialized: bool = False) -> str:

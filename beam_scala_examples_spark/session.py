@@ -1,4 +1,4 @@
-"""SparkSession factory.
+"""SparkSession factory and the session-memo registry.
 
 Scale posture: these defaults are chosen for a real multi-executor
 cluster, and only the master/parallelism knobs shrink for local test
@@ -11,8 +11,10 @@ replacement for the reference's hand-rolled hot-key fanout,
 from __future__ import annotations
 
 import os
+from collections import Counter
+from typing import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -24,9 +26,12 @@ def get_spark(
     """Build (or reuse) the engine's SparkSession.
 
     On a cluster, ``master``/parallelism come from spark-submit; locally we
-    default to ``local[$SPARK_GRAFT_CPUS]`` to match the driver harness.
+    default to ``local[$SPARK_GRAFT_CPUS]`` to match the driver harness,
+    and to the host's usable cores when it is unset.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+    )
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -66,92 +71,53 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def clear_session_memos() -> None:
-    """Release every session-lifetime memo the engine keeps (round-6
-    lifecycle API — the memos are correct and bounded per (application,
-    sf_dir), but a long-lived session that walks many sf_dirs
-    accumulates persisted relations; this makes the release explicit).
+# The session-memo registry: every derived relation the engine reuses
+# across queries lives here, so one clear and one snapshot see them all.
+# memo() entries are keyed by (tag, applicationId, sf_dir) -- a stopped
+# session's relation is never served to a new one, and one sf_dir's
+# relation never serves another; hold() entries are keyed by tag alone.
+# Tags read "group/name"; memo_snapshot() counts entries per group.
+_MEMOS: dict[tuple, object] = {}
 
-    Unpersists and forgets:
 
-    * ``queries.llmdata._MINHASH_CACHE`` — persisted signature/label
-      DataFrames (one live entry per shape; ~O(docs) slim rows each);
-    * ``queries.llmdata._STRUCT_MEMO`` — the persisted structured
-      corpus (one per sf_dir; O(docs) text rows);
-    * ``queries.llmdata._WINNOW_PRINT_MEMO`` — the persisted positioned
-      winnowing prints (one per sf_dir; O(prints) slim int64 triples);
-    * ``queries.llmdata._BPE_MERGE_MEMO`` — plain merge-rule lists;
-    * ``queries.clustering._KM_CACHE`` — persisted embedding corpora;
-    * ``queries.clustering._TRAIN_MEMO`` — plain codebook lists;
-    * ``queries.classify._CLS_MEMO`` / ``_DSIR_W_MEMO`` /
-      ``_DSIR_CACHE`` — the NB prediction table, DSIR weight relation,
-      and the DSIR bucket-count intermediate (round 8);
-    * ``queries.relational._LPA_CACHE`` — the persisted co-purchase
-      edge list and PageRank pair relations (round 9; one entry per
-      (kind, application, sf_dir), O(edges) slim int64 rows each);
-    * ``queries.llmdata._GRAPH_EDGE_MEMO`` — the persisted ANN kNN
-      graph (round 11; one per (application, sf_dir), O(corpus x M)
-      slim int64 pairs — the graph-search index).
-
-    Rebuilding after a clear re-derives bit-identical results (every
-    memoized computation is deterministic); the only cost is the
-    retraining/reconstruction time the memo was saving."""
-    from .queries.classify import _CLS_MEMO, _DSIR_CACHE, _DSIR_W_MEMO
-    from .queries.clustering import _KM_CACHE, _TRAIN_MEMO
-    from .queries.llmdata import (
-        _BPE_MERGE_MEMO,
-        _GRAPH_EDGE_MEMO,
-        _MINHASH_CACHE,
-        _STRUCT_MEMO,
-        _WINNOW_PRINT_MEMO,
-    )
-    from .queries.relational import _LPA_CACHE
-
-    for cache in (_MINHASH_CACHE, _STRUCT_MEMO, _WINNOW_PRINT_MEMO,
-                  _KM_CACHE, _CLS_MEMO, _DSIR_W_MEMO, _DSIR_CACHE,
-                  _LPA_CACHE, _GRAPH_EDGE_MEMO):
-        for df in cache.values():
+def _release(value) -> None:
+    for v in value if isinstance(value, list) else [value]:
+        if isinstance(v, DataFrame):
             try:
-                df.unpersist(blocking=False)
+                v.unpersist(blocking=False)
             except Exception:
-                pass  # session already stopped — nothing to release
-        cache.clear()
-    _BPE_MERGE_MEMO.clear()
-    _TRAIN_MEMO.clear()
+                pass  # session already stopped -- nothing to release
+
+
+def memo(tag: str, spark: SparkSession, sf_dir: str, build: Callable):
+    """The value stored under (tag, application, sf_dir), built by
+    ``build()`` on the first call.  Every memoized build is
+    deterministic, so a rebuild after a clear is bit-identical."""
+    key = (tag, spark.sparkContext.applicationId, sf_dir.rstrip("/"))
+    if key not in _MEMOS:
+        _MEMOS[key] = build()
+    return _MEMOS[key]
+
+
+def hold(tag: str, build: Callable):
+    """Unpersist the value held under ``tag``, then hold and return
+    ``build()`` -- for relations a query persists per call rather than
+    per corpus.  The release comes first: a new persist of the same plan
+    would share the old cache entry, and releasing that would drop both."""
+    _release(_MEMOS.pop((tag,), None))
+    _MEMOS[(tag,)] = build()
+    return _MEMOS[(tag,)]
+
+
+def clear_session_memos(tags=None) -> int:
+    """Unpersist and forget every memo (or those whose tag is in
+    ``tags``); returns the number of entries removed."""
+    hits = [k for k in _MEMOS if tags is None or k[0] in tags]
+    for k in hits:
+        _release(_MEMOS.pop(k))
+    return len(hits)
 
 
 def memo_snapshot() -> dict[str, int]:
-    """Entry count of every session-lifetime memo cache, keyed by cache
-    name — the round-9 bench instrument that makes per-query memo
-    warmth EXPLICIT in bench captures (round-8 verdict item 2: two
-    band violations were adjudicated as shared-memo warmth the bench
-    design silently conflated; a capture now records which caches each
-    timed query found populated)."""
-    from .queries.classify import _CLS_MEMO, _DSIR_CACHE, _DSIR_W_MEMO
-    from .queries.clustering import _KM_CACHE, _TRAIN_MEMO
-    from .queries.llmdata import (
-        _BPE_MERGE_MEMO,
-        _GRAPH_EDGE_MEMO,
-        _MINHASH_CACHE,
-        _STRUCT_MEMO,
-        _WINNOW_PRINT_MEMO,
-    )
-    from .queries.relational import _LPA_CACHE
-
-    return {
-        name: len(cache)
-        for name, cache in (
-            ("minhash", _MINHASH_CACHE),
-            ("struct", _STRUCT_MEMO),
-            ("winnow_prints", _WINNOW_PRINT_MEMO),
-            ("bpe_merges", _BPE_MERGE_MEMO),
-            ("kmeans_corpora", _KM_CACHE),
-            ("trained_codebooks", _TRAIN_MEMO),
-            ("nb_classifier", _CLS_MEMO),
-            ("dsir_weights", _DSIR_W_MEMO),
-            ("dsir_counts", _DSIR_CACHE),
-            ("lpa_edges", _LPA_CACHE),
-            ("graph_ann_edges", _GRAPH_EDGE_MEMO),
-        )
-        if len(cache)
-    }
+    """Entry count per memo group, for groups that hold any entry."""
+    return dict(Counter(k[0].split("/", 1)[0] for k in _MEMOS))

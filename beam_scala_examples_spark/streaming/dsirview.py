@@ -64,7 +64,7 @@ class DsirIngestSink:
             "doc_id", "source", "label"
         )
         return dsir_weights_from_counts(
-            bbc, reg, cache_key=("sink", self.counts_path)
+            bbc, reg, cache_key=f"sink:{self.counts_path}"
         )
 
     def resample(self, spark: SparkSession) -> DataFrame:

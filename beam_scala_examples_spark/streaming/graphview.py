@@ -25,7 +25,7 @@ Scale posture: ingest is one narrow per-row pass (no shuffle, no
 corpus rescan); the log is O(vectors) and IS the index substrate.
 Serve-time assembly is the batch build's Σ|bucket|² candidate join
 over the log — on a cluster you would persist the assembled edges
-per log version (exactly ``llmdata._GRAPH_EDGE_MEMO``'s posture) and
+per log version (exactly ``llmdata._graph_edges_memo``'s posture) and
 re-assemble only on ingest watermarks, turning assembly into the
 amortized "index refresh" every production vector store runs.
 Replay-idempotent by the dynamic-overwrite contract;

@@ -27,14 +27,14 @@ Memo pricing (round-12, r11 verdict item 1): the only work excluded
 from the reported value is the two r10-blessed fitted-model trainings
 (k-means and PQ codebooks, bench_detail.train_legs); the embedding-
 corpus read they train from is measured as a warmup leg but FOLDED
-into the stdout value.  Every other session memo — pair stores,
-component label maps, fingerprint relations, assignment/code
-relations, the PCA basis — is built INSIDE the timed region: its owner
-query is cold-rep timed (COLD_MEMOS: the backing memo is dropped
-before every rep, so best-of-N always pays build+serve) and the stdout
-total therefore accounts for every second of build work.  Downstream
-consumers still serve warm — the legitimate build-once/serve-many
-session economics, with the build priced into the owner's number.
+into the stdout value.  The session memos tagged in COLD_MEMOS — pair
+stores, component label maps, fingerprint relations, assignment/code
+relations, the PCA basis, the winnow copy regions — are built INSIDE
+the timed region: their owner query is cold-rep timed (the backing
+memo is dropped before every rep, so best-of-N always pays
+build+serve).  Untagged memos are built in the first rep of whichever
+query touches them first, so best-of-N drops their build.  Downstream
+consumers serve warm — the build-once/serve-many session economics.
 Warm serve legs are reported separately (bench_detail.cold_serve).
 """
 
@@ -48,7 +48,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from beam_scala_examples_spark.queries import QUERIES  # noqa: E402
-from beam_scala_examples_spark.session import get_spark  # noqa: E402
+from beam_scala_examples_spark.session import (  # noqa: E402
+    clear_session_memos,
+    get_spark,
+    memo_snapshot,
+)
 
 HEADLINE = [
     "q01_minimal_wordcount",
@@ -283,7 +287,9 @@ def _drift(
     relax the gate (it cannot move the probe), which was the r10 reason
     for introducing the probe in the first place."""
     cpu_ref = bands.get("cpu_micro_ref")
-    if cpu_ref and cpu_now:
+    if cpu_ref:
+        if not cpu_now:
+            return 1.0  # no probe to corroborate: never relax
         drift = cpu_now / float(cpu_ref)
     else:
         ref_anchor = bands.get("anchor_r01_shared_total")
@@ -516,11 +522,8 @@ def train_warmup(spark, sf_dir: str) -> dict[str, float]:
     turned ~12 per-query numbers into cache reads.  All of those legs
     are GONE: only the r10-blessed fitted-model artifacts remain here
     (the k-means and PQ codebooks, plus the embedding-corpus read they
-    train from).  Every other session memo is now built INSIDE the
-    timed region: its owner query is cold-rep timed (see COLD_MEMOS) so
-    the build cost lands in that query's number and in the stdout
-    total; downstream consumers serve warm, which is the legitimate
-    build-once/serve-many session economics — with the build priced."""
+    train from).  Every other session memo is built inside the timed
+    loop; the module docstring says which builds the total prices."""
     from beam_scala_examples_spark.queries.clustering import (
         _emb_corpus,
         _kmeans_train,
@@ -535,7 +538,7 @@ def train_warmup(spark, sf_dir: str) -> dict[str, float]:
     legs["embedding_corpus_sec"] = round(time.perf_counter() - t0, 3)
     for kind, trainer in (("kmeans", _kmeans_train), ("pq", _pq_train)):
         t0 = time.perf_counter()
-        _trained(kind, sf_dir, trainer, emb)
+        _trained(kind, spark, sf_dir, trainer, emb)
         legs[f"train_{kind}_sec"] = round(time.perf_counter() - t0, 3)
     return legs
 
@@ -559,42 +562,30 @@ def train_warmup(spark, sf_dir: str) -> dict[str, float]:
 # ---------------------------------------------------------------------------
 
 COLD_MEMOS: dict[str, tuple[str, ...]] = {
-    "dedup_jaccard_pairs": ("jacpairs",),
-    "dedup_components": ("cc_labels",),
-    "star_copurchase_pairs": ("wpairs",),
-    "text_winnow_regions": ("regions",),
-    "emb_pca_top_component": ("pcacov", "pcav"),
-    "emb_kmeans": ("kmassign",),
-    "sim_ivf_topk": ("ivfstride",),
-    "sim_pq_topk": ("pqcodes",),
-    "multimodal_phash": ("phash",),
-    "multimodal_audio_fingerprint": ("audiofp",),
-    "multimodal_video_scenes": ("videoscene",),
-    "multimodal_phash_components": ("phash_cc_labels",),
-    "multimodal_video_components": ("video_cc_labels",),
+    "dedup_jaccard_pairs": ("minhash/jacpairs",),
+    "dedup_components": ("minhash/cc_labels",),
+    "star_copurchase_pairs": ("lpa_edges/wpairs",),
+    "text_winnow_regions": ("winnow_prints/regions",),
+    "emb_pca_top_component": ("kmeans_corpora/pcacov", "kmeans_corpora/pcav"),
+    "emb_kmeans": ("kmeans_corpora/kmassign",),
+    "sim_ivf_topk": ("kmeans_corpora/ivfstride",),
+    "sim_pq_topk": ("kmeans_corpora/pqcodes",),
+    "multimodal_phash": ("minhash/phash",),
+    "multimodal_audio_fingerprint": ("minhash/audiofp",),
+    "multimodal_video_scenes": ("minhash/videoscene",),
+    "multimodal_phash_components": ("minhash/phash_cc_labels",),
+    "multimodal_video_components": ("minhash/video_cc_labels",),
 }
 
 
-def clear_cold_memos(prefixes: tuple[str, ...]) -> None:
-    """Drop (and unpersist) every session-memo entry whose key tag is in
-    ``prefixes`` — the per-query analogue of session.clear_session_memos.
-    Keys are ("tag", applicationId, sf_dir) tuples; matching is on the
-    exact tag so e.g. "phash" never clears "phash_cc_labels"."""
-    from beam_scala_examples_spark.queries.clustering import _KM_CACHE
-    from beam_scala_examples_spark.queries.llmdata import _MINHASH_CACHE
-    from beam_scala_examples_spark.queries.relational import _LPA_CACHE
-
-    for cache in (_MINHASH_CACHE, _KM_CACHE, _LPA_CACHE):
-        hits = [
-            k for k in cache
-            if isinstance(k, tuple) and k and k[0] in prefixes
-        ]
-        for k in hits:
-            df = cache.pop(k)
-            try:
-                df.unpersist(blocking=False)
-            except Exception:
-                pass
+def _clear_cold(name: str, after_build: bool) -> None:
+    """Drop ``name``'s COLD_MEMOS entries.  After a rep has built them a
+    clear that removes nothing means the tags name no memo, and the
+    query would be timed warm: refuse instead."""
+    if not clear_session_memos(COLD_MEMOS[name]) and after_build:
+        raise RuntimeError(
+            f"cold clear for {name} removed no memo: {COLD_MEMOS[name]}"
+        )
 
 
 def main() -> None:
@@ -660,8 +651,6 @@ def main() -> None:
     # BEFORE its first rep and which caches it built/replaced — so a
     # band adjudication can tell warmth drift from a real regression by
     # reading bench_detail.json instead of re-deriving the bench order.
-    from beam_scala_examples_spark.session import memo_snapshot
-
     train_legs = train_warmup(spark, sf_dir)
 
     timings: dict[str, float] = {}
@@ -672,12 +661,12 @@ def main() -> None:
             print(f"bench: {name}", file=sys.stderr, flush=True)
         fn = QUERIES[name]
         reps = 3 if name in _R01_HEADLINE else 2
-        cold = COLD_MEMOS.get(name)
+        cold = name in COLD_MEMOS
         before = memo_snapshot()
         best = float("inf")
-        for _ in range(reps):
+        for rep in range(reps):
             if cold:
-                clear_cold_memos(cold)
+                _clear_cold(name, after_build=rep > 0)
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
@@ -730,7 +719,7 @@ def main() -> None:
         fn = QUERIES[name]
         for _ in range(2):
             if name in COLD_MEMOS:  # confirm reps stay cold like the reps
-                clear_cold_memos(COLD_MEMOS[name])
+                _clear_cold(name, after_build=True)
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             timings[name] = min(
@@ -762,9 +751,9 @@ def main() -> None:
     # core count writes bench_detail.c{N}.json instead of clobbering the
     # canonical 32-core capture's detail — (stdout, detail) pairs stay
     # coherent for every invocation; the stdout line names the file.
-    cpus_now = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus_now = spark.sparkContext.defaultParallelism
     detail_name = (
-        "bench_detail.json" if cpus_now == "32"
+        "bench_detail.json" if cpus_now == 32
         else f"bench_detail.c{cpus_now}.json"
     )
     detail_path = os.path.join(
@@ -790,7 +779,7 @@ def main() -> None:
                         _drift(bands, r01_shared, cpu_now), 3
                     ) if bands else None,
                     "anchor_drift_factor": round(
-                        _drift(bands, r01_shared), 3
+                        _drift({**bands, "cpu_micro_ref": None}, r01_shared), 3
                     ) if bands else None,
                     "cpu_micro_sec": cpu_now,
                     "train_legs": train_legs,
@@ -828,8 +817,6 @@ def main() -> None:
             separators=(",", ":"),
         )
     )
-    from beam_scala_examples_spark.session import clear_session_memos
-
     clear_session_memos()
     spark.stop()
     code = exit_code(r01_shared, bands, violations, strict, excused, w_skips)

@@ -182,6 +182,10 @@ def test_drift_requires_cpu_corroboration():
     # probe reads 2.2x -> cpu-alone relaxation, no false flags
     assert bench.band_violations(slowed, bands, {}, 11.0, 0.044) == {}
     assert round(bench._drift(bands, 11.0, 0.044), 9) == 2.2
+    # a probe reference with no probe reading never relaxes: the anchor
+    # alone cannot tell a slower host from slower code
+    assert bench._drift(bands, 22.0) == 1.0
+    assert bench._drift(bands, 22.0, 0.0) == 1.0
     # legacy bands without the probe keep the round-10 anchor fallback
     legacy = {k: v for k, v in bands.items() if k != "cpu_micro_ref"}
     assert bench.band_violations(slowed, legacy, {}, 22.0, 0.02) == {}
@@ -320,21 +324,18 @@ def test_clear_session_memos_rebuilds_identically(spark, sf_dir):
     """Round-6 memo lifecycle: clearing every session memo releases the
     persisted relations and the next call rebuilds bit-identical
     results (everything memoized is deterministic)."""
-    from beam_scala_examples_spark.queries.clustering import (
-        _TRAIN_MEMO,
-        emb_kmeans,
-    )
+    from beam_scala_examples_spark.queries.clustering import emb_kmeans
     from beam_scala_examples_spark.queries.llmdata import (
-        _STRUCT_MEMO,
-        _WINNOW_PRINT_MEMO,
         text_structured,
         winnow_prints_memo,
     )
     from beam_scala_examples_spark.queries.relational import (
-        _LPA_CACHE,
         _copurchase_edges,
     )
-    from beam_scala_examples_spark.session import clear_session_memos
+    from beam_scala_examples_spark.session import (
+        clear_session_memos,
+        memo_snapshot,
+    )
 
     before_struct = sorted(
         tuple(r) for r in text_structured(spark, sf_dir).collect()
@@ -348,11 +349,10 @@ def test_clear_session_memos_rebuilds_identically(spark, sf_dir):
     before_edges = sorted(
         tuple(r) for r in _copurchase_edges(spark, sf_dir).collect()
     )
-    assert (_STRUCT_MEMO and _TRAIN_MEMO and _WINNOW_PRINT_MEMO
-            and _LPA_CACHE)
+    groups = {"struct", "trained_codebooks", "winnow_prints", "lpa_edges"}
+    assert groups <= set(memo_snapshot())
     clear_session_memos()
-    assert (not _STRUCT_MEMO and not _TRAIN_MEMO
-            and not _WINNOW_PRINT_MEMO and not _LPA_CACHE)
+    assert memo_snapshot() == {}
     after_struct = sorted(
         tuple(r) for r in text_structured(spark, sf_dir).collect()
     )
@@ -369,6 +369,98 @@ def test_clear_session_memos_rebuilds_identically(spark, sf_dir):
     assert before_km == after_km
     assert before_prints == after_prints
     assert before_edges == after_edges
+
+
+def test_cold_clear_refuses_a_tag_that_names_no_memo(spark, sf_dir,
+                                                     monkeypatch):
+    """A cold owner's clear goes through the registry and must remove an
+    entry on every rep after a build; a tag that names no memo would
+    leave the query timed warm, so the bench refuses it."""
+    import pytest
+
+    import bench
+    from beam_scala_examples_spark.session import memo, memo_snapshot
+
+    monkeypatch.setattr(bench, "COLD_MEMOS", {
+        "owner": ("probe/rel",), "typo": ("probe/no_such_tag",),
+    })
+    memo("probe/rel", spark, sf_dir, lambda: [1])
+    assert memo_snapshot().get("probe") == 1
+    bench._clear_cold("owner", after_build=True)
+    assert "probe" not in memo_snapshot()
+    bench._clear_cold("typo", after_build=False)  # first rep: nothing yet
+    with pytest.raises(RuntimeError, match="removed no memo"):
+        bench._clear_cold("typo", after_build=True)
+
+
+def _holds_dataframe(value) -> bool:
+    if isinstance(value, DataFrame):
+        return True
+    if isinstance(value, dict):
+        value = list(value.values())
+    if isinstance(value, (list, tuple)):
+        return any(_holds_dataframe(v) for v in value)
+    return False
+
+
+def _perfbench_mix() -> tuple[str, ...]:
+    """The perfbench llmdata query mix, read from its source (perfbench
+    modules import each other as top-level names, so not importable
+    from here)."""
+    import ast
+
+    path = os.path.join(
+        os.path.dirname(__file__), "..", "perfbench", "batch.py"
+    )
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and any(
+            getattr(t, "id", None) == "MIX" for t in node.targets
+        ):
+            return ast.literal_eval(node.value)
+    raise AssertionError("perfbench/batch.py defines no MIX")
+
+
+def test_memos_live_only_in_the_session_registry(spark, sf_dir):
+    """Every relation a query keeps between calls lives in the session
+    registry: after the memo consumers, the per-call holders (BPE
+    vocabulary, recursive autocomplete levels) and the perfbench llmdata
+    mix have run, no module global in queries.*, operators.* or
+    streaming.* holds a DataFrame, and one clear empties the registry."""
+    import importlib
+    import pkgutil
+
+    import beam_scala_examples_spark as pkg
+    from beam_scala_examples_spark.queries import QUERIES
+    from beam_scala_examples_spark.session import (
+        clear_session_memos,
+        memo_snapshot,
+    )
+    from tests.test_properties import _MEMO_CONSUMERS
+
+    names = [*_MEMO_CONSUMERS, "text_bpe_encode",
+             "q05_autocomplete_recursive", *_perfbench_mix()]
+    for name in names:
+        QUERIES[name](spark, sf_dir).collect()
+
+    held = []
+    for sub in ("queries", "operators", "streaming"):
+        base = importlib.import_module(f"{pkg.__name__}.{sub}")
+        mods = [base] + [
+            importlib.import_module(m.name)
+            for m in pkgutil.walk_packages(base.__path__, base.__name__ + ".")
+        ]
+        held += [
+            f"{mod.__name__}.{k}"
+            for mod in mods
+            for k, v in vars(mod).items()
+            if _holds_dataframe(v)
+        ]
+    assert held == []
+    assert {"minhash", "bpe_merges"} <= set(memo_snapshot())
+    clear_session_memos()
+    assert memo_snapshot() == {}
 
 
 def test_bench_capture_hygiene_evidence():

@@ -844,11 +844,11 @@ def test_vbin_spark_matches_python_mirror(spark):
 # ---------------------------------------------------------------------------
 
 _MEMO_CONSUMERS = [
-    "text_winnow_coverage",        # _WINNOW_PRINT_MEMO
-    "text_quality_nb_classify",    # _CLS_MEMO
-    "sample_dsir_weights",         # _DSIR_W_MEMO + _DSIR_CACHE
+    "text_winnow_coverage",        # winnow_prints/prints
+    "text_quality_nb_classify",    # nb_classifier/preds
+    "sample_dsir_weights",         # dsir_weights/weights + dsir_counts/batch
     "sample_dsir_resample",        # consumes the weight memo
-    "star_copurchase_assortativity",  # _LPA_CACHE edge memo (round 10)
+    "star_copurchase_assortativity",  # lpa_edges/edges
 ]
 
 _memo_truth: dict[str, list] = {}

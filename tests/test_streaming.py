@@ -1869,7 +1869,7 @@ def _trained_cents(spark, sf_dir):
     from beam_scala_examples_spark.tables import load
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return _trained("kmeans", sf_dir, _kmeans_train, emb)
+    return _trained("kmeans", spark, sf_dir, _kmeans_train, emb)
 
 
 def test_ivf_ingest_matches_batch(spark, sf_dir, tmpdir):

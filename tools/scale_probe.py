@@ -852,7 +852,7 @@ def hybrid_probe(spark, sf_dir: str,
     # first timed factor doesn't pay whole-stage compile for the Lloyd
     # and serve pipelines
     clear_session_memos()
-    _trained("kmeans", sf_dir, _kmeans_train, _emb_corpus(spark, sf_dir))
+    _trained("kmeans", spark, sf_dir, _kmeans_train, _emb_corpus(spark, sf_dir))
     _km_assigned(spark, sf_dir).count()
     _filtered_ivf_for(
         spark, sf_dir, _allowed_vecs(spark, sf_dir)
@@ -866,7 +866,7 @@ def hybrid_probe(spark, sf_dir: str,
         e["allowed_rows"] = _allowed_vecs(spark, d).count()
         t0 = time.perf_counter()
         corpus = _emb_corpus(spark, d)
-        _trained("kmeans", d, _kmeans_train, corpus)
+        _trained("kmeans", spark, d, _kmeans_train, corpus)
         _km_assigned(spark, d).count()
         e["train_sec"] = round(time.perf_counter() - t0, 3)
 
