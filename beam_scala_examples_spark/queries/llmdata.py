@@ -27,6 +27,7 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
+import math
 import random
 
 from pyspark.sql import DataFrame, SparkSession
@@ -3020,11 +3021,16 @@ ORACLE["sample_epoch_oversample"] = f"""
 FUZZY_PREFIX_CHARS = 32
 FUZZY_MAX_EDITS = 16
 FUZZY_BAND_CHARS = 64
-# Sub-block salt width for the fuzzy self-join (round 12, guide §2.5):
-# each (lang, band) block's pair space splits G x G ways so the bounded
-# Levenshtein stage parallelizes past the tiny block-key cardinality.
-# Purely an execution knob — the pair set is independent of G.
-FUZZY_SALT = 8
+
+
+def _fuzzy_salt(spark: SparkSession) -> int:
+    """Sub-block salt width G for the fuzzy self-join (round 12, guide
+    §2.5): each (lang, band) block's pair space splits G x G ways so the
+    bounded Levenshtein stage parallelizes past the tiny block-key
+    cardinality.  The smallest G with G² >= the session's cores gives
+    every core a sub-block.  Purely an execution knob — the pair set is
+    independent of G."""
+    return math.isqrt(max(spark.sparkContext.defaultParallelism, 1) - 1) + 1
 
 
 def dedup_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3056,12 +3062,13 @@ def dedup_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the salted keys across every core; at 100 TB broadcast is not on
     the table for a corpus-sized build side anyway."""
     docs = load(spark, sf_dir, "documents")
-    salt = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(FUZZY_SALT))
+    n_salt = _fuzzy_salt(spark)
+    salt = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_salt))
     # long literals: the salt column is bigint (pmod of xxhash64), and a
     # type-mismatched fan would make the join key cast(g2 as bigint) —
     # breaking the repartition-distribution reuse below
     fan = F.explode(
-        F.array(*[F.lit(j).cast("long") for j in range(FUZZY_SALT)])
+        F.array(*[F.lit(j).cast("long") for j in range(n_salt)])
     )
     base = docs.select(
         "doc_id",

@@ -1,7 +1,6 @@
 """Streaming CDC compaction: the latest-state upsert view maintained
 incrementally — the streaming twin of ``queries/behavior.py::
-events_latest_state`` (batch oracle), in the same production shape as
-``gamestats.SpamFilteredTeamScoresSink``: fully distributed foreachBatch,
+events_latest_state`` (batch oracle): fully distributed foreachBatch,
 zero driver state, idempotent under batch replay.
 
 At 100 TB-scale ingest this is the standard log->table maintenance loop:

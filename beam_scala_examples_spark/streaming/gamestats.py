@@ -4,10 +4,12 @@ Branch 1 — spam-filtered team scores: Beam computes per-window user sums,
 derives a spammer map as a side input, and anti-joins it against the raw
 events of the same window. Side inputs over windowed aggregates have no
 streaming-native Spark equivalent (SURVEY §7.4), so the engine stages the
-two-phase computation inside ``foreachBatch``: per micro-batch the spam
-set is recomputed from accumulated state and the anti-join + windowed
-aggregation run as ordinary batch ops — semantics equal to the batch
-``q14_spam_filtered_team_score`` on the same bounded data.
+two-phase computation inside ``foreachBatch``: each micro-batch folds
+into a versioned snapshot of per-(window, team, user) cents that also
+carries each user's total, the spam limit comes back from an
+``observe`` on the snapshot write, and the filtered windowed totals are
+an ordinary batch aggregate of the snapshot — semantics equal to the
+batch ``q14_spam_filtered_team_score`` on the same bounded data.
 
 Branch 2 — mean session length per fixed window: chained stateful
 operators (session_window agg -> time-window agg), supported natively on
@@ -16,7 +18,7 @@ Spark >= 3.5 with one watermark.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..operators.agg import cents
@@ -66,28 +68,32 @@ def session_mean(events: DataFrame, gap: str = "3600 seconds",
 
 class SpamFilteredTeamScoresSink:
     """Production-shape streaming Q14 branch 1: fully distributed
-    foreachBatch — nothing accumulates on the driver
+    foreachBatch — the driver receives two scalars per call
     (``GameStats.scala:84-140``).
 
-    Per micro-batch:
+    State is one compacted snapshot per batch, versioned by ``batch_id``
+    under ``<contrib_path>/snap-<batch_id>``: one row per (win_start,
+    team, user_id) ever seen, with its score ``cents`` and the user's
+    total ``user_cents``.  Per micro-batch:
 
-    1. the batch's per-(window, team, user) score cents are appended to a
-       *contribution* table partitioned by ``batch_id`` with dynamic
-       partition overwrite — replaying a batch after a failure replaces
-       its own partition, making the append idempotent (exactly-once);
-    2. the accumulated contribution table (already aggregated: one row
-       per window x team x user ever seen — far smaller than raw events)
-       is re-aggregated to user totals, the spam set is derived as a
-       DataFrame (user total > 2.5 x mean), and the anti-joined windowed
-       team totals overwrite the output table — each batch refines all
-       panes, Beam's accumulating-mode side-input semantics.
+    1. snapshot *b* = fold(newest snapshot with a lower id, batch *b*):
+       the union is repartitioned once by ``user_id``, which serves both
+       the (win_start, team, user_id) sum and the per-user window sum.
+       An ``observe`` on the snapshot write returns the total cents and
+       the user count, so the spam limit (user total > 2.5 x mean) needs
+       no further job;
+    2. snapshot *b* is read back, spammers' rows are dropped, and the
+       windowed team totals overwrite the output table — each batch
+       refines all panes, Beam's accumulating-mode side-input semantics.
 
-    The full-table overwrite stands in for a lakehouse MERGE keyed on
-    (win_start, team); with Delta/Iceberg, step 2's tail becomes a MERGE
-    and only changed panes rewrite.  State scales as O(windows x teams x
-    users-active-in-window), all of it in the cluster's storage layer —
-    the driver holds nothing.  The driver-dict twin below remains as the
-    test oracle.
+    Only the predecessor and snapshot *b* are kept; every other snapshot
+    is deleted.  Structured Streaming replays only the newest batch, so a
+    replay of *b* finds the same predecessor and rewrites ``snap-b``
+    from it — the sink is idempotent (exactly-once), and its state is
+    O(windows x teams x users) rows whatever the run length.  The
+    full-table overwrite stands in for a lakehouse MERGE keyed on
+    (win_start, team).  The driver-dict twin below remains as the test
+    oracle.
     """
 
     def __init__(self, contrib_path: str, out_path: str, window: str = "1 hour"):
@@ -95,43 +101,66 @@ class SpamFilteredTeamScoresSink:
         self.out_path = out_path
         self.window = window
 
+    def _snapshots(self, spark):
+        """(FileSystem, {batch_id: Path}) of the snapshots on disk."""
+        sc = spark.sparkContext
+        pattern = sc._jvm.org.apache.hadoop.fs.Path(f"{self.contrib_path}/snap-*")
+        fs = pattern.getFileSystem(sc._jsc.hadoopConfiguration())
+        return fs, {
+            int(st.getPath().getName()[len("snap-"):]): st.getPath()
+            for st in fs.globStatus(pattern) or []
+        }
+
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        contrib = (
-            batch_df.select(
-                F.window("ts", self.window).start.alias("win_start"),
-                F.col("event_type").alias("team"),
-                "user_id",
-                cents("value").alias("cents"),
-            )
-            .groupBy("win_start", "team", "user_id")
-            .agg(F.sum("cents").alias("cents"))
-            .withColumn("batch_id", F.lit(int(batch_id)))
-        )
-        (
-            contrib.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.contrib_path)
-        )
         spark = batch_df.sparkSession
-        acc = (
-            spark.read.parquet(self.contrib_path)
+        fs, snaps = self._snapshots(spark)
+        prev = max((b for b in snaps if b < batch_id), default=None)
+        rows = batch_df.select(
+            F.window("ts", self.window).start.alias("win_start"),
+            F.col("event_type").alias("team"),
+            "user_id",
+            cents("value").alias("cents"),
+        )
+        if prev is not None:
+            rows = rows.unionByName(
+                spark.read.schema(rows.schema).parquet(snaps[prev].toString()))
+        by_user = Window.partitionBy("user_id")
+        key = F.struct("win_start", "team")
+        snap = (
+            rows.repartition("user_id")
             .groupBy("win_start", "team", "user_id")
             .agg(F.sum("cents").alias("cents"))
+            .select(
+                "*",
+                F.sum("cents").over(by_user).alias("user_cents"),
+                (key == F.min(key).over(by_user)).alias("first_of_user"),
+            )
         )
-        totals = acc.groupBy("user_id").agg(F.sum("cents").alias("total_cents"))
-        mean = totals.agg(F.avg("total_cents").alias("mean_cents"))
-        spammers = (
-            totals.join(F.broadcast(mean))
-            .filter(F.col("total_cents") > 2.5 * F.col("mean_cents"))
-            .select("user_id")
-        )
-        out = (
-            acc.join(spammers, "user_id", "left_anti")
-            .groupBy("win_start", "team")
+        # observe() rejects DISTINCT, so users are counted by the flag on
+        # each user's first row
+        obs = Observation()
+        snap = snap.observe(
+            obs,
+            F.sum("cents").alias("cents"),
+            F.count_if("first_of_user").alias("users"),
+        ).drop("first_of_user")
+        snap_path = f"{self.contrib_path}/snap-{int(batch_id)}"
+        snap.write.mode("overwrite").parquet(snap_path)
+
+        totals = obs.get
+        state = spark.read.schema(snap.schema).parquet(snap_path)
+        if totals["users"]:
+            # the oracle's float operations, in its order: 2.5 x (sum / n)
+            limit = 2.5 * (totals["cents"] / totals["users"])
+            state = state.filter(~(F.col("user_cents") > limit))
+        (
+            state.groupBy("win_start", "team")
             .agg(F.round(F.sum("cents") / 100.0, 2).alias("total_score"))
+            .write.mode("overwrite").parquet(self.out_path)
         )
-        out.write.mode("overwrite").parquet(self.out_path)
+        for b, path in snaps.items():
+            if b not in (prev, batch_id):
+                fs.delete(path, True)
 
 
 class SpamFilteredTeamScores:

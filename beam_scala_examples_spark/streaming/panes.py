@@ -49,8 +49,8 @@ class PaneSink:
 
     Writes are partitioned by ``batch_id`` with dynamic partition
     overwrite, so replaying a batch replaces its own partition
-    (exactly-once), like the contribution table in
-    ``streaming/gamestats.py``; the finalized-set read excludes the
+    (exactly-once), like the compaction log in
+    ``streaming/cdc.py``; the finalized-set read excludes the
     current batch's partition so a replay cannot relabel its own panes
     LATE.  (Structured Streaming only ever replays the latest
     uncommitted batch, which is exactly the case this covers.)

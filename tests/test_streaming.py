@@ -9,6 +9,7 @@ matching batch query.
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -178,7 +179,7 @@ def test_spam_filter_foreachbatch_matches_batch(spark, sf_dir, event_rows, tmpdi
 
 def test_spam_filter_distributed_sink_matches_batch(spark, sf_dir, event_rows, tmpdir):
     """J5/N1 production shape: the fully distributed foreachBatch sink
-    (contribution table + per-batch DataFrame spam set + anti-join +
+    (versioned snapshot fold + observed spam limit + filtered windowed
     overwrite — zero driver state, no collect) writes a final parquet
     table equal to the batch q14 oracle."""
     stream = _feed(spark, event_rows, tmpdir, chunk_size=300)
@@ -200,28 +201,79 @@ def test_spam_filter_distributed_sink_matches_batch(spark, sf_dir, event_rows, t
     assert got == expected
 
 
-def test_spam_filter_sink_batch_replay_idempotent(spark, sf_dir, event_rows, tmpdir):
-    """Exactly-once: re-invoking the sink with the same batch_id (the
-    failure-replay path) must not double-count — the batch's contrib
-    partition is replaced, not appended."""
-    rows = event_rows[:600]
-    sink = gamestats.SpamFilteredTeamScoresSink(
-        f"{tmpdir}/contrib", f"{tmpdir}/spam_filtered"
-    )
-    batch = spark.createDataFrame(
+def _event_batch(spark, rows):
+    """One micro-batch DataFrame of fixture event rows."""
+    return spark.createDataFrame(
         [(r["event_id"], r["ts"], r["user_id"], r["event_type"], r["value"])
          for r in rows],
         "event_id long, ts string, user_id long, event_type string, value double",
     ).withColumn("ts", F.to_timestamp("ts"))
-    sink(batch, 0)
-    once = sorted(
+
+
+def _spam_out(spark, tmpdir):
+    return sorted(
         tuple(r) for r in spark.read.parquet(f"{tmpdir}/spam_filtered").collect()
     )
-    sink(batch, 0)  # replay
-    twice = sorted(
-        tuple(r) for r in spark.read.parquet(f"{tmpdir}/spam_filtered").collect()
+
+
+def test_spam_filter_sink_batch_replay_idempotent(spark, event_rows, tmpdir):
+    """Exactly-once: re-invoking the sink with the same batch_id (the
+    failure-replay path) must not double-count — the batch's snapshot is
+    rewritten from the same predecessor, not folded in twice.  Replayed
+    both as the first batch (no predecessor) and as batch 1 after
+    batches 0 and 1 (predecessor snapshot 0)."""
+    for n_batches in (1, 2):
+        path = f"{tmpdir}/run{n_batches}"
+        sink = gamestats.SpamFilteredTeamScoresSink(
+            f"{path}/contrib", f"{path}/spam_filtered"
+        )
+        oracle = gamestats.SpamFilteredTeamScores()
+        for bid in range(n_batches):
+            batch = _event_batch(spark, event_rows[300 * bid:300 * (bid + 1)])
+            sink(batch, bid)
+            oracle(batch, bid)
+        once = _spam_out(spark, path)
+        sink(batch, n_batches - 1)  # replay
+        assert _spam_out(spark, path) == once
+        assert once == oracle.result()
+
+
+def test_spam_filter_sink_state_stays_bounded(spark, event_rows, tmpdir):
+    """The sink keeps only the newest snapshot and its predecessor, so its
+    state does not grow with the number of batches, and the output still
+    equals the driver-dict oracle."""
+    contrib = f"{tmpdir}/contrib"
+    sink = gamestats.SpamFilteredTeamScoresSink(contrib, f"{tmpdir}/spam_filtered")
+    oracle = gamestats.SpamFilteredTeamScores()
+    per = -(-len(event_rows) // 8)
+    for bid in range(8):
+        batch = _event_batch(spark, event_rows[per * bid:per * (bid + 1)])
+        sink(batch, bid)
+        oracle(batch, bid)
+    kept = [e for e in os.listdir(contrib) if not e.startswith((".", "_"))]
+    assert len(kept) <= 2 and all(e.startswith("snap-") for e in kept), kept
+    assert _spam_out(spark, tmpdir) == oracle.result()
+
+
+def test_spam_filter_sink_runs_few_jobs(spark, event_rows, tmpdir):
+    """Cost guard: one sink call on a 600-row batch with a predecessor
+    snapshot runs at most 5 Spark jobs (a snapshot fold and an output
+    overwrite, each a shuffle stage plus its result stage)."""
+    sink = gamestats.SpamFilteredTeamScoresSink(
+        f"{tmpdir}/contrib", f"{tmpdir}/spam_filtered"
     )
-    assert once == twice
+    sink(_event_batch(spark, event_rows[:400]), 0)
+    batch = _event_batch(spark, event_rows[400:1000])
+    assert batch.count() == 600
+    sc = spark.sparkContext
+    group = f"spam-sink-{os.path.basename(tmpdir)}"
+    sc.setJobGroup(group, "one spam sink call")
+    try:
+        sink(batch, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
 
 
 def test_pane_timing_early_and_ontime(spark, tmpdir):
