@@ -27,10 +27,17 @@ def _configure(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # A bare session defaults to 200 shuffle partitions — far too many
-    # tasks for the sf0.01 correctness runs; AQE coalesces but still pays
-    # per-task scheduling. Sized to the local core count.
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    # A bare session starts batch shuffles at 200 partitions — far too
+    # many tasks for the sf0.01 correctness runs; AQE coalesces but still
+    # pays per-task scheduling.  The same two widths as session.get_spark:
+    # batch shuffles start at the core count, stream state gets one
+    # partition per stateful operator.
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    spark.conf.set(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        str(spark.sparkContext.defaultParallelism),
+    )
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
     return spark
 
 

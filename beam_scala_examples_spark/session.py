@@ -6,6 +6,20 @@ runs.  AQE is on so skewed shuffles re-plan at runtime (the engine-side
 replacement for the reference's hand-rolled hot-key fanout,
 ``complete/AutoComplete.scala:249-254``); timezone is pinned to UTC
 (``complete/game/utils/GameConstants.scala:34``).
+
+Shuffles have two widths, one per conf:
+
+- **Batch width** -- ``spark.sql.adaptive.coalescePartitions
+  .initialPartitionNum``.  With AQE and coalescing on, this is the
+  partition count every batch shuffle starts at before AQE coalesces it;
+  ``spark.sql.shuffle.partitions`` is only its fallback.
+- **Streaming width** -- ``spark.sql.shuffle.partitions``.  Structured
+  Streaming runs micro-batches (``foreachBatch`` bodies included) with
+  AQE off, so this is the state partition count of every stateful
+  operator, fixed in the checkpoint's offset log when a query first
+  starts.  Each state partition pays a task, a state-store load and a
+  delta-file commit on every micro-batch, so it is sized to the stream's
+  keys and rate, not to the cores: 1 here.
 """
 
 from __future__ import annotations
@@ -27,7 +41,9 @@ def get_spark(
 
     On a cluster, ``master``/parallelism come from spark-submit; locally we
     default to ``local[$SPARK_GRAFT_CPUS]`` to match the driver harness,
-    and to the host's usable cores when it is unset.
+    and to the host's usable cores when it is unset.  ``shuffle_partitions``
+    (else ``$SPARK_GRAFT_SHUFFLE``, else the cores) is the batch width; the
+    streaming width is 1.  ``extra_conf`` overrides either.
     """
     cpus = os.environ.get(
         "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
@@ -46,7 +62,11 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config(
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+            str(shuffle_partitions),
+        )
+        .config("spark.sql.shuffle.partitions", "1")
         # Python<->JVM boundary is always Arrow-batched, never pickled rows.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # The driver testdata writes TIMESTAMP(NANOS) parquet, which Spark

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from beam_scala_examples_spark.queries import QUERIES
 from beam_scala_examples_spark.queries.clustering import KM_K
+from beam_scala_examples_spark.session import clear_session_memos
 from tests.test_plans import plan_str
 
 
@@ -21,15 +22,26 @@ def test_kmeans_partitioning_independent(spark, sf_dir):
         (r.vec_id, r.cluster)
         for r in QUERIES["emb_kmeans"](spark, sf_dir).collect()
     }
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    # The batch width: with AQE on, shuffles start at initialPartitionNum.
+    # The training and the assignment are session memos, so drop them
+    # for the rerun to train at the other width.
+    width = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    prev = spark.conf.get(width)
+    memos = [
+        "kmeans_corpora/corpus",
+        "kmeans_corpora/kmassign",
+        "trained_codebooks/kmeans",
+    ]
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        spark.conf.set(width, "7")
+        clear_session_memos(memos)
         other = {
             (r.vec_id, r.cluster)
             for r in QUERIES["emb_kmeans"](spark, sf_dir).collect()
         }
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set(width, prev)
+        clear_session_memos(memos)
     assert base == other
     assert len({c for _, c in base}) <= KM_K
 

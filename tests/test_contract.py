@@ -43,8 +43,14 @@ def test_queries_accept_bare_session(spark, sf_dir):
     """The driver hands a BARE session; the query wrapper must re-apply
     the engine confs per call. Un-set them first so the test actually
     catches a dropped _configure (the shared fixture session already has
-    them), and restore the fixture's shuffle sizing afterwards."""
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    them), and restore the fixture's two shuffle widths afterwards."""
+    widths = {
+        k: spark.conf.get(k)
+        for k in (
+            "spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        )
+    }
     spark.conf.unset("spark.sql.session.timeZone")
     spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
     try:
@@ -57,7 +63,8 @@ def test_queries_accept_bare_session(spark, sf_dir):
             spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
         )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
+        for k, v in widths.items():
+            spark.conf.set(k, v)
 
 
 def test_bench_headline_names_are_registered():

@@ -13,6 +13,8 @@ import re
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from beam_scala_examples_spark.queries import QUERIES
 
 
@@ -748,3 +750,11 @@ def test_filtered_ivf_predicate_scan_is_pruned(plans):
         )
     assert "EqualTo(lang,en)" in p and "IsNotNull(lang)" in p
     assert "LeftSemi" in p
+
+
+def test_batch_shuffle_starts_at_batch_width(spark):
+    """The session's batch width: with AQE on, a batch groupBy plans its
+    exchange at initialPartitionNum (4 on the fixture session), not at
+    the streaming width in spark.sql.shuffle.partitions."""
+    df = spark.range(100).withColumn("k", F.col("id") % 3).groupBy("k").count()
+    assert re.search(r"hashpartitioning\(k#\d+L?, 4\)", plan_str(df))

@@ -91,6 +91,35 @@ def test_leaderboard_team_final_state_matches_batch(spark, sf_dir, event_rows, t
     assert final == expected
 
 
+def test_stateful_stream_runs_one_state_partition(spark, sf_dir, event_rows, tmpdir):
+    """The session's streaming width: a stateful query on a get_spark
+    session keeps one state store per stateful operator (each store
+    pays a task, a load and a commit per micro-batch), whatever the
+    batch width, and its final state still equals the batch twin."""
+    stream = _feed(spark, event_rows, tmpdir)
+    final: dict = {}
+
+    def sink(batch_df, _bid):
+        for r in batch_df.collect():
+            final[(r.win_start, r.team)] = r.total_score
+
+    q = _run_stream(leaderboard.team_scores(stream), "update", sink, tmpdir)
+
+    widths = [
+        op["numShufflePartitions"]
+        for p in q.recentProgress
+        for op in p["stateOperators"]
+    ]
+    assert widths and set(widths) == {1}
+    con = duck_connect(sf_dir)
+    expected = {
+        (r[0], r[1]): r[2]
+        for r in con.sql(game.ORACLE["q13_leaderboard_team"]).fetchall()
+    }
+    con.close()
+    assert final == expected
+
+
 def test_user_scores_final_state_matches_batch(spark, sf_dir, event_rows, tmpdir):
     """X5: global-window running user totals in update mode — the last
     emission per user equals the batch q11 total."""
