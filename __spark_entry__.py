@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from beam_scala_examples_spark.queries import ORACLE, QUERIES  # noqa: E402
+from beam_scala_examples_spark.session import CHECKPOINT_FILE_MANAGER  # noqa: E402
 
 
 def _configure(spark: SparkSession) -> SparkSession:
@@ -38,6 +39,11 @@ def _configure(spark: SparkSession) -> SparkSession:
         str(spark.sparkContext.defaultParallelism),
     )
     spark.conf.set("spark.sql.shuffle.partitions", "1")
+    # Checkpoint files through the FileSystem API, as in get_spark.
+    spark.conf.set(
+        "spark.sql.streaming.checkpointFileManagerClass",
+        CHECKPOINT_FILE_MANAGER,
+    )
     return spark
 
 

@@ -12,14 +12,26 @@ Shuffles have two widths, one per conf:
 - **Batch width** -- ``spark.sql.adaptive.coalescePartitions
   .initialPartitionNum``.  With AQE and coalescing on, this is the
   partition count every batch shuffle starts at before AQE coalesces it;
-  ``spark.sql.shuffle.partitions`` is only its fallback.
-- **Streaming width** -- ``spark.sql.shuffle.partitions``.  Structured
-  Streaming runs micro-batches (``foreachBatch`` bodies included) with
-  AQE off, so this is the state partition count of every stateful
-  operator, fixed in the checkpoint's offset log when a query first
-  starts.  Each state partition pays a task, a state-store load and a
-  delta-file commit on every micro-batch, so it is sized to the stream's
-  keys and rate, not to the cores: 1 here.
+  ``spark.sql.shuffle.partitions`` is only its fallback.  The
+  ``foreachBatch`` bodies of a stateless stream (the spam sink's) are
+  batch plans too: they run with AQE on, at this width.
+- **Streaming width** -- ``spark.sql.shuffle.partitions``.  Spark runs a
+  stream that holds a stateful operator with AQE off, its
+  ``foreachBatch`` bodies included, so this is the state partition count
+  of every stateful operator, fixed in the checkpoint's offset log when a
+  query first starts.  Each state partition pays a task, a state-store
+  load and a delta-file commit on every micro-batch, so it is sized to
+  the stream's keys and rate, not to the cores: 1 here.
+
+Streaming checkpoint files (offset, commit and source logs, state
+deltas) are written through ``CHECKPOINT_FILE_MANAGER``, Spark's
+FileSystem-API checkpoint manager.  Without libhadoop, Hadoop's local
+file system forks a ``chmod`` for every file it creates, and the default
+FileContext manager's rename forks four ``readlink`` more (the file and
+its ``.crc``): five processes per checkpoint file, where this manager
+needs one.  Its rename onto an existing file keeps that file, so a
+replayed batch keeps the state delta its first run wrote; a replay reads
+the same offsets and so writes the same state.
 """
 
 from __future__ import annotations
@@ -29,6 +41,11 @@ from collections import Counter
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing"
+    ".FileSystemBasedCheckpointFileManager"
+)
 
 
 def get_spark(
@@ -43,7 +60,8 @@ def get_spark(
     default to ``local[$SPARK_GRAFT_CPUS]`` to match the driver harness,
     and to the host's usable cores when it is unset.  ``shuffle_partitions``
     (else ``$SPARK_GRAFT_SHUFFLE``, else the cores) is the batch width; the
-    streaming width is 1.  ``extra_conf`` overrides either.
+    streaming width is 1.  ``extra_conf`` overrides either width and the
+    checkpoint manager.
     """
     cpus = os.environ.get(
         "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
@@ -67,6 +85,11 @@ def get_spark(
             str(shuffle_partitions),
         )
         .config("spark.sql.shuffle.partitions", "1")
+        # Checkpoint files go through the FileSystem API (module docstring).
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            CHECKPOINT_FILE_MANAGER,
+        )
         # Python<->JVM boundary is always Arrow-batched, never pickled rows.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # The driver testdata writes TIMESTAMP(NANOS) parquet, which Spark

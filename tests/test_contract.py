@@ -43,16 +43,22 @@ def test_queries_accept_bare_session(spark, sf_dir):
     """The driver hands a BARE session; the query wrapper must re-apply
     the engine confs per call. Un-set them first so the test actually
     catches a dropped _configure (the shared fixture session already has
-    them), and restore the fixture's two shuffle widths afterwards."""
-    widths = {
+    them), and restore the fixture's two shuffle widths and checkpoint
+    manager afterwards."""
+    from beam_scala_examples_spark.session import CHECKPOINT_FILE_MANAGER
+
+    manager_key = "spark.sql.streaming.checkpointFileManagerClass"
+    kept = {
         k: spark.conf.get(k)
         for k in (
             "spark.sql.shuffle.partitions",
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+            manager_key,
         )
     }
     spark.conf.unset("spark.sql.session.timeZone")
     spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    spark.conf.unset(manager_key)
     try:
         qs = entry_mod.queries()
         df = qs["q01_minimal_wordcount"](spark, sf_dir)
@@ -62,8 +68,9 @@ def test_queries_accept_bare_session(spark, sf_dir):
         assert (
             spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
         )
+        assert spark.conf.get(manager_key, None) == CHECKPOINT_FILE_MANAGER
     finally:
-        for k, v in widths.items():
+        for k, v in kept.items():
             spark.conf.set(k, v)
 
 

@@ -9,9 +9,12 @@ matching batch query.
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import shutil
 import tempfile
+import time
 
 import pytest
 
@@ -26,6 +29,7 @@ from beam_scala_examples_spark.streaming.sources import (
 from beam_scala_examples_spark.queries import behavior, game
 
 from .oracle_harness import duck_connect
+from .test_plans import plan_str
 
 
 @pytest.fixture(scope="module")
@@ -70,6 +74,16 @@ def _feed(spark, rows, tmpdir, chunk_size=200):
     return read_event_stream(spark, f"{tmpdir}/feed")
 
 
+def _q13_team_oracle(sf_dir):
+    con = duck_connect(sf_dir)
+    expected = {
+        (r[0], r[1]): r[2]
+        for r in con.sql(game.ORACLE["q13_leaderboard_team"]).fetchall()
+    }
+    con.close()
+    return expected
+
+
 def test_leaderboard_team_final_state_matches_batch(spark, sf_dir, event_rows, tmpdir):
     """X4: update-mode windowed totals with watermark — final refined state
     equals the batch q13 answer when lateness covers all late data."""
@@ -81,14 +95,7 @@ def test_leaderboard_team_final_state_matches_batch(spark, sf_dir, event_rows, t
             final[(r.win_start, r.team)] = r.total_score
 
     _run_stream(leaderboard.team_scores(stream), "update", sink, tmpdir)
-
-    con = duck_connect(sf_dir)
-    expected = {
-        (r[0], r[1]): r[2]
-        for r in con.sql(game.ORACLE["q13_leaderboard_team"]).fetchall()
-    }
-    con.close()
-    assert final == expected
+    assert final == _q13_team_oracle(sf_dir)
 
 
 def test_stateful_stream_runs_one_state_partition(spark, sf_dir, event_rows, tmpdir):
@@ -111,13 +118,7 @@ def test_stateful_stream_runs_one_state_partition(spark, sf_dir, event_rows, tmp
         for op in p["stateOperators"]
     ]
     assert widths and set(widths) == {1}
-    con = duck_connect(sf_dir)
-    expected = {
-        (r[0], r[1]): r[2]
-        for r in con.sql(game.ORACLE["q13_leaderboard_team"]).fetchall()
-    }
-    con.close()
-    assert final == expected
+    assert final == _q13_team_oracle(sf_dir)
 
 
 def test_user_scores_final_state_matches_batch(spark, sf_dir, event_rows, tmpdir):
@@ -1013,19 +1014,24 @@ def test_quarantine_sink_routes_and_matches_batch_rules(spark, sf_dir, event_row
     assert main_ids.isdisjoint(quar_ids)
 
 
+def _append_chunks(rows, chunk_size, feed):
+    """New chunks that arrive while a query is down: names continue the
+    sequence, mtimes strictly later than write_arrival_chunks' files."""
+    base = time.time()
+    for n, i in enumerate(range(0, len(rows), chunk_size)):
+        path = os.path.join(feed, f"chunk_1{n:04d}.json")
+        with open(path, "w") as f:
+            for r in rows[i : i + chunk_size]:
+                f.write(json.dumps(r) + "\n")
+        os.utime(path, (base + n, base + n))
+
+
 def test_checkpoint_restart_resumes_exactly_once(spark, sf_dir, event_rows, tmpdir):
     """Recovery contract: a query restarted on the SAME checkpoint after
     new chunks arrive must process only the unseen files — already-
     consumed batches are not re-read (the source offset log), the
     replay-idempotent sink absorbs any boundary overlap, and the final
     serving view still equals the batch oracle over all rows."""
-    import json as _json
-    import os as _os
-    import time as _time
-
-    from beam_scala_examples_spark.streaming import cdc
-    from beam_scala_examples_spark.streaming.sources import read_event_stream
-
     half = len(event_rows) // 2
     feed = f"{tmpdir}/feed"
     write_arrival_chunks(event_rows[:half], 300, feed)
@@ -1036,16 +1042,7 @@ def test_checkpoint_restart_resumes_exactly_once(spark, sf_dir, event_rows, tmpd
         .select("batch_id").distinct().count()
     )
 
-    # new chunks arrive while the query is down (names continue the
-    # sequence; mtimes strictly later than run 1's files)
-    base = _time.time()
-    rows2 = event_rows[half:]
-    for n, i in enumerate(range(0, len(rows2), 300)):
-        path = _os.path.join(feed, f"chunk_1{n:04d}.json")
-        with open(path, "w") as f:
-            for r in rows2[i : i + 300]:
-                f.write(_json.dumps(r) + "\n")
-        _os.utime(path, (base + n, base + n))
+    _append_chunks(event_rows[half:], 300, feed)
 
     # restart on the same checkpoint
     _run_stream(read_event_stream(spark, feed), "append", sink, tmpdir)
@@ -1065,6 +1062,100 @@ def test_checkpoint_restart_resumes_exactly_once(spark, sf_dir, event_rows, tmpd
     )
     con.close()
     assert got == expected
+
+
+def test_checkpoint_manager_is_filesystem_based(spark, tmpdir):
+    """Checkpoint files go through Spark's FileSystem-API manager, which
+    renames without forking readlink.  Resolved the way a stream
+    resolves it, so a moved or renamed class fails here, loudly."""
+    from beam_scala_examples_spark.session import CHECKPOINT_FILE_MANAGER
+
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(f"file:{tmpdir}"),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getName() == CHECKPOINT_FILE_MANAGER
+    assert (
+        manager.getClass().getSimpleName()
+        == "FileSystemBasedCheckpointFileManager"
+    )
+
+
+def test_stateful_replay_onto_existing_state_delta(
+    spark, sf_dir, event_rows, tmpdir
+):
+    """Crash after a state commit but before the commit log: the last
+    data batch of a team-scores stream re-runs onto the state delta its
+    first run wrote (the FileSystem manager keeps an existing file) and
+    emits the same rows; a fresh query then loads that state from files
+    and ends at the batch oracle."""
+    half = len(event_rows) // 2
+    feed, ckpt = f"{tmpdir}/feed", f"{tmpdir}/ckpt"
+    write_arrival_chunks(event_rows[:half], 300, feed)
+    emitted: dict = {}
+    final: dict = {}
+
+    def sink(batch_df, bid):
+        rows = batch_df.collect()
+        emitted.setdefault(bid, []).append(sorted(map(tuple, rows)))
+        for r in rows:
+            final[(r.win_start, r.team)] = r.total_score
+
+    def run():
+        stream = read_event_stream(spark, feed)
+        return _run_stream(leaderboard.team_scores(stream), "update", sink, tmpdir)
+
+    q = run()
+    last = max(p["batchId"] for p in q.recentProgress if p["numInputRows"])
+    newest = max(int(n) for n in os.listdir(f"{ckpt}/offsets") if n.isdigit())
+    assert newest > last  # a no-data (watermark) batch closed run 1
+    assert os.path.exists(f"{ckpt}/state/0/0/{last + 1}.delta")
+    for log, bid in (("offsets", newest), ("commits", newest), ("commits", last)):
+        for name in (str(bid), f".{bid}.crc"):
+            os.remove(f"{ckpt}/{log}/{name}")
+
+    q = run()
+    assert [p["batchId"] for p in q.recentProgress if p["numInputRows"]] == [last]
+    assert emitted[last][1] == emitted[last][0]
+
+    _append_chunks(event_rows[half:], 300, feed)
+    run()
+    assert final == _q13_team_oracle(sf_dir)
+
+
+def test_foreach_batch_body_plans_follow_the_stream(spark, event_rows, tmpdir):
+    """Spark turns AQE off only for a stream that holds a stateful
+    operator.  A stateless stream's foreachBatch body (the spam sink's
+    shape) plans its shuffles with AQE on at the batch width (4 on the
+    fixture session); a stateful stream's body plans with AQE off at the
+    streaming width, spark.sql.shuffle.partitions (1)."""
+    write_arrival_chunks(event_rows[:400], 200, f"{tmpdir}/feed")
+    seen: dict = {}
+
+    def probe(name, key):
+        def sink(batch_df, _bid):
+            aqe = batch_df.sparkSession.conf.get("spark.sql.adaptive.enabled")
+            plan = plan_str(batch_df.groupBy(key).count())
+            width = re.search(rf"hashpartitioning\({key}#\d+, (\d+)\)", plan)
+            seen.setdefault(name, set()).add(
+                (aqe, "AdaptiveSparkPlan" in plan, width and int(width[1]))
+            )
+            batch_df.collect()  # a stateful batch commits its state only when run
+
+        return sink
+
+    events = read_event_stream(spark, f"{tmpdir}/feed")
+    _run_stream(events, "append", probe("stateless", "event_type"), f"{tmpdir}/a")
+    _run_stream(
+        leaderboard.team_scores(read_event_stream(spark, f"{tmpdir}/feed")),
+        "update", probe("stateful", "team"), f"{tmpdir}/b",
+    )
+    assert seen == {
+        "stateless": {("true", True, 4)},
+        "stateful": {("false", False, 1)},
+    }
 
 
 def test_streaming_sessions_match_batch(spark, sf_dir, event_rows, tmpdir):
