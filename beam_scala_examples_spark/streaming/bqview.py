@@ -49,9 +49,6 @@ class BqIngestSink:
             F.expr(_SPARK_BQ_SIG.format(col="embedding")).alias("sig"),
             norm.alias("nrm"),
         )
-        # logio write (round-9 ADVICE fix): the stashed schema makes an
-        # all-empty ingest prefix read as the empty relation instead of
-        # failing parquet schema inference, like the NB/DSIR sinks.
         self._schema = write_log_partition(rows, batch_id, self.log_path)
 
     def topk_view(self, spark: SparkSession) -> DataFrame:

@@ -52,17 +52,8 @@ from ..queries.llmdata import (
     winnow_regions_from_prints,
 )
 from .hllview import HllIngestSink
+from .logio import read_log, write_log_partition
 from .neardupview import NearDupIngestSink
-
-
-def _write_partition(df: DataFrame, batch_id: int, path: str) -> None:
-    (
-        df.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
-    )
 
 
 class DatasetCardSink:
@@ -85,6 +76,13 @@ class DatasetCardSink:
             f"{base_path}/card_src_hll", group_cols=("source",),
             id_col="text",
         )
+        self._schemas: dict = {}
+
+    def _write(self, df: DataFrame, batch_id: int, path: str) -> None:
+        self._schemas[path] = write_log_partition(df, batch_id, path)
+
+    def _log(self, spark: SparkSession, path: str) -> DataFrame:
+        return read_log(spark, path, self._schemas.get(path))
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         # The Arrow-free members are all recomputed from batch rows only,
@@ -100,21 +98,21 @@ class DatasetCardSink:
                 "total_tokens"
             ),
         ).crossJoin(keep)
-        _write_partition(stats, batch_id, self.stats_path)
+        self._write(stats, batch_id, self.stats_path)
 
-        _write_partition(
+        self._write(
             batch_df.groupBy("source", "lang").agg(
                 F.count("*").alias("n")
             ),
             batch_id,
             self.sourcelang_path,
         )
-        _write_partition(
+        self._write(
             batch_df.select(F.md5("text").alias("fp")).distinct(),
             batch_id,
             self.texthash_path,
         )
-        _write_partition(
+        self._write(
             chunk_relation(batch_df).select("doc_id", "chunk_md5").distinct(),
             batch_id,
             self.chunks_path,
@@ -122,7 +120,7 @@ class DatasetCardSink:
         # Round-6: positioned winnow prints (slim int64 triples) — the
         # copy-region members recompute regions from the accumulated
         # log at serving time, exactly like the chunk-dup member.
-        _write_partition(
+        self._write(
             winnow_print_positions(batch_df.select("doc_id", "text")),
             batch_id,
             self.winnow_path,
@@ -130,7 +128,7 @@ class DatasetCardSink:
         # Round-7: per-doc token counts (slim pairs, pure per-row
         # function) — the coverage-gate member joins them against the
         # regions recomputed from the prints log at serving time.
-        _write_partition(
+        self._write(
             batch_df.select(
                 "doc_id",
                 F.size(F.expr(_SPARK_TOKS)).cast("long").alias("n_tokens"),
@@ -147,22 +145,22 @@ class DatasetCardSink:
         """Re-aggregate the logs into the (metric, value) card — the
         identical integer expressions as the batch ``data_dataset_card``
         query, so streamed == one-shot exactly."""
-        stats = spark.read.parquet(self.stats_path).agg(
+        stats = self._log(spark, self.stats_path).agg(
             F.sum("n_docs").alias("n_docs"),
             F.sum("total_tokens").alias("total_tokens"),
             F.sum("n_keep").alias("n_keep"),
         )
-        sl = spark.read.parquet(self.sourcelang_path).agg(
+        sl = self._log(spark, self.sourcelang_path).agg(
             F.countDistinct("source").alias("n_sources"),
             F.countDistinct("lang").alias("n_langs"),
         )
-        fp = spark.read.parquet(self.texthash_path).agg(
+        fp = self._log(spark, self.texthash_path).agg(
             F.countDistinct("fp").alias("n_distinct_texts")
         )
         nd = self.neardup.serving_view(spark).agg(
             F.sum(F.when(F.col("is_dup"), 1).otherwise(0)).alias("n_dup")
         )
-        ch = spark.read.parquet(self.chunks_path)
+        ch = self._log(spark, self.chunks_path)
         owners = ch.groupBy("chunk_md5").agg(
             F.countDistinct("doc_id").alias("n_owner_docs")
         )
@@ -172,7 +170,7 @@ class DatasetCardSink:
             .agg(F.countDistinct("doc_id").alias("n_cd"))
         )
         regions = winnow_regions_from_prints(
-            spark.read.parquet(self.winnow_path).drop("batch_id").distinct()
+            self._log(spark, self.winnow_path).drop("batch_id").distinct()
         )
         region_stats = regions.agg(
             F.countDistinct("doc_a", "doc_b").alias("n_pairs"),
@@ -184,7 +182,7 @@ class DatasetCardSink:
         cov_heavy = (
             winnow_coverage_from_regions(
                 regions,
-                spark.read.parquet(self.doctokens_path).select(
+                self._log(spark, self.doctokens_path).select(
                     "doc_id", "n_tokens"
                 ),
             )

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .logio import read_log, write_log_partition
+
 
 def _latest_per_user(df: DataFrame, ev_id: str, ev_type: str, ts: str) -> DataFrame:
     """Per-user latest row by the total order (ts, event_id) — max_by
@@ -41,9 +43,8 @@ class LatestStateSink:
     Per micro-batch:
 
     1. reduce the batch to one candidate row per user (its latest) and
-       write it to the compaction log under ``batch_id`` with dynamic
-       partition overwrite — replaying a failed batch replaces its own
-       partition, so the log is exactly-once;
+       log it under ``batch_id`` (:mod:`.logio`: a replay replaces its
+       own partition, so the log is exactly-once);
     2. re-compact the whole log to the per-user latest and overwrite
        the serving view (the lakehouse-MERGE stand-in).
     """
@@ -53,18 +54,11 @@ class LatestStateSink:
         self.out_path = out_path
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        contrib = _latest_per_user(
-            batch_df, "event_id", "event_type", "ts"
-        ).withColumn("batch_id", F.lit(int(batch_id)))
-        (
-            contrib.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.log_path)
-        )
+        contrib = _latest_per_user(batch_df, "event_id", "event_type", "ts")
+        schema = write_log_partition(contrib, batch_id, self.log_path)
         spark = batch_df.sparkSession
         compacted = _latest_per_user(
-            spark.read.parquet(self.log_path),
+            read_log(spark, self.log_path, schema),
             "last_event_id",
             "last_type",
             "last_ts",
@@ -75,9 +69,9 @@ class LatestStateSink:
 class QuarantineSink:
     """Dead-letter routing: per micro-batch, rows failing the DQ row
     rules land in a quarantine table (with the failed rule name), clean
-    rows in the main table — both appends partitioned by batch_id with
-    dynamic partition overwrite, so a replayed batch replaces itself on
-    BOTH sides (the two writes stay consistent under retry).
+    rows in the main table — both :mod:`.logio` batch_id logs, so a
+    replayed batch replaces itself on BOTH sides (the two writes stay
+    consistent under retry).
 
     The rule predicates are the same strings `queries/dq.py` evaluates
     batch-side, so the stream gate and the audit report cannot drift.
@@ -100,15 +94,8 @@ class QuarantineSink:
                 ]
             )
         )
-        tagged = batch_df.withColumn("failed_rules", failed).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        )
+        tagged = batch_df.withColumn("failed_rules", failed)
         bad = tagged.filter(F.size("failed_rules") > 0)
         good = tagged.filter(F.size("failed_rules") == 0).drop("failed_rules")
         for df, path in ((good, self.main_path), (bad, self.quarantine_path)):
-            (
-                df.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(path)
-            )
+            write_log_partition(df, batch_id, path)

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries.dq import CMS_DAY_DEPTH, CMS_DAY_WIDTH, cms_partial_counters
+from .logio import read_log, write_log_partition
 
 
 class CmsIngestSink:
@@ -37,25 +38,20 @@ class CmsIngestSink:
         self.group_cols = tuple(group_cols)
         self.depth = depth
         self.width = width
+        self._schema = None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         partial = cms_partial_counters(
             batch_df, self.item_col, group_cols=self.group_cols,
             depth=self.depth, width=self.width,
         )
-        (
-            partial.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.log_path)
-        )
+        self._schema = write_log_partition(partial, batch_id, self.log_path)
 
     def serving_view(self, spark: SparkSession) -> DataFrame:
         """The merged sketch: sum over every batch's partial counters —
         identical to building the counters over the full corpus."""
         return (
-            spark.read.parquet(self.log_path)
+            read_log(spark, self.log_path, self._schema)
             .groupBy(*self.group_cols, "r", "b")
             .agg(F.sum("cnt").alias("cnt"))
         )

@@ -30,7 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
+
+from .logio import read_log, write_log_partition
 
 
 class IngestDedupSink:
@@ -39,15 +40,7 @@ class IngestDedupSink:
     def __init__(self, log_path: str, out_path: str):
         self.log_path = log_path
         self.out_path = out_path
-
-    def _registry(self, spark: SparkSession, exclude_batch: int | None = None):
-        try:
-            log = spark.read.parquet(self.log_path)
-        except AnalysisException:
-            return None
-        if exclude_batch is not None:
-            log = log.filter(F.col("batch_id") != exclude_batch)
-        return log
+        self._schema = None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -58,7 +51,9 @@ class IngestDedupSink:
             .groupBy("fp")
             .agg(F.min("doc_id").alias("keep_doc_id"))
         )
-        seen = self._registry(spark, exclude_batch=int(batch_id))
+        seen = read_log(
+            spark, self.log_path, self._schema, exclude_batch=batch_id
+        )
         if seen is not None:
             # Materialize the candidates BEFORE overwriting log_path:
             # the anti join reads the same path the write below replaces,
@@ -70,13 +65,7 @@ class IngestDedupSink:
             cand = cand.join(
                 seen.select("fp"), "fp", "left_anti"
             ).localCheckpoint(eager=True)
-        (
-            cand.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.log_path)
-        )
+        self._schema = write_log_partition(cand, batch_id, self.log_path)
         self.serving_view(spark).write.mode("overwrite").parquet(
             self.out_path
         )
@@ -85,7 +74,7 @@ class IngestDedupSink:
         """The registry: (fp, keep_doc_id).  min() collapses the
         impossible-but-cheap case of one fingerprint landing in two
         batch partitions (e.g. a replay raced a schedule change)."""
-        log = spark.read.parquet(self.log_path)
+        log = read_log(spark, self.log_path, self._schema)
         return log.groupBy("fp").agg(
             F.min("keep_doc_id").alias("keep_doc_id")
         )

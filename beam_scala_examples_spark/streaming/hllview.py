@@ -7,10 +7,9 @@ and serving is one O(registers-in-log) max-aggregate.  No anti joins,
 no tripwire reads — appends never need to see earlier batches at all.
 
 Per batch: one map-side-combined aggregate of the batch's rows to at
-most ``HLL_M`` slim (register, max_rank) rows, appended under the
-batch's partition with dynamic overwrite — a replayed batch re-derives
-exactly its own partial from its own rows, so the served registers are
-replay-idempotent by construction.  The served view is pinned EXACTLY
+most ``HLL_M`` slim (register, max_rank) rows, logged under the
+batch's partition by the :mod:`.logio` discipline, so the served
+registers are replay-idempotent.  The served view is pinned EXACTLY
 equal to the batch registers over the same corpus, which also pins the
 derived cardinality estimate.
 """
@@ -21,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries.dq import hll_partial_registers
+from .logio import read_log, write_log_partition
 
 
 class HllIngestSink:
@@ -40,24 +40,19 @@ class HllIngestSink:
         self.log_path = log_path
         self.group_cols = tuple(group_cols)
         self.id_col = id_col
+        self._schema = None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         partial = hll_partial_registers(
             batch_df, id_col=self.id_col, group_cols=self.group_cols
         )
-        (
-            partial.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.log_path)
-        )
+        self._schema = write_log_partition(partial, batch_id, self.log_path)
 
     def serving_view(self, spark: SparkSession) -> DataFrame:
         """The merged sketch: max over every batch's partial registers
         — identical to building the registers over the full corpus."""
         return (
-            spark.read.parquet(self.log_path)
+            read_log(spark, self.log_path, self._schema)
             .groupBy(*self.group_cols, "register")
             .agg(F.max("max_rank").alias("max_rank"))
         )

@@ -41,11 +41,11 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from ..operators.topk import top_k_per_key
 from ..queries.clustering import IVF_TR_NPROBE, _assign, _kmeans_train
 from ..queries.llmdata import N_QUERY_VECS, TOPK_NEIGHBORS, _SPARK_DOT
+from .logio import read_log, write_log_partition
 from .pcadrift import pca_moment_contrib, pca_top_component_from_log
 
 # Retrain when the accumulated top PC has rotated by more than ~18°
@@ -78,26 +78,29 @@ class DriftRetrainIvfSink:
         self.snapshots_path = f"{base_path}/pc_snapshots"
         self.drift_log_path = f"{base_path}/drift_log"
         self.drift_retrain_micro = int(drift_retrain_micro)
+        self._schemas: dict = {}
 
     # -- log plumbing -------------------------------------------------
-    def _write(self, df: DataFrame, part_col: str, part: int, path: str):
+    def _write_version(self, df: DataFrame, version: int, path: str):
+        """The version-keyed registries (codebooks, PC snapshots): one
+        partition per retrain, replaced by a replayed retrain."""
         (
-            df.withColumn(part_col, F.lit(int(part)))
+            df.withColumn("version", F.lit(int(version)))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(part_col)
+            .partitionBy("version")
             .parquet(path)
         )
 
-    def _read(self, spark: SparkSession, path: str) -> DataFrame | None:
-        try:
-            return spark.read.parquet(path)
-        except AnalysisException:
-            return None
+    def _vectors(self, spark: SparkSession) -> DataFrame:
+        return read_log(
+            spark, self.vectors_path, self._schemas.get(self.vectors_path)
+        ).select("vec_id", "embedding")
 
     # -- serving ------------------------------------------------------
     def active_version(self, spark: SparkSession) -> int | None:
-        reg = self._read(spark, self.codebooks_path)
+        # no retrain yet: the registry path does not exist
+        reg = read_log(spark, self.codebooks_path, None)
         if reg is None:
             return None
         row = reg.agg(F.max("version").alias("v")).collect()[0]
@@ -125,7 +128,9 @@ class DriftRetrainIvfSink:
         return {int(r.dim): int(r.v_micro) for r in rows}
 
     def _current_pc(self, spark: SparkSession) -> dict:
-        log = self._read(spark, self.pca_log_path)
+        log = read_log(
+            spark, self.pca_log_path, self._schemas.get(self.pca_log_path)
+        )
         rows = pca_top_component_from_log(log).collect()
         return {int(r.dim): int(r.v_micro) for r in rows}
 
@@ -133,11 +138,9 @@ class DriftRetrainIvfSink:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         vecs = batch_df.select("vec_id", "embedding")
-        self._write(vecs, "batch_id", batch_id, self.vectors_path)
-        self._write(
-            pca_moment_contrib(vecs), "batch_id", batch_id,
-            self.pca_log_path,
-        )
+        for df, path in ((vecs, self.vectors_path),
+                         (pca_moment_contrib(vecs), self.pca_log_path)):
+            self._schemas[path] = write_log_partition(df, batch_id, path)
         pc_now = self._current_pc(spark)
         active = self.active_version(spark)
         if active is None:
@@ -148,22 +151,18 @@ class DriftRetrainIvfSink:
             )
         retrain = drift > self.drift_retrain_micro
         if retrain:
-            corpus = (
-                spark.read.parquet(self.vectors_path)
-                .select("vec_id", "embedding")
-                .localCheckpoint()
-            )
+            corpus = self._vectors(spark).localCheckpoint()
             cents = _kmeans_train(corpus)
             cdf = spark.createDataFrame(
                 [(cid, vec) for cid, vec in cents],
                 "cluster bigint, centroid array<double>",
             )
-            self._write(cdf, "version", batch_id, self.codebooks_path)
+            self._write_version(cdf, batch_id, self.codebooks_path)
             pdf = spark.createDataFrame(
                 [(d, v) for d, v in sorted(pc_now.items())],
                 "dim bigint, v_micro bigint",
             )
-            self._write(pdf, "version", batch_id, self.snapshots_path)
+            self._write_version(pdf, batch_id, self.snapshots_path)
         decision = spark.createDataFrame(
             [(
                 -1 if active is None else active,
@@ -172,7 +171,7 @@ class DriftRetrainIvfSink:
             )],
             "version bigint, drift_micro bigint, retrained boolean",
         )
-        self._write(decision, "batch_id", batch_id, self.drift_log_path)
+        write_log_partition(decision, batch_id, self.drift_log_path)
 
     # -- retrieval + recall -------------------------------------------
     def topk_view(
@@ -188,12 +187,9 @@ class DriftRetrainIvfSink:
         workload follows the data, which is what makes the retrain
         guard measurable."""
         cents = self.centroids(spark, version)
-        log = _assign(
-            spark.read.parquet(self.vectors_path).select(
-                "vec_id", "embedding"
-            ),
-            cents,
-        ).localCheckpoint(eager=False)
+        log = _assign(self._vectors(spark), cents).localCheckpoint(
+            eager=False
+        )
         norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
         log = log.withColumn("nrm", norm)
         cdf = spark.createDataFrame(
@@ -246,9 +242,7 @@ class DriftRetrainIvfSink:
         accumulated corpus and the SAME query workload — the number
         the retrain guard pins (with drifted queries: the workload a
         drifted corpus actually serves)."""
-        vecs = spark.read.parquet(self.vectors_path).select(
-            "vec_id", "embedding"
-        )
+        vecs = self._vectors(spark)
         norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
         base = vecs.withColumn("nrm", norm).localCheckpoint(eager=False)
         qpred = (

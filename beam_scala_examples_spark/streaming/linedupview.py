@@ -43,9 +43,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from ..queries.llmdata import structured_relation
+from .logio import read_log, write_log_partition
 
 
 class LineDedupIngestSink:
@@ -55,20 +55,10 @@ class LineDedupIngestSink:
     def __init__(self, base_path: str):
         self.registry_path = f"{base_path}/line_registry"
         self.contrib_path = f"{base_path}/line_contrib"
-
-    def _read(self, spark: SparkSession, path: str,
-              exclude_batch: int | None = None) -> DataFrame | None:
-        try:
-            log = spark.read.parquet(path)
-        except AnalysisException:
-            return None
-        if exclude_batch is not None:
-            log = log.filter(F.col("batch_id") != exclude_batch)
-        return log
+        self._schemas: dict = {}
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        bid = int(batch_id)
         lines = structured_relation(batch_df).select(
             "doc_id",
             F.explode(F.expr("split(struct_text, chr(10))")).alias("line"),
@@ -82,33 +72,27 @@ class LineDedupIngestSink:
         new = contrib.groupBy("line_md5").agg(
             F.min("doc_id").alias("keep_doc_id")
         )
-        seen = self._read(spark, self.registry_path, exclude_batch=bid)
+        seen = read_log(
+            spark, self.registry_path, self._schemas.get(self.registry_path),
+            exclude_batch=batch_id,
+        )
         if seen is not None:
             # materialize BEFORE overwriting the path the anti join
             # reads (same-path read-then-overwrite caveat, ADVICE r02)
             new = new.join(
                 seen.select("line_md5"), "line_md5", "left_anti"
             ).localCheckpoint(eager=True)
-        (
-            new.withColumn("batch_id", F.lit(bid))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.registry_path)
-        )
-        (
-            contrib.withColumn("batch_id", F.lit(bid))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.contrib_path)
-        )
+        for df, path in ((new, self.registry_path),
+                         (contrib, self.contrib_path)):
+            self._schemas[path] = write_log_partition(df, batch_id, path)
 
     def registry_view(self, spark: SparkSession) -> DataFrame:
         """(line_md5, keep_doc_id): who owns each line.  min() collapses
         the impossible-but-cheap case of one fingerprint landing in two
         batch partitions (a replay racing a schedule change)."""
-        log = spark.read.parquet(self.registry_path)
+        log = read_log(
+            spark, self.registry_path, self._schemas.get(self.registry_path)
+        )
         return log.groupBy("line_md5").agg(
             F.min("keep_doc_id").alias("keep_doc_id")
         )
@@ -118,7 +102,9 @@ class LineDedupIngestSink:
         n_lines, n_dup_lines, dup_bp) — owners from the contrib log
         (one row per (doc, line) under the arrive-once contract), then
         the same join-back + per-doc aggregate as the batch twin."""
-        contrib = spark.read.parquet(self.contrib_path)
+        contrib = read_log(
+            spark, self.contrib_path, self._schemas.get(self.contrib_path)
+        )
         owners = contrib.groupBy("line_md5").agg(
             F.count("*").alias("n_docs")
         )

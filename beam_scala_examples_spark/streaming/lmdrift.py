@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries.llmdata import _SPARK_TOKS
+from .logio import read_log, write_log_partition
 
 _TOKS_EXPR = _SPARK_TOKS
 
@@ -116,17 +117,11 @@ class LmDriftViewSink:
         self.lnn = int(lnn)
         self.log_path = log_path
         self.out_path = out_path
+        self._schema = None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        contrib = lm_drift_aggregate(
-            batch_df, self.vocab, self.lnn
-        ).withColumn("batch_id", F.lit(int(batch_id)))
-        (
-            contrib.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.log_path)
-        )
+        contrib = lm_drift_aggregate(batch_df, self.vocab, self.lnn)
+        self._schema = write_log_partition(contrib, batch_id, self.log_path)
         spark = batch_df.sparkSession
         self.serving_view(spark).write.mode("overwrite").parquet(
             self.out_path
@@ -136,7 +131,7 @@ class LmDriftViewSink:
         """Re-aggregate the contribution log: exact-integer addition,
         so the result equals the one-shot batch aggregate bit for
         bit."""
-        log = spark.read.parquet(self.log_path)
+        log = read_log(spark, self.log_path, self._schema)
         moments = log.groupBy("source", "lnn").agg(
             F.sum("n_docs").alias("n_docs"),
             F.sum("n_tokens").alias("n_tokens"),

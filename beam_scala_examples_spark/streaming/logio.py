@@ -1,25 +1,47 @@
-"""Batch_id-partitioned contribution-log IO shared by the sketch sinks.
+"""Batch_id-partitioned contribution logs: the one writer and the one
+reader every streaming sink uses for them.
 
-The house log discipline (write one batch's partial under its own
-``batch_id`` partition with dynamic overwrite; serving re-aggregates
-the whole log) has one degenerate corner: a batch whose every value is
-NULL/NaN produces an EMPTY partial, whose partitioned write still
-creates the log directory but leaves no parquet files in it — and a
-schema-INFERRING read of a file-less directory fails with an inference
-error instead of returning the empty relation.  The fix is structural,
-not a row-count probe (counting the partial would cost an extra job
-per batch): the writer returns the log's schema (partial schema +
-``batch_id``), the sink stashes it, and serving reads with that
-EXPLICIT schema — zero files then reads as the empty relation and
-every downstream aggregate degrades to NULL/empty exactly as the batch
-query would over an empty corpus.
+The log discipline, stated once here for all sinks:
+
+ - **Write.** Each ``foreachBatch`` call writes its partial under its
+   own ``batch_id`` partition with dynamic partition overwrite
+   (:func:`write_log_partition`); serving re-aggregates the whole log.
+ - **Replay.** Structured Streaming replays at most the latest
+   uncommitted batch, with the same rows and the same ``batch_id``.
+   The replay's write replaces exactly its own partition, so the log is
+   exactly-once under at-least-once delivery.  A sink that derives its
+   partial from earlier batches (a registry anti join, a sum of emitted
+   deltas, a tripwire) reads the log with ``exclude_batch`` set to its
+   own ``batch_id``: anti-joining against a log that already holds your
+   own contribution would rewrite an empty partial and silently lose
+   rows.  Such a sink materializes the partial (``localCheckpoint``)
+   before it overwrites the path the partial was read from.
+ - **Empty prefix.** A batch whose partial is empty (no purchase
+   events, no hit, no image) still creates the log directory but
+   leaves no parquet files in it, and a schema-INFERRING read of a
+   file-less directory fails with ``UNABLE_TO_INFER_SCHEMA``.  The
+   writer therefore returns the log's schema (partial schema +
+   ``batch_id`` as ``bigint``); the sink keeps it and reads with that
+   EXPLICIT schema, so a file-less log is the empty relation and every
+   downstream aggregate degrades to NULL/empty exactly as the batch
+   query would over an empty corpus.  No row-count probe: counting the
+   partial would cost one extra job per batch.
+ - **First batch.** Before anything is logged the path does not exist
+   (and a sink built over an existing log has no schema yet, so its
+   read infers one).  :func:`read_log` returns ``None`` for exactly
+   these two conditions, ``PATH_NOT_FOUND`` and
+   ``UNABLE_TO_INFER_SCHEMA``, meaning "nothing logged yet"; every
+   other analysis error propagates.
 """
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+_NOTHING_LOGGED = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
 
 def write_log_partition(
@@ -42,10 +64,22 @@ def write_log_partition(
 
 
 def read_log(
-    spark: SparkSession, path: str, schema: T.StructType | None
-) -> DataFrame:
-    """Read the contribution log; with a stashed ``schema`` the read is
-    inference-free and a file-less log directory (all batches empty so
-    far) is the empty relation, not an error."""
+    spark: SparkSession,
+    path: str,
+    schema: T.StructType | None,
+    exclude_batch: int | None = None,
+) -> DataFrame | None:
+    """Read the contribution log, without partition ``exclude_batch``
+    when it is given; ``None`` when nothing is logged yet.  With the
+    ``schema`` :func:`write_log_partition` returned the read is
+    inference-free and a file-less log is the empty relation."""
     reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(path)
+    try:
+        log = reader.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() in _NOTHING_LOGGED:
+            return None
+        raise
+    if exclude_batch is not None:
+        log = log.filter(F.col("batch_id") != int(exclude_batch))
+    return log

@@ -4,10 +4,8 @@
 NB training IS an additive sketch — the model is two count relations,
 ``(label, f, cnt)`` and ``(label, n_docs, n_feats)``, and the partials
 over disjoint micro-batches sum to the partials over their union.  So
-the house contribution-log discipline applies verbatim: each batch
-appends its own map-side-combined partials under its ``batch_id``
-partition (dynamic overwrite — a replayed batch re-derives exactly its
-own partial, replay-idempotent by construction), and serving is one
+the :mod:`.logio` contribution-log discipline applies verbatim: each
+batch logs its own map-side-combined partials, and serving is one
 sum-merge plus the shared sparse scorer
 (:func:`~..queries.classify.nb_classify_from_model`).
 
@@ -15,9 +13,6 @@ This is the 100 TB classifier-training story: the "training pass" over
 the corpus is a streaming aggregation with bounded state (vocab ×
 labels), never a collected dataset, and the model is queryable between
 batches at any point of the ingest.
-
-Logs go through :mod:`logio` so an all-empty prefix of the stream
-serves the empty model instead of failing schema inference.
 """
 
 from __future__ import annotations

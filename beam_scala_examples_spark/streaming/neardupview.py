@@ -35,9 +35,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from ..queries.llmdata import minhash_buckets
+from .logio import read_log, write_log_partition
 
 
 class NearDupIngestSink:
@@ -47,19 +47,7 @@ class NearDupIngestSink:
     def __init__(self, registry_path: str, decisions_path: str):
         self.registry_path = registry_path
         self.decisions_path = decisions_path
-
-    def _registry(
-        self, spark: SparkSession, exclude_batch: int
-    ) -> DataFrame | None:
-        try:
-            log = spark.read.parquet(self.registry_path)
-        except AnalysisException:
-            return None
-        return (
-            log.filter(F.col("batch_id") != exclude_batch)
-            .groupBy("band", "bucket")
-            .agg(F.min("first_doc").alias("prior_doc"))
-        )
+        self._schemas: dict = {}
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -68,9 +56,15 @@ class NearDupIngestSink:
             F.min("doc_id").alias("batch_min")
         )
         enriched = sigs.join(bmin, ["band", "bucket"])
-        reg = self._registry(spark, int(batch_id))
+        reg = read_log(
+            spark, self.registry_path, self._schemas.get(self.registry_path),
+            exclude_batch=batch_id,
+        )
         if reg is not None:
-            enriched = enriched.join(reg, ["band", "bucket"], "left")
+            prior_doc = reg.groupBy("band", "bucket").agg(
+                F.min("first_doc").alias("prior_doc")
+            )
+            enriched = enriched.join(prior_doc, ["band", "bucket"], "left")
         else:
             enriched = enriched.withColumn(
                 "prior_doc", F.lit(None).cast("long")
@@ -93,33 +87,22 @@ class NearDupIngestSink:
                 "dup_of",
             )
         )
-        (
-            decisions.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.decisions_path)
-        )
         # Registry contribution: this batch's bucket minima.  Computed
         # from batch data only (never reads registry_path), so there is
         # no read-then-overwrite-same-path hazard here.
-        (
-            bmin.select(
-                "band", "bucket", F.col("batch_min").alias("first_doc")
-            )
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.registry_path)
+        first = bmin.select(
+            "band", "bucket", F.col("batch_min").alias("first_doc")
         )
+        for df, path in ((decisions, self.decisions_path),
+                         (first, self.registry_path)):
+            self._schemas[path] = write_log_partition(df, batch_id, path)
 
     def serving_view(self, spark: SparkSession) -> DataFrame:
         """All near-dup decisions so far: (doc_id, is_dup, dup_of) —
         each document decided exactly once, at arrival."""
-        return spark.read.parquet(self.decisions_path).select(
-            "doc_id", "is_dup", "dup_of"
-        )
+        return read_log(
+            spark, self.decisions_path, self._schemas.get(self.decisions_path)
+        ).select("doc_id", "is_dup", "dup_of")
 
 
 class NearDupVoteIngestSink:
@@ -149,17 +132,7 @@ class NearDupVoteIngestSink:
         self.registry_path = registry_path
         self.decisions_path = decisions_path
         self.vote_r = int(vote_r)
-
-    def _registry(
-        self, spark: SparkSession, exclude_batch: int
-    ) -> DataFrame | None:
-        try:
-            log = spark.read.parquet(self.registry_path)
-        except AnalysisException:
-            return None
-        return log.filter(F.col("batch_id") != exclude_batch).select(
-            "band", "bucket", F.col("doc_id").alias("earlier")
-        )
+        self._schemas: dict = {}
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -175,12 +148,18 @@ class NearDupVoteIngestSink:
                 F.col("b.doc_id").alias("earlier"),
             )
         )
-        reg = self._registry(spark, int(batch_id))
+        reg = read_log(
+            spark, self.registry_path, self._schemas.get(self.registry_path),
+            exclude_batch=batch_id,
+        )
         if reg is not None:
             # guarded < doc_id: out-of-order arrival keeps first-seen,
             # never points a doc at a LATER one
+            earlier = reg.select(
+                "band", "bucket", F.col("doc_id").alias("earlier")
+            )
             cross = (
-                sigs.join(reg, ["band", "bucket"])
+                sigs.join(earlier, ["band", "bucket"])
                 .filter(F.col("earlier") < F.col("doc_id"))
                 .select("doc_id", "earlier")
             )
@@ -206,26 +185,15 @@ class NearDupVoteIngestSink:
                 "dup_of",
             )
         )
-        (
-            decisions.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.decisions_path)
-        )
         # Registry contribution: this batch's full band membership.
         # Computed from batch data only (never reads registry_path), so
         # no read-then-overwrite-same-path hazard.
-        (
-            sigs.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.registry_path)
-        )
+        for df, path in ((decisions, self.decisions_path),
+                         (sigs, self.registry_path)):
+            self._schemas[path] = write_log_partition(df, batch_id, path)
 
     def serving_view(self, spark: SparkSession) -> DataFrame:
         """All vote-thresholded near-dup decisions so far."""
-        return spark.read.parquet(self.decisions_path).select(
-            "doc_id", "is_dup", "dup_of"
-        )
+        return read_log(
+            spark, self.decisions_path, self._schemas.get(self.decisions_path)
+        ).select("doc_id", "is_dup", "dup_of")

@@ -30,7 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
+
+from .logio import read_log, write_log_partition
 
 
 class PaneSink:
@@ -64,33 +65,30 @@ class PaneSink:
         self.win_end_col = win_end_col
         self.key_cols = key_cols
         self.mode = mode
-
-    def _existing_keys(self, spark, batch_id: int) -> DataFrame | None:
-        try:
-            return (
-                spark.read.parquet(self.path)
-                # exclude the current batch's own partition: on failure
-                # replay the batch's previous write must not relabel its
-                # own ON_TIME panes as LATE
-                .filter(F.col("batch_id") != batch_id)
-                .select(self.win_end_col, *self.key_cols)
-                .distinct()
-            )
-        except AnalysisException:  # first batch: no sink table yet
-            return None
+        self._schema = None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.mode == "update":
             tagged = batch_df.withColumn("timing", F.lit("EARLY"))
         else:
             keys = [self.win_end_col, *self.key_cols]
-            existing = self._existing_keys(batch_df.sparkSession, batch_id)
+            # exclude the current batch's own partition: on failure
+            # replay the batch's previous write must not relabel its
+            # own ON_TIME panes as LATE
+            existing = read_log(
+                batch_df.sparkSession, self.path, self._schema,
+                exclude_batch=batch_id,
+            )
             if existing is None:
                 tagged = batch_df.withColumn("timing", F.lit("ON_TIME"))
             else:
                 # no broadcast hint: the finalized-key set grows with
                 # windows x keys — Catalyst/AQE picks the strategy
-                seen = existing.withColumn("__seen", F.lit(True))
+                seen = (
+                    existing.select(*keys)
+                    .distinct()
+                    .withColumn("__seen", F.lit(True))
+                )
                 tagged = (
                     batch_df.join(seen, on=keys, how="left")
                     .withColumn(
@@ -100,13 +98,7 @@ class PaneSink:
                     )
                     .drop("__seen")
                 )
-        (
-            tagged.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.path)
-        )
+        self._schema = write_log_partition(tagged, batch_id, self.path)
 
 
 class PaneTagger:
@@ -197,28 +189,18 @@ class DeltaPaneSink:
         self.path = path
         self.key_cols = list(key_cols)
         self.value_cols = list(value_cols)
-
-    def _emitted(self, spark, batch_id: int) -> DataFrame | None:
-        try:
-            log = spark.read.parquet(self.path)
-        except AnalysisException:  # first batch: no log yet
-            return None
-        return (
-            log.filter(F.col("batch_id") != batch_id)
-            .groupBy(*self.key_cols)
-            .agg(
-                *[
-                    F.sum(c).alias(f"__prev_{c}")
-                    for c in self.value_cols
-                ]
-            )
-        )
+        self._schema = None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        prev = self._emitted(spark, int(batch_id))
+        emitted = read_log(
+            spark, self.path, self._schema, exclude_batch=batch_id
+        )
         out = batch_df.select(*self.key_cols, *self.value_cols)
-        if prev is not None:
+        if emitted is not None:
+            prev = emitted.groupBy(*self.key_cols).agg(
+                *[F.sum(c).alias(f"__prev_{c}") for c in self.value_cols]
+            )
             out = (
                 out.join(prev, self.key_cols, "left")
                 .select(
@@ -233,18 +215,12 @@ class DeltaPaneSink:
                 )
                 .localCheckpoint(eager=True)
             )
-        (
-            out.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.path)
-        )
+        self._schema = write_log_partition(out, batch_id, self.path)
 
     def panes(self, spark) -> DataFrame:
         """The discarding pane table: one row per (key, firing) with the
         pane's delta values, ordered by batch_id within a key."""
-        return spark.read.parquet(self.path)
+        return read_log(spark, self.path, self._schema)
 
 
 def compact_delta_log(sink: DeltaPaneSink, spark, upto_batch: int) -> None:
@@ -253,8 +229,10 @@ def compact_delta_log(sink: DeltaPaneSink, spark, upto_batch: int) -> None:
     compaction that bounds the per-batch re-aggregation cost for
     long-running streams: after compaction the log holds one row per
     key (the summed base) plus only the recent delta partitions, and
-    every sink read (``_emitted``, ``panes``) keeps working unchanged
-    because both only ever SUM over partitions.
+    every sink read (the emitted sums, ``panes``) keeps working
+    unchanged because both only ever SUM over partitions.  The base's
+    schema becomes the sink's log schema (a SUM may widen a value
+    column).
 
     Safety contract: compact only batches the stream has COMMITTED
     (Structured Streaming replays at most the latest uncommitted batch,
@@ -266,20 +244,14 @@ def compact_delta_log(sink: DeltaPaneSink, spark, upto_batch: int) -> None:
     the same path it modifies)."""
     import shutil as _shutil
 
-    log = spark.read.parquet(sink.path)
     base = (
-        log.filter(F.col("batch_id") <= upto_batch)
+        sink.panes(spark)
+        .filter(F.col("batch_id") <= upto_batch)
         .groupBy(*sink.key_cols)
         .agg(*[F.sum(c).alias(c) for c in sink.value_cols])
         .localCheckpoint(eager=True)
     )
-    (
-        base.withColumn("batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(sink.path)
-    )
+    sink._schema = write_log_partition(base, -1, sink.path)
     import os as _os
 
     for entry in _os.listdir(sink.path):
@@ -395,6 +367,7 @@ class SequentialPaneSink:
         )
         self.watermark_fn = watermark_fn
         self.query = None
+        self._schemas: dict = {}
 
     def attach(self, query) -> "SequentialPaneSink":
         """Attach the running query so the per-batch watermark can be
@@ -433,13 +406,6 @@ class SequentialPaneSink:
             )
         return None
 
-    def _read(self, spark, path: str, exclude_batch: int) -> DataFrame | None:
-        try:
-            log = spark.read.parquet(path)
-        except AnalysisException:
-            return None
-        return log.filter(F.col("batch_id") != exclude_batch)
-
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         bid = int(batch_id)
@@ -447,9 +413,11 @@ class SequentialPaneSink:
         keys = [self.win_end_col, *self.key_cols]
 
         # 1. dueness over what was staged BEFORE this batch
-        staged = self._read(spark, self.staged_path, bid)
+        staged, emitted = (
+            read_log(spark, path, self._schemas.get(path), exclude_batch=bid)
+            for path in (self.staged_path, self.panes_path)
+        )
         wm = self._watermark(bid, staged)
-        emitted = self._read(spark, self.panes_path, bid)
         emissions = None
         if staged is not None:
             if emitted is not None:
@@ -518,12 +486,8 @@ class SequentialPaneSink:
             if not emissions.take(1):
                 emissions = None
         if emissions is not None:
-            (
-                emissions.withColumn("batch_id", F.lit(bid))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(self.panes_path)
+            self._schemas[self.panes_path] = write_log_partition(
+                emissions, bid, self.panes_path
             )
 
         # 2. stage this batch's refinements for the NEXT firing
@@ -535,15 +499,13 @@ class SequentialPaneSink:
         contrib = batch_df.select(*keys, *self.value_cols, *extra).withColumn(
             "staged_at", F.lit(now)
         )
-        (
-            contrib.withColumn("batch_id", F.lit(bid))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.staged_path)
+        self._schemas[self.staged_path] = write_log_partition(
+            contrib, bid, self.staged_path
         )
 
     def panes(self, spark) -> DataFrame:
         """Emitted panes with timing labels, ordered by batch_id within
         a key — the sequential-trigger pane table."""
-        return spark.read.parquet(self.panes_path)
+        return read_log(
+            spark, self.panes_path, self._schemas.get(self.panes_path)
+        )

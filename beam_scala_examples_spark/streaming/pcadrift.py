@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries.clustering import PCA_C_DIV, PCA_Q, _pca_power
+from .logio import read_log, write_log_partition
 
 
 def _quantized(batch_df: DataFrame) -> DataFrame:
@@ -94,16 +95,11 @@ class PcaDriftViewSink:
     def __init__(self, log_path: str, out_path: str):
         self.log_path = log_path
         self.out_path = out_path
+        self._schema = None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        contrib = pca_moment_contrib(batch_df).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        )
-        (
-            contrib.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.log_path)
+        self._schema = write_log_partition(
+            pca_moment_contrib(batch_df), batch_id, self.log_path
         )
         spark = batch_df.sparkSession
         self.serving_view(spark).write.mode("overwrite").parquet(
@@ -116,7 +112,7 @@ class PcaDriftViewSink:
         chain over the same IEEE covariance expression as the batch
         query, so streamed == one-shot, bit for bit."""
         return pca_top_component_from_log(
-            spark.read.parquet(self.log_path)
+            read_log(spark, self.log_path, self._schema)
         )
 
 

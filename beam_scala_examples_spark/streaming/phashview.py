@@ -32,7 +32,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from ..operators.multimodal import (
     attach_bmp_payload_keyed,
@@ -43,6 +42,7 @@ from ..queries.llmdata import (
     PHASH_MIN_BITS,
     _phash_image_corpus,
 )
+from .logio import read_log, write_log_partition
 
 
 class PhashIngestSink:
@@ -52,19 +52,7 @@ class PhashIngestSink:
     def __init__(self, registry_path: str, decisions_path: str):
         self.registry_path = registry_path
         self.decisions_path = decisions_path
-
-    def _registry(
-        self, spark: SparkSession, exclude_batch: int
-    ) -> DataFrame | None:
-        try:
-            log = spark.read.parquet(self.registry_path)
-        except AnalysisException:
-            return None
-        return (
-            log.filter(F.col("batch_id") != exclude_batch)
-            .groupBy("band", "bucket")
-            .agg(F.min("first_img").alias("prior_img"))
-        )
+        self._schemas: dict = {}
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -89,9 +77,15 @@ class PhashIngestSink:
             F.min("img_id").alias("batch_min")
         )
         enriched = bands.join(bmin, ["band", "bucket"])
-        reg = self._registry(spark, int(batch_id))
+        reg = read_log(
+            spark, self.registry_path, self._schemas.get(self.registry_path),
+            exclude_batch=batch_id,
+        )
         if reg is not None:
-            enriched = enriched.join(reg, ["band", "bucket"], "left")
+            prior_img = reg.groupBy("band", "bucket").agg(
+                F.min("first_img").alias("prior_img")
+            )
+            enriched = enriched.join(prior_img, ["band", "bucket"], "left")
         else:
             enriched = enriched.withColumn(
                 "prior_img", F.lit(None).cast("long")
@@ -118,27 +112,16 @@ class PhashIngestSink:
                 "dup_of",
             )
         )
-        (
-            decisions.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.decisions_path)
+        first = bmin.select(
+            "band", "bucket", F.col("batch_min").alias("first_img")
         )
-        (
-            bmin.select(
-                "band", "bucket", F.col("batch_min").alias("first_img")
-            )
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.registry_path)
-        )
+        for df, path in ((decisions, self.decisions_path),
+                         (first, self.registry_path)):
+            self._schemas[path] = write_log_partition(df, batch_id, path)
 
     def serving_view(self, spark: SparkSession) -> DataFrame:
         """All image near-dup decisions so far: (img_id, is_dup,
         dup_of) — each image decided exactly once, at arrival."""
-        return spark.read.parquet(self.decisions_path).select(
-            "img_id", "is_dup", "dup_of"
-        )
+        return read_log(
+            spark, self.decisions_path, self._schemas.get(self.decisions_path)
+        ).select("img_id", "is_dup", "dup_of")

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries.dq import K_ANON_BAND, K_ANON_K, K_ANON_QI, L_DIV_L
+from .logio import read_log, write_log_partition
 
 
 class KAnonViewSink:
@@ -38,21 +39,13 @@ class KAnonViewSink:
         self.log_path = log_path
         self.out_path = out_path
         self.k = int(k)
+        self._schema = None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        contrib = (
-            batch_df.groupBy(
-                *K_ANON_QI, F.expr(K_ANON_BAND).alias("acct_band")
-            )
-            .agg(F.count("*").alias("n"))
-            .withColumn("batch_id", F.lit(int(batch_id)))
-        )
-        (
-            contrib.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.log_path)
-        )
+        contrib = batch_df.groupBy(
+            *K_ANON_QI, F.expr(K_ANON_BAND).alias("acct_band")
+        ).agg(F.count("*").alias("n"))
+        self._schema = write_log_partition(contrib, batch_id, self.log_path)
         spark = batch_df.sparkSession
         self.serving_view(spark).write.mode("overwrite").parquet(
             self.out_path
@@ -62,7 +55,7 @@ class KAnonViewSink:
         """Re-aggregate the count log into the audit relation — the
         identical group-size/below-k/at-risk expressions as the batch
         ``dq_k_anonymity`` query, so streamed == one-shot exactly."""
-        log = spark.read.parquet(self.log_path)
+        log = read_log(spark, self.log_path, self._schema)
         groups = log.groupBy(*K_ANON_QI, "acct_band").agg(
             F.sum("n").alias("group_size")
         )
@@ -89,7 +82,7 @@ class KAnonViewSink:
         (nation, band) group, size = summed counts and diversity =
         distinct segments among the log's rows — identical expressions
         to the batch ``dq_l_diversity`` query, pinned equal."""
-        log = spark.read.parquet(self.log_path)
+        log = read_log(spark, self.log_path, self._schema)
         groups = log.groupBy("c_nationkey", "acct_band").agg(
             F.sum("n").alias("group_size"),
             F.countDistinct("c_mktsegment").alias("l_distinct"),

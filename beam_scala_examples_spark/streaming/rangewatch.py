@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries.llmdata import SIM_RANGE_TAU, _SPARK_DOT
+from .logio import read_log, write_log_partition
 
 
 class RangeWatchSink:
@@ -43,6 +44,7 @@ class RangeWatchSink:
         self.hits_path = hits_path
         self.watch = [(int(i), [float(x) for x in v]) for i, v in watch]
         self.tau = float(tau)
+        self._schema = None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -69,17 +71,11 @@ class RangeWatchSink:
             .filter(F.col("cos") >= F.lit(self.tau))
             .select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
         )
-        (
-            hits.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.hits_path)
-        )
+        self._schema = write_log_partition(hits, batch_id, self.hits_path)
 
     def serving_view(self, spark: SparkSession) -> DataFrame:
         """All hits so far: (qid, vec_id, cosine) — equal to the batch
         radius search over everything ingested."""
-        return spark.read.parquet(self.hits_path).select(
+        return read_log(spark, self.hits_path, self._schema).select(
             "qid", "vec_id", "cosine"
         )

@@ -35,6 +35,7 @@ from ..operators.multimodal import (
     attach_y4m_payload,
     scene_cuts_y4m_metadata,
 )
+from .logio import read_log, write_log_partition
 
 
 class SceneCutIngestSink:
@@ -43,24 +44,19 @@ class SceneCutIngestSink:
 
     def __init__(self, cuts_path: str):
         self.cuts_path = cuts_path
+        self._schema = None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         stats = scene_cuts_y4m_metadata(
             attach_y4m_payload(batch_df.select("doc_id", "text"))
         )
-        (
-            stats.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.cuts_path)
-        )
+        self._schema = write_log_partition(stats, batch_id, self.cuts_path)
 
     def serving_view(self, spark: SparkSession) -> DataFrame:
         """All per-video scene-cut stats so far — the columns of the
         batch ``multimodal_scene_cuts`` relation, one row per arrived
         video."""
-        return spark.read.parquet(self.cuts_path).select(
+        return read_log(spark, self.cuts_path, self._schema).select(
             "doc_id", "n_frames", "n_sampled", "n_transitions",
             "sum_sad", "max_sad", "n_cuts",
         )
@@ -69,7 +65,7 @@ class SceneCutIngestSink:
         """(batch_id, n_cut_videos, total_cuts) — arrival-time novelty:
         per delivery, the videos that brought detected scene cuts."""
         return (
-            spark.read.parquet(self.cuts_path)
+            read_log(spark, self.cuts_path, self._schema)
             .filter(F.col("n_cuts") > 0)
             .groupBy("batch_id")
             .agg(

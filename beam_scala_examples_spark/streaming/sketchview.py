@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.sketches import HLL_LGK
+from .logio import read_log, write_log_partition
 
 
 class ReachViewSink:
@@ -41,18 +42,12 @@ class ReachViewSink:
                     "reach_sketch"
                 )
             )
-            .withColumn("batch_id", F.lit(int(batch_id)))
         )
-        (
-            contrib.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.log_path)
-        )
+        schema = write_log_partition(contrib, batch_id, self.log_path)
         spark = batch_df.sparkSession
         merged = F.hll_union_agg(F.col("reach_sketch"), F.lit(True))
         view = (
-            spark.read.parquet(self.log_path)
+            read_log(spark, self.log_path, schema)
             .groupBy("day", "event_type")
             .agg(
                 merged.alias("reach_sketch"),
@@ -116,17 +111,11 @@ class TopTalkersViewSink:
             )
             .groupBy("r", "b")
             .agg(F.count("*").alias("cnt"))
-            .withColumn("batch_id", F.lit(int(batch_id)))
         )
-        (
-            contrib.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.log_path)
-        )
+        schema = write_log_partition(contrib, batch_id, self.log_path)
         spark = batch_df.sparkSession
         view = (
-            spark.read.parquet(self.log_path)
+            read_log(spark, self.log_path, schema)
             .groupBy("r", "b")
             .agg(F.sum("cnt").alias("cnt"))
         )
@@ -165,14 +154,8 @@ class LatencyQuantilesViewSink:
                     "kll"
                 )
             )
-            .withColumn("batch_id", F.lit(int(batch_id)))
         )
-        (
-            contrib.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.log_path)
-        )
+        schema = write_log_partition(contrib, batch_id, self.log_path)
         spark = batch_df.sparkSession
         merged = F.kll_merge_agg_double("kll")
         qcols = [
@@ -182,7 +165,7 @@ class LatencyQuantilesViewSink:
             for p in KLL_VIEW_PROBS
         ]
         view = (
-            spark.read.parquet(self.log_path)
+            read_log(spark, self.log_path, schema)
             .groupBy("event_type")
             .agg(
                 *qcols,

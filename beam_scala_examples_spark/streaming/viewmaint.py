@@ -22,9 +22,8 @@ Scale posture:
  - Contributions are EXACT integer cents, so maintenance is
    order/replay-independent: union-of-parts == one-shot aggregate,
    bit for bit (the mergeable-state payoff, here for plain SUM).
- - The log partitions by batch_id with dynamic partition overwrite, so
-   a replayed micro-batch replaces its own partition — exactly-once
-   maintenance under at-least-once delivery.
+ - The log follows :mod:`.logio`: exactly-once under replay, and a
+   batch with no purchase serves the view so far, not an error.
 """
 
 from __future__ import annotations
@@ -33,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.agg import cents
+from .logio import read_log, write_log_partition
 
 
 class SegmentRevenueViewSink:
@@ -51,6 +51,7 @@ class SegmentRevenueViewSink:
         )
         self.log_path = log_path
         self.out_path = out_path
+        self._schema = None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         contrib = (
@@ -61,14 +62,8 @@ class SegmentRevenueViewSink:
                 F.count("*").alias("n_purchases"),
                 F.sum(cents("value")).alias("rev_cents"),
             )
-            .withColumn("batch_id", F.lit(int(batch_id)))
         )
-        (
-            contrib.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.log_path)
-        )
+        self._schema = write_log_partition(contrib, batch_id, self.log_path)
         spark = batch_df.sparkSession
         serving = self.serving_view(spark)
         serving.write.mode("overwrite").parquet(self.out_path)
@@ -76,7 +71,7 @@ class SegmentRevenueViewSink:
     def serving_view(self, spark: SparkSession) -> DataFrame:
         """Re-aggregate the contribution log: exact-cents addition, so
         the result equals the one-shot batch rollup bit for bit."""
-        log = spark.read.parquet(self.log_path)
+        log = read_log(spark, self.log_path, self._schema)
         return (
             log.groupBy("segment", "day")
             .agg(

@@ -33,7 +33,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from ..queries.llmdata import (
     K_WINNOW,
@@ -44,6 +43,7 @@ from ..queries.llmdata import (
     winnow_print_positions,
     winnow_regions_from_prints,
 )
+from .logio import read_log, write_log_partition
 
 
 def _winnow_prints(batch_df: DataFrame) -> DataFrame:
@@ -84,20 +84,15 @@ class WinnowIngestSink:
         # that lets the sink serve aligned COPY REGIONS, not just pair
         # counts; same slim-int64 shape, same append discipline
         self.prints_pos_path = f"{base_path}/winnow_prints_pos"
+        self._schemas: dict = {}
 
-    def _read(self, spark: SparkSession, path: str,
-              exclude_batch: int | None = None) -> DataFrame | None:
-        try:
-            log = spark.read.parquet(path)
-        except AnalysisException:
-            return None
-        if exclude_batch is not None:
-            log = log.filter(F.col("batch_id") != exclude_batch)
-        return log
+    def _log(self, spark: SparkSession, path: str, exclude_batch=None):
+        return read_log(
+            spark, path, self._schemas.get(path), exclude_batch=exclude_batch
+        )
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        bid = int(batch_id)
         prints = _winnow_prints(batch_df)
 
         # arrival-time tripwire vs the corpus-so-far (earlier batches
@@ -112,7 +107,7 @@ class WinnowIngestSink:
         counts = prints.groupBy("doc_id").agg(
             F.count("*").alias("n_prints")
         )
-        seen = self._read(spark, self.prints_path, exclude_batch=bid)
+        seen = self._log(spark, self.prints_path, exclude_batch=batch_id)
         if seen is not None:
             hits = prints.join(
                 seen.select(F.col("fp"), F.col("doc_id").alias("prior_doc")),
@@ -148,23 +143,17 @@ class WinnowIngestSink:
         for df, path in ((prints, self.prints_path),
                          (flags, self.flags_path),
                          (pos, self.prints_pos_path)):
-            (
-                df.withColumn("batch_id", F.lit(bid))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(path)
-            )
+            self._schemas[path] = write_log_partition(df, batch_id, path)
 
     def flags(self, spark: SparkSession) -> DataFrame:
         """Arrival-time stamps: (doc_id, n_prints, known_prints,
         prior_docs) — order-dependent by design (corpus-so-far)."""
-        return spark.read.parquet(self.flags_path).drop("batch_id")
+        return self._log(spark, self.flags_path).drop("batch_id")
 
     def serving_view(self, spark: SparkSession) -> DataFrame:
         """The MOSS pair table served from the log — pinned equal to
         batch ``text_winnow_pairs`` once the corpus has arrived."""
-        prints = spark.read.parquet(self.prints_path)
+        prints = self._log(spark, self.prints_path)
         counts = prints.groupBy("doc_id").agg(
             F.count("*").alias("n_prints")
         )
@@ -201,7 +190,7 @@ class WinnowIngestSink:
         same match/island pass the batch query runs, over accumulated
         slim int64 triples instead of raw text)."""
         pos = (
-            spark.read.parquet(self.prints_pos_path)
+            self._log(spark, self.prints_pos_path)
             .drop("batch_id")
             .distinct()
         )

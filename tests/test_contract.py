@@ -477,6 +477,27 @@ def test_memos_live_only_in_the_session_registry(spark, sf_dir):
     assert memo_snapshot() == {}
 
 
+def test_batch_id_logs_live_only_in_logio():
+    """Every batch_id contribution log is written and read through
+    ``streaming/logio.py``: no other streaming module partitions by
+    batch_id itself or catches AnalysisException (a bare catch around a
+    log read swallows every analysis error, not only "nothing logged
+    yet")."""
+    import pathlib
+
+    import beam_scala_examples_spark.streaming as streaming
+
+    found = [
+        f"{path.name}:{n}: {line.strip()}"
+        for path in sorted(pathlib.Path(streaming.__path__[0]).glob("*.py"))
+        if path.name != "logio.py"
+        for n, line in enumerate(path.read_text().splitlines(), start=1)
+        if 'partitionBy("batch_id")' in line
+        or "except AnalysisException" in line
+    ]
+    assert found == []
+
+
 def test_bench_capture_hygiene_evidence():
     """Round-8 capture hygiene: the contention census must see this
     test's own Spark JVM as OURS (descendant), report foreign JVMs as a

@@ -1457,6 +1457,81 @@ def test_segment_revenue_view_replay_idempotent(spark, sf_dir, event_rows, tmpdi
     assert once == twice
 
 
+def _segment_revenue_empty_first(spark, sf_dir, event_rows, tmpdir):
+    """Click events only, then everything else: the first partial has
+    no purchase, so its log partition holds no file."""
+    from beam_scala_examples_spark.streaming.viewmaint import (
+        SegmentRevenueViewSink,
+    )
+    from beam_scala_examples_spark.tables import load
+
+    sink = SegmentRevenueViewSink(
+        load(spark, sf_dir, "customer"),
+        f"{tmpdir}/segrev_log", f"{tmpdir}/segrev_out",
+    )
+    mk = lambda rs: spark.createDataFrame(
+        [(r["event_id"], r["ts"], r["user_id"], r["event_type"], r["value"])
+         for r in rs],
+        "event_id long, ts string, user_id long, event_type string, value double",
+    ).withColumn("ts", F.to_timestamp("ts"))
+    head, tail = event_rows[:600], event_rows[600:]
+    clicks = [r for r in head if r["event_type"] == "click"]
+    rest = [r for r in head if r["event_type"] != "click"] + tail
+    serve = lambda: sink.serving_view(spark).select(
+        "segment", "day", "n_purchases", "revenue"
+    )
+    expect = behavior.events_segment_revenue(spark, sf_dir).select(
+        "segment", "day", "n_purchases", "revenue"
+    )
+    return sink, serve, [mk(clicks), mk(rest)], expect
+
+
+def _range_watch_empty_first(spark, sf_dir, event_rows, tmpdir):
+    """Vectors within the radius of no watched vector, then the rest:
+    the first partial holds no hit."""
+    from beam_scala_examples_spark.queries.llmdata import (
+        N_QUERY_VECS,
+        sim_range_search,
+    )
+    from beam_scala_examples_spark.streaming.rangewatch import RangeWatchSink
+
+    rows = _vec_rows(spark, sf_dir)
+    watch = [
+        (r.vec_id, list(r.embedding)) for r in rows if r.vec_id < N_QUERY_VECS
+    ]
+    sink = RangeWatchSink(f"{tmpdir}/watch_hits", watch)
+    expect = sim_range_search(spark, sf_dir)
+    hit = {r.vec_id for r in expect.select("vec_id").collect()}
+    mk = lambda rs: spark.createDataFrame(
+        rs, "vec_id long, embedding array<float>"
+    )
+    missed = [r for r in rows if r.vec_id not in hit]
+    rest = [r for r in rows if r.vec_id in hit]
+    return sink, lambda: sink.serving_view(spark), [mk(missed), mk(rest)], expect
+
+
+@pytest.mark.parametrize(
+    "case", [_segment_revenue_empty_first, _range_watch_empty_first],
+    ids=["segment_revenue", "range_watch"],
+)
+def test_sink_serves_empty_first_partial(
+    spark, sf_dir, event_rows, tmpdir, case
+):
+    """A non-empty first micro-batch whose partial is empty writes a
+    file-less log partition.  The sink must serve the empty view from it
+    (logio's explicit-schema read), not fail schema inference and kill
+    the stream; later batches then serve the batch twin exactly."""
+    sink, serve, batches, expect = case(spark, sf_dir, event_rows, tmpdir)
+    assert not batches[0].isEmpty()
+    sink(batches[0], 0)
+    assert serve().count() == 0
+    for b, df in enumerate(batches[1:], start=1):
+        sink(df, b)
+    got = sorted(tuple(r) for r in serve().collect())
+    assert got == sorted(tuple(r) for r in expect.collect())
+    assert len(got) > 0
+
+
 def _doc_rows(sf_dir):
     con = duck_connect(sf_dir)
     rows = con.sql(
