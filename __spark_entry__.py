@@ -16,7 +16,10 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from beam_scala_examples_spark.queries import ORACLE, QUERIES  # noqa: E402
-from beam_scala_examples_spark.session import CHECKPOINT_FILE_MANAGER  # noqa: E402
+from beam_scala_examples_spark.session import (  # noqa: E402
+    BATCH_WIDTH_CONF,
+    SQL_CONFS,
+)
 
 
 def _configure(spark: SparkSession) -> SparkSession:
@@ -25,24 +28,15 @@ def _configure(spark: SparkSession) -> SparkSession:
     shipped TIMESTAMP(NANOS) parquet in past rounds — nanosAsLong keeps
     that read path alive; current tz-naive micros read as TIMESTAMP_NTZ,
     handled by ``tables.load`` + ``operators.windows.epoch_us``)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
     # A bare session starts batch shuffles at 200 partitions — far too
     # many tasks for the sf0.01 correctness runs; AQE coalesces but still
-    # pays per-task scheduling.  The same two widths as session.get_spark:
-    # batch shuffles start at the core count, stream state gets one
-    # partition per stateful operator.
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    # pays per-task scheduling.  The same confs and two widths as
+    # session.get_spark: batch shuffles start at the core count, stream
+    # state gets one partition per stateful operator.
+    for k, v in SQL_CONFS.items():
+        spark.conf.set(k, v)
     spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        str(spark.sparkContext.defaultParallelism),
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    # Checkpoint files through the FileSystem API, as in get_spark.
-    spark.conf.set(
-        "spark.sql.streaming.checkpointFileManagerClass",
-        CHECKPOINT_FILE_MANAGER,
+        BATCH_WIDTH_CONF, str(spark.sparkContext.defaultParallelism)
     )
     return spark
 

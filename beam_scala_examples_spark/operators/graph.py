@@ -30,6 +30,31 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def edge_layout(edges: DataFrame, key: str) -> tuple[DataFrame, int]:
+    """``edges`` hash-partitioned on ``key`` and persisted, with the
+    width it got: about 50k rows per partition, capped at the session
+    parallelism, so one iterative operator lays out a 100 TB graph wide
+    and a graph of a few thousand edges narrow — its per-round stages
+    then pay a handful of tasks, not one per core (measured at sf0.1:
+    the pHash component resolve ran about 2x faster).
+
+    The width probe counts a persisted staging copy, so the caller's
+    edge pipeline is evaluated once, not once for the probe and again
+    for the layout; the staging copy is released once the layout is
+    materialized off it.  The caller unpersists the result."""
+    staged = edges.persist()
+    n_edges = staged.count()
+    np_ = max(
+        1,
+        min(edges.sparkSession.sparkContext.defaultParallelism,
+            n_edges // 50_000 + 1),
+    )
+    laid = staged.repartition(np_, key).persist()
+    laid.count()  # materialize the layout from the staging cache
+    staged.unpersist(blocking=False)
+    return laid, np_
+
+
 def connected_components(pairs: DataFrame) -> tuple[DataFrame, int]:
     """``pairs`` (doc1, doc2) = undirected duplicate edges.  Returns
     (labels, rounds): labels has one row per node appearing in any pair,
@@ -42,35 +67,7 @@ def connected_components(pairs: DataFrame) -> tuple[DataFrame, int]:
     edges = pairs.unionByName(
         pairs.select(F.col("doc2").alias("doc1"), F.col("doc1").alias("doc2"))
     )
-    # Round 11 (guide §2 — scale-adaptive partitioning): the loop's
-    # per-round cost on a near-dup graph is task/stage overhead, not
-    # compute — label relations are O(nodes-in-pairs) slim rows, and a
-    # fixed 32-way layout pays 32 tasks per stage per round for a graph
-    # of a few thousand edges.  Partition count derives from the
-    # measured edge count (one bounded count on the relation the loop
-    # materializes anyway; ~50k edges per partition, capped at the
-    # session parallelism), so the same code lays out a 100 TB pair
-    # graph wide and a small one narrow.  Measured at sf0.1: the pHash
-    # component resolve dropped ~2x in same-window A/B.
-    # Round 12 (r11 ADVICE): count the PERSISTED union, not the raw
-    # plan — counting first evaluated the upstream pair pipeline twice
-    # (once for the width probe, once on first materialization), which
-    # is cheap for memo-backed callers but a full recompute for any
-    # caller passing an expensive un-cached pairs relation.  The staging
-    # cache is released as soon as the repartitioned layout is
-    # materialized off it.
-    staged = edges.persist()
-    n_edges = staged.count()
-    np_ = max(
-        1,
-        min(
-            pairs.sparkSession.sparkContext.defaultParallelism,
-            n_edges // 50_000 + 1,
-        ),
-    )
-    edges = staged.repartition(np_, "doc2").persist()
-    edges.count()  # materialize the layout from the staging cache
-    staged.unpersist(blocking=False)
+    edges, np_ = edge_layout(edges, "doc2")
     labels = (
         edges.select(F.col("doc1").alias("doc_id"))
         .distinct()
@@ -157,31 +154,9 @@ def pagerank_int(
     """
     # ``prepartitioned=True``: the caller hands in an edge list already
     # hash-partitioned by src and persisted (e.g. a session memo shared
-    # across calls — round 9); its lifecycle belongs to the caller.
-    # Round 11 (guide §2 — scale-adaptive partitioning, the
-    # connected_components treatment): the edge layout width derives
-    # from the measured edge count instead of the session default, so
-    # every per-round stage over a small graph runs a handful of tasks
-    # instead of 32 — times ``iters`` rounds.  A prepartitioned caller
-    # already chose its width; it is left untouched.
-    if prepartitioned:
-        e = edges
-    else:
-        # r11 ADVICE: persist-then-count so the caller's edge pipeline
-        # is evaluated once, not once per (probe, materialization) —
-        # see connected_components for the same fix
-        staged = edges.persist()
-        n_edges = staged.count()
-        np_ = max(
-            1,
-            min(
-                edges.sparkSession.sparkContext.defaultParallelism,
-                n_edges // 50_000 + 1,
-            ),
-        )
-        e = staged.repartition(np_, "src").persist()
-        e.count()  # materialize the layout from the staging cache
-        staged.unpersist(blocking=False)
+    # across calls — round 9); its width and lifecycle belong to the
+    # caller.
+    e = edges if prepartitioned else edge_layout(edges, "src")[0]
     deg = e.groupBy("src").agg(F.count("*").alias("deg"))
     nodes = deg.select(F.col("src").alias("node"))
     base = (scale * (damp_den - damp_num)) // damp_den

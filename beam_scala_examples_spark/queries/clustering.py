@@ -40,9 +40,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators import ann
 from ..session import hold, memo
 from ..tables import load
-from .llmdata import EMB_DIM
+from .llmdata import EMB_DIM, N_QUERY_VECS, TOPK_NEIGHBORS
 
 KM_K = 10
 KM_ITERS = 3
@@ -1574,6 +1575,28 @@ ORACLE["sim_ivfpq_recall"] = _ivfpq_recall_oracle()
 IVF_TR_NPROBE = 2   # probed cells per query (of the KM_K trained cells)
 
 
+def _ann_base(spark: SparkSession, sf_dir: str):
+    """(corpus, queries): the session corpus as an ``ann`` corpus
+    (vec_id, embedding, nrm) and its query frame."""
+    base = _emb_corpus(spark, sf_dir).select(
+        "vec_id", "embedding", F.expr(ann.NORM).alias("nrm")
+    )
+    return base, ann.query_frame(base, F.col("vec_id") < N_QUERY_VECS)
+
+
+def _ivf_cells(spark: SparkSession, sf_dir: str):
+    """(centroids, cells): the trained k-means codebook and the corpus
+    assigned to it, (vec_id, cluster, embedding, nrm) — what every
+    trained-cell IVF rung hands ``ann.ivf_scan``."""
+    cents = _trained(
+        "kmeans", spark, sf_dir, _kmeans_train, _emb_corpus(spark, sf_dir)
+    )
+    cells = _km_assigned(spark, sf_dir).select(
+        "vec_id", "cluster", "embedding", F.expr(ann.NORM).alias("nrm")
+    )
+    return cents, cells
+
+
 def sim_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with a TRAINED coarse quantizer: the inverted lists are the
     ``emb_kmeans`` Lloyd cells instead of ``sim_ivf_topk``'s
@@ -1588,54 +1611,13 @@ def sim_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (KM_K rows) and broadcast into the probe join; corpus assignment
     is the k-means Arrow kernel (one narrow pass); candidates =
     assignment ⋈ broadcast probes on the cell id, exact cosine only
-    inside probed cells, top-k rides WindowGroupLimit.  Training cost
-    is emb_kmeans' loop (O(K x DIM) driver rows per iteration)."""
-    from .llmdata import N_QUERY_VECS, TOPK_NEIGHBORS, _SPARK_DOT
-    from ..operators.topk import top_k_per_key
-
-    emb = _emb_corpus(spark, sf_dir)
-    cents = _trained("kmeans", spark, sf_dir, _kmeans_train, emb)
-    assign = _km_assigned(spark, sf_dir)  # (vec_id, cluster, embedding)
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    assign = assign.select(
-        "vec_id", "cluster", "embedding", norm.alias("nrm")
-    )
-    cdf = spark.createDataFrame(
-        [(cid, vec) for cid, vec in cents],
-        "cluster bigint, c array<double>",
-    )
-    qdf = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        norm.alias("qnorm"),
-    )
-    # probe ranking by the SAME metric the quantizer assigns with
-    # (squared L2, left-to-right fold — matches the oracle's list_sum)
-    l2 = F.expr(
-        "aggregate(zip_with(qe, c,"
-        " (x, y) -> (cast(x as double) - y) * (cast(x as double) - y)),"
-        " cast(0 as double), (acc, v) -> acc + v)"
-    )
-    probes = top_k_per_key(
-        qdf.crossJoin(F.broadcast(cdf)).select(
-            "qid", "qe", "qnorm", "cluster", l2.alias("d2")
-        ),
-        ["qid"],
-        [F.asc("d2"), F.asc("cluster")],
-        IVF_TR_NPROBE,
-    ).select("qid", "qe", "qnorm", "cluster")
-    dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-    cand = (
-        assign.join(F.broadcast(probes), "cluster")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            (dot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias("cos"),
-        )
-    )
-    return top_k_per_key(
-        cand, ["qid"], [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS
+    inside probed cells (``ann.ivf_scan``), top-k rides
+    WindowGroupLimit.  Training cost is emb_kmeans' loop (O(K x DIM)
+    driver rows per iteration)."""
+    _, q = _ann_base(spark, sf_dir)
+    cents, cells = _ivf_cells(spark, sf_dir)
+    return ann.top_cosine(
+        ann.ivf_scan(cells, q, cents, IVF_TR_NPROBE), TOPK_NEIGHBORS
     ).select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
 
 
@@ -1766,85 +1748,25 @@ def _filtered_ivf_for(
     """Trained-cell IVF top-k restricted to ``allowed`` (vec_id) rows —
     the parametrized core of the filtered rung (round-10 selectivity
     sweep shares it across predicates)."""
-    from .llmdata import N_QUERY_VECS, TOPK_NEIGHBORS, _SPARK_DOT
-    from ..operators.topk import top_k_per_key
-
-    emb = _emb_corpus(spark, sf_dir)
-    cents = _trained("kmeans", spark, sf_dir, _kmeans_train, emb)
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    assign = (
-        _km_assigned(spark, sf_dir)
-        .select("vec_id", "cluster", "embedding", norm.alias("nrm"))
-        .join(allowed.select("vec_id"), "vec_id", "semi")
-    )
-    cdf = spark.createDataFrame(
-        [(cid, vec) for cid, vec in cents],
-        "cluster bigint, c array<double>",
-    )
-    qdf = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        norm.alias("qnorm"),
-    )
-    l2 = F.expr(
-        "aggregate(zip_with(qe, c,"
-        " (x, y) -> (cast(x as double) - y) * (cast(x as double) - y)),"
-        " cast(0 as double), (acc, v) -> acc + v)"
-    )
-    probes = top_k_per_key(
-        qdf.crossJoin(F.broadcast(cdf)).select(
-            "qid", "qe", "qnorm", "cluster", l2.alias("d2")
-        ),
-        ["qid"],
-        [F.asc("d2"), F.asc("cluster")],
-        IVF_TR_NPROBE,
-    ).select("qid", "qe", "qnorm", "cluster")
-    dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-    cand = (
-        assign.join(F.broadcast(probes), "cluster")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            (dot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias("cos"),
-        )
-    )
-    return top_k_per_key(
-        cand, ["qid"], [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS
+    _, q = _ann_base(spark, sf_dir)
+    cents, cells = _ivf_cells(spark, sf_dir)
+    cells = cells.join(allowed.select("vec_id"), "vec_id", "semi")
+    return ann.top_cosine(
+        ann.ivf_scan(cells, q, cents, IVF_TR_NPROBE), TOPK_NEIGHBORS
     ).select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
 
 
 def _filtered_truth_for(
     spark: SparkSession, sf_dir: str, allowed: DataFrame
 ) -> DataFrame:
-    """Exact FILTERED truth: brute-force cosine top-k over the allowed
-    candidate set (queries unfiltered)."""
-    from .llmdata import N_QUERY_VECS, TOPK_NEIGHBORS, _SPARK_DOT
-    from ..operators.topk import top_k_per_key
-
-    emb = _emb_corpus(spark, sf_dir)
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    cand = emb.select(
-        "vec_id", "embedding", norm.alias("cnorm")
-    ).join(allowed.select("vec_id"), "vec_id", "semi")
-    q = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        norm.alias("qnorm"),
+    """Exact FILTERED top-k with its cosine: brute-force over the
+    allowed candidate set (queries unfiltered) — the filtered rung's
+    truth, and the batch twin of ``IvfIngestSink.brute_topk_view``."""
+    base, q = _ann_base(spark, sf_dir)
+    base = base.join(allowed.select("vec_id"), "vec_id", "semi")
+    return ann.top_cosine(ann.exact_scan(base, q), TOPK_NEIGHBORS).select(
+        "qid", "vec_id", F.round("cos", 6).alias("cosine")
     )
-    dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-    pairs = (
-        cand.join(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            (dot / F.sqrt(F.col("qnorm") * F.col("cnorm"))).alias("cos"),
-        )
-    )
-    return top_k_per_key(
-        pairs, ["qid"], [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS
-    ).select("qid", "vec_id")
 
 
 def sim_filtered_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1903,101 +1825,33 @@ def sim_filtered_selectivity_sweep(
 
     Round 11 (guide §2.4 — the leg-tagging restructure): the three
     predicates run as ONE lang-tagged search.  Every document carries
-    exactly one lang, so joining the lang column through the candidate
-    relations and partitioning every window by (lang, qid) computes
-    per-leg results identical to three independent semi-joined serves
-    while sharing one truth chain, one cell scan and one hit join."""
-    from .llmdata import N_QUERY_VECS, TOPK_NEIGHBORS, _SPARK_DOT
-    from ..operators.topk import top_k_per_key
-
-    emb = _emb_corpus(spark, sf_dir)
-    cents = _trained("kmeans", spark, sf_dir, _kmeans_train, emb)
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
+    exactly one lang, so joining the lang column into the corpus as a
+    tag and partitioning every window by (lang, qid) computes per-leg
+    results identical to three independent semi-joined serves while
+    sharing one truth chain, one cell scan and one hit join."""
+    base, q = _ann_base(spark, sf_dir)
+    cents, cells = _ivf_cells(spark, sf_dir)
     allowed = (
         load(spark, sf_dir, "documents")
         .filter(F.col("lang").isin(list(SEL_LANGS)))
         .select("lang", F.col("doc_id").alias("vec_id"))
     )
-    qdf = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        norm.alias("qnorm"),
+    truth = ann.top_cosine(
+        ann.exact_scan(base.join(allowed, "vec_id"), q),
+        TOPK_NEIGHBORS, ["lang"],
     )
-    dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-    # exact filtered truth, all legs at once (same pipeline as
-    # _filtered_truth_for with the lang tag riding along)
-    cand_t = emb.select(
-        "vec_id", "embedding", norm.alias("cnorm")
-    ).join(allowed, "vec_id")
-    pairs_t = (
-        cand_t.join(F.broadcast(qdf))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "lang",
-            "qid",
-            "vec_id",
-            (dot / F.sqrt(F.col("qnorm") * F.col("cnorm"))).alias("cos"),
-        )
+    hit = ann.top_cosine(
+        ann.ivf_scan(cells.join(allowed, "vec_id"), q, cents, IVF_TR_NPROBE),
+        TOPK_NEIGHBORS, ["lang"],
     )
-    truth = top_k_per_key(
-        pairs_t, ["lang", "qid"], [F.desc("cos"), F.asc("vec_id")],
-        TOPK_NEIGHBORS,
-    ).select("lang", "qid", "vec_id")
-    # filtered trained-IVF serve, all legs at once (same pipeline as
-    # _filtered_ivf_for)
-    assign = (
-        _km_assigned(spark, sf_dir)
-        .select("vec_id", "cluster", "embedding", norm.alias("nrm"))
-        .join(allowed, "vec_id")
-    )
-    cdf = spark.createDataFrame(
-        [(cid, vec) for cid, vec in cents],
-        "cluster bigint, c array<double>",
-    )
-    l2 = F.expr(
-        "aggregate(zip_with(qe, c,"
-        " (x, y) -> (cast(x as double) - y) * (cast(x as double) - y)),"
-        " cast(0 as double), (acc, v) -> acc + v)"
-    )
-    probes = top_k_per_key(
-        qdf.crossJoin(F.broadcast(cdf)).select(
-            "qid", "qe", "qnorm", "cluster", l2.alias("d2")
-        ),
-        ["qid"],
-        [F.asc("d2"), F.asc("cluster")],
-        IVF_TR_NPROBE,
-    ).select("qid", "qe", "qnorm", "cluster")
-    sdot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-    cand_i = (
-        assign.join(F.broadcast(probes), "cluster")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "lang",
-            "qid",
-            "vec_id",
-            (sdot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias("cos"),
-        )
-    )
-    hit = top_k_per_key(
-        cand_i, ["lang", "qid"], [F.desc("cos"), F.asc("vec_id")],
-        TOPK_NEIGHBORS,
-    ).select("lang", "qid", "vec_id", F.lit(1).alias("hit"))
     acnt = allowed.groupBy("lang").agg(
         F.count("*").cast("long").alias("allowed_rows")
     )
     return (
-        truth.join(hit, ["lang", "qid", "vec_id"], "left")
-        .groupBy("lang")
-        .agg(
-            F.count("hit").alias("hits"),
-            F.count("*").alias("truth_rows"),
-        )
+        ann.recall_frontier(truth, hit, ["lang"])
         .join(F.broadcast(acnt), "lang")
         .select(
-            "lang", "allowed_rows", "hits", "truth_rows",
-            F.expr("(hits * 10000) div truth_rows").alias(
-                "mean_recall_bp"
-            ),
+            "lang", "allowed_rows", "hits", "truth_rows", "mean_recall_bp"
         )
     )
 
@@ -2028,40 +1882,6 @@ def auto_brute_max(corpus_rows: int) -> int:
     return (corpus_rows * IVF_TR_NPROBE) // KM_K
 
 
-def _filtered_brute_topk_for(
-    spark: SparkSession, sf_dir: str, allowed: DataFrame
-) -> DataFrame:
-    """Exact filtered top-k WITH the cosine column — the brute-force
-    serving plan of the auto router (same pipeline as
-    ``_filtered_truth_for``, scores kept)."""
-    from .llmdata import N_QUERY_VECS, TOPK_NEIGHBORS, _SPARK_DOT
-    from ..operators.topk import top_k_per_key
-
-    emb = _emb_corpus(spark, sf_dir)
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    cand = emb.select(
-        "vec_id", "embedding", norm.alias("cnorm")
-    ).join(allowed.select("vec_id"), "vec_id", "semi")
-    q = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        norm.alias("qnorm"),
-    )
-    dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-    pairs = (
-        cand.join(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            (dot / F.sqrt(F.col("qnorm") * F.col("cnorm"))).alias("cos"),
-        )
-    )
-    return top_k_per_key(
-        pairs, ["qid"], [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS
-    ).select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
-
-
 def sim_filtered_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hybrid-search ROUTER: for each predicate, serve filtered
     top-k from whichever plan the stats say is right — brute-force the
@@ -2087,11 +1907,7 @@ def sim_filtered_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang column plus windows partitioned by (lang, qid) computes
     per-leg results identical to the independent serves.  The routing
     DECISION is unchanged and stays per predicate."""
-    from .llmdata import N_QUERY_VECS, TOPK_NEIGHBORS, _SPARK_DOT
-    from ..operators.topk import top_k_per_key
-
-    emb = _emb_corpus(spark, sf_dir)
-    corpus_n = emb.count()
+    corpus_n = _emb_corpus(spark, sf_dir).count()
     docs = load(spark, sf_dir, "documents")
     counts = {
         r["lang"]: r["n"]
@@ -2105,84 +1921,24 @@ def sim_filtered_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "brute": [l for l in SEL_LANGS if counts.get(l, 0) <= limit],
         "ivf": [l for l in SEL_LANGS if counts.get(l, 0) > limit],
     }
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    qdf = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        norm.alias("qnorm"),
-    )
-    dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
+    base, q = _ann_base(spark, sf_dir)
     legs = []
-    if groups["brute"]:
-        allowed = docs.filter(
-            F.col("lang").isin(groups["brute"])
-        ).select("lang", F.col("doc_id").alias("vec_id"))
-        cand = emb.select(
-            "vec_id", "embedding", norm.alias("cnorm")
-        ).join(allowed, "vec_id")
-        pairs = (
-            cand.join(F.broadcast(qdf))
-            .filter(F.col("vec_id") != F.col("qid"))
-            .select(
-                "lang", "qid", "vec_id",
-                (dot / F.sqrt(F.col("qnorm") * F.col("cnorm"))).alias(
-                    "cos"
-                ),
-            )
+    for plan, langs in groups.items():
+        if not langs:
+            continue
+        allowed = docs.filter(F.col("lang").isin(langs)).select(
+            "lang", F.col("doc_id").alias("vec_id")
         )
+        if plan == "brute":
+            scored = ann.exact_scan(base.join(allowed, "vec_id"), q)
+        else:
+            cents, cells = _ivf_cells(spark, sf_dir)
+            scored = ann.ivf_scan(
+                cells.join(allowed, "vec_id"), q, cents, IVF_TR_NPROBE
+            )
         legs.append(
-            top_k_per_key(
-                pairs, ["lang", "qid"],
-                [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS,
-            ).select(
-                "lang", F.lit("brute").alias("plan"), "qid", "vec_id",
-                F.round("cos", 6).alias("cosine"),
-            )
-        )
-    if groups["ivf"]:
-        cents = _trained("kmeans", spark, sf_dir, _kmeans_train, emb)
-        allowed = docs.filter(
-            F.col("lang").isin(groups["ivf"])
-        ).select("lang", F.col("doc_id").alias("vec_id"))
-        assign = (
-            _km_assigned(spark, sf_dir)
-            .select("vec_id", "cluster", "embedding", norm.alias("nrm"))
-            .join(allowed, "vec_id")
-        )
-        cdf = spark.createDataFrame(
-            [(cid, vec) for cid, vec in cents],
-            "cluster bigint, c array<double>",
-        )
-        l2 = F.expr(
-            "aggregate(zip_with(qe, c,"
-            " (x, y) -> (cast(x as double) - y) * (cast(x as double) - y)),"
-            " cast(0 as double), (acc, v) -> acc + v)"
-        )
-        probes = top_k_per_key(
-            qdf.crossJoin(F.broadcast(cdf)).select(
-                "qid", "qe", "qnorm", "cluster", l2.alias("d2")
-            ),
-            ["qid"],
-            [F.asc("d2"), F.asc("cluster")],
-            IVF_TR_NPROBE,
-        ).select("qid", "qe", "qnorm", "cluster")
-        sdot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-        cand = (
-            assign.join(F.broadcast(probes), "cluster")
-            .filter(F.col("vec_id") != F.col("qid"))
-            .select(
-                "lang", "qid", "vec_id",
-                (sdot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias(
-                    "cos"
-                ),
-            )
-        )
-        legs.append(
-            top_k_per_key(
-                cand, ["lang", "qid"],
-                [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS,
-            ).select(
-                "lang", F.lit("ivf").alias("plan"), "qid", "vec_id",
+            ann.top_cosine(scored, TOPK_NEIGHBORS, ["lang"]).select(
+                "lang", F.lit(plan).alias("plan"), "qid", "vec_id",
                 F.round("cos", 6).alias("cosine"),
             )
         )
@@ -2393,16 +2149,11 @@ def _ivfpq_trained_scored(spark: SparkSession, sf_dir: str):
     ``IVF_TR_NPROBE`` nearest TRAINED cells — the cell restriction and
     the code scan, everything up to (but not including) the shortlist
     policy the two callers differ on."""
-    from .llmdata import N_QUERY_VECS, _SPARK_DOT
-    from ..operators.topk import top_k_per_key
-
     emb = _emb_corpus(spark, sf_dir)
-
-    kcents = _trained("kmeans", spark, sf_dir, _kmeans_train, emb)
-    assign = _km_assigned(spark, sf_dir).select("vec_id", "cluster")
-    kdf = spark.createDataFrame(
-        [(cid, vec) for cid, vec in kcents],
-        "cluster bigint, kc array<double>",
+    _, qdf = _ann_base(spark, sf_dir)
+    kcents, cells = _ivf_cells(spark, sf_dir)
+    probes = ann.ivf_probes(qdf, kcents, IVF_TR_NPROBE).select(
+        "qid", "cluster"
     )
 
     pqcents = _trained("pq", spark, sf_dir, _pq_train, emb)
@@ -2411,28 +2162,6 @@ def _ivfpq_trained_scored(spark: SparkSession, sf_dir: str):
         [(m, cid, vec) for m, lst in pqcents.items() for cid, vec in lst],
         "m int, pqc bigint, c array<double>",
     )
-
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    qdf = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        norm.alias("qnorm"),
-    )
-    # probe ranking by the quantizer's own metric (squared L2,
-    # left-to-right fold — matches the oracle's list_sum)
-    l2 = F.expr(
-        "aggregate(zip_with(qe, kc,"
-        " (x, y) -> (cast(x as double) - y) * (cast(x as double) - y)),"
-        " cast(0 as double), (acc, v) -> acc + v)"
-    )
-    probes = top_k_per_key(
-        qdf.crossJoin(F.broadcast(kdf)).select(
-            "qid", "cluster", l2.alias("d2")
-        ),
-        ["qid"],
-        [F.asc("d2"), F.asc("cluster")],
-        IVF_TR_NPROBE,
-    ).select("qid", "cluster")
 
     # PQ LUT (identical folds to sim_pq_topk)
     sub_dot = F.expr(
@@ -2452,7 +2181,7 @@ def _ivfpq_trained_scored(spark: SparkSession, sf_dir: str):
         F.round(c_norm * KM_SCALE, 0).cast("long").alias("cnorml"),
     )
     scored = (
-        codes.join(assign, "vec_id")
+        codes.join(cells.select("vec_id", "cluster"), "vec_id")
         .join(F.broadcast(probes), "cluster")
         .join(F.broadcast(lut), ["qid", "m", "pqc"])
         .filter(F.col("vec_id") != F.col("qid"))
@@ -2613,83 +2342,31 @@ def sim_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One assignment + one probe ranking feed ALL sweep points: the
     candidate relation carries the probe rank, each budget filters
-    ``rank <= np`` and re-ranks — no per-budget recompute (candidates
+    ``probe <= np`` and re-ranks — no per-budget recompute (candidates
     and the 50-row truth are checkpointed; both are bounded:
     queries x probed cells x cell size, queries x k)."""
-    from .llmdata import (
-        N_QUERY_VECS,
-        TOPK_NEIGHBORS,
-        _SPARK_DOT,
-        sim_cosine_topk,
-    )
-    from ..operators.topk import top_k_per_key
+    from .llmdata import sim_cosine_topk
 
-    emb = _emb_corpus(spark, sf_dir)
-    kcents = _trained("kmeans", spark, sf_dir, _kmeans_train, emb)
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    assign = _km_assigned(spark, sf_dir).select(
-        "vec_id", "cluster", "embedding", norm.alias("nrm")
-    )
-    kdf = spark.createDataFrame(
-        [(cid, vec) for cid, vec in kcents],
-        "cluster bigint, kc array<double>",
-    )
-    qdf = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        norm.alias("qnorm"),
-    )
-    l2 = F.expr(
-        "aggregate(zip_with(qe, kc,"
-        " (x, y) -> (cast(x as double) - y) * (cast(x as double) - y)),"
-        " cast(0 as double), (acc, v) -> acc + v)"
-    )
-    w = Window.partitionBy("qid").orderBy(F.asc("d2"), F.asc("cluster"))
-    max_np = max(IVF_SWEEP_NPROBES)
-    probes = (
-        qdf.crossJoin(F.broadcast(kdf))
-        .select("qid", "qe", "qnorm", "cluster", l2.alias("d2"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= max_np)
-        .select("qid", "qe", "qnorm", "cluster", "rn")
-    )
-    dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-    cand = (
-        assign.join(F.broadcast(probes), "cluster")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            "rn",
-            (dot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias("cos"),
-        )
-        .localCheckpoint()
-    )
+    _, q = _ann_base(spark, sf_dir)
+    cents, cells = _ivf_cells(spark, sf_dir)
+    cand = ann.ivf_scan(
+        cells, q, cents, max(IVF_SWEEP_NPROBES)
+    ).localCheckpoint()
     truth = (
         sim_cosine_topk(spark, sf_dir)
         .select("qid", "vec_id")
         .localCheckpoint()
     )
-    nq = truth.select("qid").distinct().count()
     parts = []
     for np_ in IVF_SWEEP_NPROBES:
-        sub = cand.filter(F.col("rn") <= np_)
-        topk = top_k_per_key(
-            sub, ["qid"], [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS
-        ).select("qid", "vec_id")
-        matches = truth.join(topk, ["qid", "vec_id"], "semi").agg(
-            F.count("*").alias("matches")
-        )
-        scanned = sub.agg(F.count("*").alias("scanned_rows"))
+        sub = cand.filter(F.col("probe") <= np_)
         parts.append(
-            matches.crossJoin(scanned).select(
+            ann.recall_frontier(truth, ann.top_cosine(sub, TOPK_NEIGHBORS))
+            .crossJoin(sub.agg(F.count("*").alias("scanned_rows")))
+            .select(
                 F.lit(np_).cast("long").alias("nprobe"),
-                "matches",
-                F.lit(nq * TOPK_NEIGHBORS).cast("long").alias("truth_rows"),
-                F.expr(
-                    f"(matches * 10000) div {nq * TOPK_NEIGHBORS}"
-                ).alias("mean_recall_bp"),
-                "scanned_rows",
+                F.col("hits").alias("matches"),
+                "truth_rows", "mean_recall_bp", "scanned_rows",
             )
         )
     out = parts[0]
@@ -2907,14 +2584,6 @@ def sim_pq_rerank_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     and each budget merely filters rank <= B before the final top-k.
     Codebooks come from the session trainer memo — identical to every
     other PQ rung."""
-    from .llmdata import (
-        N_QUERY_VECS,
-        TOPK_NEIGHBORS,
-        _SPARK_DOT,
-        sim_cosine_topk,
-    )
-    from ..operators.topk import top_k_per_key
-
     # round 11: serve from the shared session corpus + code index — the
     # per-call private persist ("pqsweep") was pure cache churn on an
     # identical relation (guide §5.3)
@@ -2928,12 +2597,7 @@ def sim_pq_rerank_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(m, cid, vec) for m, lst in cents.items() for cid, vec in lst],
         "m int, cid bigint, c array<double>",
     )
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    qdf = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        norm.alias("qnorm"),
-    )
+    _, qdf = _ann_base(spark, sf_dir)
     sub_dot = F.expr(
         f"aggregate(zip_with(slice(qe, m * {PQ_SUB} + 1, {PQ_SUB}), c,"
         " (x, y) -> cast(x as double) * y),"
@@ -2959,30 +2623,38 @@ def sim_pq_rerank_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = float(KM_SCALE)
     adc_cos = (F.col("dl") / s) / F.sqrt(F.col("qnorm") * (F.col("nl") / s))
-    max_b = max(PQ_SWEEP_BUDGETS)
-    w = Window.partitionBy("qid").orderBy(
-        F.desc("adc_cos"), F.asc("vec_id")
+    return _rerank_frontier(
+        spark, sf_dir, scored.select("qid", "vec_id", adc_cos.alias("adc_cos"))
     )
+
+
+def _rerank_frontier(
+    spark: SparkSession, sf_dir: str, adc: DataFrame
+) -> DataFrame:
+    """(rerank_budget, matches, truth_rows, mean_recall_bp,
+    reranked_rows) of an ADC ranking ``adc`` (qid, vec_id, adc_cos):
+    the max-budget shortlist is re-scored exactly once (checkpointed,
+    bounded: queries x max budget), and per ``PQ_SWEEP_BUDGETS`` budget
+    B the top-k among the B best ADC rows meets the float truth.
+
+    Round 11 (guide §2.4): the budgets run as ONE leg-tagged pipeline —
+    a 4-row budget fan join, one window per (budget, qid), one truth
+    join, one groupBy — instead of four independent window/semi-join/
+    count subtrees.  Per budget the ranked subset and its truth matches
+    are identical rows (the window partitions per leg)."""
+    from .llmdata import sim_cosine_topk
+
+    base, qdf = _ann_base(spark, sf_dir)
+    w = Window.partitionBy("qid").orderBy(F.desc("adc_cos"), F.asc("vec_id"))
     shortlist = (
-        scored.select("qid", "vec_id", adc_cos.alias("adc_cos"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= max_b)
+        adc.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= max(PQ_SWEEP_BUDGETS))
         .select("qid", "vec_id", "rn")
     )
-    cand = emb.join(F.broadcast(shortlist), "vec_id").select(
-        "qid", "vec_id", "rn", "embedding", norm.alias("cnorm")
-    )
     exact = (
-        cand.join(F.broadcast(qdf), "qid")
-        .select(
-            "qid",
-            "vec_id",
-            "rn",
-            (
-                F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-                / F.sqrt(F.col("qnorm") * F.col("cnorm"))
-            ).alias("cos"),
-        )
+        base.join(F.broadcast(shortlist), "vec_id")
+        .join(F.broadcast(qdf), "qid")
+        .select("qid", "vec_id", "rn", ann.cosine())
         .localCheckpoint()
     )
     truth = (
@@ -2990,47 +2662,27 @@ def sim_pq_rerank_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("qid", "vec_id")
         .localCheckpoint()
     )
-    nq = truth.select("qid").distinct().count()
-    # round 11 (guide §2.4): the budgets run as ONE leg-tagged pipeline
-    # over the checkpointed shortlist — a 4-row budget fan join, one
-    # window per (budget, qid), one broadcast truth join, one groupBy —
-    # instead of four independent window/semi-join/count subtrees.  Per
-    # budget the ranked subset and its truth matches are identical rows
-    # (the window partitions per leg), so results are unchanged.
-    legs = spark.createDataFrame(
-        [(b,) for b in PQ_SWEEP_BUDGETS], "rerank_budget long"
-    )
-    fan = exact.join(
-        F.broadcast(legs), F.col("rn") <= F.col("rerank_budget")
-    )
-    wleg = Window.partitionBy("rerank_budget", "qid").orderBy(
-        F.desc("cos"), F.asc("vec_id")
-    )
-    tagged = (
-        fan.withColumn("rk", F.row_number().over(wleg))
-        .join(
-            F.broadcast(truth.withColumn("hit", F.lit(1))),
-            ["qid", "vec_id"],
-            "left",
+    legs = F.broadcast(
+        spark.createDataFrame(
+            [(b,) for b in PQ_SWEEP_BUDGETS], "rerank_budget long"
         )
     )
-    out = tagged.groupBy("rerank_budget").agg(
-        F.sum(
-            (
-                (F.col("rk") <= TOPK_NEIGHBORS) & F.col("hit").isNotNull()
-            ).cast("long")
-        ).alias("matches"),
-        F.count("*").alias("reranked_rows"),
-    ).select(
-        "rerank_budget",
-        "matches",
-        F.lit(nq * TOPK_NEIGHBORS).cast("long").alias("truth_rows"),
-        F.expr(
-            f"(matches * 10000) div {nq * TOPK_NEIGHBORS}"
-        ).alias("mean_recall_bp"),
-        "reranked_rows",
+    fan = exact.join(legs, F.col("rn") <= F.col("rerank_budget"))
+    reranked = fan.groupBy("rerank_budget").agg(
+        F.count("*").alias("reranked_rows")
     )
-    return out
+    return (
+        ann.recall_frontier(
+            truth.crossJoin(legs),
+            ann.top_cosine(fan, TOPK_NEIGHBORS, ["rerank_budget"]),
+            ["rerank_budget"],
+        )
+        .join(reranked, "rerank_budget")
+        .select(
+            "rerank_budget", F.col("hits").alias("matches"), "truth_rows",
+            "mean_recall_bp", "reranked_rows",
+        )
+    )
 
 
 QUERIES["sim_pq_rerank_sweep"] = sim_pq_rerank_sweep
@@ -3128,18 +2780,10 @@ def sim_ivfpq_trained_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     max-budget shortlist, each budget filters ``rn <= B`` before the
     final top-k — the ``sim_pq_rerank_sweep`` machinery pointed at the
     probed-cell candidate set."""
-    from .llmdata import (
-        TOPK_NEIGHBORS,
-        _SPARK_DOT,
-        sim_cosine_topk,
-    )
-    from ..operators.topk import top_k_per_key
-
-    emb, qdf, scored = _ivfpq_trained_scored(spark, sf_dir)
+    _, qdf, scored = _ivfpq_trained_scored(spark, sf_dir)
     # materialized once: both the shortlist and the scanned_rows
     # certificate read it (bounded: queries x probed-cell rows)
     scored = scored.localCheckpoint()
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
     s = float(KM_SCALE)
     adc = scored.join(
         F.broadcast(qdf.select("qid", "qnorm")), "qid"
@@ -3150,77 +2794,9 @@ def sim_ivfpq_trained_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "adc_cos"
         ),
     )
-    max_b = max(PQ_SWEEP_BUDGETS)
-    w = Window.partitionBy("qid").orderBy(
-        F.desc("adc_cos"), F.asc("vec_id")
-    )
-    shortlist = (
-        adc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= max_b)
-        .select("qid", "vec_id", "rn")
-    )
-    cand = emb.join(F.broadcast(shortlist), "vec_id").select(
-        "qid", "vec_id", "rn", "embedding", norm.alias("cnorm")
-    )
-    exact = (
-        cand.join(F.broadcast(qdf), "qid")
-        .select(
-            "qid",
-            "vec_id",
-            "rn",
-            (
-                F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-                / F.sqrt(F.col("qnorm") * F.col("cnorm"))
-            ).alias("cos"),
-        )
-        .localCheckpoint()
-    )
-    truth = (
-        sim_cosine_topk(spark, sf_dir)
-        .select("qid", "vec_id")
-        .localCheckpoint()
-    )
-    nq = truth.select("qid").distinct().count()
+    frontier = _rerank_frontier(spark, sf_dir, adc)
     scanned = scored.agg(F.count("*").alias("scanned_rows"))
-    # round 11 (guide §2.4): one leg-tagged pipeline over the
-    # checkpointed shortlist instead of four independent window/
-    # semi-join/count subtrees — same restructure as
-    # ``sim_pq_rerank_sweep`` (windows partition per (budget, qid), so
-    # per-budget rows are identical to the per-leg form)
-    legs = spark.createDataFrame(
-        [(b,) for b in PQ_SWEEP_BUDGETS], "rerank_budget long"
-    )
-    fan = exact.join(
-        F.broadcast(legs), F.col("rn") <= F.col("rerank_budget")
-    )
-    wleg = Window.partitionBy("rerank_budget", "qid").orderBy(
-        F.desc("cos"), F.asc("vec_id")
-    )
-    tagged = (
-        fan.withColumn("rk", F.row_number().over(wleg))
-        .join(
-            F.broadcast(truth.withColumn("hit", F.lit(1))),
-            ["qid", "vec_id"],
-            "left",
-        )
-    )
-    return tagged.groupBy("rerank_budget").agg(
-        F.sum(
-            (
-                (F.col("rk") <= TOPK_NEIGHBORS) & F.col("hit").isNotNull()
-            ).cast("long")
-        ).alias("matches"),
-        F.count("*").alias("reranked_rows"),
-    ).crossJoin(F.broadcast(scanned)).select(
-        "rerank_budget",
-        "matches",
-        F.lit(nq * TOPK_NEIGHBORS).cast("long").alias("truth_rows"),
-        F.expr(
-            f"(matches * 10000) div {nq * TOPK_NEIGHBORS}"
-        ).alias("mean_recall_bp"),
-        "reranked_rows",
-        "scanned_rows",
-    )
+    return frontier.crossJoin(F.broadcast(scanned))
 
 
 QUERIES["sim_ivfpq_trained_rerank"] = sim_ivfpq_trained_rerank
@@ -3350,51 +2926,12 @@ def sim_range_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast, one Arrow assignment pass, candidates = assignment ⋈
     broadcast probes — minus the rank: the radius predicate replaces
     top-k entirely, so nothing windows."""
-    from .llmdata import (
-        N_QUERY_VECS,
-        SIM_RANGE_TAU,
-        _SPARK_DOT,
-    )
+    from .llmdata import SIM_RANGE_TAU
 
-    emb = _emb_corpus(spark, sf_dir)
-    cents = _trained("kmeans", spark, sf_dir, _kmeans_train, emb)
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    assign = _km_assigned(spark, sf_dir).select(
-        "vec_id", "cluster", "embedding", norm.alias("nrm")
-    )
-    cdf = spark.createDataFrame(
-        [(cid, vec) for cid, vec in cents],
-        "cluster bigint, c array<double>",
-    )
-    qdf = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        norm.alias("qnorm"),
-    )
-    l2 = F.expr(
-        "aggregate(zip_with(qe, c,"
-        " (x, y) -> (cast(x as double) - y) * (cast(x as double) - y)),"
-        " cast(0 as double), (acc, v) -> acc + v)"
-    )
-    from ..operators.topk import top_k_per_key
-
-    probes = top_k_per_key(
-        qdf.crossJoin(F.broadcast(cdf)).select(
-            "qid", "qe", "qnorm", "cluster", l2.alias("d2")
-        ),
-        ["qid"],
-        [F.asc("d2"), F.asc("cluster")],
-        IVF_TR_NPROBE,
-    ).select("qid", "qe", "qnorm", "cluster")
-    dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
+    _, q = _ann_base(spark, sf_dir)
+    cents, cells = _ivf_cells(spark, sf_dir)
     return (
-        assign.join(F.broadcast(probes), "cluster")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            (dot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias("cos"),
-        )
+        ann.ivf_scan(cells, q, cents, IVF_TR_NPROBE)
         .filter(F.col("cos") >= F.lit(SIM_RANGE_TAU))
         .select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
     )
@@ -4107,26 +3644,19 @@ def sim_prf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("qid", "vec_id")
         .localCheckpoint()
     )
-    truth_rows = truth.count()
     parts = []
     for np_ in PRF_SWEEP_NPROBES:
         sub = cand.filter(F.col("rn") <= np_)
         topk = top_k_per_key(
             sub, ["qid"], [F.desc("prf_score"), F.asc("vec_id")], PRF_TOPK
-        ).select("qid", "vec_id")
-        matches = truth.join(topk, ["qid", "vec_id"], "semi").agg(
-            F.count("*").alias("matches")
         )
-        scanned = sub.agg(F.count("*").alias("scanned_rows"))
         parts.append(
-            matches.crossJoin(scanned).select(
+            ann.recall_frontier(truth, topk)
+            .crossJoin(sub.agg(F.count("*").alias("scanned_rows")))
+            .select(
                 F.lit(np_).cast("long").alias("nprobe"),
-                "matches",
-                F.lit(truth_rows).cast("long").alias("truth_rows"),
-                F.expr(
-                    f"(matches * 10000) div {truth_rows}"
-                ).alias("mean_recall_bp"),
-                "scanned_rows",
+                F.col("hits").alias("matches"),
+                "truth_rows", "mean_recall_bp", "scanned_rows",
             )
         )
     out = parts[0]

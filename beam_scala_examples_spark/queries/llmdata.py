@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators import ann
+from ..operators.ann import DOT as _SPARK_DOT
 from ..operators.carry import sharded_prefix_sum, sharded_row_number
 from ..operators.topk import top_k_per_key
 from ..session import hold, memo
@@ -78,12 +80,11 @@ _DUCK_SHINGLES = (
 )
 
 
-def _shingles(spark: SparkSession, sf_dir: str, distinct: bool = True) -> DataFrame:
-    """(doc_id, shingle) with the shingle hash ``h`` — distinct (set
-    semantics, for Jaccard) by default; ``distinct=False`` skips that
-    whole shuffle for consumers whose aggregate is duplicate-idempotent
-    (minhash ``min``)."""
-    docs = load(spark, sf_dir, "documents")
+def _doc_shingles(docs: DataFrame, distinct: bool) -> DataFrame:
+    """(doc_id, shingle, h) of any (doc_id, text) relation — distinct
+    (set semantics, for Jaccard) or, with ``distinct=False``, without
+    that whole shuffle for consumers whose aggregate is
+    duplicate-idempotent (minhash ``min``)."""
     sh = (
         docs.select("doc_id", F.expr(_SPARK_TOKS).alias("toks"))
         .select("doc_id", F.explode(F.expr(_SPARK_SHINGLES)).alias("shingle"))
@@ -91,6 +92,11 @@ def _shingles(spark: SparkSession, sf_dir: str, distinct: bool = True) -> DataFr
     if distinct:
         sh = sh.distinct()
     return sh.withColumn("h", F.expr(_SPARK_H.format(col="shingle")))
+
+
+def _shingles(spark: SparkSession, sf_dir: str, distinct: bool = True) -> DataFrame:
+    """``_doc_shingles`` of the sf_dir documents, distinct by default."""
+    return _doc_shingles(load(spark, sf_dir, "documents"), distinct)
 
 
 def _duck_shingle_cte() -> str:
@@ -118,14 +124,15 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Signatures straight off the *non-distinct* shingle stream:
-    ``min`` is duplicate-idempotent, so the set semantics the oracle
-    computes over DISTINCT shingles fall out for free — and skipping
+def _minhash_sigs(docs: DataFrame) -> DataFrame:
+    """(doc_id, m0..m15) MinHash signatures of any (doc_id, text)
+    relation, straight off the *non-distinct* shingle stream: ``min``
+    is duplicate-idempotent, so the set semantics the oracle computes
+    over DISTINCT shingles fall out for free — and skipping
     ``.distinct()`` removes an entire (doc_id, shingle) shuffle.  The
     map-side partial min collapses each partition to one 16-wide row per
     doc before the only remaining exchange."""
-    sh = _shingles(spark, sf_dir, distinct=False)
+    sh = _doc_shingles(docs, distinct=False)
     aggs = [
         F.min((F.lit(MH_A[j]) * F.col("h") + F.lit(MH_B[j])) % MH_P).alias(f"m{j}")
         for j in range(N_HASHES)
@@ -150,17 +157,9 @@ def minhash_buckets(docs: DataFrame) -> DataFrame:
     """(doc_id, band, bucket) from any (doc_id, text) relation — the
     banded-LSH signature pipeline factored over a DataFrame so the
     streaming near-dup registry (``streaming/neardupview.py``) can run
-    it per micro-batch.  Identical expressions to the batch path."""
-    sh = docs.select("doc_id", F.expr(_SPARK_TOKS).alias("toks")).select(
-        "doc_id", F.explode(F.expr(_SPARK_SHINGLES)).alias("shingle")
-    ).withColumn("h", F.expr(_SPARK_H.format(col="shingle")))
-    aggs = [
-        F.min(
-            (F.lit(MH_A[j]) * F.col("h") + F.lit(MH_B[j])) % MH_P
-        ).alias(f"m{j}")
-        for j in range(N_HASHES)
-    ]
-    return _sig_bands(sh.groupBy("doc_id").agg(*aggs))
+    it per micro-batch.  The same signature function as the batch
+    path."""
+    return _sig_bands(_minhash_sigs(docs))
 
 
 def _minhash_sig_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -172,7 +171,7 @@ def _minhash_sig_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``NearDupIngestSink`` maintains exactly this registry)."""
     return memo(
         "minhash/mhsigs", spark, sf_dir,
-        lambda: _minhash_sigs(spark, sf_dir).persist(),
+        lambda: _minhash_sigs(load(spark, sf_dir, "documents")).persist(),
     )
 
 
@@ -458,11 +457,6 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Similarity search over embeddings
 # --------------------------------------------------------------------------
 
-_SPARK_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)),"
-    " cast(0 as double), (acc, v) -> acc + v)"
-)
-
 
 def _duck_dot(a: str, b: str) -> str:
     return (
@@ -479,29 +473,12 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side cross join — no shuffle of the big side; the top-k rank's
     WindowGroupLimit keeps only k rows per query per partition.
     """
-    emb = load(spark, sf_dir, "embeddings")
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    cand = emb.select("vec_id", "embedding", norm.alias("cnorm"))
-    q = (
-        emb.filter(F.col("vec_id") < N_QUERY_VECS)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qe"),
-            norm.alias("qnorm"),
-        )
+    base = load(spark, sf_dir, "embeddings").select(
+        "vec_id", "embedding", F.expr(ann.NORM).alias("nrm")
     )
-    dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-    pairs = (
-        cand.join(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            (dot / F.sqrt(F.col("qnorm") * F.col("cnorm"))).alias("cos"),
-        )
-    )
-    return top_k_per_key(
-        pairs, ["qid"], [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS
+    q = ann.query_frame(base, F.col("vec_id") < N_QUERY_VECS)
+    return ann.top_cosine(
+        ann.exact_scan(base, q), TOPK_NEIGHBORS
     ).select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
 
 
@@ -10269,32 +10246,15 @@ def sim_sq_bits_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             approx, ["qid"], [F.desc("acos"), F.asc("vec_id")],
             SQ8_SHORTLIST,
         ).select("qid", "vec_id")
-        dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
         scored = (
             short.join(base.select("vec_id", "embedding", "nrm"), "vec_id")
             .join(F.broadcast(q.select("qid", "qe", "qnorm")), "qid")
-            .select(
-                "qid", "vec_id",
-                (dot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias("cos"),
-            )
+            .select("qid", "vec_id", ann.cosine())
         )
-        topb = top_k_per_key(
-            scored, ["qid"], [F.desc("cos"), F.asc("vec_id")],
-            TOPK_NEIGHBORS,
-        ).select("qid", "vec_id", F.lit(1).alias("hit"))
         legs.append(
-            truth.join(topb, ["qid", "vec_id"], "left")
-            .agg(
-                F.lit(bits).cast("long").alias("bits"),
-                F.count("hit").alias("hits"),
-                F.count("*").alias("truth_rows"),
-            )
-            .select(
-                "bits", "hits", "truth_rows",
-                F.expr("(hits * 10000) div truth_rows").alias(
-                    "mean_recall_bp"
-                ),
-            )
+            ann.recall_frontier(
+                truth, ann.top_cosine(scored, TOPK_NEIGHBORS)
+            ).select(F.lit(bits).cast("long").alias("bits"), "*")
         )
     out = legs[0]
     for leg in legs[1:]:
@@ -10475,6 +10435,36 @@ ORACLE["sim_sq_bits_sweep"] = "\nUNION ALL\n".join(
 MRL_DIMS = (8, 16, 32, 64)   # Matryoshka prefix budgets (full = 64)
 
 
+def _prefix_topk(emb: DataFrame, d: int) -> DataFrame:
+    """(qid, vec_id, cos): the exact cosine top-k over the first ``d``
+    dims of a (vec_id, embedding) relation; a vector whose prefix is all
+    zero has no direction there and drops out."""
+    base = (
+        emb.select("vec_id", F.slice("embedding", 1, d).alias("embedding"))
+        .withColumn("nrm", F.expr(ann.NORM))
+        .filter(F.col("nrm") > 0)
+    )
+    q = ann.query_frame(base, F.col("vec_id") < N_QUERY_VECS)
+    return ann.top_cosine(ann.exact_scan(base, q), TOPK_NEIGHBORS)
+
+
+def mrl_frontier(truth: DataFrame, topd) -> DataFrame:
+    """(dim_budget, hits, truth_rows, mean_recall_bp): one independent
+    leg per ``MRL_DIMS`` budget d, the prefix top-k ``topd(d)`` against
+    ``truth`` — shared with the streaming twin
+    (``streaming/mrlview.py``)."""
+    legs = [
+        ann.recall_frontier(truth, topd(d)).select(
+            F.lit(d).cast("long").alias("dim_budget"), "*"
+        )
+        for d in MRL_DIMS
+    ]
+    out = legs[0]
+    for leg in legs[1:]:
+        out = out.unionByName(leg)
+    return out
+
+
 def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka dimension-budget frontier: mean recall@k of
     prefix-D cosine retrieval vs the full-dimension ground truth, for
@@ -10484,57 +10474,12 @@ def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget, exact integer basis points.
 
     Scale: each budget's leg is the brute-force shape (queries
-    broadcast, one corpus scan, WindowGroupLimit) reading only the
-    prefix — at a D/64 budget the scan moves D/64 of the bytes; the
-    frontier is the evidence for choosing the cheapest budget that
+    broadcast, one corpus scan, WindowGroupLimit) over the prefix only;
+    the frontier is the evidence for choosing the cheapest budget that
     holds recall."""
     truth = sim_cosine_topk(spark, sf_dir).select("qid", "vec_id")
     emb = load(spark, sf_dir, "embeddings")
-    legs = []
-    for d in MRL_DIMS:
-        pdot = _SPARK_DOT.format(a=f"slice(qe, 1, {d})",
-                                 b=f"slice(embedding, 1, {d})")
-        pnorm = _SPARK_DOT.format(a=f"slice(embedding, 1, {d})",
-                                  b=f"slice(embedding, 1, {d})")
-        base = emb.select(
-            "vec_id", "embedding", F.expr(pnorm).alias("nrm")
-        ).filter(F.col("nrm") > 0)
-        q = base.filter(F.col("vec_id") < N_QUERY_VECS).select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qnorm"),
-        )
-        pairs = (
-            base.join(F.broadcast(q))
-            .filter(F.col("vec_id") != F.col("qid"))
-            .select(
-                "qid", "vec_id",
-                (F.expr(pdot) / F.sqrt(F.col("qnorm") * F.col("nrm")))
-                .alias("cos"),
-            )
-        )
-        topd = top_k_per_key(
-            pairs, ["qid"], [F.desc("cos"), F.asc("vec_id")],
-            TOPK_NEIGHBORS,
-        ).select("qid", "vec_id", F.lit(1).alias("hit"))
-        legs.append(
-            truth.join(topd, ["qid", "vec_id"], "left")
-            .agg(
-                F.lit(d).cast("long").alias("dim_budget"),
-                F.count("hit").alias("hits"),
-                F.count("*").alias("truth_rows"),
-            )
-            .select(
-                "dim_budget", "hits", "truth_rows",
-                F.expr("(hits * 10000) div truth_rows").alias(
-                    "mean_recall_bp"
-                ),
-            )
-        )
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return out
+    return mrl_frontier(truth, lambda d: _prefix_topk(emb, d))
 
 
 QUERIES["sim_matryoshka_recall"] = sim_matryoshka_recall
@@ -10646,62 +10591,13 @@ def sim_matryoshka_recall_structured(
     truth is the full-dimension top-k over the SAME structured vectors,
     and each prefix budget is scored against it.  Same scale posture as
     the base frontier: per leg, queries broadcast, one corpus scan
-    reading only the prefix, WindowGroupLimit top-k."""
+    over the prefix, WindowGroupLimit top-k."""
     emb = mrl_structured(
         load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     )
-
-    def topd(d: int) -> DataFrame:
-        pdot = _SPARK_DOT.format(a=f"slice(qe, 1, {d})",
-                                 b=f"slice(embedding, 1, {d})")
-        pnorm = _SPARK_DOT.format(a=f"slice(embedding, 1, {d})",
-                                  b=f"slice(embedding, 1, {d})")
-        base = emb.select(
-            "vec_id", "embedding", F.expr(pnorm).alias("nrm")
-        ).filter(F.col("nrm") > 0)
-        q = base.filter(F.col("vec_id") < N_QUERY_VECS).select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qnorm"),
-        )
-        pairs = (
-            base.join(F.broadcast(q))
-            .filter(F.col("vec_id") != F.col("qid"))
-            .select(
-                "qid", "vec_id",
-                (F.expr(pdot) / F.sqrt(F.col("qnorm") * F.col("nrm")))
-                .alias("cos"),
-            )
-        )
-        return top_k_per_key(
-            pairs, ["qid"], [F.desc("cos"), F.asc("vec_id")],
-            TOPK_NEIGHBORS,
-        ).select("qid", "vec_id")
-
-    truth = topd(EMB_DIM)
-    legs = []
-    for d in MRL_DIMS:
-        legs.append(
-            truth.join(
-                topd(d).withColumn("hit", F.lit(1)), ["qid", "vec_id"],
-                "left",
-            )
-            .agg(
-                F.lit(d).cast("long").alias("dim_budget"),
-                F.count("hit").alias("hits"),
-                F.count("*").alias("truth_rows"),
-            )
-            .select(
-                "dim_budget", "hits", "truth_rows",
-                F.expr("(hits * 10000) div truth_rows").alias(
-                    "mean_recall_bp"
-                ),
-            )
-        )
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return out
+    return mrl_frontier(
+        _prefix_topk(emb, EMB_DIM), lambda d: _prefix_topk(emb, d)
+    )
 
 
 QUERIES["sim_matryoshka_recall_structured"] = (
@@ -10973,14 +10869,10 @@ def sim_bq_budget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= max(BQ_BUDGETS))
         .select("qid", "vec_id", "rk")
     )
-    dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
     scored = (
         short.join(base.select("vec_id", "embedding", "nrm"), "vec_id")
         .join(F.broadcast(q.select("qid", "qe", "qnorm")), "qid")
-        .select(
-            "qid", "vec_id", "rk",
-            (dot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias("cos"),
-        )
+        .select("qid", "vec_id", "rk", ann.cosine())
         # EAGER on purpose (round 10): the lazy form materialized the
         # checkpoint mid-action, and the DAGScheduler then logged an
         # ERROR burst ("attempted to access non-existent accumulator")
@@ -10996,27 +10888,12 @@ def sim_bq_budget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = sim_cosine_topk(spark, sf_dir).select("qid", "vec_id")
     legs = []
     for b in BQ_BUDGETS:
-        wb = Window.partitionBy("qid").orderBy(
-            F.desc("cos"), F.asc("vec_id")
-        )
-        topb = (
-            scored.filter(F.col("rk") <= b)
-            .withColumn("r2", F.row_number().over(wb))
-            .filter(F.col("r2") <= TOPK_NEIGHBORS)
-            .select("qid", "vec_id", F.lit(1).alias("hit"))
+        topb = ann.top_cosine(
+            scored.filter(F.col("rk") <= b), TOPK_NEIGHBORS
         )
         legs.append(
-            truth.join(topb, ["qid", "vec_id"], "left")
-            .agg(
-                F.lit(b).cast("long").alias("shortlist"),
-                F.count("hit").alias("hits"),
-                F.count("*").alias("truth_rows"),
-            )
-            .select(
-                "shortlist", "hits", "truth_rows",
-                F.expr("(hits * 10000) div truth_rows").alias(
-                    "mean_recall_bp"
-                ),
+            ann.recall_frontier(truth, topb).select(
+                F.lit(b).cast("long").alias("shortlist"), "*"
             )
         )
     out = legs[0]
@@ -11191,25 +11068,18 @@ def _graph_search(base: DataFrame, edges: DataFrame,
                   rounds: int = GRAPH_ROUNDS,
                   beam: int = GRAPH_BEAM) -> DataFrame:
     """The bounded-beam search core over an arbitrary (vec_id,
-    embedding, nrm) corpus and its (src, dst) graph — shared by the
-    batch queries (parquet base + session-memo graph), the streaming
-    twin (postings-log base + log-assembled graph), and the budget
-    sweep (same graph, varied rounds x beam — the ef_search knob)."""
-    q = base.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qnorm"),
-    )
-    dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
+    embedding, nrm) corpus and its (src, dst) graph at one (rounds,
+    beam) budget — shared by the batch queries (parquet base +
+    session-memo graph) and the streaming twin (postings-log base +
+    log-assembled graph).  The budget sweep runs the same per-round
+    math in its own leg-tagged loop (``sim_graph_budget_sweep``)."""
+    q = ann.query_frame(base, F.col("vec_id") < N_QUERY_VECS)
 
     def score(ids: DataFrame) -> DataFrame:
         return (
             ids.join(base, "vec_id")
             .join(F.broadcast(q), "qid")
-            .select(
-                "qid", "vec_id",
-                (dot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias("cos"),
-            )
+            .select("qid", "vec_id", ann.cosine())
         )
 
     entry = base.agg(F.min("vec_id").alias("vec_id"))
@@ -11463,21 +11333,13 @@ def sim_graph_budget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             list(GRAPH_BUDGETS), "rounds bigint, beam bigint"
         )
     )
-    q = base.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qnorm"),
-    )
-    dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
+    q = ann.query_frame(base, F.col("vec_id") < N_QUERY_VECS)
 
     def score(ids: DataFrame) -> DataFrame:
         return (
             ids.join(base, "vec_id")
             .join(F.broadcast(q), "qid")
-            .select(
-                "rounds", "beam", "qid", "vec_id",
-                (dot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias("cos"),
-            )
+            .select("rounds", "beam", "qid", "vec_id", ann.cosine())
         )
 
     entry = base.agg(F.min("vec_id").alias("vec_id"))
@@ -11506,11 +11368,9 @@ def sim_graph_budget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         visited = visited.unionByName(score(fresh))
-    hit = (
-        visited.filter(F.col("vec_id") != F.col("qid"))
-        .withColumn("rk", F.row_number().over(wf))
-        .filter(F.col("rk") <= TOPK_NEIGHBORS)
-        .select("rounds", "beam", "qid", "vec_id", F.lit(1).alias("hit"))
+    hit = ann.top_cosine(
+        visited.filter(F.col("vec_id") != F.col("qid")),
+        TOPK_NEIGHBORS, ["rounds", "beam"],
     )
     scored = (
         visited.groupBy("rounds", "beam", "qid")
@@ -11522,12 +11382,8 @@ def sim_graph_budget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        truth.crossJoin(legs_df)
-        .join(hit, ["rounds", "beam", "qid", "vec_id"], "left")
-        .groupBy("rounds", "beam")
-        .agg(
-            F.count("hit").alias("hits"),
-            F.count("*").alias("truth_rows"),
+        ann.recall_frontier(
+            truth.crossJoin(legs_df), hit, ["rounds", "beam"]
         )
         .join(F.broadcast(scored), ["rounds", "beam"])
         .select(
@@ -11537,9 +11393,7 @@ def sim_graph_budget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("scored_cap"),
             "max_scored", "total_scored", "hits", "truth_rows",
-            F.expr("(hits * 10000) div truth_rows").alias(
-                "mean_recall_bp"
-            ),
+            "mean_recall_bp",
         )
     )
 

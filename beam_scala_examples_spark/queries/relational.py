@@ -1049,6 +1049,8 @@ def _pagerank_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout feeds every one of the rank loop's rounds, and repeated rank
     computations pay it once."""
 
+    from ..operators.graph import edge_layout
+
     def build() -> DataFrame:
         # symmetrize the shared weighted pair memo — canonical pairs
         # are unique, so the union IS the distinct != pair set
@@ -1058,24 +1060,10 @@ def _pagerank_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).unionByName(
             und.select(F.col("p2").alias("src"), F.col("p1").alias("dst"))
         )
-        # layout width from the measured edge count (the pagerank_int /
-        # connected_components discipline) — the rank loop's 18 rounds
-        # each run stages over this relation, so a small graph must not
-        # pay a wide layout per round.  Persist-then-count so the width
-        # probe and the layout share one evaluation of the union.
-        staged = sym.persist()
-        n_edges = staged.count()
-        np_ = max(
-            1,
-            min(
-                spark.sparkContext.defaultParallelism,
-                n_edges // 50_000 + 1,
-            ),
-        )
-        pairs = staged.repartition(np_, "src").persist()
-        pairs.count()  # materialize the layout from the staging cache
-        staged.unpersist(blocking=False)
-        return pairs
+        # layout width from the measured edge count: the rank loop's
+        # 18 rounds each run stages over this relation, so a small
+        # graph must not pay a wide layout per round
+        return edge_layout(sym, "src")[0]
 
     return memo("lpa_edges/prpairs", spark, sf_dir, build)
 

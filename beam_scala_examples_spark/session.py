@@ -47,6 +47,40 @@ CHECKPOINT_FILE_MANAGER = (
     ".FileSystemBasedCheckpointFileManager"
 )
 
+# The runtime SQL confs every engine session carries: ``get_spark``
+# builds with them and the driver contract's ``_configure`` re-applies
+# them to a session handed over bare.  The batch width
+# (``BATCH_WIDTH_CONF``) is set beside them, from the session's cores.
+SQL_CONFS = {
+    # Determinism / correctness
+    "spark.sql.session.timeZone": "UTC",
+    # Runtime re-planning: skew joins, coalesced shuffle partitions.
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # The streaming width (module docstring).
+    "spark.sql.shuffle.partitions": "1",
+    # Checkpoint files go through the FileSystem API (module docstring).
+    "spark.sql.streaming.checkpointFileManagerClass": CHECKPOINT_FILE_MANAGER,
+    # Python<->JVM boundary is always Arrow-batched, never pickled rows.
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # The driver testdata writes TIMESTAMP(NANOS) parquet, which Spark
+    # rejects by default; read as long and convert in tables.load()
+    # (floor-to-micros — the same truncation DuckDB applies).
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Scan hygiene: pushdown + pruning verified in tests/test_plans.py.
+    "spark.sql.parquet.filterPushdown": "true",
+    "spark.sql.parquet.aggregatePushdown": "true",
+    # Runtime row-level filtering: when a selective small side feeds a
+    # shuffle join, inject a bloom filter on the fact side before the
+    # exchange (semi-join reduction without a hand-rolled sketch).
+    # Inert at fixture scale (thresholds keep it off for broadcastable
+    # sides); the injection itself is pinned by
+    # tests/test_plans.py::test_runtime_bloom_filter_prunes_fact_join.
+    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+}
+BATCH_WIDTH_CONF = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+
 
 def get_spark(
     app_name: str = "beam-scala-examples-spark",
@@ -74,42 +108,15 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # Determinism / correctness
-        .config("spark.sql.session.timeZone", "UTC")
-        # Runtime re-planning: skew joins, coalesced shuffle partitions.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(shuffle_partitions),
-        )
-        .config("spark.sql.shuffle.partitions", "1")
-        # Checkpoint files go through the FileSystem API (module docstring).
-        .config(
-            "spark.sql.streaming.checkpointFileManagerClass",
-            CHECKPOINT_FILE_MANAGER,
-        )
-        # Python<->JVM boundary is always Arrow-batched, never pickled rows.
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # The driver testdata writes TIMESTAMP(NANOS) parquet, which Spark
-        # rejects by default; read as long and convert in tables.load()
-        # (floor-to-micros — the same truncation DuckDB applies).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Scan hygiene: pushdown + pruning verified in tests/test_plans.py.
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.parquet.aggregatePushdown", "true")
-        # Runtime row-level filtering: when a selective small side feeds a
-        # shuffle join, inject a bloom filter on the fact side before the
-        # exchange (semi-join reduction without a hand-rolled sketch).
-        # Inert at fixture scale (thresholds keep it off for broadcastable
-        # sides); the injection itself is pinned by
-        # tests/test_plans.py::test_runtime_bloom_filter_prunes_fact_join.
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    confs = {
+        **SQL_CONFS,
+        BATCH_WIDTH_CONF: str(shuffle_partitions),
+        **(extra_conf or {}),
+    }
+    for k, v in confs.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

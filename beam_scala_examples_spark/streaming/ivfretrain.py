@@ -42,9 +42,9 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.topk import top_k_per_key
+from ..operators import ann
 from ..queries.clustering import IVF_TR_NPROBE, _assign, _kmeans_train
-from ..queries.llmdata import N_QUERY_VECS, TOPK_NEIGHBORS, _SPARK_DOT
+from ..queries.llmdata import N_QUERY_VECS, TOPK_NEIGHBORS
 from .logio import read_log, write_log_partition
 from .pcadrift import pca_moment_contrib, pca_top_component_from_log
 
@@ -179,58 +179,21 @@ class DriftRetrainIvfSink:
         query_ids: list[int] | None = None,
     ) -> DataFrame:
         """The trained-IVF probe top-k over the accumulated corpus with
-        the given (default: active) codebook version — the identical
-        probe ranking and exact-cosine scoring the frozen
-        ``IvfIngestSink.topk_view`` serves, but against a VERSIONED
-        quantizer.  ``query_ids`` selects the query workload (default:
-        the house ``vec_id < N_QUERY_VECS`` set) — under drift the
-        workload follows the data, which is what makes the retrain
-        guard measurable."""
+        the given (default: active) codebook version — the same
+        ``ann.ivf_scan`` the frozen ``IvfIngestSink.topk_view`` serves,
+        but against a VERSIONED quantizer.  ``query_ids`` selects the
+        query workload (default: the house ``vec_id < N_QUERY_VECS``
+        set) — under drift the workload follows the data, which is what
+        makes the retrain guard measurable."""
         cents = self.centroids(spark, version)
-        log = _assign(self._vectors(spark), cents).localCheckpoint(
-            eager=False
+        log = (
+            _assign(self._vectors(spark), cents)
+            .localCheckpoint(eager=False)
+            .withColumn("nrm", F.expr(ann.NORM))
         )
-        norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-        log = log.withColumn("nrm", norm)
-        cdf = spark.createDataFrame(
-            [(cid, vec) for cid, vec in cents],
-            "cluster bigint, c array<double>",
-        )
-        qpred = (
-            F.col("vec_id") < N_QUERY_VECS
-            if query_ids is None
-            else F.col("vec_id").isin([int(q) for q in query_ids])
-        )
-        qdf = log.filter(qpred).select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qnorm"),
-        )
-        l2 = F.expr(
-            "aggregate(zip_with(qe, c,"
-            " (x, y) -> (cast(x as double) - y) * (cast(x as double) - y)),"
-            " cast(0 as double), (acc, v) -> acc + v)"
-        )
-        probes = top_k_per_key(
-            qdf.crossJoin(F.broadcast(cdf)).select(
-                "qid", "qe", "qnorm", "cluster", l2.alias("d2")
-            ),
-            ["qid"],
-            [F.asc("d2"), F.asc("cluster")],
-            IVF_TR_NPROBE,
-        ).select("qid", "qe", "qnorm", "cluster")
-        dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-        cand = (
-            log.join(F.broadcast(probes), "cluster")
-            .filter(F.col("vec_id") != F.col("qid"))
-            .select(
-                "qid",
-                "vec_id",
-                (dot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias("cos"),
-            )
-        )
-        return top_k_per_key(
-            cand, ["qid"], [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS
+        return ann.top_cosine(
+            ann.ivf_scan(log, _queries(log, query_ids), cents, IVF_TR_NPROBE),
+            TOPK_NEIGHBORS,
         ).select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
 
     def recall_micro(
@@ -242,35 +205,26 @@ class DriftRetrainIvfSink:
         accumulated corpus and the SAME query workload — the number
         the retrain guard pins (with drifted queries: the workload a
         drifted corpus actually serves)."""
-        vecs = self._vectors(spark)
-        norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-        base = vecs.withColumn("nrm", norm).localCheckpoint(eager=False)
-        qpred = (
-            F.col("vec_id") < N_QUERY_VECS
-            if query_ids is None
-            else F.col("vec_id").isin([int(q) for q in query_ids])
+        base = (
+            self._vectors(spark)
+            .withColumn("nrm", F.expr(ann.NORM))
+            .localCheckpoint(eager=False)
         )
-        qdf = base.filter(qpred).select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qnorm"),
+        exact = ann.top_cosine(
+            ann.exact_scan(base, _queries(base, query_ids)), TOPK_NEIGHBORS
         )
-        dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-        exact = top_k_per_key(
-            base.crossJoin(F.broadcast(qdf))
-            .filter(F.col("vec_id") != F.col("qid"))
-            .select(
-                "qid",
-                "vec_id",
-                (dot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias("cos"),
-            ),
-            ["qid"],
-            [F.desc("cos"), F.asc("vec_id")],
-            TOPK_NEIGHBORS,
-        ).select("qid", "vec_id")
-        got = self.topk_view(spark, version, query_ids).select(
-            "qid", "vec_id"
-        )
-        hit = exact.join(got, ["qid", "vec_id"], "left_semi").count()
-        total = exact.count()
-        return hit * 1_000_000 // total if total else 0
+        r = ann.recall_frontier(
+            exact, self.topk_view(spark, version, query_ids)
+        ).collect()[0]
+        return r.hits * 1_000_000 // r.truth_rows if r.truth_rows else 0
+
+
+def _queries(base: DataFrame, query_ids: list[int] | None) -> DataFrame:
+    """The query frame over ``base``: ``query_ids``, else the house
+    ``vec_id < N_QUERY_VECS`` set."""
+    return ann.query_frame(
+        base,
+        F.col("vec_id") < N_QUERY_VECS
+        if query_ids is None
+        else F.col("vec_id").isin([int(q) for q in query_ids]),
+    )

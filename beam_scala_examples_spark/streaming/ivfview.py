@@ -20,11 +20,11 @@ This sink is that ingest path in the house registry pattern:
    inverted lists.
 
 Serving: ``assignment_view`` is the accumulated (vec_id, cluster)
-relation, and ``topk_view`` replays the batch query's exact
-probe-and-score pipeline over the log — both pinned EXACTLY equal to
+relation, and ``topk_view`` runs the batch query's own serve
+(``operators/ann.py``) over the log — both pinned EXACTLY equal to
 their batch twins (assignment is a pure per-row function of the frozen
-centroids, so batching cannot change it; cosine uses the identical
-``_SPARK_DOT`` expression).  ``auto_topk_view`` (round 11) is the
+centroids, so batching cannot change it; probe, cosine and top-k are
+the same code).  ``auto_topk_view`` (round 11) is the
 hybrid-search router over the LIVE log: per predicate it reads the
 log's own ingested/allowed vector counts and serves from
 ``brute_topk_view`` (exact, no cell restriction) or the probed index
@@ -42,9 +42,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import ann
 from ..queries.clustering import IVF_TR_NPROBE, _assign
-from ..queries.llmdata import N_QUERY_VECS, TOPK_NEIGHBORS, _SPARK_DOT
-from ..operators.topk import top_k_per_key
+from ..queries.llmdata import N_QUERY_VECS, TOPK_NEIGHBORS
 
 
 class IvfIngestSink:
@@ -55,10 +55,11 @@ class IvfIngestSink:
         self.centroids = list(centroids)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
         postings = _assign(
             batch_df.select("vec_id", "embedding"), self.centroids
-        ).select("vec_id", "cluster", "embedding", norm.alias("nrm"))
+        ).select(
+            "vec_id", "cluster", "embedding", F.expr(ann.NORM).alias("nrm")
+        )
         (
             postings.withColumn("batch_id", F.lit(int(batch_id)))
             .write.mode("overwrite")
@@ -70,6 +71,12 @@ class IvfIngestSink:
     def _log(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.postings_path)
 
+    def _corpus(self, spark: SparkSession):
+        """(postings, queries): the log as an ``ann`` corpus and the
+        house query frame over it."""
+        log = self._log(spark).select("vec_id", "cluster", "embedding", "nrm")
+        return log, ann.query_frame(log, F.col("vec_id") < N_QUERY_VECS)
+
     def assignment_view(self, spark: SparkSession) -> DataFrame:
         """(vec_id, cluster): the accumulated cell assignment — equal to
         the batch ``_assign`` relation over all ingested vectors."""
@@ -79,57 +86,24 @@ class IvfIngestSink:
         self, spark: SparkSession, allowed: DataFrame | None = None
     ) -> DataFrame:
         """The batch ``sim_ivf_trained_topk`` relation served from the
-        postings log: identical probe ranking (squared-L2 fold over the
-        broadcast centroids), identical exact-cosine scoring inside the
-        probed cells, identical top-k order — so streamed == batch
-        exactly once the same vectors are in.  The cluster equi-join
-        against the (batch_id, cluster)-partitioned log is where the
-        inverted-list pruning pays off at scale.
+        postings log through the same ``ann.ivf_scan`` — identical probe
+        ranking, exact-cosine scoring inside the probed cells and top-k
+        order, so streamed == batch exactly once the same vectors are
+        in.  The cluster equi-join against the (batch_id,
+        cluster)-partitioned log is where the inverted-list pruning
+        pays off at scale.
 
         ``allowed`` (round 10): an optional slim (vec_id) relation —
         the hybrid-search predicate.  Applied to the postings as a
         semi join BEFORE scoring, exactly like the batch
         ``clustering.sim_filtered_ivf_topk`` (in-filter, never a
         post-filter on a finished top-k); queries stay unfiltered."""
-        cdf = spark.createDataFrame(
-            [(cid, vec) for cid, vec in self.centroids],
-            "cluster bigint, c array<double>",
-        )
-        log = self._log(spark)
-        norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-        qdf = log.filter(F.col("vec_id") < N_QUERY_VECS).select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qe"),
-            norm.alias("qnorm"),
-        )
-        l2 = F.expr(
-            "aggregate(zip_with(qe, c,"
-            " (x, y) -> (cast(x as double) - y) * (cast(x as double) - y)),"
-            " cast(0 as double), (acc, v) -> acc + v)"
-        )
-        probes = top_k_per_key(
-            qdf.crossJoin(F.broadcast(cdf)).select(
-                "qid", "qe", "qnorm", "cluster", l2.alias("d2")
-            ),
-            ["qid"],
-            [F.asc("d2"), F.asc("cluster")],
-            IVF_TR_NPROBE,
-        ).select("qid", "qe", "qnorm", "cluster")
-        dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-        corpus = log if allowed is None else log.join(
-            allowed.select("vec_id"), "vec_id", "semi"
-        )
-        cand = (
-            corpus.join(F.broadcast(probes), "cluster")
-            .filter(F.col("vec_id") != F.col("qid"))
-            .select(
-                "qid",
-                "vec_id",
-                (dot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias("cos"),
-            )
-        )
-        return top_k_per_key(
-            cand, ["qid"], [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS
+        log, q = self._corpus(spark)
+        if allowed is not None:
+            log = log.join(allowed.select("vec_id"), "vec_id", "semi")
+        return ann.top_cosine(
+            ann.ivf_scan(log, q, self.centroids, IVF_TR_NPROBE),
+            TOPK_NEIGHBORS,
         ).select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
 
     def brute_topk_view(
@@ -138,30 +112,15 @@ class IvfIngestSink:
         """Exact filtered top-k served from the postings log with NO
         cell restriction — every allowed posting scored (the brute leg
         of the auto router; equal to the batch
-        ``clustering._filtered_brute_topk_for`` once the same vectors
-        are in: identical dot/norm expressions, identical rounding and
-        tie order).  The log's stored ``nrm`` is reused, so the brute
-        scan reads postings only — never the raw arrival stream."""
-        log = self._log(spark)
-        qdf = log.filter(F.col("vec_id") < N_QUERY_VECS).select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qnorm"),
+        ``clustering._filtered_truth_for`` once the same vectors are
+        in: both run ``ann.exact_scan``).  The log's stored ``nrm`` is
+        reused, so the brute scan reads postings only — never the raw
+        arrival stream."""
+        log, q = self._corpus(spark)
+        log = log.join(allowed.select("vec_id"), "vec_id", "semi")
+        return ann.top_cosine(ann.exact_scan(log, q), TOPK_NEIGHBORS).select(
+            "qid", "vec_id", F.round("cos", 6).alias("cosine")
         )
-        dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-        pairs = (
-            log.join(allowed.select("vec_id"), "vec_id", "semi")
-            .join(F.broadcast(qdf))
-            .filter(F.col("vec_id") != F.col("qid"))
-            .select(
-                "qid",
-                "vec_id",
-                (dot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias("cos"),
-            )
-        )
-        return top_k_per_key(
-            pairs, ["qid"], [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS
-        ).select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
 
     def auto_topk_view(
         self, spark: SparkSession, predicates

@@ -34,13 +34,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.topk import top_k_per_key
+from ..operators import ann
 from ..queries.llmdata import (
-    _SPARK_DOT,
     EMB_DIM,
     MRL_DIMS,
     N_QUERY_VECS,
     TOPK_NEIGHBORS,
+    mrl_frontier,
     mrl_structured,
 )
 from .logio import read_log, write_log_partition
@@ -77,7 +77,7 @@ class MrlIngestSink:
         # state, no global aggregate anywhere in this sink
         cols.append(
             F.array(*[
-                F.expr(_SPARK_DOT.format(
+                F.expr(ann.DOT.format(
                     a=f"slice(embedding, 1, {d})",
                     b=f"slice(embedding, 1, {d})",
                 ))
@@ -89,8 +89,9 @@ class MrlIngestSink:
         )
 
     def _budget_relation(self, spark: SparkSession, d: int) -> DataFrame:
-        """(vec_id, pe, nrm) at budget ``d``, reading ONLY the segment
-        columns the budget needs (parquet prunes the rest)."""
+        """(vec_id, embedding, nrm): the budget-``d`` prefix as an
+        ``ann`` corpus, reading ONLY the segment columns the budget
+        needs (parquet prunes the rest)."""
         idx = MRL_DIMS.index(d)
         segs = [f"seg{i}" for i in range(idx + 1)]
         emb = segs[0] if len(segs) == 1 else "concat({})".format(
@@ -100,66 +101,28 @@ class MrlIngestSink:
             read_log(spark, self.vec_path, self._schema)
             .select(
                 "vec_id",
-                F.expr(emb).alias("pe"),
+                F.expr(emb).alias("embedding"),
                 F.element_at("pnorms", idx + 1).alias("nrm"),
             )
             .filter(F.col("nrm") > 0)
         )
 
     def topk_view(self, spark: SparkSession, d: int) -> DataFrame:
-        """The batch prefix-budget top-k relation (llmdata ``topd``)
-        served from the log at budget ``d``."""
+        """The batch prefix-budget top-k relation (llmdata
+        ``_prefix_topk``) served from the log at budget ``d``."""
         base = self._budget_relation(spark, d)
-        q = base.filter(F.col("vec_id") < N_QUERY_VECS).select(
-            F.col("vec_id").alias("qid"),
-            F.col("pe").alias("qe"),
-            F.col("nrm").alias("qnorm"),
+        q = ann.query_frame(base, F.col("vec_id") < N_QUERY_VECS)
+        return ann.top_cosine(ann.exact_scan(base, q), TOPK_NEIGHBORS).select(
+            "qid", "vec_id"
         )
-        pairs = (
-            base.join(F.broadcast(q))
-            .filter(F.col("vec_id") != F.col("qid"))
-            .select(
-                "qid", "vec_id",
-                (
-                    F.expr(_SPARK_DOT.format(a="qe", b="pe"))
-                    / F.sqrt(F.col("qnorm") * F.col("nrm"))
-                ).alias("cos"),
-            )
-        )
-        return top_k_per_key(
-            pairs, ["qid"], [F.desc("cos"), F.asc("vec_id")],
-            TOPK_NEIGHBORS,
-        ).select("qid", "vec_id")
 
     def recall_view(self, spark: SparkSession) -> DataFrame:
         """The full prefix-budget recall frontier — the batch
         ``sim_matryoshka_recall_structured`` relation served from the
-        log (truth = the full-dimension budget over the same log)."""
-        truth = self.topk_view(spark, EMB_DIM)
-        legs = []
-        for d in MRL_DIMS:
-            legs.append(
-                truth.join(
-                    self.topk_view(spark, d).withColumn("hit", F.lit(1)),
-                    ["qid", "vec_id"],
-                    "left",
-                )
-                .agg(
-                    F.lit(d).cast("long").alias("dim_budget"),
-                    F.count("hit").alias("hits"),
-                    F.count("*").alias("truth_rows"),
-                )
-                .select(
-                    "dim_budget", "hits", "truth_rows",
-                    # identical to the batch expression when rows exist;
-                    # 0 on an empty log (the batch twin never sees one)
-                    F.expr(
-                        "if(truth_rows = 0, 0L,"
-                        " (hits * 10000) div truth_rows)"
-                    ).alias("mean_recall_bp"),
-                )
-            )
-        out = legs[0]
-        for leg in legs[1:]:
-            out = out.unionByName(leg)
-        return out
+        log through the same ``mrl_frontier`` (truth = the
+        full-dimension budget over the same log; an empty log reads 0
+        truth rows per budget)."""
+        return mrl_frontier(
+            self.topk_view(spark, EMB_DIM),
+            lambda d: self.topk_view(spark, d),
+        )

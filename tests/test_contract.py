@@ -41,37 +41,32 @@ def test_entry_returns_dataframe_with_stable_schema(spark):
 
 def test_queries_accept_bare_session(spark, sf_dir):
     """The driver hands a BARE session; the query wrapper must re-apply
-    the engine confs per call. Un-set them first so the test actually
-    catches a dropped _configure (the shared fixture session already has
-    them), and restore the fixture's two shuffle widths and checkpoint
-    manager afterwards."""
-    from beam_scala_examples_spark.session import CHECKPOINT_FILE_MANAGER
+    the engine confs per call. Un-set every conf of the session table
+    first so the test actually catches a dropped _configure or a conf
+    it misses (the shared fixture session already has them), and
+    restore the fixture's values afterwards."""
+    from beam_scala_examples_spark.session import BATCH_WIDTH_CONF, SQL_CONFS
 
-    manager_key = "spark.sql.streaming.checkpointFileManagerClass"
-    kept = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.shuffle.partitions",
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            manager_key,
-        )
-    }
-    spark.conf.unset("spark.sql.session.timeZone")
-    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-    spark.conf.unset(manager_key)
+    keys = [*SQL_CONFS, BATCH_WIDTH_CONF]
+    kept = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.unset(k)
     try:
         qs = entry_mod.queries()
         df = qs["q01_minimal_wordcount"](spark, sf_dir)
         assert isinstance(df, DataFrame)
         assert df.count() > 0  # nanos parquet readable again
-        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
-        assert (
-            spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+        for k, v in SQL_CONFS.items():
+            assert spark.conf.get(k, None) == v, k
+        assert spark.conf.get(BATCH_WIDTH_CONF) == str(
+            spark.sparkContext.defaultParallelism
         )
-        assert spark.conf.get(manager_key, None) == CHECKPOINT_FILE_MANAGER
     finally:
         for k, v in kept.items():
-            spark.conf.set(k, v)
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_bench_headline_names_are_registered():
@@ -496,6 +491,32 @@ def test_batch_id_logs_live_only_in_logio():
         or "except AnalysisException" in line
     ]
     assert found == []
+
+
+def test_ann_core_lives_only_in_ann():
+    """The trained-IVF probe fold (squared L2 to a centroid) and the
+    recall-in-basis-points expression are each written once, in
+    ``operators/ann.py``: no query or streaming module spells either
+    itself, so a streamed index view runs the same code as its batch
+    twin instead of a copy kept in step by hand."""
+    import pathlib
+    import re
+
+    import beam_scala_examples_spark as pkg
+
+    probe = "(cast(x as double) - y) * (cast(x as double) - y)"
+    recall = re.compile(r"\((?:hits|matches) \* 10000\) div")
+    root = pathlib.Path(pkg.__path__[0])
+    found = {"probe": [], "recall": []}
+    for path in sorted(root.rglob("*.py")):
+        for line in path.read_text().splitlines():
+            if probe in line:
+                found["probe"].append(path.relative_to(root).as_posix())
+            if recall.search(line):
+                found["recall"].append(path.relative_to(root).as_posix())
+    assert found == {
+        "probe": ["operators/ann.py"], "recall": ["operators/ann.py"]
+    }
 
 
 def test_bench_capture_hygiene_evidence():
