@@ -1,10 +1,13 @@
-"""The vector-retrieval core: the trained-cell IVF serve, the exact
-cosine top-k and the recall frontier, each written once.
+"""The vector-retrieval core: the trained-cell IVF serve, the PQ
+asymmetric-distance scan, the exact cosine scan and shortlist re-rank,
+the top-k and the recall frontier, each written once.
 
 Every ANN rung in ``queries/clustering.py`` and ``queries/llmdata.py``
-and every streaming index view (``streaming/ivfview.py``,
-``ivfretrain.py``, ``mrlview.py``) composes these pieces, so a streamed
-view equals its batch twin because both run this code.
+composes these pieces, and every streaming index view either composes
+them the same way (``streaming/ivfview.py``, ``ivfretrain.py``,
+``mrlview.py``) or calls the function that serves its batch twin
+(``bqview.py``, ``sq8view.py``, ``graphview.py``, ``rangewatch.py``),
+so a streamed view equals its batch twin because both run this code.
 
 Column contracts:
 
@@ -15,7 +18,11 @@ Column contracts:
 - the **queries** are ``(qid, qe, qnorm)`` (``query_frame``);
 - a **scored** relation is ``(tags..., qid, vec_id, cos)`` with the
   house cosine ``DOT(qe, embedding) / sqrt(qnorm * nrm)``; a query is
-  never its own neighbour.
+  never its own neighbour;
+- **PQ codes** are ``(vec_id, m, pqc)``, the codeword id per subspace,
+  or ``(qid, vec_id, m, pqc)`` when already restricted per query (the
+  probed cells); a **codebook** maps each subspace ``m`` to its
+  ``(pqc, codeword)`` list.
 
 The predicate is the caller's: a filtered serve restricts (semi join)
 or tags (inner join) the corpus before the call, so nothing here
@@ -48,6 +55,19 @@ _L2 = (
     " cast(0 as double), (acc, v) -> acc + v)"
 )
 _CORPUS = ("vec_id", "cluster", "embedding", "nrm")
+
+# The PQ lookup-table folds: a query's m-th sub-vector dotted with a
+# codeword, and the codeword's squared norm (the oracles' list_sum over
+# the same order).
+_SUB_DOT = (
+    "aggregate(zip_with(slice(qe, m * {sub} + 1, {sub}), c,"
+    " (x, y) -> cast(x as double) * y),"
+    " cast(0 as double), (acc, v) -> acc + v)"
+)
+_C_NORM = (
+    "aggregate(zip_with(c, c, (x, y) -> x * y),"
+    " cast(0 as double), (acc, v) -> acc + v)"
+)
 
 
 def query_frame(base: DataFrame, pred: Column) -> DataFrame:
@@ -116,6 +136,69 @@ def exact_scan(corpus: DataFrame, queries: DataFrame) -> DataFrame:
         corpus.join(F.broadcast(queries))
         .filter(F.col("vec_id") != F.col("qid"))
         .select(*tags, "qid", "vec_id", cosine())
+    )
+
+
+def rerank_scan(
+    corpus: DataFrame, queries: DataFrame, cands: DataFrame
+) -> DataFrame:
+    """(tags..., qid, vec_id, cos): a ``(qid, vec_id, tags...)``
+    candidate relation (a shortlist, LSH mates, a graph frontier)
+    scored exactly, row for row as given — the candidates decide
+    whether a query's own row is among them.  The candidates are
+    broadcast into the corpus scan, so the float vectors are read only
+    for candidate rows; tags such as a shortlist rank ride through."""
+    tags = [c for c in cands.columns if c not in ("qid", "vec_id")]
+    return (
+        corpus.select("vec_id", "embedding", "nrm")
+        .join(F.broadcast(cands), "vec_id")
+        .join(F.broadcast(queries), "qid")
+        .select(*tags, "qid", "vec_id", cosine())
+    )
+
+
+def adc_scan(
+    codes: DataFrame,
+    queries: DataFrame,
+    codebook: dict[int, list[tuple[int, list[float]]]],
+    scale: int,
+) -> DataFrame:
+    """(qid, vec_id, adc_cos): the PQ asymmetric-distance scan.  Per
+    (query, subspace, codeword) the lookup table holds the partial dot
+    and the codeword norm as ``round(v * scale)`` longs, so the M-term
+    sums are exact integers whatever the partial-aggregation order;
+    the table is broadcast into the code relation, which is all the
+    corpus contributes (no float vector is read).  Codes that carry
+    ``qid`` join on it too, so only the rows already restricted to a
+    query are scored."""
+    sub = len(codebook[0][0][1])
+    cdf = queries.sparkSession.createDataFrame(
+        [(m, cid, vec) for m, lst in codebook.items() for cid, vec in lst],
+        "m int, pqc bigint, c array<double>",
+    )
+    lut = queries.crossJoin(cdf).select(
+        "qid",
+        "qnorm",
+        "m",
+        "pqc",
+        F.round(F.expr(_SUB_DOT.format(sub=sub)) * scale, 0)
+        .cast("long")
+        .alias("dotl"),
+        F.round(F.expr(_C_NORM) * scale, 0).cast("long").alias("cnorml"),
+    )
+    keys = [c for c in ("qid", "m", "pqc") if c in codes.columns]
+    s = float(scale)
+    return (
+        codes.join(F.broadcast(lut), keys)
+        .filter(F.col("vec_id") != F.col("qid"))
+        .groupBy("qid", "qnorm", "vec_id")
+        .agg(F.sum("dotl").alias("dl"), F.sum("cnorml").alias("nl"))
+        .select(
+            "qid",
+            "vec_id",
+            ((F.col("dl") / s) / F.sqrt(F.col("qnorm") * (F.col("nl") / s)))
+            .alias("adc_cos"),
+        )
     )
 
 

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import ann
+from ..operators.topk import top_k_per_key
 from ..session import hold, memo
 from ..tables import load
 from .llmdata import EMB_DIM, N_QUERY_VECS, TOPK_NEIGHBORS
@@ -165,11 +166,9 @@ def _ivf_stride_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid set shared by the stride-IVF rungs (every effective-stride
     vector, capped at IVF_MAX_CELLS — same derivation as
     ``sim_ivf_topk``'s inline version since round 2)."""
-    from .llmdata import IVF_MAX_CELLS, IVF_STRIDE, _SPARK_DOT
+    from .llmdata import IVF_MAX_CELLS, IVF_STRIDE
 
-    emb = _emb_corpus(spark, sf_dir)
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    base = emb.select("vec_id", "embedding", norm.alias("nrm"))
+    base, _ = _ann_base(spark, sf_dir)
     mx = base.agg(F.max("vec_id").alias("mx"))
     return (
         base.join(F.broadcast(mx))
@@ -197,13 +196,9 @@ def _ivf_stride_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sim_ivf_topk``, ``sim_ivfpq_topk`` and their recall twins."""
 
     def build() -> DataFrame:
-        from .llmdata import _SPARK_DOT
-
-        emb = _emb_corpus(spark, sf_dir)
-        norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-        base = emb.select("vec_id", "embedding", norm.alias("nrm"))
+        base, _ = _ann_base(spark, sf_dir)
         cent = _ivf_stride_cents(spark, sf_dir)
-        cdot = F.expr(_SPARK_DOT.format(a="embedding", b="ce"))
+        cdot = F.expr(ann.DOT.format(a="embedding", b="ce"))
         return (
             base.join(F.broadcast(cent))
             .select(
@@ -243,6 +238,17 @@ def _pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return memo("kmeans_corpora/pqcodes", spark, sf_dir, build)
+
+
+def _pq_adc(spark: SparkSession, sf_dir: str, codes: DataFrame) -> DataFrame:
+    """(qid, vec_id, adc_cos): the session queries scored over ``codes``
+    (the code index, or its probed-cell restriction) through the
+    session PQ codebooks."""
+    cents = _trained(
+        "pq", spark, sf_dir, _pq_train, _emb_corpus(spark, sf_dir)
+    )
+    _, qdf = _ann_base(spark, sf_dir)
+    return ann.adc_scan(codes, qdf, cents, KM_SCALE)
 
 
 def emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -334,11 +340,9 @@ def dedup_semantic_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bucketer, so the join keys on the cluster id and never goes
     all-pairs; exact cosine then verifies inside each bucket, the same
     verify-after-candidates discipline as every other dedup path."""
-    from .llmdata import _SPARK_DOT
-
     assign = emb_kmeans(spark, sf_dir)
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
+    norm = F.expr(ann.NORM)
     # The self-join references this subplan twice and AQE does not reuse
     # query stages across self-join aliases — persist the assigned base
     # so the (Arrow-kernel) final assignment pass runs once, not twice.
@@ -347,7 +351,7 @@ def dedup_semantic_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).persist)
     a = base.alias("a")
     b = base.alias("b")
-    dot = F.expr(_SPARK_DOT.format(a="a.embedding", b="b.embedding"))
+    dot = F.expr(ann.DOT.format(a="a.embedding", b="b.embedding"))
     cos = dot / F.sqrt(F.col("a.nrm") * F.col("b.nrm"))
     return (
         a.join(b, "cluster")
@@ -1105,79 +1109,22 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast semi-join against the corpus scan — independent of
     corpus size per query.  No float vector ever shuffles; training
     traffic is O(M * PQ_K * PQ_SUB)/iteration."""
-    from .llmdata import _SPARK_DOT, N_QUERY_VECS, TOPK_NEIGHBORS
-
-    emb = _emb_corpus(spark, sf_dir)
-
-    cents = _trained("pq", spark, sf_dir, _pq_train, emb)
-    codes = _pq_codes(spark, sf_dir).select(
-        "vec_id", "m", F.col("pqc").alias("cid")
+    return _pq_serve(
+        spark, sf_dir, _pq_adc(spark, sf_dir, _pq_codes(spark, sf_dir))
     )
 
-    cent_rows = [
-        (m, cid, vec) for m, lst in cents.items() for cid, vec in lst
-    ]
-    cdf = spark.createDataFrame(
-        cent_rows, "m int, cid bigint, c array<double>"
-    )
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    qdf = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        norm.alias("qnorm"),
-    )
-    # LUT: per (query, subspace, codeword) the fixed-point partial dot
-    # and the codeword's norm contribution.  Left-to-right folds match
-    # the oracle's list_sum exactly.
-    sub_dot = F.expr(
-        f"aggregate(zip_with(slice(qe, m * {PQ_SUB} + 1, {PQ_SUB}), c,"
-        " (x, y) -> cast(x as double) * y),"
-        " cast(0 as double), (acc, v) -> acc + v)"
-    )
-    c_norm = F.expr(
-        "aggregate(zip_with(c, c, (x, y) -> x * y),"
-        " cast(0 as double), (acc, v) -> acc + v)"
-    )
-    lut = qdf.crossJoin(cdf).select(
-        "qid",
-        "qnorm",
-        "m",
-        "cid",
-        F.round(sub_dot * KM_SCALE, 0).cast("long").alias("dotl"),
-        F.round(c_norm * KM_SCALE, 0).cast("long").alias("cnorml"),
-    )
-    scored = (
-        codes.join(F.broadcast(lut), ["m", "cid"])
-        .filter(F.col("vec_id") != F.col("qid"))
-        .groupBy("qid", "qnorm", "vec_id")
-        .agg(F.sum("dotl").alias("dl"), F.sum("cnorml").alias("nl"))
-    )
-    s = float(KM_SCALE)
-    cos = (F.col("dl") / s) / F.sqrt(
-        F.col("qnorm") * (F.col("nl") / s)
-    )
-    ranked = scored.select("qid", "vec_id", cos.alias("cos"))
-    from ..operators.topk import top_k_per_key
 
+def _pq_serve(spark: SparkSession, sf_dir: str, adc: DataFrame) -> DataFrame:
+    """The PQ serve tail shared by every PQ top-k rung: the
+    ``PQ_RERANK`` best rows of an ADC ranking ``adc`` (qid, vec_id,
+    adc_cos) re-scored exactly, then the top-k.  The float vectors are
+    read only for shortlist rows (queries x PQ_RERANK)."""
+    base, qdf = _ann_base(spark, sf_dir)
     shortlist = top_k_per_key(
-        ranked, ["qid"], [F.desc("cos"), F.asc("vec_id")], PQ_RERANK
+        adc, ["qid"], [F.desc("adc_cos"), F.asc("vec_id")], PQ_RERANK
     ).select("qid", "vec_id")
-    # Exact re-rank: float vectors are read only for shortlist rows —
-    # a broadcast join against the corpus scan (shortlist is
-    # queries x PQ_RERANK slim rows).
-    cand = emb.join(F.broadcast(shortlist), "vec_id").select(
-        "qid", "vec_id", "embedding", norm.alias("cnorm")
-    )
-    exact = cand.join(F.broadcast(qdf), "qid").select(
-        "qid",
-        "vec_id",
-        (
-            F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-            / F.sqrt(F.col("qnorm") * F.col("cnorm"))
-        ).alias("cos"),
-    )
-    return top_k_per_key(
-        exact, ["qid"], [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS
+    return ann.top_cosine(
+        ann.rerank_scan(base, qdf, shortlist), TOPK_NEIGHBORS
     ).select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
 
 
@@ -1382,39 +1329,14 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     restriction and the LUT are broadcast hash joins, and one
     partial-aggregated shuffle on (qid, vec_id) sums the exact-int
     partials.  No float vector ever shuffles."""
-    from .llmdata import (
-        IVF_NPROBE,
-        N_QUERY_VECS,
-        TOPK_NEIGHBORS,
-        _SPARK_DOT,
-    )
-    from ..operators.topk import top_k_per_key
+    from .llmdata import IVF_NPROBE
 
-    emb = _emb_corpus(spark, sf_dir)
-
-    # PQ codebooks + codes (identical trainer/encoder to sim_pq_topk;
-    # codes served from the persisted session index — round 11)
-    cents = _trained("pq", spark, sf_dir, _pq_train, emb)
-    codes = _pq_codes(spark, sf_dir)
-    cdf = spark.createDataFrame(
-        [(m, cid, vec) for m, lst in cents.items() for cid, vec in lst],
-        "m int, pqc bigint, c array<double>",
-    )
-
-    # IVF coarse quantizer (identical stride/argmax to sim_ivf_topk;
-    # assignment served from the persisted session index — round 11)
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    base = emb.select("vec_id", "embedding", norm.alias("nrm"))
-    cent = _ivf_stride_cents(spark, sf_dir)
-    iassign = _ivf_stride_assigned(spark, sf_dir)
-    qdf = base.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qnorm"),
-    )
-    qdot = F.expr(_SPARK_DOT.format(a="qe", b="ce"))
+    _, qdf = _ann_base(spark, sf_dir)
+    # the stride coarse quantizer and the PQ codes, both served from the
+    # persisted session index (identical to sim_ivf_topk / sim_pq_topk)
+    qdot = F.expr(ann.DOT.format(a="qe", b="ce"))
     probes = top_k_per_key(
-        qdf.join(F.broadcast(cent)).select(
+        qdf.join(F.broadcast(_ivf_stride_cents(spark, sf_dir))).select(
             "qid",
             "cid",
             (qdot / F.sqrt(F.col("qnorm") * F.col("cnorm"))).alias("qcos"),
@@ -1423,59 +1345,12 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.desc("qcos"), F.asc("cid")],
         IVF_NPROBE,
     ).select("qid", "cid")
-
-    # PQ LUT (identical folds to sim_pq_topk)
-    sub_dot = F.expr(
-        f"aggregate(zip_with(slice(qe, m * {PQ_SUB} + 1, {PQ_SUB}), c,"
-        " (x, y) -> cast(x as double) * y),"
-        " cast(0 as double), (acc, v) -> acc + v)"
-    )
-    c_norm = F.expr(
-        "aggregate(zip_with(c, c, (x, y) -> x * y),"
-        " cast(0 as double), (acc, v) -> acc + v)"
-    )
-    lut = qdf.crossJoin(cdf).select(
-        "qid",
-        "m",
-        "pqc",
-        F.round(sub_dot * KM_SCALE, 0).cast("long").alias("dotl"),
-        F.round(c_norm * KM_SCALE, 0).cast("long").alias("cnorml"),
-    )
-    scored = (
-        codes.join(iassign, "vec_id")
+    codes = (
+        _pq_codes(spark, sf_dir)
+        .join(_ivf_stride_assigned(spark, sf_dir), "vec_id")
         .join(F.broadcast(probes), "cid")
-        .join(F.broadcast(lut), ["qid", "m", "pqc"])
-        .filter(F.col("vec_id") != F.col("qid"))
-        .groupBy("qid", "vec_id")
-        .agg(F.sum("dotl").alias("dl"), F.sum("cnorml").alias("nl"))
     )
-    s = float(KM_SCALE)
-    ranked = scored.join(
-        F.broadcast(qdf.select("qid", "qnorm")), "qid"
-    ).select(
-        "qid",
-        "vec_id",
-        ((F.col("dl") / s) / F.sqrt(F.col("qnorm") * (F.col("nl") / s))).alias(
-            "cos"
-        ),
-    )
-    shortlist = top_k_per_key(
-        ranked, ["qid"], [F.desc("cos"), F.asc("vec_id")], PQ_RERANK
-    ).select("qid", "vec_id")
-    cand = emb.join(F.broadcast(shortlist), "vec_id").select(
-        "qid", "vec_id", "embedding", norm.alias("cnorm")
-    )
-    exact = cand.join(F.broadcast(qdf), "qid").select(
-        "qid",
-        "vec_id",
-        (
-            F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-            / F.sqrt(F.col("qnorm") * F.col("cnorm"))
-        ).alias("cos"),
-    )
-    return top_k_per_key(
-        exact, ["qid"], [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS
-    ).select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
+    return _pq_serve(spark, sf_dir, _pq_adc(spark, sf_dir, codes))
 
 
 def sim_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2141,54 +2016,24 @@ ORACLE["sim_filtered_auto_topk"] = "\nUNION ALL\n".join(
 )
 
 
-def _ivfpq_trained_scored(spark: SparkSession, sf_dir: str):
+def _ivfpq_trained_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained-cell ADC scan shared by ``sim_ivfpq_trained_topk``
-    and ``sim_ivfpq_trained_rerank``: returns ``(emb, qdf, scored)``
-    where ``scored(qid, vec_id, dl, nl)`` carries the exact-int ADC
-    partial sums for exactly the rows inside each query's
-    ``IVF_TR_NPROBE`` nearest TRAINED cells — the cell restriction and
-    the code scan, everything up to (but not including) the shortlist
-    policy the two callers differ on."""
-    emb = _emb_corpus(spark, sf_dir)
+    and ``sim_ivfpq_trained_rerank``: ``(qid, vec_id, adc_cos)`` for
+    exactly the rows inside each query's ``IVF_TR_NPROBE`` nearest
+    TRAINED cells — the cell restriction and the code scan, everything
+    up to (but not including) the shortlist policy the two callers
+    differ on."""
     _, qdf = _ann_base(spark, sf_dir)
     kcents, cells = _ivf_cells(spark, sf_dir)
     probes = ann.ivf_probes(qdf, kcents, IVF_TR_NPROBE).select(
         "qid", "cluster"
     )
-
-    pqcents = _trained("pq", spark, sf_dir, _pq_train, emb)
-    codes = _pq_codes(spark, sf_dir)
-    cdf = spark.createDataFrame(
-        [(m, cid, vec) for m, lst in pqcents.items() for cid, vec in lst],
-        "m int, pqc bigint, c array<double>",
-    )
-
-    # PQ LUT (identical folds to sim_pq_topk)
-    sub_dot = F.expr(
-        f"aggregate(zip_with(slice(qe, m * {PQ_SUB} + 1, {PQ_SUB}), c,"
-        " (x, y) -> cast(x as double) * y),"
-        " cast(0 as double), (acc, v) -> acc + v)"
-    )
-    c_norm = F.expr(
-        "aggregate(zip_with(c, c, (x, y) -> x * y),"
-        " cast(0 as double), (acc, v) -> acc + v)"
-    )
-    lut = qdf.crossJoin(cdf).select(
-        "qid",
-        "m",
-        "pqc",
-        F.round(sub_dot * KM_SCALE, 0).cast("long").alias("dotl"),
-        F.round(c_norm * KM_SCALE, 0).cast("long").alias("cnorml"),
-    )
-    scored = (
-        codes.join(cells.select("vec_id", "cluster"), "vec_id")
+    codes = (
+        _pq_codes(spark, sf_dir)
+        .join(cells.select("vec_id", "cluster"), "vec_id")
         .join(F.broadcast(probes), "cluster")
-        .join(F.broadcast(lut), ["qid", "m", "pqc"])
-        .filter(F.col("vec_id") != F.col("qid"))
-        .groupBy("qid", "vec_id")
-        .agg(F.sum("dotl").alias("dl"), F.sum("cnorml").alias("nl"))
     )
-    return emb, qdf, scored
+    return _pq_adc(spark, sf_dir, codes)
 
 
 def sim_ivfpq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2210,38 +2055,7 @@ def sim_ivfpq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe restriction and LUT are broadcast hash joins; one
     partial-aggregated shuffle on (qid, vec_id) sums the exact-int
     partials; float vectors surface only for the shortlist re-rank."""
-    from .llmdata import TOPK_NEIGHBORS, _SPARK_DOT
-    from ..operators.topk import top_k_per_key
-
-    emb, qdf, scored = _ivfpq_trained_scored(spark, sf_dir)
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    s = float(KM_SCALE)
-    ranked = scored.join(
-        F.broadcast(qdf.select("qid", "qnorm")), "qid"
-    ).select(
-        "qid",
-        "vec_id",
-        ((F.col("dl") / s) / F.sqrt(F.col("qnorm") * (F.col("nl") / s))).alias(
-            "cos"
-        ),
-    )
-    shortlist = top_k_per_key(
-        ranked, ["qid"], [F.desc("cos"), F.asc("vec_id")], PQ_RERANK
-    ).select("qid", "vec_id")
-    cand = emb.join(F.broadcast(shortlist), "vec_id").select(
-        "qid", "vec_id", "embedding", norm.alias("cnorm")
-    )
-    exact = cand.join(F.broadcast(qdf), "qid").select(
-        "qid",
-        "vec_id",
-        (
-            F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-            / F.sqrt(F.col("qnorm") * F.col("cnorm"))
-        ).alias("cos"),
-    )
-    return top_k_per_key(
-        exact, ["qid"], [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS
-    ).select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
+    return _pq_serve(spark, sf_dir, _ivfpq_trained_scored(spark, sf_dir))
 
 
 def sim_ivfpq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2503,7 +2317,6 @@ def emb_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = assign.join(F.broadcast(cdf), "cluster").select(
         "vec_id", "cluster", d2_micro.alias("d2_micro")
     )
-    from ..operators.topk import top_k_per_key
 
     return (
         top_k_per_key(
@@ -2584,47 +2397,8 @@ def sim_pq_rerank_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     and each budget merely filters rank <= B before the final top-k.
     Codebooks come from the session trainer memo — identical to every
     other PQ rung."""
-    # round 11: serve from the shared session corpus + code index — the
-    # per-call private persist ("pqsweep") was pure cache churn on an
-    # identical relation (guide §5.3)
-    emb = _emb_corpus(spark, sf_dir)
-
-    cents = _trained("pq", spark, sf_dir, _pq_train, emb)
-    codes = _pq_codes(spark, sf_dir).select(
-        "vec_id", "m", F.col("pqc").alias("cid")
-    )
-    cdf = spark.createDataFrame(
-        [(m, cid, vec) for m, lst in cents.items() for cid, vec in lst],
-        "m int, cid bigint, c array<double>",
-    )
-    _, qdf = _ann_base(spark, sf_dir)
-    sub_dot = F.expr(
-        f"aggregate(zip_with(slice(qe, m * {PQ_SUB} + 1, {PQ_SUB}), c,"
-        " (x, y) -> cast(x as double) * y),"
-        " cast(0 as double), (acc, v) -> acc + v)"
-    )
-    c_norm = F.expr(
-        "aggregate(zip_with(c, c, (x, y) -> x * y),"
-        " cast(0 as double), (acc, v) -> acc + v)"
-    )
-    lut = qdf.crossJoin(cdf).select(
-        "qid",
-        "qnorm",
-        "m",
-        "cid",
-        F.round(sub_dot * KM_SCALE, 0).cast("long").alias("dotl"),
-        F.round(c_norm * KM_SCALE, 0).cast("long").alias("cnorml"),
-    )
-    scored = (
-        codes.join(F.broadcast(lut), ["m", "cid"])
-        .filter(F.col("vec_id") != F.col("qid"))
-        .groupBy("qid", "qnorm", "vec_id")
-        .agg(F.sum("dotl").alias("dl"), F.sum("cnorml").alias("nl"))
-    )
-    s = float(KM_SCALE)
-    adc_cos = (F.col("dl") / s) / F.sqrt(F.col("qnorm") * (F.col("nl") / s))
     return _rerank_frontier(
-        spark, sf_dir, scored.select("qid", "vec_id", adc_cos.alias("adc_cos"))
+        spark, sf_dir, _pq_adc(spark, sf_dir, _pq_codes(spark, sf_dir))
     )
 
 
@@ -2651,12 +2425,7 @@ def _rerank_frontier(
         .filter(F.col("rn") <= max(PQ_SWEEP_BUDGETS))
         .select("qid", "vec_id", "rn")
     )
-    exact = (
-        base.join(F.broadcast(shortlist), "vec_id")
-        .join(F.broadcast(qdf), "qid")
-        .select("qid", "vec_id", "rn", ann.cosine())
-        .localCheckpoint()
-    )
+    exact = ann.rerank_scan(base, qdf, shortlist).localCheckpoint()
     truth = (
         sim_cosine_topk(spark, sf_dir)
         .select("qid", "vec_id")
@@ -2780,22 +2549,11 @@ def sim_ivfpq_trained_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     max-budget shortlist, each budget filters ``rn <= B`` before the
     final top-k — the ``sim_pq_rerank_sweep`` machinery pointed at the
     probed-cell candidate set."""
-    _, qdf, scored = _ivfpq_trained_scored(spark, sf_dir)
     # materialized once: both the shortlist and the scanned_rows
     # certificate read it (bounded: queries x probed-cell rows)
-    scored = scored.localCheckpoint()
-    s = float(KM_SCALE)
-    adc = scored.join(
-        F.broadcast(qdf.select("qid", "qnorm")), "qid"
-    ).select(
-        "qid",
-        "vec_id",
-        ((F.col("dl") / s) / F.sqrt(F.col("qnorm") * (F.col("nl") / s))).alias(
-            "adc_cos"
-        ),
-    )
+    adc = _ivfpq_trained_scored(spark, sf_dir).localCheckpoint()
     frontier = _rerank_frontier(spark, sf_dir, adc)
-    scanned = scored.agg(F.count("*").alias("scanned_rows"))
+    scanned = adc.agg(F.count("*").alias("scanned_rows"))
     return frontier.crossJoin(F.broadcast(scanned))
 
 
@@ -2926,15 +2684,11 @@ def sim_range_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast, one Arrow assignment pass, candidates = assignment ⋈
     broadcast probes — minus the rank: the radius predicate replaces
     top-k entirely, so nothing windows."""
-    from .llmdata import SIM_RANGE_TAU
+    from .llmdata import _within_radius
 
     _, q = _ann_base(spark, sf_dir)
     cents, cells = _ivf_cells(spark, sf_dir)
-    return (
-        ann.ivf_scan(cells, q, cents, IVF_TR_NPROBE)
-        .filter(F.col("cos") >= F.lit(SIM_RANGE_TAU))
-        .select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
-    )
+    return _within_radius(ann.ivf_scan(cells, q, cents, IVF_TR_NPROBE))
 
 
 def sim_range_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3592,9 +3346,6 @@ def sim_prf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     points: the candidate relation carries the probe rank, each budget
     filters ``rn <= np`` and re-ranks — no per-budget recompute
     (candidates and the truth are checkpointed, both bounded)."""
-    from .llmdata import sim_cosine_topk  # noqa: F401 (memo warm order)
-    from ..operators.topk import top_k_per_key
-
     emb = _emb_corpus(spark, sf_dir)
     cents = _trained("kmeans", spark, sf_dir, _kmeans_train, emb)
     assign = _km_assigned(spark, sf_dir)

@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators import ann
-from ..operators.ann import DOT as _SPARK_DOT
 from ..operators.carry import sharded_prefix_sum, sharded_row_number
 from ..operators.topk import top_k_per_key
 from ..session import hold, memo
@@ -465,6 +464,14 @@ def _duck_dot(a: str, b: str) -> str:
     )
 
 
+def _emb_base(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings table as an ``ann`` corpus (vec_id, embedding,
+    nrm)."""
+    return load(spark, sf_dir, "embeddings").select(
+        "vec_id", "embedding", F.expr(ann.NORM).alias("nrm")
+    )
+
+
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: the first N_QUERY_VECS vectors are queries;
     for each, the top-5 neighbors by cosine (ties → smaller vec_id).
@@ -473,9 +480,7 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side cross join — no shuffle of the big side; the top-k rank's
     WindowGroupLimit keeps only k rows per query per partition.
     """
-    base = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", F.expr(ann.NORM).alias("nrm")
-    )
+    base = _emb_base(spark, sf_dir)
     q = ann.query_frame(base, F.col("vec_id") < N_QUERY_VECS)
     return ann.top_cosine(
         ann.exact_scan(base, q), TOPK_NEIGHBORS
@@ -495,7 +500,7 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         start=F.lit(0),
     ).cast("long")
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
+    norm = F.expr(ann.NORM)
     base = emb.select("vec_id", "embedding", bucket.alias("bucket"), norm.alias("nrm"))
     q = base.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("qid"),
@@ -503,16 +508,10 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket",
         F.col("nrm").alias("qnorm"),
     )
-    dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
     pairs = (
         base.join(F.broadcast(q), "bucket")
         .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            "bucket",
-            (dot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias("cos"),
-        )
+        .select("qid", "vec_id", "bucket", ann.cosine())
     )
     return top_k_per_key(
         pairs, ["qid"], [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS
@@ -540,9 +539,16 @@ def sim_lsh_multi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ|bucket|², never all-pairs — and embeddings for the deduped
     candidate ids are recovered by a key join, so vectors don't ride
     the LSH shuffle."""
-    emb = load(spark, sf_dir, "embeddings")
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    base = emb.select("vec_id", "embedding", norm.alias("nrm"))
+    base = _emb_base(spark, sf_dir)
+    q = ann.query_frame(base, F.col("vec_id") < N_QUERY_VECS)
+    return ann.top_cosine(
+        ann.rerank_scan(base, q, _lsh_multi_cands(base)), TOPK_NEIGHBORS
+    ).select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
+
+
+def _lsh_tabled(base: DataFrame) -> DataFrame:
+    """(vec_id, tb, bucket): each vector's sign bucket in every one of
+    the ``LSH_TABLES`` tables, one row per table."""
 
     def bucket(t: int):
         return sum(
@@ -555,46 +561,34 @@ def sim_lsh_multi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             start=F.lit(0),
         ).cast("long")
 
-    tabled = base.select(
+    return base.select(
         "vec_id",
         F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(t).alias("tb"), bucket(t).alias("bucket")
-                    )
+                    F.struct(F.lit(t).alias("tb"), bucket(t).alias("bucket"))
                     for t in range(LSH_TABLES)
                 ]
             )
         ).alias("e"),
     ).select("vec_id", F.col("e.tb").alias("tb"), F.col("e.bucket").alias("bucket"))
+
+
+def _lsh_multi_cands(base: DataFrame) -> DataFrame:
+    """(qid, vec_id): the distinct same-bucket mates of each query
+    across the tables (the OR-construction) — a (table, bucket)
+    equi-join against the broadcast query buckets, so only ids ride
+    the shuffle and the vectors are recovered by key."""
+    tabled = _lsh_tabled(base)
     q_tab = tabled.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("qid"), "tb", "bucket"
     )
-    cand_ids = (
+    return (
         tabled.join(F.broadcast(q_tab), ["tb", "bucket"])
         .filter(F.col("vec_id") != F.col("qid"))
         .select("qid", "vec_id")
         .distinct()
     )
-    q = base.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qnorm"),
-    )
-    dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-    pairs = (
-        cand_ids.join(base, "vec_id")
-        .join(F.broadcast(q), "qid")
-        .select(
-            "qid",
-            "vec_id",
-            (dot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias("cos"),
-        )
-    )
-    return top_k_per_key(
-        pairs, ["qid"], [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS
-    ).select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
 
 
 def sim_lsh_multi_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -636,22 +630,15 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixed id cutoff would take centroids only from the head of the
     # table, collapsing recall)
     from .clustering import (
-        _emb_corpus,
+        _ann_base,
         _ivf_stride_assigned,
         _ivf_stride_cents,
     )
 
-    emb = _emb_corpus(spark, sf_dir)
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    base = emb.select("vec_id", "embedding", norm.alias("nrm"))
+    base, q = _ann_base(spark, sf_dir)
     cent = _ivf_stride_cents(spark, sf_dir)
     assign = _ivf_stride_assigned(spark, sf_dir).join(base, "vec_id")
-    q = base.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qnorm"),
-    )
-    qdot = F.expr(_SPARK_DOT.format(a="qe", b="ce"))
+    qdot = F.expr(ann.DOT.format(a="qe", b="ce"))
     probes = top_k_per_key(
         q.join(F.broadcast(cent)).select(
             "qid", "qe", "qnorm", "cid",
@@ -661,19 +648,14 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.desc("qcos"), F.asc("cid")],
         IVF_NPROBE,
     ).select("qid", "qe", "qnorm", "cid")
-    dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
     cand = (
         assign.join(F.broadcast(probes), "cid")
         .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            (dot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias("cos"),
-        )
+        .select("qid", "vec_id", ann.cosine())
     )
-    return top_k_per_key(
-        cand, ["qid"], [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS
-    ).select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
+    return ann.top_cosine(cand, TOPK_NEIGHBORS).select(
+        "qid", "vec_id", F.round("cos", 6).alias("cosine")
+    )
 
 
 def _ann_recall(exact: DataFrame, approx: DataFrame) -> DataFrame:
@@ -757,11 +739,11 @@ def dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         start=F.lit(0),
     ).cast("long")
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
+    norm = F.expr(ann.NORM)
     base = emb.select("vec_id", "embedding", bucket.alias("bucket"), norm.alias("nrm"))
     a = base.alias("a")
     b = base.alias("b")
-    dot = F.expr(_SPARK_DOT.format(a="a.embedding", b="b.embedding"))
+    dot = F.expr(ann.DOT.format(a="a.embedding", b="b.embedding"))
     cos = dot / F.sqrt(F.col("a.nrm") * F.col("b.nrm"))
     return (
         a.join(b, "bucket")
@@ -1475,20 +1457,18 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     restriction for the approximate path when the filter is not
     label-selective."""
     emb = load(spark, sf_dir, "embeddings")
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
     cand = emb.select(
         "vec_id",
         "embedding",
         F.col("label").cast("long").alias("clabel"),
-        norm.alias("cnorm"),
+        F.expr(ann.NORM).alias("nrm"),
     )
-    q = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
+    q = cand.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qe"),
-        F.col("label").cast("long").alias("qlabel"),
-        norm.alias("qnorm"),
+        F.col("clabel").alias("qlabel"),
+        F.col("nrm").alias("qnorm"),
     )
-    dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
     pairs = (
         cand.join(F.broadcast(q))
         .filter(
@@ -1496,10 +1476,7 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("clabel") != F.col("qlabel"))
         )
         .select(
-            "qid",
-            "vec_id",
-            F.col("clabel").alias("neg_label"),
-            (dot / F.sqrt(F.col("qnorm") * F.col("cnorm"))).alias("cos"),
+            "qid", "vec_id", F.col("clabel").alias("neg_label"), ann.cosine()
         )
     )
     return top_k_per_key(
@@ -4790,12 +4767,12 @@ def emb_cosine_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         start=F.lit(0),
     ).cast("long")
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
+    norm = F.expr(ann.NORM)
     base = emb.select(
         "vec_id", "embedding", bucket.alias("bucket"), norm.alias("nrm")
     )
     a, b = base.alias("a"), base.alias("b")
-    dot = F.expr(_SPARK_DOT.format(a="a.embedding", b="b.embedding"))
+    dot = F.expr(ann.DOT.format(a="a.embedding", b="b.embedding"))
     cos = dot / F.sqrt(F.col("a.nrm") * F.col("b.nrm"))
     pairs = (
         a.join(b, "bucket")
@@ -5269,12 +5246,12 @@ def sim_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     in Spark; the DuckDB oracle unrolls the same K greedy steps as
     chained CTEs."""
     emb = load(spark, sf_dir, "embeddings")
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
+    norm = F.expr(ann.NORM)
     base = emb.select("vec_id", "embedding", norm.alias("nrm"))
     q = base.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qe"), F.col("nrm").alias("qn")
     )
-    dot_q = F.expr(_SPARK_DOT.format(a="embedding", b="qe"))
+    dot_q = F.expr(ann.DOT.format(a="embedding", b="qe"))
     scored = (
         base.filter(F.col("vec_id") != 0)
         .join(F.broadcast(q))
@@ -5761,7 +5738,7 @@ def sim_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cnorm"),
         )
     )
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
+    norm = F.expr(ann.NORM)
     q = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qe"),
@@ -6854,25 +6831,19 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: broadcast queries, one corpus scan, no top-k rank at all —
     output size is whatever the radius admits (the caller's contract),
     and nothing shuffles but the qualifying rows."""
-    emb = load(spark, sf_dir, "embeddings")
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    cand = emb.select("vec_id", "embedding", norm.alias("cnorm"))
-    q = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        norm.alias("qnorm"),
-    )
-    dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-    return (
-        cand.join(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            (dot / F.sqrt(F.col("qnorm") * F.col("cnorm"))).alias("cos"),
-        )
-        .filter(F.col("cos") >= F.lit(SIM_RANGE_TAU))
-        .select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
+    base = _emb_base(spark, sf_dir)
+    q = ann.query_frame(base, F.col("vec_id") < N_QUERY_VECS)
+    return _within_radius(ann.exact_scan(base, q))
+
+
+def _within_radius(
+    scored: DataFrame, tau: float = SIM_RANGE_TAU
+) -> DataFrame:
+    """(qid, vec_id, cosine): the rows of a scored relation within
+    cosine ``tau`` — the serve tail of every radius search (exact, LSH,
+    trained IVF) and of the streamed watch (``streaming/rangewatch.py``)."""
+    return scored.filter(F.col("cos") >= F.lit(tau)).select(
+        "qid", "vec_id", F.round("cos", 6).alias("cosine")
     )
 
 
@@ -6886,58 +6857,9 @@ def sim_range_search_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: same Σ|bucket|² candidate discipline as every LSH path;
     vectors never ride the LSH shuffle (key-join recovery)."""
-    emb = load(spark, sf_dir, "embeddings")
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    base = emb.select("vec_id", "embedding", norm.alias("nrm"))
-
-    def bucket(t: int):
-        return sum(
-            (
-                F.when(
-                    F.element_at("embedding", d) > 0, F.lit(1 << j)
-                ).otherwise(F.lit(0))
-                for j, d in enumerate(MULTI_LSH_DIMS[t])
-            ),
-            start=F.lit(0),
-        ).cast("long")
-
-    tabled = emb.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(t).alias("tb"), bucket(t).alias("bucket"))
-                    for t in range(LSH_TABLES)
-                ]
-            )
-        ).alias("e"),
-    ).select("vec_id", F.col("e.tb").alias("tb"), F.col("e.bucket").alias("bucket"))
-    q_tab = tabled.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"), "tb", "bucket"
-    )
-    cand_ids = (
-        tabled.join(F.broadcast(q_tab), ["tb", "bucket"])
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id")
-        .distinct()
-    )
-    q = base.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qnorm"),
-    )
-    dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-    return (
-        cand_ids.join(base, "vec_id")
-        .join(F.broadcast(q), "qid")
-        .select(
-            "qid",
-            "vec_id",
-            (dot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias("cos"),
-        )
-        .filter(F.col("cos") >= F.lit(SIM_RANGE_TAU))
-        .select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
-    )
+    base = _emb_base(spark, sf_dir)
+    q = ann.query_frame(base, F.col("vec_id") < N_QUERY_VECS)
+    return _within_radius(ann.rerank_scan(base, q, _lsh_multi_cands(base)))
 
 
 def sim_range_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9936,43 +9858,45 @@ def sim_bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: signatures and Hamming distances are exact integers;
     ties break on vec_id; the re-rank is the house float-dot in array
     order rounded once."""
-    emb = load(spark, sf_dir, "embeddings")
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    base = emb.select(
-        "vec_id",
-        "embedding",
-        F.expr(_SPARK_BQ_SIG.format(col="embedding")).alias("sig"),
-        norm.alias("nrm"),
+    return _bq_topk(_bq_index(_emb_base(spark, sf_dir)))
+
+
+def _bq_index(corpus: DataFrame) -> DataFrame:
+    """(vec_id, embedding, nrm, sig): an ``ann`` corpus with each
+    vector's 63-bit sign signature — the whole sign index, a pure
+    per-row function of the vector (``streaming/bqview.py`` logs it at
+    ingest)."""
+    return corpus.withColumn(
+        "sig", F.expr(_SPARK_BQ_SIG.format(col="embedding"))
     )
-    q = base.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("sig").alias("qsig"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qnorm"),
+
+
+def _bq_hamming(index: DataFrame) -> DataFrame:
+    """(qid, vec_id, h): the Hamming distance of every corpus signature
+    to every query's, the queries broadcast into the slim (vec_id, sig)
+    scan."""
+    q = index.filter(F.col("vec_id") < N_QUERY_VECS).select(
+        F.col("vec_id").alias("qid"), F.col("sig").alias("qsig")
     )
-    ham = (
-        base.select("vec_id", "sig")
-        .join(F.broadcast(q.select("qid", "qsig")))
+    return (
+        index.select("vec_id", "sig")
+        .join(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid", "vec_id",
-            F.expr("bit_count(sig ^ qsig)").alias("h"),
-        )
+        .select("qid", "vec_id", F.expr("bit_count(sig ^ qsig)").alias("h"))
     )
+
+
+def _bq_topk(index: DataFrame) -> DataFrame:
+    """The ``sim_bq_topk`` serve over a built sign index (``_bq_index``):
+    the ``BQ_SHORTLIST`` nearest signatures per query re-ranked by
+    exact cosine."""
     short = top_k_per_key(
-        ham, ["qid"], [F.asc("h"), F.asc("vec_id")], BQ_SHORTLIST
+        _bq_hamming(index), ["qid"], [F.asc("h"), F.asc("vec_id")],
+        BQ_SHORTLIST,
     ).select("qid", "vec_id")
-    dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-    scored = (
-        short.join(base.select("vec_id", "embedding", "nrm"), "vec_id")
-        .join(F.broadcast(q.select("qid", "qe", "qnorm")), "qid")
-        .select(
-            "qid", "vec_id",
-            (dot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias("cos"),
-        )
-    )
-    return top_k_per_key(
-        scored, ["qid"], [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS
+    q = ann.query_frame(index, F.col("vec_id") < N_QUERY_VECS)
+    return ann.top_cosine(
+        ann.rerank_scan(index, q, short), TOPK_NEIGHBORS
     ).select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
 
 
@@ -10064,15 +9988,25 @@ _SPARK_IDOT = (
 )
 
 
-def _sq8_stats(emb: DataFrame) -> DataFrame:
-    """ONE-row (mns, scs) relation: per-dim corpus min and the [0,255]
-    linear step — the whole 'codebook' of scalar quantization, sized
-    2*EMB_DIM doubles however large the corpus (broadcast side by
-    construction)."""
+def _sq8_minmax(emb: DataFrame) -> DataFrame:
+    """(dim, mn, mx): the per-dim min and max of an embedding relation —
+    a mergeable partial (``streaming/sq8view.py`` logs one per batch)."""
     return (
         emb.select(F.posexplode("embedding").alias("dim", "val"))
         .groupBy("dim")
         .agg(F.min("val").alias("mn"), F.max("val").alias("mx"))
+    )
+
+
+def _sq8_stats(minmax: DataFrame) -> DataFrame:
+    """ONE-row (mns, scs) relation from (dim, mn, mx) partials: per-dim
+    corpus min and the [0,255] linear step — the whole 'codebook' of
+    scalar quantization, sized 2*EMB_DIM doubles however large the
+    corpus (broadcast side by construction).  Partials merge exactly,
+    so any split of the corpus yields the same row."""
+    return (
+        minmax.groupBy("dim")
+        .agg(F.min("mn").alias("mn"), F.max("mx").alias("mx"))
         .agg(
             F.array_sort(
                 F.collect_list(F.struct("dim", "mn", "mx"))
@@ -10101,16 +10035,21 @@ def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-negative arguments (Spark HALF_UP == DuckDB round there), code
     dot products and norms are exact int64, the approximate cosine is
     ONE float division, ties break on vec_id."""
-    emb = load(spark, sf_dir, "embeddings")
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
+    emb = _emb_base(spark, sf_dir)
+    return _sq8_topk(emb, _sq8_stats(_sq8_minmax(emb)))
+
+
+def _sq8_topk(
+    corpus: DataFrame,
+    stats: DataFrame,
+    qv: str = _SPARK_SQ8_QV.format(col="embedding"),
+) -> DataFrame:
+    """The ``sim_sq8_topk`` serve over an ``ann`` corpus and its one-row
+    stats: quantize with ``qv``, rank the whole corpus by integer
+    approximate cosine, re-rank the ``SQ8_SHORTLIST`` best exactly."""
     base = (
-        emb.join(F.broadcast(_sq8_stats(emb)))
-        .select(
-            "vec_id",
-            "embedding",
-            F.expr(_SPARK_SQ8_QV.format(col="embedding")).alias("qv"),
-            norm.alias("nrm"),
-        )
+        corpus.join(F.broadcast(stats))
+        .select("vec_id", "embedding", "nrm", F.expr(qv).alias("qv"))
         .withColumn("qn", F.expr(_SPARK_IDOT.format(a="qv", b="qv")))
         .filter(F.col("qn") > 0)
     )
@@ -10118,12 +10057,10 @@ def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"),
         F.col("qv").alias("qqv"),
         F.col("qn").alias("qqn"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qnorm"),
     )
     approx = (
         base.select("vec_id", "qv", "qn")
-        .join(F.broadcast(q.select("qid", "qqv", "qqn")))
+        .join(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("qid"))
         .select(
             "qid", "vec_id",
@@ -10137,17 +10074,9 @@ def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     short = top_k_per_key(
         approx, ["qid"], [F.desc("acos"), F.asc("vec_id")], SQ8_SHORTLIST
     ).select("qid", "vec_id")
-    dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-    scored = (
-        short.join(base.select("vec_id", "embedding", "nrm"), "vec_id")
-        .join(F.broadcast(q.select("qid", "qe", "qnorm")), "qid")
-        .select(
-            "qid", "vec_id",
-            (dot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias("cos"),
-        )
-    )
-    return top_k_per_key(
-        scored, ["qid"], [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS
+    qf = ann.query_frame(base, F.col("vec_id") < N_QUERY_VECS)
+    return ann.top_cosine(
+        ann.rerank_scan(base, qf, short), TOPK_NEIGHBORS
     ).select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
 
 
@@ -10180,8 +10109,7 @@ def sim_sq_bits_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per leg one narrow corpus pass over ``bits``/8 of the
     float32 bytes; stats and queries broadcast; ranks ride
     WindowGroupLimit."""
-    emb = load(spark, sf_dir, "embeddings")
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
+    emb = _emb_base(spark, sf_dir)
     # Round 12 (r11 verdict item 6 — the "middle form"): the r11 full
     # leg-tagging of this sweep regressed suite-to-suite and was
     # reverted, but the isolated 2x win said the per-leg duplication was
@@ -10191,7 +10119,7 @@ def sim_sq_bits_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # legs stop re-deriving a corpus aggregate + a full cosine pass per
     # leg, while each leg's quantize/rank/rerank tail stays the small
     # independent pipeline that won in suite context.
-    stats = F.broadcast(_sq8_stats(emb).localCheckpoint())
+    stats = _sq8_stats(_sq8_minmax(emb)).localCheckpoint()
     truth = (
         sim_cosine_topk(spark, sf_dir)
         .select("qid", "vec_id")
@@ -10211,50 +10139,10 @@ def sim_sq_bits_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" / (element_at(scs, i) * 255.0D / {lv}.0D)), 0D),"
             f" {lv}D) as bigint) END)"
         )
-        base = (
-            emb.join(stats)
-            .select(
-                "vec_id",
-                "embedding",
-                F.expr(qv_expr).alias("qv"),
-                norm.alias("nrm"),
-            )
-            .withColumn("qn", F.expr(_SPARK_IDOT.format(a="qv", b="qv")))
-            .filter(F.col("qn") > 0)
-        )
-        q = base.filter(F.col("vec_id") < N_QUERY_VECS).select(
-            F.col("vec_id").alias("qid"),
-            F.col("qv").alias("qqv"),
-            F.col("qn").alias("qqn"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qnorm"),
-        )
-        approx = (
-            base.select("vec_id", "qv", "qn")
-            .join(F.broadcast(q.select("qid", "qqv", "qqn")))
-            .filter(F.col("vec_id") != F.col("qid"))
-            .select(
-                "qid", "vec_id",
-                (
-                    F.expr(_SPARK_IDOT.format(a="qv", b="qqv"))
-                    .cast("double")
-                    / F.sqrt((F.col("qn") * F.col("qqn")).cast("double"))
-                ).alias("acos"),
-            )
-        )
-        short = top_k_per_key(
-            approx, ["qid"], [F.desc("acos"), F.asc("vec_id")],
-            SQ8_SHORTLIST,
-        ).select("qid", "vec_id")
-        scored = (
-            short.join(base.select("vec_id", "embedding", "nrm"), "vec_id")
-            .join(F.broadcast(q.select("qid", "qe", "qnorm")), "qid")
-            .select("qid", "vec_id", ann.cosine())
-        )
         legs.append(
-            ann.recall_frontier(
-                truth, ann.top_cosine(scored, TOPK_NEIGHBORS)
-            ).select(F.lit(bits).cast("long").alias("bits"), "*")
+            ann.recall_frontier(truth, _sq8_topk(emb, stats, qv_expr)).select(
+                F.lit(bits).cast("long").alias("bits"), "*"
+            )
         )
     out = legs[0]
     for leg in legs[1:]:
@@ -10686,29 +10574,26 @@ def sim_mrl_adaptive_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = mrl_structured(
         load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     )
-    pnorm = _SPARK_DOT.format(
+    pnorm = ann.DOT.format(
         a=f"slice(embedding, 1, {d})", b=f"slice(embedding, 1, {d})"
     )
     base = emb.select(
         "vec_id",
         "embedding",
         F.expr(pnorm).alias("pnrm"),
-        F.expr(_SPARK_DOT.format(a="embedding", b="embedding")).alias(
-            "nrm"
-        ),
+        F.expr(ann.NORM).alias("nrm"),
     ).filter(F.col("pnrm") > 0)
     q = base.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qe"),
         F.col("pnrm").alias("qpn"),
-        F.col("nrm").alias("qnorm"),
     )
-    pdot = _SPARK_DOT.format(
+    pdot = ann.DOT.format(
         a=f"slice(qe, 1, {d})", b=f"slice(embedding, 1, {d})"
     )
     approx = (
         base.select("vec_id", "embedding", "pnrm")
-        .join(F.broadcast(q.select("qid", "qe", "qpn")))
+        .join(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("qid"))
         .select(
             "qid", "vec_id",
@@ -10720,17 +10605,9 @@ def sim_mrl_adaptive_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     short = top_k_per_key(
         approx, ["qid"], [F.desc("acos"), F.asc("vec_id")], MRL_SHORTLIST
     ).select("qid", "vec_id")
-    dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-    scored = (
-        short.join(base.select("vec_id", "embedding", "nrm"), "vec_id")
-        .join(F.broadcast(q.select("qid", "qe", "qnorm")), "qid")
-        .select(
-            "qid", "vec_id",
-            (dot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias("cos"),
-        )
-    )
-    return top_k_per_key(
-        scored, ["qid"], [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS
+    qf = ann.query_frame(base, F.col("vec_id") < N_QUERY_VECS)
+    return ann.top_cosine(
+        ann.rerank_scan(base, qf, short), TOPK_NEIGHBORS
     ).select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
 
 
@@ -10743,31 +10620,10 @@ def sim_mrl_adaptive_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     )
     base = emb.select(
-        "vec_id",
-        "embedding",
-        F.expr(_SPARK_DOT.format(a="embedding", b="embedding")).alias(
-            "nrm"
-        ),
+        "vec_id", "embedding", F.expr(ann.NORM).alias("nrm")
     ).filter(F.col("nrm") > 0)
-    q = base.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qnorm"),
-    )
-    pairs = (
-        base.join(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid", "vec_id",
-            (
-                F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-                / F.sqrt(F.col("qnorm") * F.col("nrm"))
-            ).alias("cos"),
-        )
-    )
-    truth = top_k_per_key(
-        pairs, ["qid"], [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS
-    ).select("qid", "vec_id")
+    q = ann.query_frame(base, F.col("vec_id") < N_QUERY_VECS)
+    truth = ann.top_cosine(ann.exact_scan(base, q), TOPK_NEIGHBORS)
     return _ann_recall(truth, sim_mrl_adaptive_topk(spark, sf_dir))
 
 
@@ -10841,38 +10697,17 @@ def sim_bq_budget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist feed every budget (the ``sim_pq_rerank_sweep`` reuse
     shape); per budget the top-k is re-picked among rows within the
     budget.  Exact integer basis points."""
-    emb = load(spark, sf_dir, "embeddings")
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    base = emb.select(
-        "vec_id",
-        "embedding",
-        F.expr(_SPARK_BQ_SIG.format(col="embedding")).alias("sig"),
-        norm.alias("nrm"),
-    )
-    q = base.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("sig").alias("qsig"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qnorm"),
-    )
-    ham = (
-        base.select("vec_id", "sig")
-        .join(F.broadcast(q.select("qid", "qsig")))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid", "vec_id", F.expr("bit_count(sig ^ qsig)").alias("h")
-        )
-    )
+    index = _bq_index(_emb_base(spark, sf_dir))
     wh = Window.partitionBy("qid").orderBy(F.asc("h"), F.asc("vec_id"))
     short = (
-        ham.withColumn("rk", F.row_number().over(wh))
+        _bq_hamming(index)
+        .withColumn("rk", F.row_number().over(wh))
         .filter(F.col("rk") <= max(BQ_BUDGETS))
         .select("qid", "vec_id", "rk")
     )
+    q = ann.query_frame(index, F.col("vec_id") < N_QUERY_VECS)
     scored = (
-        short.join(base.select("vec_id", "embedding", "nrm"), "vec_id")
-        .join(F.broadcast(q.select("qid", "qe", "qnorm")), "qid")
-        .select("qid", "vec_id", "rk", ann.cosine())
+        ann.rerank_scan(index, q, short)
         # EAGER on purpose (round 10): the lazy form materialized the
         # checkpoint mid-action, and the DAGScheduler then logged an
         # ERROR burst ("attempted to access non-existent accumulator")
@@ -11007,31 +10842,7 @@ def _graph_edges(base: DataFrame) -> DataFrame:
     embedding, nrm) corpus; candidates are same-bucket pairs across
     the LSH_TABLES sign tables (the OR-construction), so the build is
     Σ|bucket|² per table, never corpus²."""
-
-    def bucket(t: int):
-        return sum(
-            (
-                F.when(
-                    F.element_at("embedding", d) > 0, F.lit(1 << j)
-                ).otherwise(F.lit(0))
-                for j, d in enumerate(MULTI_LSH_DIMS[t])
-            ),
-            start=F.lit(0),
-        ).cast("long")
-
-    tabled = base.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(t).alias("tb"), bucket(t).alias("bucket"))
-                    for t in range(LSH_TABLES)
-                ]
-            )
-        ).alias("e"),
-    ).select(
-        "vec_id", F.col("e.tb").alias("tb"), F.col("e.bucket").alias("bucket")
-    )
+    tabled = _lsh_tabled(base)
     cand = (
         tabled.select(F.col("vec_id").alias("src"), "tb", "bucket")
         .join(tabled.select(F.col("vec_id").alias("dst"), "tb", "bucket"),
@@ -11040,24 +10851,12 @@ def _graph_edges(base: DataFrame) -> DataFrame:
         .select("src", "dst")
         .distinct()
     )
-    s = base.select(
-        F.col("vec_id").alias("src"),
-        F.col("embedding").alias("se"),
-        F.col("nrm").alias("snrm"),
-    )
-    d = base.select(
-        F.col("vec_id").alias("dst"),
-        F.col("embedding").alias("de"),
-        F.col("nrm").alias("dnrm"),
-    )
-    dot = F.expr(_SPARK_DOT.format(a="se", b="de"))
+    # the source plays the query: the house cosine of (src, dst)
+    s = ann.query_frame(base, F.lit(True)).withColumnRenamed("qid", "src")
     scored = (
         cand.join(s, "src")
-        .join(d, "dst")
-        .select(
-            "src", "dst",
-            (dot / F.sqrt(F.col("snrm") * F.col("dnrm"))).alias("cos"),
-        )
+        .join(base.withColumnRenamed("vec_id", "dst"), "dst")
+        .select("src", "dst", ann.cosine())
     )
     return top_k_per_key(
         scored, ["src"], [F.desc("cos"), F.asc("dst")], GRAPH_M
@@ -11074,16 +10873,10 @@ def _graph_search(base: DataFrame, edges: DataFrame,
     log-assembled graph).  The budget sweep runs the same per-round
     math in its own leg-tagged loop (``sim_graph_budget_sweep``)."""
     q = ann.query_frame(base, F.col("vec_id") < N_QUERY_VECS)
-
-    def score(ids: DataFrame) -> DataFrame:
-        return (
-            ids.join(base, "vec_id")
-            .join(F.broadcast(q), "qid")
-            .select("qid", "vec_id", ann.cosine())
-        )
-
     entry = base.agg(F.min("vec_id").alias("vec_id"))
-    visited = score(q.select("qid").crossJoin(F.broadcast(entry)))
+    visited = ann.rerank_scan(
+        base, q, q.select("qid").crossJoin(F.broadcast(entry))
+    )
     # Materialization boundary (house rule: eager localCheckpoint,
     # never lazy): each round references the visited relation three
     # times (frontier, anti-join, union) — without boundaries the
@@ -11100,7 +10893,7 @@ def _graph_search(base: DataFrame, edges: DataFrame,
             .distinct()
             .join(visited.select("qid", "vec_id"), ["qid", "vec_id"], "anti")
         )
-        visited = visited.unionByName(score(fresh))
+        visited = visited.unionByName(ann.rerank_scan(base, q, fresh))
     return visited
 
 
@@ -11122,9 +10915,7 @@ def _graph_visited(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking) and ``sim_graph_cost`` (the cost cap as a relation); the
     graph comes from the session memo (built once per sf_dir — the
     index posture)."""
-    emb = load(spark, sf_dir, "embeddings")
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    base = emb.select("vec_id", "embedding", norm.alias("nrm"))
+    base = _emb_base(spark, sf_dir)
     return _graph_search(base, _graph_edges_memo(spark, sf_dir, base))
 
 
@@ -11134,10 +10925,13 @@ def sim_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic entry node, GRAPH_ROUNDS rounds, each (qid, vec_id)
     scored exactly once; output the TOPK_NEIGHBORS best visited
     (excluding the query itself), ties -> smaller vec_id."""
-    visited = _graph_visited(spark, sf_dir)
-    return top_k_per_key(
-        visited.filter(F.col("vec_id") != F.col("qid")),
-        ["qid"], [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS,
+    return _graph_topk(_graph_visited(spark, sf_dir))
+
+
+def _graph_topk(visited: DataFrame) -> DataFrame:
+    """The ``sim_graph_topk`` relation of a search's visited set."""
+    return ann.top_cosine(
+        visited.filter(F.col("vec_id") != F.col("qid")), TOPK_NEIGHBORS
     ).select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
 
 
@@ -11149,10 +10943,14 @@ def sim_graph_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     grows (measured 1x/4x/16x in docs/graphann_probe.json) — the
     defining economics of graph ANN vs a corpus-fraction scan, pinned
     per query instead of asserted in prose."""
+    return _graph_cost(_graph_visited(spark, sf_dir))
+
+
+def _graph_cost(visited: DataFrame) -> DataFrame:
+    """The ``sim_graph_cost`` relation of a search's visited set."""
     cap = 1 + GRAPH_ROUNDS * GRAPH_BEAM * GRAPH_M
     return (
-        _graph_visited(spark, sf_dir)
-        .groupBy("qid")
+        visited.groupBy("qid")
         .agg(F.count("*").alias("scored_nodes"))
         .select(
             "qid", "scored_nodes",
@@ -11323,9 +11121,7 @@ def sim_graph_budget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per (leg, qid) the frontier/expansion/scoring math is untouched
     (partitioned per leg), so results are bit-identical to the
     independent legs; the oracle is unchanged."""
-    emb = load(spark, sf_dir, "embeddings")
-    norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-    base = emb.select("vec_id", "embedding", norm.alias("nrm"))
+    base = _emb_base(spark, sf_dir)
     edges = _graph_edges_memo(spark, sf_dir, base)
     truth = sim_cosine_topk(spark, sf_dir).select("qid", "vec_id")
     legs_df = F.broadcast(
@@ -11334,17 +11130,11 @@ def sim_graph_budget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     q = ann.query_frame(base, F.col("vec_id") < N_QUERY_VECS)
-
-    def score(ids: DataFrame) -> DataFrame:
-        return (
-            ids.join(base, "vec_id")
-            .join(F.broadcast(q), "qid")
-            .select("rounds", "beam", "qid", "vec_id", ann.cosine())
-        )
-
     entry = base.agg(F.min("vec_id").alias("vec_id"))
-    visited = score(
-        q.select("qid").crossJoin(legs_df).crossJoin(F.broadcast(entry))
+    visited = ann.rerank_scan(
+        base,
+        q,
+        q.select("qid").crossJoin(legs_df).crossJoin(F.broadcast(entry)),
     )
     wf = Window.partitionBy("rounds", "beam", "qid").orderBy(
         F.desc("cos"), F.asc("vec_id")
@@ -11367,7 +11157,7 @@ def sim_graph_budget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "anti",
             )
         )
-        visited = visited.unionByName(score(fresh))
+        visited = visited.unionByName(ann.rerank_scan(base, q, fresh))
     hit = ann.top_cosine(
         visited.filter(F.col("vec_id") != F.col("qid")),
         TOPK_NEIGHBORS, ["rounds", "beam"],

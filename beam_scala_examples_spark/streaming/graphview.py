@@ -37,15 +37,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.topk import top_k_per_key
+from ..operators import ann
 from ..queries.llmdata import (
-    _SPARK_DOT,
-    GRAPH_BEAM,
-    GRAPH_M,
-    GRAPH_ROUNDS,
-    TOPK_NEIGHBORS,
+    _graph_cost,
     _graph_edges,
     _graph_search,
+    _graph_topk,
 )
 from .logio import read_log, write_log_partition
 
@@ -58,9 +55,10 @@ class GraphIngestSink:
         self._schema = None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
         self._schema = write_log_partition(
-            batch_df.select("vec_id", "embedding", norm.alias("nrm")),
+            batch_df.select(
+                "vec_id", "embedding", F.expr(ann.NORM).alias("nrm")
+            ),
             batch_id,
             self.vec_path,
         )
@@ -81,23 +79,9 @@ class GraphIngestSink:
 
     def topk_view(self, spark: SparkSession) -> DataFrame:
         """The batch ``sim_graph_topk`` relation served from the log."""
-        visited = self.visited_view(spark)
-        return top_k_per_key(
-            visited.filter(F.col("vec_id") != F.col("qid")),
-            ["qid"], [F.desc("cos"), F.asc("vec_id")], TOPK_NEIGHBORS,
-        ).select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
+        return _graph_topk(self.visited_view(spark))
 
     def cost_view(self, spark: SparkSession) -> DataFrame:
         """The batch ``sim_graph_cost`` relation served from the log —
         the scored-node cap holds for the streamed index too."""
-        cap = 1 + GRAPH_ROUNDS * GRAPH_BEAM * GRAPH_M
-        return (
-            self.visited_view(spark)
-            .groupBy("qid")
-            .agg(F.count("*").alias("scored_nodes"))
-            .select(
-                "qid", "scored_nodes",
-                F.lit(cap).cast("long").alias("scored_cap"),
-                (F.col("scored_nodes") <= cap).alias("within_cap"),
-            )
-        )
+        return _graph_cost(self.visited_view(spark))

@@ -11,12 +11,13 @@ audit.  The text-space analogue is ``text_contamination``/
 
 Semantics: the watch set is FROZEN at sink construction (watch sets are
 curated, not streamed); per batch, one narrow pass scores arrivals
-against the broadcast watch matrix with the exact same fold expression
-as the batch query, and rows with cos >= tau land in a
-batch_id-partitioned hit log.  Because the hit predicate is a pure
-per-row function of (arrival, watch set), the accumulated log over any
-batching of the corpus equals the batch ``sim_range_search`` relation
-exactly (pinned), and replays rewrite only their own partition.
+against the broadcast watch matrix through the batch query's own serve
+(``ann.exact_scan`` and the radius tail ``llmdata._within_radius``),
+and rows with cos >= tau land in a batch_id-partitioned hit log.
+Because the hit predicate is a pure per-row function of (arrival,
+watch set), the accumulated log over any batching of the corpus equals
+the batch ``sim_range_search`` relation exactly (pinned), and replays
+rewrite only their own partition.
 
 Scale posture: per batch O(batch x |watch|) fold work, all map-side
 (watch set broadcast as literals via a bounded createDataFrame — the
@@ -29,7 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..queries.llmdata import SIM_RANGE_TAU, _SPARK_DOT
+from ..operators import ann
+from ..queries.llmdata import SIM_RANGE_TAU, _within_radius
 from .logio import read_log, write_log_partition
 
 
@@ -47,30 +49,14 @@ class RangeWatchSink:
         self._schema = None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        wdf = spark.createDataFrame(
+        qnorm = F.expr(ann.DOT.format(a="qe", b="qe")).alias("qnorm")
+        wdf = batch_df.sparkSession.createDataFrame(
             self.watch, "qid bigint, qe array<double>"
-        ).select(
-            "qid",
-            "qe",
-            F.expr(_SPARK_DOT.format(a="qe", b="qe")).alias("qnorm"),
+        ).select("qid", "qe", qnorm)
+        arrivals = batch_df.select(
+            "vec_id", "embedding", F.expr(ann.NORM).alias("nrm")
         )
-        norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-        dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-        hits = (
-            batch_df.select("vec_id", "embedding", norm.alias("cnorm"))
-            .join(F.broadcast(wdf))
-            .filter(F.col("vec_id") != F.col("qid"))
-            .select(
-                "qid",
-                "vec_id",
-                (dot / F.sqrt(F.col("qnorm") * F.col("cnorm"))).alias(
-                    "cos"
-                ),
-            )
-            .filter(F.col("cos") >= F.lit(self.tau))
-            .select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
-        )
+        hits = _within_radius(ann.exact_scan(arrivals, wdf), self.tau)
         self._schema = write_log_partition(hits, batch_id, self.hits_path)
 
     def serving_view(self, spark: SparkSession) -> DataFrame:

@@ -15,9 +15,10 @@ mergeable and needs the PCA-drift trigger).  At scale the serve-time
 quantization is one narrow pass; the stats merge is EMB_DIM rows per
 batch.
 
-Pinned EXACTLY equal to the batch ``sim_sq8_topk`` once the same
-vectors are in; replay-idempotent by the dynamic-overwrite contract;
-empty-prefix-safe via :mod:`.logio`.
+Equal to the batch ``sim_sq8_topk`` once the same vectors are in,
+because serving calls the batch stats merge and serve;
+replay-idempotent by the dynamic-overwrite contract; empty-prefix-safe
+via :mod:`.logio`.
 """
 
 from __future__ import annotations
@@ -25,15 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.topk import top_k_per_key
-from ..queries.llmdata import (
-    _SPARK_DOT,
-    _SPARK_IDOT,
-    _SPARK_SQ8_QV,
-    N_QUERY_VECS,
-    SQ8_SHORTLIST,
-    TOPK_NEIGHBORS,
-)
+from ..operators import ann
+from ..queries.llmdata import _sq8_minmax, _sq8_stats, _sq8_topk
 from .logio import read_log, write_log_partition
 
 
@@ -48,95 +42,24 @@ class Sq8IngestSink:
         self._stats_schema = None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        norm = F.expr(_SPARK_DOT.format(a="embedding", b="embedding"))
-        rows = batch_df.select("vec_id", "embedding", norm.alias("nrm"))
+        rows = batch_df.select(
+            "vec_id", "embedding", F.expr(ann.NORM).alias("nrm")
+        )
         self._vec_schema = write_log_partition(
             rows, batch_id, self.vec_path
         )
         # the batch's min/max PARTIAL per dim — mergeable, EMB_DIM rows
-        stats = (
-            batch_df.select(F.posexplode("embedding").alias("dim", "val"))
-            .groupBy("dim")
-            .agg(F.min("val").alias("mn"), F.max("val").alias("mx"))
-        )
         self._stats_schema = write_log_partition(
-            stats, batch_id, self.stats_path
-        )
-
-    def _stats_row(self, spark: SparkSession) -> DataFrame:
-        """Merge the logged per-batch partials into the global one-row
-        (mns, scs) stats relation — identical to the batch build's
-        because min/max merge exactly."""
-        return (
-            read_log(spark, self.stats_path, self._stats_schema)
-            .groupBy("dim")
-            .agg(F.min("mn").alias("mn"), F.max("mx").alias("mx"))
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("dim", "mn", "mx"))
-                ).alias("s")
-            )
-            .select(
-                F.expr("transform(s, x -> cast(x.mn as double))").alias(
-                    "mns"
-                ),
-                F.expr(
-                    "transform(s, x -> (cast(x.mx as double)"
-                    " - cast(x.mn as double)) / 255.0D)"
-                ).alias("scs"),
-            )
+            _sq8_minmax(batch_df), batch_id, self.stats_path
         )
 
     def topk_view(self, spark: SparkSession) -> DataFrame:
-        """The batch ``sim_sq8_topk`` relation served from the log."""
-        vecs = read_log(spark, self.vec_path, self._vec_schema).select(
-            "vec_id", "embedding", "nrm"
+        """The batch ``sim_sq8_topk`` relation served from the log: the
+        logged partials merge into the global stats (``_sq8_stats``,
+        exact because min/max merge exactly) and the logged vectors go
+        through the batch serve (``_sq8_topk``)."""
+        stats = _sq8_stats(
+            read_log(spark, self.stats_path, self._stats_schema)
         )
-        base = (
-            vecs.join(F.broadcast(self._stats_row(spark)))
-            .select(
-                "vec_id",
-                "embedding",
-                "nrm",
-                F.expr(_SPARK_SQ8_QV.format(col="embedding")).alias("qv"),
-            )
-            .withColumn("qn", F.expr(_SPARK_IDOT.format(a="qv", b="qv")))
-            .filter(F.col("qn") > 0)
-        )
-        q = base.filter(F.col("vec_id") < N_QUERY_VECS).select(
-            F.col("vec_id").alias("qid"),
-            F.col("qv").alias("qqv"),
-            F.col("qn").alias("qqn"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qnorm"),
-        )
-        approx = (
-            base.select("vec_id", "qv", "qn")
-            .join(F.broadcast(q.select("qid", "qqv", "qqn")))
-            .filter(F.col("vec_id") != F.col("qid"))
-            .select(
-                "qid", "vec_id",
-                (
-                    F.expr(_SPARK_IDOT.format(a="qv", b="qqv"))
-                    .cast("double")
-                    / F.sqrt((F.col("qn") * F.col("qqn")).cast("double"))
-                ).alias("acos"),
-            )
-        )
-        short = top_k_per_key(
-            approx, ["qid"], [F.desc("acos"), F.asc("vec_id")],
-            SQ8_SHORTLIST,
-        ).select("qid", "vec_id")
-        dot = F.expr(_SPARK_DOT.format(a="qe", b="embedding"))
-        scored = (
-            short.join(base.select("vec_id", "embedding", "nrm"), "vec_id")
-            .join(F.broadcast(q.select("qid", "qe", "qnorm")), "qid")
-            .select(
-                "qid", "vec_id",
-                (dot / F.sqrt(F.col("qnorm") * F.col("nrm"))).alias("cos"),
-            )
-        )
-        return top_k_per_key(
-            scored, ["qid"], [F.desc("cos"), F.asc("vec_id")],
-            TOPK_NEIGHBORS,
-        ).select("qid", "vec_id", F.round("cos", 6).alias("cosine"))
+        vecs = read_log(spark, self.vec_path, self._vec_schema)
+        return _sq8_topk(vecs, stats)

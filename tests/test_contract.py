@@ -494,28 +494,38 @@ def test_batch_id_logs_live_only_in_logio():
 
 
 def test_ann_core_lives_only_in_ann():
-    """The trained-IVF probe fold (squared L2 to a centroid) and the
-    recall-in-basis-points expression are each written once, in
-    ``operators/ann.py``: no query or streaming module spells either
-    itself, so a streamed index view runs the same code as its batch
-    twin instead of a copy kept in step by hand."""
+    """The trained-IVF probe fold (squared L2 to a centroid), the
+    recall-in-basis-points expression, the PQ lookup-table fold and its
+    fixed-point ``dotl`` column are each written once, in
+    ``operators/ann.py``: no query or streaming module spells any of
+    them itself, so a streamed index view runs the same code as its
+    batch twin instead of a copy kept in step by hand.  Nothing imports
+    the retired ``_SPARK_DOT`` alias of ``ann.DOT``."""
     import pathlib
     import re
 
     import beam_scala_examples_spark as pkg
 
-    probe = "(cast(x as double) - y) * (cast(x as double) - y)"
-    recall = re.compile(r"\((?:hits|matches) \* 10000\) div")
+    keys = {
+        "probe": re.compile(
+            re.escape("(cast(x as double) - y) * (cast(x as double) - y)")
+        ),
+        "recall": re.compile(r"\((?:hits|matches) \* 10000\) div"),
+        "lut_fold": re.compile(re.escape("slice(qe, m * ")),
+        "dotl": re.compile(re.escape('alias("dotl")')),
+        "spark_dot_alias": re.compile(r"import _SPARK_DOT|_SPARK_DOT,"),
+    }
     root = pathlib.Path(pkg.__path__[0])
-    found = {"probe": [], "recall": []}
+    found = {k: [] for k in keys}
     for path in sorted(root.rglob("*.py")):
         for line in path.read_text().splitlines():
-            if probe in line:
-                found["probe"].append(path.relative_to(root).as_posix())
-            if recall.search(line):
-                found["recall"].append(path.relative_to(root).as_posix())
+            for k, pat in keys.items():
+                if pat.search(line):
+                    found[k].append(path.relative_to(root).as_posix())
+    once = ["operators/ann.py"]
     assert found == {
-        "probe": ["operators/ann.py"], "recall": ["operators/ann.py"]
+        "probe": once, "recall": once, "lut_fold": once, "dotl": once,
+        "spark_dot_alias": [],
     }
 
 
