@@ -13,7 +13,15 @@ member id), so the jump's label-of-label lookup is a self-join on the
 label relation, never on the corpus.
 
 Per-round cost: one edge-label shuffle join + one label self-join, both
-keyed on high-cardinality ids.  Each round's labels are
+keyed on high-cardinality ids, and one checkpoint action.  The first
+round needs no label join: every node starts as its own label, so its
+propagate is ``least(doc_id, min(doc2))`` from one ``groupBy(doc1)``
+over the edges, and that round's checkpoint also materializes the edge
+layout (a lazy ``repartition("doc2").persist()`` that AQE sizes, about
+1 MiB per partition).  Convergence costs no job of its own: the count
+of labels that moved is an ``observe()`` on the round's checkpoint
+action (``metrics.observe``, Beam's ``Metrics`` read from the running
+pipeline).  Each round's labels are
 ``localCheckpoint``-ed: persist alone leaves the logical plan growing
 ~4× per round (the labels relation appears in the propagate join, the
 least(), and the jump self-join), which overflows Catalyst's tree
@@ -21,13 +29,15 @@ walker after a handful of rounds — checkpointing truncates lineage to
 the materialized result, the standard discipline for iterative Spark
 algorithms (superseded rounds are dropped by the ContextCleaner once
 unreferenced).  ``tests/test_properties.py`` pins the logarithmic round
-count on a diameter-100 chain.
+count on a diameter-100 chain and the jobs per call.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from ..metrics import counter, observe
 
 
 def edge_layout(edges: DataFrame, key: str) -> tuple[DataFrame, int]:
@@ -36,7 +46,10 @@ def edge_layout(edges: DataFrame, key: str) -> tuple[DataFrame, int]:
     parallelism, so one iterative operator lays out a 100 TB graph wide
     and a graph of a few thousand edges narrow — its per-round stages
     then pay a handful of tasks, not one per core (measured at sf0.1:
-    the pHash component resolve ran about 2x faster).
+    the pHash component resolve ran about 2x faster).  Its callers are
+    ``pagerank_int`` and ``relational._pagerank_pairs``, whose edge
+    lists are read once per iteration; ``connected_components`` lets
+    its first round materialize its layout instead.
 
     The width probe counts a persisted staging copy, so the caller's
     edge pipeline is evaluated once, not once for the probe and again
@@ -67,52 +80,55 @@ def connected_components(pairs: DataFrame) -> tuple[DataFrame, int]:
     edges = pairs.unionByName(
         pairs.select(F.col("doc2").alias("doc1"), F.col("doc1").alias("doc2"))
     )
-    edges, np_ = edge_layout(edges, "doc2")
-    labels = (
-        edges.select(F.col("doc1").alias("doc_id"))
-        .distinct()
-        .withColumn("component", F.col("doc_id"))
-        .repartition(np_, "doc_id")
-        .localCheckpoint(eager=True)
-    )
+    # lazy: round 1's checkpoint materializes the layout, at the width
+    # AQE coalesces it to
+    edges = edges.repartition("doc2").persist()
     rounds = 0
     while True:
         rounds += 1
-        neighbor_min = (
-            edges.join(labels, edges.doc2 == labels.doc_id)
-            .groupBy(F.col("doc1").alias("doc_id"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        # carry the round-start label as `prev` so convergence is a
-        # filter on the checkpointed result, not an extra join+job
-        prop = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
+        if rounds == 1:
+            # fused first round: every node starts as its own label, so
+            # the neighbor minimum is min(doc2) and needs no label join
+            # (the edges are symmetric: every node is some doc1)
+            prop = edges.groupBy(F.col("doc1").alias("doc_id")).agg(
+                F.least(F.col("doc_id"), F.min("doc2")).alias("component"),
+                F.col("doc_id").alias("prev"),
+            )
+        else:
+            neighbor_min = (
+                edges.join(labels, edges.doc2 == labels.doc_id)
+                .groupBy(F.col("doc1").alias("doc_id"))
+                .agg(F.min("component").alias("nbr_min"))
+            )
+            # carry the round-start label as `prev` so convergence is
+            # counted on the round's own checkpoint, not an extra join
+            prop = labels.join(neighbor_min, "doc_id", "left").select(
                 "doc_id",
                 F.least(
                     F.col("component"), F.coalesce("nbr_min", "component")
                 ).alias("component"),
                 F.col("component").alias("prev"),
             )
-            .persist()  # read twice by the jump; lazy — materialized
-        )                # once, inside the checkpoint below
+        # read twice by the jump; lazy — materialized once, inside the
+        # checkpoint below
+        prop = prop.persist()
         # pointer jump: label(v) <- label(label(v)); the looked-up node
         # is always present (labels are member doc ids)
         parent = prop.select(
             F.col("doc_id").alias("p_id"), F.col("component").alias("p_comp")
         )
-        jumped = (
-            prop.join(parent, prop.component == parent.p_id, "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("component"), F.coalesce("p_comp", "component")
-                ).alias("component"),
-                "prev",
-            )
-            .localCheckpoint(eager=True)
+        jumped = prop.join(parent, prop.component == parent.p_id, "left").select(
+            "doc_id",
+            F.least(
+                F.col("component"), F.coalesce("p_comp", "component")
+            ).alias("component"),
+            "prev",
         )
-        changed = jumped.filter(F.col("component") != F.col("prev")).count()
+        obs = Observation()
+        jumped = observe(
+            jumped, obs, counter(F.col("component") != F.col("prev"), "changed")
+        ).localCheckpoint(eager=True)
+        changed = obs.get["changed"]
         prop.unpersist(blocking=False)
         labels = jumped.select("doc_id", "component")
         if changed == 0:

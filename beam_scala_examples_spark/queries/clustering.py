@@ -13,24 +13,29 @@ Algorithm (Lloyd's, deterministic end to end):
    closure matrix inside an Arrow-vectorized kernel (MLlib-style
    broadcast of collected centers) so assignment is a narrow map — no
    join fan-out, no shuffle;
- - recompute: element-wise mean per cluster via posexplode ->
-   (cluster, dim) partial sums — one slim shuffle of at most
-   ``K x DIM x partitions`` rows per iteration.  Clusters that lose all
-   members drop out (both engines derive the live set the same way).
+ - recompute: element-wise mean per cluster, from fixed-point partial
+   sums taken inside the same Arrow kernel that assigns
+   (``_lloyd_step``): one ``mapInPandas`` pass yields one
+   (cluster, count, sums) row per live cluster per partition, and the
+   driver adds them up — one job per iteration, no shuffle.  Clusters
+   that lose all members drop out (both engines derive the live set
+   the same way).
 
 Determinism rule (README rule 3): double summation is order-dependent,
 so the recompute sums exact fixed-point longs — each member dim is
 quantized once as ``round(x * 2^20)`` (identical in both engines, same
 convention as ``emb_quantize_int8``) and the mean divides two exact
-integers.  Every centroid coordinate is therefore bit-identical across
-partitionings and engines, and the per-iteration driver collect carries
-the exact state the DuckDB oracle's unrolled CTE chain reproduces.
+integers.  Long sums are associative, so every centroid coordinate is
+bit-identical across partitionings and engines, and the per-iteration
+driver collect carries the exact state the DuckDB oracle's unrolled CTE
+chain reproduces.
 
-Scale posture: per iteration — one narrow assignment pass over the
-corpus (ArrowEvalPython, numpy-vectorized over Arrow batches) plus one
-partial-aggregated shuffle of slim (cluster, dim, sum) rows; driver
-traffic is O(K x DIM) per iteration, independent of corpus size.  This
-is the same loop structure Spark MLlib's KMeans uses at cluster scale.
+Scale posture: per iteration — one narrow pass over the corpus
+(numpy-vectorized over Arrow batches) that assigns and sums; driver
+traffic is O(K x DIM x partitions) longs per iteration, independent of
+corpus size.  This is the same loop structure Spark MLlib's KMeans uses
+at cluster scale (its per-partition ``mapPartitions`` sums, then a
+driver-side reduce).
 """
 
 from __future__ import annotations
@@ -39,6 +44,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from ..operators import ann
 from ..operators.topk import top_k_per_key
@@ -51,38 +57,132 @@ KM_ITERS = 3
 KM_SCALE = 1 << 20  # fixed-point quantum for the exact centroid sums
 
 
+def _nearest_kernel(books: list[list[tuple[int, list[float]]]], sub: int):
+    """(cid_arrs, nearest) for M codebooks of ``(id, codeword)`` pairs,
+    codebook m over dims ``[m * sub, (m + 1) * sub)``: the codeword ids
+    per codebook, and ``nearest(x)``, the (n, M) row positions of each
+    float64 row's nearest codeword in each codebook.  A closure, so the
+    Arrow kernels that call it ship it to the workers by value.
+
+    Exactness (README rule 3): the squared L2 distance accumulates one
+    dimension per step in index order — ``acc += (x_d - c_d)^2`` is a
+    single IEEE double add per element — which is bit-identical to the
+    oracle's left-to-right ``list_sum(list_transform(...))`` fold.
+    numpy argmin returns the first minimum, i.e. the lowest codeword id
+    (codebooks are kept sorted by id), matching the oracle's
+    ``ORDER BY dist, cluster`` tie-break."""
+    cid_arrs = [np.array([cid for cid, _ in b], dtype=np.int64) for b in books]
+    cmats = [np.array([c for _, c in b], dtype=np.float64) for b in books]
+
+    def nearest(x: np.ndarray) -> np.ndarray:
+        n = x.shape[0]
+        out = np.zeros((n, len(cmats)), dtype=np.int64)
+        for m, cmat in enumerate(cmats):
+            acc = np.zeros((n, cmat.shape[0]))
+            for d in range(sub):
+                diff = x[:, m * sub + d : m * sub + d + 1] - cmat[None, :, d]
+                acc += diff * diff
+            out[:, m] = np.argmin(acc, axis=1)
+        return out
+
+    return cid_arrs, nearest
+
+
+def _with_codes(emb: DataFrame, name: str, dtype, codes) -> DataFrame:
+    """(vec_id, ``name``, embedding): ``codes(x)`` of each Arrow batch's
+    float64 embedding matrix, added inside one ``mapInPandas`` — a
+    narrow map with no join fan-out.  The kernel hands back the rows it
+    was given, so unlike a ``pandas_udf`` (ArrowEvalPython) the JVM
+    keeps no queue of input rows to zip the results onto: that queue
+    takes one Tungsten page per task, which the Python worker's monitor
+    thread pins for up to 2 s after the task ends."""
+    src = emb.select("vec_id", "embedding")
+    schema = StructType([
+        src.schema["vec_id"], StructField(name, dtype), src.schema["embedding"]
+    ])
+
+    def add(batches):
+        for pdf in batches:
+            x = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+            pdf.insert(1, name, codes(x))
+            yield pdf
+
+    return src.mapInPandas(add, schema)
+
+
 def _assign(emb: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFrame:
-    """(vec_id, cluster): argmin of squared L2 distance, ties to the
-    lowest cluster id.
+    """(vec_id, cluster, embedding): argmin of squared L2 distance, ties
+    to the lowest cluster id (``_nearest_kernel`` with one codebook).
 
     Arrow-vectorized kernel (the sanctioned Python path for iterative
     numeric ops): centroids ride into the closure as a (K, DIM) float64
     matrix, so the pass is a narrow map with no join fan-out and no
     giant Catalyst literal tree (a K x DIM expression form spends more
-    time in analysis/codegen than in evaluation).
-
-    Exactness (README rule 3): the distance accumulates one dimension
-    per step in index order — ``acc += (x_d - c_d)^2`` is a single IEEE
-    double add per element — which is bit-identical to the oracle's
-    left-to-right ``list_sum(list_transform(...))`` fold.  numpy argmin
-    returns the first minimum, i.e. the lowest cluster id, matching the
-    oracle's ``ORDER BY dist, cluster`` tie-break.
-    """
-    cids = np.array([cid for cid, _ in centroids], dtype=np.int64)
-    cmat = np.array([c for _, c in centroids], dtype=np.float64)
-
-    @F.pandas_udf("long")
-    def nearest(col: pd.Series) -> pd.Series:
-        x = np.vstack(col.to_numpy()).astype(np.float64)
-        acc = np.zeros((x.shape[0], cmat.shape[0]))
-        for d in range(cmat.shape[1]):
-            diff = x[:, d : d + 1] - cmat[None, :, d]
-            acc += diff * diff
-        return pd.Series(cids[np.argmin(acc, axis=1)])
-
-    return emb.select(
-        "vec_id", nearest("embedding").alias("cluster"), "embedding"
+    time in analysis/codegen than in evaluation)."""
+    dim = len(centroids[0][1]) if centroids else 0
+    (cids,), nearest = _nearest_kernel([centroids], dim)
+    return _with_codes(
+        emb, "cluster", LongType(), lambda x: cids[nearest(x)[:, 0]]
     )
+
+
+def _lloyd_partials(
+    emb: DataFrame, books: list[list[tuple[int, list[float]]]], sub: int
+) -> DataFrame:
+    """(m, cluster, cnt, s): one Lloyd step's fixed-point partial sums,
+    one row per live codeword per partition — the assignment
+    (``_nearest_kernel``) and the per-codeword sums run inside one Arrow kernel
+    (``mapInPandas``), a narrow pass over the corpus with no shuffle.
+    ``s`` sums the member dims as ``round(x * 2^20)`` longs, quantized
+    by Spark (HALF_UP, identical to the oracle's ``round``).  The sums
+    are int64 per partition, so a partition holds at most
+    2^63 / (max|x| * 2^20) rows — the same bound Spark's own
+    ``sum(long)`` has."""
+    cid_arrs, nearest = _nearest_kernel(books, sub)
+
+    def step(batches):
+        cnt = [np.zeros(len(c), dtype=np.int64) for c in cid_arrs]
+        tot = [np.zeros((len(c), sub), dtype=np.int64) for c in cid_arrs]
+        for pdf in batches:
+            x = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+            q = np.vstack(pdf["q"].to_numpy()).astype(np.int64)
+            pos = nearest(x)
+            for m in range(len(cid_arrs)):
+                cnt[m] += np.bincount(pos[:, m], minlength=len(cnt[m]))
+                np.add.at(tot[m], pos[:, m], q[:, m * sub : (m + 1) * sub])
+        rows = [
+            (m, int(cid_arrs[m][k]), int(cnt[m][k]), tot[m][k])
+            for m in range(len(cid_arrs))
+            for k in np.flatnonzero(cnt[m])
+        ]
+        if rows:
+            yield pd.DataFrame(rows, columns=["m", "cluster", "cnt", "s"])
+
+    q = F.transform(
+        "embedding",
+        lambda v: F.round(v.cast("double") * KM_SCALE, 0).cast("long"),
+    )
+    return emb.select("embedding", q.alias("q")).mapInPandas(
+        step, "m long, cluster long, cnt long, s array<long>"
+    )
+
+
+def _lloyd_step(
+    emb: DataFrame, books: list[list[tuple[int, list[float]]]], sub: int
+) -> list[list[tuple[int, list[float]]]]:
+    """The M codebooks after one Lloyd step: one Spark job, the
+    per-partition partials of ``_lloyd_partials`` summed on the driver
+    as exact Python ints.  Each new coordinate is an exact long divided
+    by an exact double — the identical IEEE op the oracle's unrolled
+    SQL performs — and a codeword that loses all members drops out."""
+    acc: dict[tuple[int, int], tuple[int, list[int]]] = {}
+    for r in _lloyd_partials(emb, books, sub).collect():
+        n, s = acc.get((r.m, r.cluster), (0, [0] * sub))
+        acc[(r.m, r.cluster)] = (n + r.cnt, [a + b for a, b in zip(s, r.s)])
+    nxt: list[dict[int, list[float]]] = [{} for _ in books]
+    for (m, cid), (n, s) in acc.items():
+        nxt[m][cid] = [v / (n * float(KM_SCALE)) for v in s]
+    return [sorted(b.items()) for b in nxt]
 
 
 def _trained(kind: str, spark: SparkSession, sf_dir: str, trainer,
@@ -101,37 +201,22 @@ def _kmeans_train(emb: DataFrame) -> list[tuple[int, list[float]]]:
     """Centroids after ``KM_ITERS`` Lloyd iterations over a persisted
     (vec_id, embedding) relation — factored out so the trained-IVF
     retrieval path (``sim_ivf_trained_topk``) reuses the exact same
-    quantizer ``emb_kmeans`` ships."""
+    quantizer ``emb_kmeans`` ships.  One job for the init, then one per
+    iteration (``_lloyd_step`` with a single codebook)."""
     init = emb.orderBy("vec_id").limit(KM_K).collect()
     centroids = [
         (cid, [float(v) for v in row.embedding])
         for cid, row in enumerate(init)
     ]
-    q = F.round(F.col("val").cast("double") * KM_SCALE, 0).cast("long")
     for _ in range(KM_ITERS):
-        assigned = _assign(emb, centroids)
-        sums = (
-            assigned.select(
-                "cluster", F.posexplode("embedding").alias("dim", "val")
-            )
-            .groupBy("cluster", "dim")
-            .agg(F.sum(q).alias("s"), F.count("*").alias("cnt"))
-            .collect()
-        )
-        by_cluster: dict[int, list[float]] = {}
-        for row in sums:
-            vec = by_cluster.setdefault(int(row.cluster), [0.0] * EMB_DIM)
-            # exact longs divided by an exact double — the identical
-            # IEEE op the oracle's unrolled SQL performs
-            vec[int(row.dim)] = row.s / (row.cnt * float(KM_SCALE))
-        centroids = sorted(by_cluster.items())
+        (centroids,) = _lloyd_step(emb, [centroids], EMB_DIM)
     return centroids
 
 
 def _emb_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The slim (vec_id, embedding) corpus, repartitioned and persisted
     as a session memo: every trainer / assigner / outlier pass serves
-    from one copy, and Lloyd alone scans it 2*ITERS+1 times from what
+    from one copy, and Lloyd alone scans it ITERS+1 times from what
     may be a single parquet file.  Safe under README rule 3: every
     recompute sums exact fixed-point longs, bit-identical across
     partitionings."""
@@ -993,59 +1078,40 @@ def _pq_encode(
 ) -> DataFrame:
     """(vec_id, codes, embedding): per subspace m, the id of the nearest
     codeword (squared L2 over that subspace's dims, ties to the lowest
-    codeword id).  Same Arrow-vectorized closure-matrix kernel as
-    ``_assign`` — one narrow pass, no join fan-out — generalized to M
-    argmins per row; the per-dim ``acc += diff^2`` accumulation order
-    matches the oracle's left-to-right ``list_sum`` fold exactly (README
-    rule 3)."""
-    cid_arrs = [
-        np.array([cid for cid, _ in cents[m]], dtype=np.int64)
-        for m in range(PQ_M)
-    ]
-    cmats = [
-        np.array([c for _, c in cents[m]], dtype=np.float64)
-        for m in range(PQ_M)
-    ]
-
-    @F.pandas_udf("array<long>")
-    def codes(col: pd.Series) -> pd.Series:
-        x = np.vstack(col.to_numpy()).astype(np.float64)
-        n = x.shape[0]
-        out = np.zeros((n, PQ_M), dtype=np.int64)
-        for m in range(PQ_M):
-            sub = x[:, m * PQ_SUB : (m + 1) * PQ_SUB]
-            acc = np.zeros((n, cmats[m].shape[0]))
-            for d in range(PQ_SUB):
-                diff = sub[:, d : d + 1] - cmats[m][None, :, d]
-                acc += diff * diff
-            out[:, m] = cid_arrs[m][np.argmin(acc, axis=1)]
-        return pd.Series(list(out))
-
-    return emb.select(
-        "vec_id", codes("embedding").alias("codes"), "embedding"
+    codeword id).  The same Arrow-vectorized ``_nearest_kernel`` as
+    ``_assign`` — one narrow ``_with_codes`` pass — with M codebooks."""
+    cid_arrs, nearest = _nearest_kernel(
+        [cents[m] for m in range(PQ_M)], PQ_SUB
     )
+
+    def codes(x: np.ndarray) -> list[np.ndarray]:
+        pos = nearest(x)
+        return list(
+            np.stack([cid_arrs[m][pos[:, m]] for m in range(PQ_M)], axis=1)
+        )
+
+    return _with_codes(emb, "codes", ArrayType(LongType()), codes)
 
 
 def _pq_train(emb: DataFrame) -> dict[int, list[tuple[int, list[float]]]]:
     """Per-subspace codebooks after ``PQ_ITERS`` Lloyd iterations, all M
-    subspaces trained JOINTLY: one assignment pass + one slim
-    partial-aggregated shuffle of (m, codeword, dim, fixed-point sum)
-    rows per iteration — 2 jobs/iteration total, not 2*M.  Init is a
-    deterministic pseudo-random sample — the PQ_K smallest rows by
+    subspaces trained JOINTLY: each iteration is one ``_lloyd_step``
+    over M codebooks — one narrow Arrow pass and one job, not M.  Init
+    is a deterministic pseudo-random sample — the PQ_K smallest rows by
     (md5(vec_id), vec_id), a TakeOrdered, no global sort — sliced per
     subspace (first-K-by-id init seeds all codewords from one corner of
     the space and costs ~5 recall points); recompute uses the
     same exact-integer sums as ``emb_kmeans`` (round(x * 2^20) longs),
     so every codeword coordinate is bit-identical to the DuckDB
     oracle's unrolled CTE chain.  Driver traffic per iteration is
-    O(M * PQ_K * PQ_SUB) rows — independent of corpus size.  (At real
-    scale the trainer conventionally runs over a sample; the encode
-    pass below is the full-corpus scan.)"""
+    O(M * PQ_K * PQ_SUB * partitions) longs — independent of corpus
+    size.  (At real scale the trainer conventionally runs over a
+    sample; the encode pass below is the full-corpus scan.)"""
     init = emb.orderBy(
         F.md5(F.col("vec_id").cast("string")), "vec_id"
     ).limit(PQ_K).collect()
-    cents = {
-        m: [
+    books = [
+        [
             (
                 cid,
                 [float(v) for v in row.embedding[m * PQ_SUB : (m + 1) * PQ_SUB]],
@@ -1053,34 +1119,10 @@ def _pq_train(emb: DataFrame) -> dict[int, list[tuple[int, list[float]]]]:
             for cid, row in enumerate(init)
         ]
         for m in range(PQ_M)
-    }
-    q = F.round(F.col("val").cast("double") * KM_SCALE, 0).cast("long")
+    ]
     for _ in range(PQ_ITERS):
-        assigned = _pq_encode(emb, cents)
-        sums = (
-            assigned.select(
-                "codes", F.posexplode("embedding").alias("dim", "val")
-            )
-            .select(
-                F.expr(f"dim div {PQ_SUB}").alias("m"),
-                F.expr(f"codes[dim div {PQ_SUB}]").alias("cluster"),
-                (F.col("dim") % PQ_SUB).alias("i"),
-                q.alias("q"),
-            )
-            .groupBy("m", "cluster", "i")
-            .agg(F.sum("q").alias("s"), F.count("*").alias("cnt"))
-            .collect()
-        )
-        nxt: dict[int, dict[int, list[float]]] = {m: {} for m in range(PQ_M)}
-        for row in sums:
-            vec = nxt[int(row.m)].setdefault(
-                int(row.cluster), [0.0] * PQ_SUB
-            )
-            # exact longs divided by an exact double — the identical
-            # IEEE op the oracle's unrolled SQL performs
-            vec[int(row.i)] = row.s / (row.cnt * float(KM_SCALE))
-        cents = {m: sorted(nxt[m].items()) for m in range(PQ_M)}
-    return cents
+        books = _lloyd_step(emb, books, PQ_SUB)
+    return dict(enumerate(books))
 
 
 def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1151,7 +1193,7 @@ def _pq_common_ctes() -> list[str]:
     sub-vectors, LUT.  ``sim_pq_topk`` appends the full-corpus ADC
     ``scored`` stage; ``sim_ivfpq_topk`` appends the IVF-restricted
     one."""
-    from .llmdata import N_QUERY_VECS, TOPK_NEIGHBORS, _duck_dot
+    from .llmdata import N_QUERY_VECS, _duck_dot
 
     sub_dist = (
         f"list_sum(list_transform(generate_series(1, {PQ_SUB}),"
@@ -3421,7 +3463,6 @@ QUERIES["sim_prf_probe_sweep"] = sim_prf_probe_sweep
 
 def _prf_probe_sweep_oracle() -> str:
     from .llmdata import EMB_DIM as _D
-    from .llmdata import ORACLE as _LLM_ORACLE
 
     dist = (
         f"list_sum(list_transform(generate_series(1, {EMB_DIM}),"

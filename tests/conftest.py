@@ -27,3 +27,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return TEST_SF_DIR
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> (fn(), the number of Spark jobs fn ran),
+    counted under a dedicated job group."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{id(fn)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # job-start events reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -12,7 +12,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from beam_scala_examples_spark.queries import QUERIES
-from beam_scala_examples_spark.queries.clustering import KM_K
+from beam_scala_examples_spark.queries.clustering import (
+    KM_ITERS, KM_K, KM_SCALE, _assign, _emb_corpus, _kmeans_train,
+    _lloyd_partials,
+)
+from beam_scala_examples_spark.queries.llmdata import EMB_DIM
 from beam_scala_examples_spark.session import clear_session_memos
 from tests.test_plans import plan_str
 
@@ -51,16 +55,75 @@ def test_kmeans_assignment_is_narrow(spark, sf_dir):
     centroids ride in the kernel closure.  The only Exchange allowed is
     the one-time repartition *inside* the cached corpus relation (spreads
     a single parquet file across the cluster once); everything above the
-    InMemoryTableScan must be a narrow Arrow-vectorized map."""
+    InMemoryTableScan must be a narrow Arrow-vectorized map — a
+    MapInPandas, which keeps no queue of input rows on the JVM side as a
+    pandas_udf (ArrowEvalPython) does."""
     p = plan_str(QUERIES["emb_kmeans"](spark, sf_dir))
     for join_op in ("SortMergeJoin", "BroadcastHashJoin",
                     "BroadcastNestedLoopJoin", "CartesianProduct"):
         assert join_op not in p
-    assert "ArrowEvalPython" in p       # vectorized, not row-at-a-time
+    assert "MapInPandas" in p           # vectorized, not row-at-a-time
+    assert "ArrowEvalPython" not in p
     assert "BatchEvalPython" not in p
     above_cache = p.split("InMemoryRelation")[0]
     assert "InMemoryTableScan" in above_cache  # assignment reads the cache
     assert "Exchange" not in above_cache  # narrow above the cached corpus
+
+
+def test_lloyd_step_is_narrow(spark, sf_dir):
+    """A Lloyd step assigns and sums inside one Arrow map over the
+    cached corpus: no Exchange above the InMemoryRelation."""
+    emb = _emb_corpus(spark, sf_dir)
+    init = emb.orderBy("vec_id").limit(KM_K).collect()
+    cents = [(cid, list(r.embedding)) for cid, r in enumerate(init)]
+    p = plan_str(_lloyd_partials(emb, [cents], EMB_DIM))
+    above_cache = p.split("InMemoryRelation")[0]
+    assert "InMemoryTableScan" in above_cache
+    assert "MapInPandas" in above_cache
+    assert "Exchange" not in above_cache
+
+
+def _posexplode_kmeans(emb):
+    """The Lloyd recompute as a posexplode -> (cluster, dim) shuffle
+    aggregate: the reference the in-kernel sums must equal."""
+    init = emb.orderBy("vec_id").limit(KM_K).collect()
+    cents = [(cid, [float(v) for v in r.embedding]) for cid, r in enumerate(init)]
+    q = F.round(F.col("val").cast("double") * KM_SCALE, 0).cast("long")
+    for _ in range(KM_ITERS):
+        sums = (
+            _assign(emb, cents)
+            .select("cluster", F.posexplode("embedding").alias("dim", "val"))
+            .groupBy("cluster", "dim")
+            .agg(F.sum(q).alias("s"), F.count("*").alias("cnt"))
+            .collect()
+        )
+        nxt: dict[int, list[float]] = {}
+        for r in sums:
+            vec = nxt.setdefault(int(r.cluster), [0.0] * EMB_DIM)
+            vec[int(r.dim)] = r.s / (r.cnt * float(KM_SCALE))
+        cents = sorted(nxt.items())
+    return cents
+
+
+def test_kmeans_train_matches_shuffle_recompute(spark, sf_dir):
+    """The in-kernel partial sums give the same centroids, bit for bit,
+    as the shuffle aggregate of the same fixed-point longs."""
+    emb = _emb_corpus(spark, sf_dir)
+    got = _kmeans_train(emb)
+    want = _posexplode_kmeans(emb)
+    assert [c for c, _ in got] == [c for c, _ in want]
+    for (_, a), (_, b) in zip(got, want):
+        assert a == b  # float equality: exact, not approximate
+
+
+def test_kmeans_train_job_count(spark, sf_dir, count_jobs):
+    """Training on the materialized corpus runs the init plus one job
+    per Lloyd iteration (7 jobs when each step was an assign, a shuffle
+    aggregate and a collect)."""
+    emb = _emb_corpus(spark, sf_dir)
+    emb.count()
+    _, jobs = count_jobs(lambda: _kmeans_train(emb))
+    assert 0 < jobs <= KM_ITERS + 2, f"{jobs} jobs"
 
 
 def test_bq_recall_beats_single_table_lsh(spark, sf_dir):

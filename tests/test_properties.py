@@ -209,6 +209,43 @@ def test_connected_components_mixed_graph(spark):
     )
 
 
+def test_connected_components_job_count(spark, count_jobs):
+    """The mixed graph resolves in at most 17 Spark jobs (27 before the
+    fused first round, the observed convergence count and the lazy edge
+    layout): each job is a fixed 25-40 ms at this scale."""
+    from beam_scala_examples_spark.operators.graph import connected_components
+
+    edges = (
+        [(10, i) for i in (11, 12, 13)]
+        + [(20, 21), (21, 22), (22, 20)]
+        + [(30, 31)]
+    )
+    df = spark.createDataFrame(edges, "doc1 long, doc2 long")
+    (labels, rounds), jobs = count_jobs(lambda: connected_components(df))
+    assert labels.count() == 9 and rounds == 2
+    assert 0 < jobs <= 17, f"{jobs} jobs"
+
+
+def test_connected_components_empty_pairs(spark):
+    """No pairs: 0 labels in 1 round — the round's convergence
+    ``Observation`` still fires on an empty checkpoint, so the loop
+    neither blocks nor spins."""
+    import threading
+
+    from beam_scala_examples_spark.operators.graph import connected_components
+
+    df = spark.createDataFrame([], "doc1 long, doc2 long")
+    out: dict = {}
+    t = threading.Thread(
+        target=lambda: out.update(res=connected_components(df)), daemon=True
+    )
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive(), "connected_components blocked on empty pairs"
+    labels, rounds = out["res"]
+    assert labels.count() == 0 and rounds == 1
+
+
 def test_stateful_rounding_matches_spark_round(spark):
     """The streaming fold's rounding must equal Spark F.round on the
     .xx5 double boundaries where Python round() (banker's) and raw
