@@ -145,13 +145,16 @@ def rerank_scan(
     """(tags..., qid, vec_id, cos): a ``(qid, vec_id, tags...)``
     candidate relation (a shortlist, LSH mates, a graph frontier)
     scored exactly, row for row as given — the candidates decide
-    whether a query's own row is among them.  The candidates are
-    broadcast into the corpus scan, so the float vectors are read only
-    for candidate rows; tags such as a shortlist rank ride through."""
+    whether a query's own row is among them.  Only candidate rows
+    reach the float vectors; tags such as a shortlist rank ride
+    through.  The candidate join is the planner's choice: a shortlist
+    or graph frontier is bounded by queries × budget and broadcasts
+    at its size, but LSH mates grow with the corpus, so nothing forces
+    them onto every executor.  The queries are bounded and broadcast."""
     tags = [c for c in cands.columns if c not in ("qid", "vec_id")]
     return (
         corpus.select("vec_id", "embedding", "nrm")
-        .join(F.broadcast(cands), "vec_id")
+        .join(cands, "vec_id")
         .join(F.broadcast(queries), "qid")
         .select(*tags, "qid", "vec_id", cosine())
     )

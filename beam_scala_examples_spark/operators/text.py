@@ -1,4 +1,4 @@
-"""Text operators: tokenizers, prefix expansion, formatting.
+"""Text operators: tokenizers and prefix expansion.
 
 The reference keeps *different* tokenizers per pipeline (SURVEY §2.11-N6):
 wordcount splits on ``[^\\p{L}]+`` (``common/ExampleUtils.java:75``),
@@ -51,8 +51,3 @@ def all_prefixes(df: DataFrame, col: str, *, min_prefix: int = 1,
             )
         ),
     )
-
-
-def format_kv(df: DataFrame, key: str, value: str, out: str = "formatted") -> DataFrame:
-    """KV -> "key: value" (P4, ``WordCount.scala:91-94``)."""
-    return df.select(F.format_string("%s: %d", F.col(key), F.col(value)).alias(out))

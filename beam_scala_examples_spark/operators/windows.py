@@ -50,11 +50,6 @@ def session(df: DataFrame, ts: str, gap: str, out: str = "win") -> DataFrame:
     return df.withColumn(out, F.session_window(F.col(ts), gap))
 
 
-def calendar_month(ts: Column) -> Column:
-    """CalendarWindows.months(1) (W4) — batch path via date_trunc."""
-    return F.date_trunc("month", ts)
-
-
 def win_start(out: str = "win") -> Column:
     return F.col(f"{out}.start")
 

@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from ..operators import ann
+from ..operators.pairs import self_pairs
 from ..operators.topk import top_k_per_key
 from ..session import hold, memo
 from ..tables import load
@@ -434,13 +435,10 @@ def dedup_semantic_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = hold("kmeans_corpora/sem_base", emb.join(assign, "vec_id").select(
         "vec_id", "cluster", "embedding", norm.alias("nrm")
     ).persist)
-    a = base.alias("a")
-    b = base.alias("b")
     dot = F.expr(ann.DOT.format(a="a.embedding", b="b.embedding"))
     cos = dot / F.sqrt(F.col("a.nrm") * F.col("b.nrm"))
     return (
-        a.join(b, "cluster")
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
+        self_pairs(base, "cluster", "vec_id")
         .select(
             F.col("a.vec_id").alias("v1"),
             F.col("b.vec_id").alias("v2"),
@@ -507,8 +505,6 @@ def emb_label_centroid_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("label", "pos")
         .agg(F.sum("q").alias("s"), F.count("*").alias("c"))
     )
-    a = sums.alias("a")
-    b = sums.alias("b")
     term = F.round(
         F.pow(
             (F.col("a.s") / F.col("a.c") - F.col("b.s") / F.col("b.c"))
@@ -518,8 +514,7 @@ def emb_label_centroid_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
         * 1e6
     ).cast("long")
     return (
-        a.join(b, "pos")
-        .filter(F.col("a.label") < F.col("b.label"))
+        self_pairs(sums, "pos", "label")
         .select(
             F.col("a.label").alias("label_a"),
             F.col("b.label").alias("label_b"),

@@ -36,6 +36,7 @@ from pyspark.sql.window import Window
 
 from ..operators import ann
 from ..operators.carry import sharded_prefix_sum, sharded_row_number
+from ..operators.pairs import hamming_bands, overlap_pairs, self_pairs
 from ..operators.topk import top_k_per_key
 from ..session import hold, memo
 from ..tables import load
@@ -96,6 +97,14 @@ def _doc_shingles(docs: DataFrame, distinct: bool) -> DataFrame:
 def _shingles(spark: SparkSession, sf_dir: str, distinct: bool = True) -> DataFrame:
     """``_doc_shingles`` of the sf_dir documents, distinct by default."""
     return _doc_shingles(load(spark, sf_dir, "documents"), distinct)
+
+
+def _shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc1, doc2, inter, n1, n2): the shared-shingle count and both
+    shingle-set sizes of every document pair sharing a shingle."""
+    return overlap_pairs(
+        _shingles(spark, sf_dir), "shingle", "doc_id", ("doc1", "doc2", "inter")
+    )
 
 
 def _duck_shingle_cte() -> str:
@@ -218,16 +227,8 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-width per doc — O(docs) rows — small relative to the corpus
     even at 100 TB.
     """
-    sigs = dedup_minhash_lsh(spark, sf_dir)
-    a = sigs.alias("a")
-    # SHUFFLE_HASH: both sides are the same relation, so sort-merge's two
-    # per-partition sorts buy nothing; the per-partition hash build is
-    # rows/partitions — size shuffle partitions to the corpus (drop the
-    # hint under memory pressure; SMJ spills, SHJ does not).
-    b = sigs.alias("b").hint("SHUFFLE_HASH")
     return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        self_pairs(dedup_minhash_lsh(spark, sf_dir), ["band", "bucket"], "doc_id")
         .select(
             F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2")
         )
@@ -298,19 +299,14 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both self-join sides read the session fingerprint store
     (``_simhash60_memo``, round 11) — no per-call persist churn.
     """
-    sig = _simhash60_memo(spark, sf_dir)
-    width = SIMHASH_PAIR_BITS // SIMHASH_PAIR_BANDS
-    mask = (1 << width) - 1
-    bands = sig.select(
-        "doc_id",
+    bands = hamming_bands(
+        _simhash60_memo(spark, sf_dir),
         "sig",
-        F.explode(F.expr(f"sequence(0, {SIMHASH_PAIR_BANDS - 1})")).alias("band"),
-    ).withColumn("bucket", F.expr(f"shiftright(sig, band * {width}) & {mask}"))
-    a = bands.alias("a")
-    b = bands.alias("b").hint("SHUFFLE_HASH")
+        SIMHASH_PAIR_BANDS,
+        SIMHASH_PAIR_BITS // SIMHASH_PAIR_BANDS,
+    )
     return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        self_pairs(bands, ["band", "bucket"], "doc_id")
         .select(
             F.col("a.doc_id").alias("doc1"),
             F.col("b.doc_id").alias("doc2"),
@@ -360,28 +356,6 @@ def _jaccard_pairs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     production it is an ingest-time dedup index built once per corpus."""
 
     def build() -> DataFrame:
-        sh = _shingles(spark, sf_dir).select("doc_id", "shingle")
-        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-        a = sh.alias("a")
-        # SHUFFLE_HASH over sort-merge: measured ~20% faster (both
-        # sides are the identical relation; the sorts are pure
-        # overhead). See the minhash pair join for the memory caveat.
-        b = sh.alias("b").hint("SHUFFLE_HASH")
-        inter = (
-            a.join(b, "shingle")
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .groupBy(
-                F.col("a.doc_id").alias("doc1"),
-                F.col("b.doc_id").alias("doc2"),
-            )
-            .agg(F.count("*").alias("inter"))
-        )
-        s1 = sizes.select(
-            F.col("doc_id").alias("doc1"), F.col("n").alias("n1")
-        )
-        s2 = sizes.select(
-            F.col("doc_id").alias("doc2"), F.col("n").alias("n2")
-        )
         jac = F.col("inter") / (F.col("n1") + F.col("n2") - F.col("inter"))
         # round 11 (second pass): the store also carries the exact
         # verify integers (i, n1, n2) — slim int64 columns — so
@@ -389,8 +363,7 @@ def _jaccard_pairs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
         # store instead of re-running the self-join; value consumers
         # project them away.
         return (
-            inter.join(s1, "doc1")
-            .join(s2, "doc2")
+            _shingle_overlap(spark, sf_dir)
             .filter(jac >= JACCARD_THRESHOLD)
             .select(
                 "doc1",
@@ -741,13 +714,10 @@ def dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
     norm = F.expr(ann.NORM)
     base = emb.select("vec_id", "embedding", bucket.alias("bucket"), norm.alias("nrm"))
-    a = base.alias("a")
-    b = base.alias("b")
     dot = F.expr(ann.DOT.format(a="a.embedding", b="b.embedding"))
     cos = dot / F.sqrt(F.col("a.nrm") * F.col("b.nrm"))
     return (
-        a.join(b, "bucket")
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
+        self_pairs(base, "bucket", "vec_id")
         .select(
             F.col("a.vec_id").alias("v1"),
             F.col("b.vec_id").alias("v2"),
@@ -2868,22 +2838,9 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same scale shape as the Jaccard verify: join on shingle, so only
     pairs sharing a shingle materialize; at 100 TB the input is the LSH
     candidate set, not the corpus cross-product."""
-    sh = _shingles(spark, sf_dir).select("doc_id", "shingle")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b").hint("SHUFFLE_HASH")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2"))
-        .agg(F.count("*").alias("inter"))
-    )
-    s1 = sizes.select(F.col("doc_id").alias("doc1"), F.col("n").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("doc2"), F.col("n").alias("n2"))
     cont = F.col("inter") / F.least("n1", "n2")
     return (
-        inter.join(s1, "doc1")
-        .join(s2, "doc2")
+        _shingle_overlap(spark, sf_dir)
         .filter(cont >= CONTAINMENT_THRESHOLD)
         .select("doc1", "doc2", F.round(cont, 6).alias("containment"))
     )
@@ -3653,10 +3610,8 @@ def dedup_prefix_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= F.col("n") - F.expr("(7 * n + 9) div 10") + 1)
         .select("doc_id", "shingle", "n")
     )
-    a, b = prefix.alias("a"), prefix.alias("b")
     cand = (
-        a.join(b, "shingle")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        self_pairs(prefix, "shingle", "doc_id")
         # round 11 (guide §3.2 — prune before the expensive verify):
         # the size bound of the prefix-filter literature — i <=
         # min(n1, n2) and union >= max(n1, n2), so jaccard >= 0.7
@@ -4771,14 +4726,9 @@ def emb_cosine_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = emb.select(
         "vec_id", "embedding", bucket.alias("bucket"), norm.alias("nrm")
     )
-    a, b = base.alias("a"), base.alias("b")
     dot = F.expr(ann.DOT.format(a="a.embedding", b="b.embedding"))
     cos = dot / F.sqrt(F.col("a.nrm") * F.col("b.nrm"))
-    pairs = (
-        a.join(b, "bucket")
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(cos.alias("cos"))
-    )
+    pairs = self_pairs(base, "bucket", "vec_id").select(cos.alias("cos"))
     aggs = [
         F.sum(F.when(F.col("cos") >= t / 100.0, 1).otherwise(0)).alias(
             f"pairs_c{t}"
@@ -4996,10 +4946,8 @@ def dedup_minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cfg", "band", "bucket"
         ),
     )
-    a, b = banded.alias("a"), banded.alias("b").hint("SHUFFLE_HASH")
     cand = (
-        a.join(b, ["cfg", "band", "bucket"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        self_pairs(banded, ["cfg", "band", "bucket"], "doc_id")
         .select(
             "cfg",
             F.col("a.doc_id").alias("doc1"),
@@ -5478,24 +5426,9 @@ def data_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     either side drop via the null filter exactly as the inner join
     dropped them.
     """
-    sh = _shingles(spark, sf_dir).select("doc_id", "shingle")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b").hint("SHUFFLE_HASH")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2")
-        )
-        .agg(F.count("*").alias("inter"))
-    )
-    s1 = sizes.select(F.col("doc_id").alias("doc1"), F.col("n").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("doc2"), F.col("n").alias("n2"))
     jac = F.col("inter") / (F.col("n1") + F.col("n2") - F.col("inter"))
-    pairs = (
-        inter.join(s1, "doc1").join(s2, "doc2")
-        .select("doc1", "doc2", jac.alias("jac"))
+    pairs = _shingle_overlap(spark, sf_dir).select(
+        "doc1", "doc2", jac.alias("jac")
     )
     sym = pairs.select(
         F.col("doc1").alias("anchor"), F.col("doc2").alias("other"), "jac"
@@ -6242,15 +6175,12 @@ def dedup_lsh_novelty_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join — exactly ``dedup_minhash_pairs``'s sanctioned shape, one
     extra count aggregate on (doc, earlier) before the min."""
     sigs = dedup_minhash_lsh(spark, sf_dir)
-    a = sigs.alias("a")
-    b = sigs.alias("b").hint("SHUFFLE_HASH")
     # one row per (doc, band) by construction, so count(*) counts bands
     votes = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("b.doc_id") < F.col("a.doc_id"))
+        self_pairs(sigs, ["band", "bucket"], "doc_id")
         .groupBy(
-            F.col("a.doc_id").alias("doc_id"),
-            F.col("b.doc_id").alias("earlier"),
+            F.col("b.doc_id").alias("doc_id"),
+            F.col("a.doc_id").alias("earlier"),
         )
         .agg(F.count("*").alias("nb"))
     )
@@ -7950,38 +7880,24 @@ def text_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     no band collapse to blow up one bucket); the per-doc print counts
     join back broadcast-free on doc_id.  Never all-pairs; gram text
     never shuffles."""
-    # round 11 (guide §1.2): the distinct (doc_id, fp) selection is a
-    # projection of the session prints memo — the match step no longer
-    # re-md5s every gram of the corpus per call.
-    prints = (
-        winnow_prints_memo(spark, sf_dir)
-        .select("doc_id", "fp")
-        .distinct()
-    )
-    counts = prints.groupBy("doc_id").agg(F.count("*").alias("n_prints"))
-    a = prints.select(F.col("doc_id").alias("doc_a"), "fp")
-    b = prints.select(F.col("doc_id").alias("doc_b"), "fp")
-    pairs = (
-        a.join(b, "fp")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("shared_prints"))
-        .filter(F.col("shared_prints") >= WINNOW_MIN_SHARED)
-    )
-    ca = counts.select(F.col("doc_id").alias("doc_a"),
-                       F.col("n_prints").alias("na"))
-    cb = counts.select(F.col("doc_id").alias("doc_b"),
-                       F.col("n_prints").alias("nb"))
+    # the prints are the session memo's, so the match step does not
+    # re-md5 every gram of the corpus per call
+    return winnow_pairs_from_prints(winnow_prints_memo(spark, sf_dir))
+
+
+def winnow_pairs_from_prints(prints: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, shared_prints, overlap_bp) over a (doc_id, fp)
+    print relation (other columns are ignored, duplicates count once):
+    the match step of :func:`text_winnow_pairs`, which the streaming
+    registry (``streaming/winnowview.py``) serves from its print log."""
     return (
-        pairs.join(ca, "doc_a")
-        .join(cb, "doc_b")
+        overlap_pairs(prints, "fp", "doc_id", ("doc_a", "doc_b", "shared_prints"))
+        .filter(F.col("shared_prints") >= WINNOW_MIN_SHARED)
         .select(
             "doc_a",
             "doc_b",
             "shared_prints",
-            F.expr(
-                "(shared_prints * 10000) div least(na, nb)"
-            ).alias("overlap_bp"),
+            F.expr("(shared_prints * 10000) div least(n1, n2)").alias("overlap_bp"),
         )
     )
 
@@ -8153,15 +8069,13 @@ def winnow_regions_from_prints(prints: DataFrame) -> DataFrame:
     already-positioned (doc_id, fp, pos) print relation — factored so
     the streaming card (``streaming/cardview.py``) can serve regions
     from its accumulated positioned-print log."""
-    a = prints.select(F.col("doc_id").alias("doc_a"), "fp",
-                      F.col("pos").alias("pa"))
-    b = prints.select(F.col("doc_id").alias("doc_b"), "fp",
-                      F.col("pos").alias("pb"))
-    mp = (
-        a.join(b, "fp")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "fp", "pa", "pb",
-                (F.col("pb") - F.col("pa")).alias("diag"))
+    mp = self_pairs(prints, "fp", "doc_id").select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        "fp",
+        F.col("a.pos").alias("pa"),
+        F.col("b.pos").alias("pb"),
+        (F.col("b.pos") - F.col("a.pos")).alias("diag"),
     )
     gate = (
         mp.groupBy("doc_a", "doc_b")
@@ -8451,16 +8365,13 @@ def multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: candidate cost is Σ|bucket|² over (band, 16-bit bucket) —
     never all-pairs; at 100 TB widen the hash (32×32 DCT input, 256-bit
     hash, more bands) so bucket occupancy stays bounded, plan
-    unchanged.  Both self-join sides read :func:`phash_banded`'s
-    checkpointed banding relation — O(gated images × bands) slim rows;
-    the render+hash pipeline runs once and raster bytes never reach the
+    unchanged.  Both self-join sides read :func:`phash_bands` over the
+    checkpointed hash relation — O(gated images × bands) slim rows; the
+    render+hash pipeline runs once and raster bytes never reach the
     join."""
-    bands = phash_banded(spark, sf_dir)
-    a = bands.alias("a")
-    b = bands.alias("b").hint("SHUFFLE_HASH")
+    bands = phash_bands(_phash_relation(spark, sf_dir))
     return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("a.img_id") < F.col("b.img_id"))
+        self_pairs(bands, ["band", "bucket"], "img_id")
         .select(
             F.col("a.img_id").alias("img_a"),
             F.col("b.img_id").alias("img_b"),
@@ -8771,29 +8682,16 @@ ORACLE["text_winnow_coverage"] = f"""
 """
 
 
-def phash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(img_id, phash, band, bucket) for gate-passing images — the
-    shared banding relation behind the pair and novelty queries and the
-    ingest sink."""
-    sig = _phash_relation(spark, sf_dir).filter(
+def phash_bands(hashes: DataFrame) -> DataFrame:
+    """(img_id, phash, band, bucket) for the gate-passing rows of an
+    (img_id, phash) relation — the banding behind the pair and novelty
+    queries (over the session hash memo, so banding is a cheap
+    projection of a checkpointed int64 relation) and the ingest sink
+    (over a micro-batch's hashes)."""
+    gated = hashes.select("img_id", "phash").filter(
         F.expr("bit_count(phash)") >= PHASH_MIN_BITS
     )
-    return (
-        sig.select(
-            "img_id",
-            "phash",
-            F.explode(
-                F.expr(f"sequence(0, {PHASH_BANDS - 1})")
-            ).alias("band"),
-        )
-        .withColumn(
-            "bucket", F.expr("shiftright(phash, band * 16) & 65535")
-        )
-        # round 11: the hashes ride the session memo (_phash_relation),
-        # so banding is a cheap projection off the checkpointed int64
-        # relation — the per-call checkpoint of the banding itself is
-        # gone (it re-materialized a projection every call).
-    )
+    return hamming_bands(gated, "phash", PHASH_BANDS, 16)
 
 
 def multimodal_phash_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8806,7 +8704,7 @@ def multimodal_phash_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: bucket-keyed min-aggregate + join back — Σ|bucket|² bounded
     by the entropy gate; never all-pairs."""
-    bands = phash_banded(spark, sf_dir)
+    bands = phash_bands(_phash_relation(spark, sf_dir))
     firsts = bands.groupBy("band", "bucket").agg(
         F.min("img_id").alias("first_img")
     )
@@ -8868,17 +8766,14 @@ def multimodal_phash_novelty_verified(
     Scale: identical candidate cost (Σ|bucket|² over entropy-gated
     banded buckets); the verify is one bit_count per candidate pair —
     never all-pairs."""
-    bands = phash_banded(spark, sf_dir)
-    a = bands.alias("a")
-    b = bands.alias("b").hint("SHUFFLE_HASH")
+    bands = phash_bands(_phash_relation(spark, sf_dir))
     prior = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("b.img_id") < F.col("a.img_id"))
+        self_pairs(bands, ["band", "bucket"], "img_id")
         .filter(
             F.expr("bit_count(a.phash ^ b.phash)") <= PHASH_HAMMING_MAX
         )
-        .groupBy(F.col("a.img_id").alias("img_id"))
-        .agg(F.min(F.col("b.img_id")).alias("dup_of"))
+        .groupBy(F.col("b.img_id").alias("img_id"))
+        .agg(F.min(F.col("a.img_id")).alias("dup_of"))
     )
     docs = load(spark, sf_dir, "documents")
     all_imgs = _phash_image_corpus(docs).select("img_id")
@@ -9316,35 +9211,21 @@ def multimodal_video_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     one render pass; at 100 TB the bucket term is bounded by signature
     entropy (widen the hash / add scene-position to the key if a
     degenerate corpus piles one bucket)."""
-    sigs = (
-        _video_scene_relation(spark, sf_dir)
-        .filter(F.col("plane_px") >= VIDEO_MIN_PLANE_PX)
-        .select("vid_id", "sig")
-        .distinct()
-    )
-    cnt = sigs.groupBy("vid_id").agg(F.count("*").alias("n"))
-    a = sigs.alias("a")
-    b = sigs.alias("b").hint("SHUFFLE_HASH")
-    shared = (
-        a.join(b, "sig")
-        .filter(F.col("a.vid_id") < F.col("b.vid_id"))
-        .groupBy(
-            F.col("a.vid_id").alias("vid_a"),
-            F.col("b.vid_id").alias("vid_b"),
-        )
-        .agg(F.count("*").alias("n_shared"))
-    )
-    ca = cnt.alias("ca")
-    cb = cnt.alias("cb")
+    return video_pairs_from_scenes(_video_scene_relation(spark, sf_dir))
+
+
+def video_pairs_from_scenes(scenes: DataFrame) -> DataFrame:
+    """(vid_a, vid_b, n_shared, jaccard_bp) over a scene-signature
+    relation (vid_id, plane_px, sig, ...): the plane gate, then the
+    shared-signature overlap of the gated (vid_id, sig) set verified at
+    ``VIDEO_DUP_MIN_JACCARD_BP`` — :func:`multimodal_video_pairs` over
+    the session scene memo, and the streaming registry's serving view
+    (``streaming/videodupview.py``) over its signature log."""
+    gated = scenes.filter(F.col("plane_px") >= VIDEO_MIN_PLANE_PX)
+    bp = F.expr("(n_shared * 10000) div (n1 + n2 - n_shared)")
     return (
-        shared.join(ca, F.col("vid_a") == F.col("ca.vid_id"))
-        .join(cb, F.col("vid_b") == F.col("cb.vid_id"))
-        .select(
-            "vid_a", "vid_b", "n_shared",
-            F.expr(
-                "(n_shared * 10000) div (ca.n + cb.n - n_shared)"
-            ).alias("jaccard_bp"),
-        )
+        overlap_pairs(gated, "sig", "vid_id", ("vid_a", "vid_b", "n_shared"))
+        .select("vid_a", "vid_b", "n_shared", bp.alias("jaccard_bp"))
         .filter(F.col("jaccard_bp") >= VIDEO_DUP_MIN_JACCARD_BP)
     )
 
@@ -9669,29 +9550,10 @@ def multimodal_audio_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     render pass; a chance 32-bit word collision shares one word out of
     many and fails the verify."""
     words = _audio_words(_audio_fp_relation(spark, sf_dir))
-    cnt = words.groupBy("aud_id").agg(F.count("*").alias("n"))
-    a = words.alias("a")
-    b = words.alias("b").hint("SHUFFLE_HASH")
-    shared = (
-        a.join(b, "word")
-        .filter(F.col("a.aud_id") < F.col("b.aud_id"))
-        .groupBy(
-            F.col("a.aud_id").alias("aud_a"),
-            F.col("b.aud_id").alias("aud_b"),
-        )
-        .agg(F.count("*").alias("n_shared"))
-    )
-    ca = cnt.alias("ca")
-    cb = cnt.alias("cb")
+    bp = F.expr("(n_shared * 10000) div (n1 + n2 - n_shared)")
     return (
-        shared.join(ca, F.col("aud_a") == F.col("ca.aud_id"))
-        .join(cb, F.col("aud_b") == F.col("cb.aud_id"))
-        .select(
-            "aud_a", "aud_b", "n_shared",
-            F.expr(
-                "(n_shared * 10000) div (ca.n + cb.n - n_shared)"
-            ).alias("jaccard_bp"),
-        )
+        overlap_pairs(words, "word", "aud_id", ("aud_a", "aud_b", "n_shared"))
+        .select("aud_a", "aud_b", "n_shared", bp.alias("jaccard_bp"))
         .filter(F.col("jaccard_bp") >= AUDIO_DUP_MIN_JACCARD_BP)
     )
 

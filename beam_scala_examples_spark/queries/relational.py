@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.agg import cents
+from ..operators.pairs import self_pairs
 from ..operators.topk import top_k_per_key
 from ..session import memo
 from ..tables import load
@@ -1941,11 +1942,8 @@ def _copurchase_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("l_orderkey", "l_partkey")
             .distinct()
         )
-        a = li.alias("a")
-        b = li.alias("b")
         return (
-            a.join(b, "l_orderkey")
-            .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
+            self_pairs(li, "l_orderkey", "l_partkey")
             .groupBy(
                 F.col("a.l_partkey").alias("p1"),
                 F.col("b.l_partkey").alias("p2"),

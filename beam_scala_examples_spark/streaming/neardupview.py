@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.pairs import self_pairs
 from ..queries.llmdata import minhash_buckets
 from .logio import read_log, write_log_partition
 
@@ -138,15 +139,9 @@ class NearDupVoteIngestSink:
         spark = batch_df.sparkSession
         sigs = minhash_buckets(batch_df.select("doc_id", "text"))
         # in-batch pairs: earlier = smaller doc_id within this batch
-        a = sigs.alias("a")
-        b = sigs.alias("b")
-        intra = (
-            a.join(b, ["band", "bucket"])
-            .filter(F.col("b.doc_id") < F.col("a.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("doc_id"),
-                F.col("b.doc_id").alias("earlier"),
-            )
+        intra = self_pairs(sigs, ["band", "bucket"], "doc_id").select(
+            F.col("b.doc_id").alias("doc_id"),
+            F.col("a.doc_id").alias("earlier"),
         )
         reg = read_log(
             spark, self.registry_path, self._schemas.get(self.registry_path),

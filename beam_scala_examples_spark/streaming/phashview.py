@@ -37,11 +37,7 @@ from ..operators.multimodal import (
     attach_bmp_payload_keyed,
     phash_bmp_metadata,
 )
-from ..queries.llmdata import (
-    PHASH_BANDS,
-    PHASH_MIN_BITS,
-    _phash_image_corpus,
-)
+from ..queries.llmdata import _phash_image_corpus, phash_bands
 from .logio import read_log, write_log_partition
 
 
@@ -61,18 +57,7 @@ class PhashIngestSink:
         # Decisions are per ARRIVING image (gate-failers abstain ->
         # never dup), so anchor on the full corpus member like the
         # batch twin does.
-        gated = hashes.filter(
-            F.expr("bit_count(phash)") >= PHASH_MIN_BITS
-        )
-        bands = gated.select(
-            "img_id",
-            F.explode(
-                F.expr(f"sequence(0, {PHASH_BANDS - 1})")
-            ).alias("band"),
-            "phash",
-        ).withColumn(
-            "bucket", F.expr("shiftright(phash, band * 16) & 65535")
-        )
+        bands = phash_bands(hashes)
         bmin = bands.groupBy("band", "bucket").agg(
             F.min("img_id").alias("batch_min")
         )

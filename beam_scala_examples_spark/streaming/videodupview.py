@@ -26,17 +26,12 @@ recompute here keeps the strong batch-equality pin.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.multimodal import (
     attach_y4m_payload_keyed,
     scene_keyframes_y4m_metadata,
 )
-from ..queries.llmdata import (
-    VIDEO_DUP_MIN_JACCARD_BP,
-    VIDEO_MIN_PLANE_PX,
-    _video_corpus,
-)
+from ..queries.llmdata import _video_corpus, video_pairs_from_scenes
 from .logio import read_log, write_log_partition
 
 
@@ -66,36 +61,6 @@ class VideoSigIngestSink:
 
     def serving_view(self, spark: SparkSession) -> DataFrame:
         """The Jaccard-verified near-dup pair relation over every video
-        ingested so far — the identical gate/join/verify expressions to
-        the batch ``multimodal_video_pairs``, over the registry."""
-        sigs = (
-            self.signatures(spark)
-            .filter(F.col("plane_px") >= VIDEO_MIN_PLANE_PX)
-            .select("vid_id", "sig")
-            .distinct()
-        )
-        cnt = sigs.groupBy("vid_id").agg(F.count("*").alias("n"))
-        a = sigs.alias("a")
-        b = sigs.alias("b").hint("SHUFFLE_HASH")
-        shared = (
-            a.join(b, "sig")
-            .filter(F.col("a.vid_id") < F.col("b.vid_id"))
-            .groupBy(
-                F.col("a.vid_id").alias("vid_a"),
-                F.col("b.vid_id").alias("vid_b"),
-            )
-            .agg(F.count("*").alias("n_shared"))
-        )
-        ca = cnt.alias("ca")
-        cb = cnt.alias("cb")
-        return (
-            shared.join(ca, F.col("vid_a") == F.col("ca.vid_id"))
-            .join(cb, F.col("vid_b") == F.col("cb.vid_id"))
-            .select(
-                "vid_a", "vid_b", "n_shared",
-                F.expr(
-                    "(n_shared * 10000) div (ca.n + cb.n - n_shared)"
-                ).alias("jaccard_bp"),
-            )
-            .filter(F.col("jaccard_bp") >= VIDEO_DUP_MIN_JACCARD_BP)
-        )
+        ingested so far: the batch ``multimodal_video_pairs``'s own
+        function, over the registry."""
+        return video_pairs_from_scenes(self.signatures(spark))

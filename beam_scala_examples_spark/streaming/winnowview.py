@@ -37,9 +37,9 @@ from pyspark.sql import functions as F
 from ..queries.llmdata import (
     K_WINNOW,
     W_WINNOW,
-    WINNOW_MIN_SHARED,
     _SPARK_H,
     _SPARK_TOKS,
+    winnow_pairs_from_prints,
     winnow_print_positions,
     winnow_regions_from_prints,
 )
@@ -151,37 +151,10 @@ class WinnowIngestSink:
         return self._log(spark, self.flags_path).drop("batch_id")
 
     def serving_view(self, spark: SparkSession) -> DataFrame:
-        """The MOSS pair table served from the log — pinned equal to
-        batch ``text_winnow_pairs`` once the corpus has arrived."""
-        prints = self._log(spark, self.prints_path)
-        counts = prints.groupBy("doc_id").agg(
-            F.count("*").alias("n_prints")
-        )
-        a = prints.select(F.col("doc_id").alias("doc_a"), "fp")
-        b = prints.select(F.col("doc_id").alias("doc_b"), "fp")
-        pairs = (
-            a.join(b, "fp")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("shared_prints"))
-            .filter(F.col("shared_prints") >= WINNOW_MIN_SHARED)
-        )
-        ca = counts.select(F.col("doc_id").alias("doc_a"),
-                           F.col("n_prints").alias("na"))
-        cb = counts.select(F.col("doc_id").alias("doc_b"),
-                           F.col("n_prints").alias("nb"))
-        return (
-            pairs.join(ca, "doc_a")
-            .join(cb, "doc_b")
-            .select(
-                "doc_a",
-                "doc_b",
-                "shared_prints",
-                F.expr(
-                    "(shared_prints * 10000) div least(na, nb)"
-                ).alias("overlap_bp"),
-            )
-        )
+        """The MOSS pair table served from the log: the batch
+        ``text_winnow_pairs``'s own match step over the logged prints,
+        so the two are equal once the corpus has arrived."""
+        return winnow_pairs_from_prints(self._log(spark, self.prints_path))
 
     def regions_view(self, spark: SparkSession) -> DataFrame:
         """Aligned copy regions served from the positioned-print log —

@@ -51,7 +51,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if dict(df.dtypes).get(c) == "bigint":
             df = df.withColumn(c, F.expr(f"timestamp_micros({c} DIV 1000)"))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}

@@ -529,6 +529,47 @@ def test_ann_core_lives_only_in_ann():
     }
 
 
+def test_candidate_pairs_live_only_in_pairs():
+    """The same-key unordered-pair filter of a candidate self-join and
+    the Hamming band split are written once, in ``operators/pairs.py``
+    (``self_pairs`` / ``overlap_pairs`` / ``hamming_bands``): no other
+    module filters ``a.<id> < b.<id>`` (or the reverse, or
+    ``doc_a < doc_b``) or spells ``shiftright(<sig>, band * ...``, so a
+    streamed near-dup view and its batch twin pair rows the same way.
+    The one exception is ``dedup_fuzzy_pairs``: its salted join matches
+    different columns on each side (``a.g = b.g1``, ``a.g2 = b.g``), so
+    it is not a same-key self-join."""
+    import ast
+    import pathlib
+    import re
+
+    import beam_scala_examples_spark as pkg
+
+    pats = [
+        re.compile(r'F\.col\("a\.(\w+)"\) < F\.col\("b\.\1"\)'),
+        re.compile(r'F\.col\("b\.(\w+)"\) < F\.col\("a\.\1"\)'),
+        re.compile(re.escape('F.col("doc_a") < F.col("doc_b")')),
+        re.compile(r"shiftright\([^,()]+, band \* "),
+    ]
+    root = pathlib.Path(pkg.__path__[0])
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "operators/pairs.py":
+            continue
+        src = path.read_text()
+        spans = [
+            (node.lineno, node.end_lineno, node.name)
+            for node in ast.parse(src).body
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef))
+        ]
+        for n, line in enumerate(src.splitlines(), start=1):
+            if any(p.search(line) for p in pats):
+                owner = next((nm for lo, hi, nm in spans if lo <= n <= hi), None)
+                found.append((rel, owner))
+    assert found == [("queries/llmdata.py", "dedup_fuzzy_pairs")]
+
+
 def test_bench_capture_hygiene_evidence():
     """Round-8 capture hygiene: the contention census must see this
     test's own Spark JVM as OURS (descendant), report foreign JVMs as a

@@ -407,6 +407,61 @@ def test_simhash_band_recall_is_exhaustive(spark):
     assert truth <= candidates
 
 
+def test_candidate_pair_layer_matches_brute_force(spark):
+    """``operators/pairs.py`` against a Python brute force on a
+    hand-made (id, key) relation: a bucket of three ids, ids in two
+    buckets, a singleton bucket and a duplicated row.  ``self_pairs``
+    yields one row per same-key row pair with ``a.id < b.id`` (never
+    (x, x), never both orders); ``overlap_pairs`` counts distinct
+    shared keys and each side's set size; ``hamming_bands`` splits a
+    signature's bits as Python does."""
+    import itertools
+    import random
+
+    from beam_scala_examples_spark.operators.pairs import (
+        hamming_bands,
+        overlap_pairs,
+        self_pairs,
+    )
+
+    rows = [(1, "x"), (2, "x"), (3, "x"), (1, "y"), (3, "y"), (4, "y"),
+            (5, "z"), (2, "x")]
+    rel = spark.createDataFrame(rows, "id long, key string")
+
+    got = [
+        (r[0], r[1])
+        for r in self_pairs(rel, "key", "id").select("a.id", "b.id").collect()
+    ]
+    joined = [
+        (i, j)
+        for (i, k), (j, m) in itertools.product(rows, rows)
+        if k == m and i < j
+    ]
+    assert sorted(got) == sorted(joined)
+    assert all(i < j for i, j in got)
+
+    sets: dict[int, set[str]] = {}
+    for i, k in rows:
+        sets.setdefault(i, set()).add(k)
+    expected = [
+        (i, j, len(sets[i] & sets[j]), len(sets[i]), len(sets[j]))
+        for i, j in itertools.combinations(sorted(sets), 2)
+        if sets[i] & sets[j]
+    ]
+    ov = overlap_pairs(rel, "key", "id")
+    assert ov.columns == ["id1", "id2", "shared", "n1", "n2"]
+    assert sorted(tuple(r) for r in ov.collect()) == expected
+
+    rng = random.Random(3)
+    sigs = [(i, rng.getrandbits(60)) for i in range(6)]
+    banded = hamming_bands(
+        spark.createDataFrame(sigs, "id long, sig long"), "sig", 4, 15
+    )
+    assert sorted(tuple(r) for r in banded.collect()) == sorted(
+        (i, s, b, (s >> (15 * b)) & 0x7FFF) for i, s in sigs for b in range(4)
+    )
+
+
 def test_prefix_filter_recall_is_lossless(spark):
     """Prefix lemma (All-Pairs/PPJoin): under a shared total token
     order, every pair with Jaccard >= 0.7 shares a token within the
