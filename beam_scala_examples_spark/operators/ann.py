@@ -108,6 +108,28 @@ def cosine() -> Column:
     ).alias("cos")
 
 
+def pair_cosine() -> Column:
+    """``cos``: the house cosine of a self-pair row, (a.embedding, a.nrm)
+    x (b.embedding, b.nrm)."""
+    return (
+        F.expr(DOT.format(a="a.embedding", b="b.embedding"))
+        / F.sqrt(F.col("a.nrm") * F.col("b.nrm"))
+    ).alias("cos")
+
+
+def sign_bucket(dims: list[int]) -> Column:
+    """Hyperplane-sign bucket of ``embedding``: bit ``j`` is set iff the
+    1-based dimension ``dims[j]`` is positive."""
+    return sum(
+        (
+            F.when(F.element_at("embedding", d) > 0, F.lit(1 << j))
+            .otherwise(F.lit(0))
+            for j, d in enumerate(dims)
+        ),
+        start=F.lit(0),
+    ).cast("long")
+
+
 def ivf_scan(
     corpus: DataFrame,
     queries: DataFrame,

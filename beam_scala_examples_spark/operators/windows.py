@@ -1,18 +1,18 @@
 """Event-time windowing helpers (SURVEY §2.6 W1–W7).
 
-Spark's ``F.window``/``F.session_window`` cover tumbling, sliding and
-session windows; calendar months (``CalendarWindows.months(1)``,
-``complete/TopWikipediaSessions.scala:154``) become ``date_trunc``.
-
-Every helper also has a DuckDB-SQL twin generator so oracle queries are
-guaranteed to use the *same* window assignment arithmetic: Spark aligns
-window starts to epoch multiples of the slide, which in SQL is
+The queries call Spark's ``F.window``/``F.session_window`` directly for
+tumbling, sliding and session windows; calendar months
+(``CalendarWindows.months(1)``, ``complete/TopWikipediaSessions.scala:154``)
+become ``date_trunc``.  This module holds the integer epoch helper and
+the DuckDB-SQL twins, so oracle queries are guaranteed to use the
+*same* window assignment arithmetic: Spark aligns window starts to
+epoch multiples of the slide, which in SQL is
 ``to_timestamp(floor(epoch(ts)/slide)*slide)``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -32,30 +32,6 @@ def epoch_us(col: Column | str) -> Column:
         F.lit("1970-01-01 00:00:00").cast("timestamp_ntz"),
         c.cast("timestamp_ntz"),
     )
-
-
-def tumbling(df: DataFrame, ts: str, duration: str, out: str = "win") -> DataFrame:
-    """FixedWindows (W1, e.g. 10-min words ``WindowedWordCount.scala:69-70``)."""
-    return df.withColumn(out, F.window(F.col(ts), duration))
-
-
-def sliding(df: DataFrame, ts: str, duration: str, slide: str,
-            out: str = "win") -> DataFrame:
-    """SlidingWindows (W2, e.g. 60min/5min ``complete/TrafficMaxLaneFlow.scala:99-103``)."""
-    return df.withColumn(out, F.window(F.col(ts), duration, slide))
-
-
-def session(df: DataFrame, ts: str, gap: str, out: str = "win") -> DataFrame:
-    """Sessions.withGapDuration (W3, ``complete/game/GameStats.scala:149-154``)."""
-    return df.withColumn(out, F.session_window(F.col(ts), gap))
-
-
-def win_start(out: str = "win") -> Column:
-    return F.col(f"{out}.start")
-
-
-def win_end(out: str = "win") -> Column:
-    return F.col(f"{out}.end")
 
 
 # ---------------------------------------------------------------------------

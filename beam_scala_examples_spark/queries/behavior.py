@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.agg import cents
+from ..operators.sketches import DUCK_H, SPARK_H
 from ..operators.windows import epoch_us
 from ..tables import load
 
@@ -835,10 +836,7 @@ def events_markov_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one keyed window for the lag, one |types|² aggregate per
     split leg, O(types) join — the fact table shuffles once."""
     ev = load(spark, sf_dir, "events")
-    bucket = F.expr(
-        "cast(conv(substr(md5(cast(user_id as string)), 1, 8), 16, 10)"
-        " as bigint)"
-    ) % 100
+    bucket = F.expr(SPARK_H.format(col="cast(user_id as string)")) % 100
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         ev.withColumn("is_train", bucket < MARKOV_TRAIN_PCT)
@@ -887,7 +885,7 @@ QUERIES["events_markov_holdout"] = events_markov_holdout
 
 ORACLE["events_markov_holdout"] = f"""
     WITH p AS (
-        SELECT ('0x' || substr(md5(user_id::VARCHAR), 1, 8))::BIGINT % 100
+        SELECT {DUCK_H.format(col='user_id::VARCHAR')} % 100
                    < {MARKOV_TRAIN_PCT} AS is_train,
                lag(event_type) OVER (
                    PARTITION BY user_id ORDER BY ts, event_id
@@ -1807,12 +1805,6 @@ ORACLE["events_volume_trend"] = """
 """
 
 
-# md5-based bucket hash (bit-identical in Spark and DuckDB) — the
-# engine-wide portable hash, local copy of queries/llmdata.py's helper.
-_AB_SPARK_H = "cast(conv(substr(md5(cast(user_id as string)), 1, 8), 16, 10) as bigint)"
-_AB_DUCK_H = "('0x' || substr(md5(user_id::VARCHAR), 1, 8))::BIGINT"
-
-
 def _ab_per_user(ev: DataFrame) -> DataFrame:
     """Per-user (arm, converted) for the A/B pair: arm = md5 hash split,
     conversion = ACTIVATION — a purchase within 1 day of the user's
@@ -1830,7 +1822,8 @@ def _ab_per_user(ev: DataFrame) -> DataFrame:
             ).alias("first_purchase"),
         )
         .select(
-            (F.expr(_AB_SPARK_H) % 2).alias("arm"),
+            (F.expr(SPARK_H.format(col="cast(user_id as string)")) % 2)
+            .alias("arm"),
             F.when(
                 F.col("first_purchase")
                 <= F.col("first_ts") + F.expr("INTERVAL 1 DAY"),
@@ -1843,7 +1836,7 @@ def _ab_per_user(ev: DataFrame) -> DataFrame:
 
 
 _AB_DUCK_PER_USER = f"""
-        SELECT {_AB_DUCK_H} % 2 AS arm,
+        SELECT {DUCK_H.format(col='user_id::VARCHAR')} % 2 AS arm,
                CASE WHEN min(CASE WHEN event_type = 'purchase' THEN ts END)
                          <= min(ts) + INTERVAL 1 DAY
                     THEN 1 ELSE 0 END AS converted

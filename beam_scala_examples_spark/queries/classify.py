@@ -45,14 +45,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.sketches import DUCK_H, DUCK_H60, SPARK_H, SPARK_H60
 from ..session import hold, memo
 from ..tables import load
 from .llmdata import (
-    _DUCK_H,
-    _DUCK_H60,
     _DUCK_TOKS,
-    _SPARK_H,
-    _SPARK_H60,
     _SPARK_TOKS,
     PACK_CTX_TOKENS,
     QF_MAX_MEAN_TOKEN_LEN,
@@ -60,8 +57,10 @@ from .llmdata import (
     QF_MIN_STOPWORD_RATIO,
     QF_MIN_TOKENS,
     SPLIT_TRAIN_PCT,
-    SPLIT_VAL_PCT,
     STOPWORDS,
+    duck_split_bucket,
+    duck_split_label,
+    split_bucket,
 )
 from .llmdata import ORACLE as _LLM_ORACLE
 
@@ -109,13 +108,8 @@ _FEATS_DUCK = f"""
     )
 """
 
-_TRAIN_PRED_SPARK = (
-    f"{_SPARK_H.format(col='cast(doc_id as string)')} % 100"
-    f" < {SPLIT_TRAIN_PCT}"
-)
-_TRAIN_PRED_DUCK = (
-    f"({_DUCK_H.format(col='doc_id::VARCHAR')}) % 100 < {SPLIT_TRAIN_PCT}"
-)
+_TRAIN_PRED_SPARK = f"{split_bucket()} < {SPLIT_TRAIN_PCT}"
+_TRAIN_PRED_DUCK = f"{duck_split_bucket()} < {SPLIT_TRAIN_PCT}"
 
 
 def nb_feature_instances(docs: DataFrame) -> DataFrame:
@@ -489,7 +483,7 @@ def dsir_bucket_counts(docs: DataFrame) -> DataFrame:
         )
         .select(
             "doc_id",
-            (F.expr(_SPARK_H.format(col="bg")) % DSIR_BUCKETS).alias("b"),
+            (F.expr(SPARK_H.format(col="bg")) % DSIR_BUCKETS).alias("b"),
         )
         .groupBy("doc_id", "b")
         .agg(F.count("*").alias("c"))
@@ -609,7 +603,7 @@ _DSIR_WEIGHTS_DUCK = f"""
     ),
     bb AS (
         SELECT doc_id,
-               ({_DUCK_H.format(col='bg')}) % {DSIR_BUCKETS} AS b
+               ({DUCK_H.format(col='bg')}) % {DSIR_BUCKETS} AS b
         FROM dbg
     ),
     rcnt AS (SELECT b, count(*)::BIGINT AS r FROM bb GROUP BY 1),
@@ -652,12 +646,12 @@ ORACLE["sample_dsir_weights"] = _DSIR_WEIGHTS_DUCK
 # exp-space twin of sample_weighted_topk's A-ES key.
 _DSIR_GUMBEL_SPARK = (
     "-ln(-ln(("
-    + _SPARK_H60.format(col="concat('dsir|', cast(doc_id as string))")
+    + SPARK_H60.format(col="concat('dsir|', cast(doc_id as string))")
     + " + 0.5) / 1152921504606846976.0))"
 )
 _DSIR_GUMBEL_DUCK = (
     "-ln(-ln(("
-    + _DUCK_H60.format(col="'dsir|' || doc_id::VARCHAR")
+    + DUCK_H60.format(col="'dsir|' || doc_id::VARCHAR")
     + " + 0.5) / 1152921504606846976.0))"
 )
 
@@ -733,17 +727,13 @@ ORACLE["data_corpus_build_modelgated"] = f"""
     ),
     kept AS (
         SELECT d.doc_id, d.source,
-               CASE WHEN ({_DUCK_H.format(col='d.doc_id::VARCHAR')}) % 100
-                         < {SPLIT_TRAIN_PCT} THEN 'train'
-                    WHEN ({_DUCK_H.format(col='d.doc_id::VARCHAR')}) % 100
-                         < {SPLIT_TRAIN_PCT + SPLIT_VAL_PCT} THEN 'val'
-                    ELSE 'test' END AS split,
+               {duck_split_label('d.doc_id', 15)} AS split,
                t.n_tokens
         FROM documents d
         JOIN toksz t ON d.doc_id = t.doc_id
         WHERE d.doc_id IN (SELECT doc_id FROM qf WHERE keep)
           AND d.doc_id IN (SELECT doc_id FROM surv)
-          AND (({_DUCK_H.format(col='d.doc_id::VARCHAR')}) % 100
+          AND ({duck_split_bucket('d.doc_id')}
                    < {SPLIT_TRAIN_PCT}
                OR d.doc_id IN
                    (SELECT doc_id FROM clf WHERE label_pred = 'keep'))

@@ -435,14 +435,12 @@ def dedup_semantic_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = hold("kmeans_corpora/sem_base", emb.join(assign, "vec_id").select(
         "vec_id", "cluster", "embedding", norm.alias("nrm")
     ).persist)
-    dot = F.expr(ann.DOT.format(a="a.embedding", b="b.embedding"))
-    cos = dot / F.sqrt(F.col("a.nrm") * F.col("b.nrm"))
     return (
         self_pairs(base, "cluster", "vec_id")
         .select(
             F.col("a.vec_id").alias("v1"),
             F.col("b.vec_id").alias("v2"),
-            cos.alias("cos"),
+            ann.pair_cosine(),
         )
         .filter(F.col("cos") >= SEMANTIC_THRESHOLD)
         .select("v1", "v2", F.round("cos", 6).alias("cosine"))

@@ -20,6 +20,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.sketches import (
+    CMS_DEPTH,
+    CMS_WIDTH,
+    DUCK_H,
+    SPARK_H,
+    cms_partial_counters,
+    duck_hll_ranked,
+    duck_md5_slice,
+    hll_estimate,
+    hll_partial_registers,
+    md5_slices,
+)
 from ..tables import load
 
 # (table, rule_name, SQL predicate that GOOD rows satisfy) — the
@@ -409,9 +421,7 @@ def dq_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = ev.groupBy("event_type").agg(F.count("*").alias("true_count"))
     u = (
         (
-            F.abs(F.expr(
-                "cast(conv(substr(md5(event_type), 1, 8), 16, 10) as bigint)"
-            )) % (_DP_U - 1)
+            F.abs(F.expr(SPARK_H.format(col="event_type"))) % (_DP_U - 1)
             + 1
         )
         * 1.0
@@ -442,7 +452,7 @@ ORACLE["dq_dp_histogram"] = f"""
     ),
     draw AS (
         SELECT event_type, true_count,
-               (abs(('0x' || substr(md5(event_type), 1, 8))::BIGINT)
+               (abs({DUCK_H.format(col='event_type')})
                 % ({_DP_U} - 1) + 1) * 1.0 / {_DP_U} - 0.5 AS c
         FROM counts
     )
@@ -616,45 +626,6 @@ ORACLE["dq_t_closeness"] = f"""
 """
 
 
-HLL_P = 10                 # 2^10 = 1024 registers
-HLL_M = 1 << HLL_P
-HLL_VAL_BITS = 32 - HLL_P  # hash bits left for the rank field
-
-
-def hll_partial_registers(
-    df: DataFrame, id_col: str = "user_id",
-    group_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """(group..., register, max_rank) HLL partial registers over
-    ``df[id_col]`` — THE shared register constructor for the batch
-    queries and :class:`~..streaming.hllview.HllIngestSink`.
-
-    The md5-derived 32-bit hash is staged ONCE per row via a real
-    ``withColumn`` (register and rank both derive from the staged
-    column), so single evaluation is structural rather than a bet on
-    Catalyst's common-subexpression elimination.  Exact integers end
-    to end; output is at most ``HLL_M`` slim rows per group."""
-    hexpr = (
-        f"cast(conv(substr(md5(cast({id_col} as string)), 1, 8), 16, 10)"
-        " as bigint)"
-    )
-    staged = df.withColumn("__h", F.expr(hexpr))
-    return (
-        staged.select(
-            *group_cols,
-            F.expr(f"__h % {HLL_M}").alias("register"),
-            F.expr(
-                f"case when __h div {HLL_M} = 0"
-                f" then {HLL_VAL_BITS + 1}"
-                f" else {HLL_VAL_BITS + 1} - length(bin("
-                f"__h div {HLL_M})) end"
-            ).alias("rank"),
-        )
-        .groupBy(*group_cols, "register")
-        .agg(F.max("rank").alias("max_rank"))
-    )
-
-
 def dq_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog registers (Flajolet et al. 2007) over
     ``events.user_id`` — the mergeable distinct-count sketch every
@@ -680,38 +651,15 @@ def dq_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hll_partial_registers(ev)
 
 
-def hll_estimate(registers) -> float:
-    """Bias-corrected HLL cardinality estimate from a collected register
-    list [(register, max_rank)] — driver-side float math (O(m)), kept
-    out of the oracle-hashed surface on purpose."""
-    import math
-
-    m = HLL_M
-    by_reg = {int(r[0]): int(r[1]) for r in registers}
-    s = sum(2.0 ** -by_reg.get(j, 0) for j in range(m))
-    alpha = 0.7213 / (1 + 1.079 / m)
-    raw = alpha * m * m / s
-    zeros = m - len(by_reg)
-    if raw <= 2.5 * m and zeros > 0:
-        return m * math.log(m / zeros)
-    return raw
-
-
 QUERIES["dq_hll_registers"] = dq_hll_registers
 
-_HLL_H = "('0x' || substr(md5(user_id::VARCHAR), 1, 8))::BIGINT"
+_HLL_H = DUCK_H.format(col="user_id::VARCHAR")
 
 ORACLE["dq_hll_registers"] = f"""
     WITH h AS (
         SELECT {_HLL_H} AS hv FROM events
     ),
-    ranked AS (
-        SELECT hv % {HLL_M} AS register,
-               CASE WHEN hv // {HLL_M} = 0 THEN {HLL_VAL_BITS + 1}
-                    ELSE {HLL_VAL_BITS + 1} - length(bin(hv // {HLL_M}))
-               END AS rank
-        FROM h
-    )
+    {duck_hll_ranked()}
     SELECT register::BIGINT AS register,
            max(rank)::BIGINT AS max_rank
     FROM ranked GROUP BY 1
@@ -741,13 +689,7 @@ ORACLE["dq_hll_by_type"] = f"""
     WITH h AS (
         SELECT event_type, {_HLL_H} AS hv FROM events
     ),
-    ranked AS (
-        SELECT event_type, hv % {HLL_M} AS register,
-               CASE WHEN hv // {HLL_M} = 0 THEN {HLL_VAL_BITS + 1}
-                    ELSE {HLL_VAL_BITS + 1} - length(bin(hv // {HLL_M}))
-               END AS rank
-        FROM h
-    )
+    {duck_hll_ranked("event_type, ")}
     SELECT event_type, register::BIGINT AS register,
            max(rank)::BIGINT AS max_rank
     FROM ranked GROUP BY 1, 2
@@ -775,13 +717,7 @@ ORACLE["dq_hll_by_day"] = f"""
         SELECT date_trunc('day', ts)::TIMESTAMP AS day, {_HLL_H} AS hv
         FROM events
     ),
-    ranked AS (
-        SELECT day, hv % {HLL_M} AS register,
-               CASE WHEN hv // {HLL_M} = 0 THEN {HLL_VAL_BITS + 1}
-                    ELSE {HLL_VAL_BITS + 1} - length(bin(hv // {HLL_M}))
-               END AS rank
-        FROM h
-    )
+    {duck_hll_ranked("day, ")}
     SELECT day, register::BIGINT AS register,
            max(rank)::BIGINT AS max_rank
     FROM ranked GROUP BY 1, 2
@@ -871,13 +807,7 @@ ORACLE["dq_hll_overlap"] = f"""
     WITH h AS (
         SELECT event_type, {_HLL_H} AS hv FROM events
     ),
-    ranked AS (
-        SELECT event_type, hv % {HLL_M} AS register,
-               CASE WHEN hv // {HLL_M} = 0 THEN {HLL_VAL_BITS + 1}
-                    ELSE {HLL_VAL_BITS + 1} - length(bin(hv // {HLL_M}))
-               END AS rank
-        FROM h
-    ),
+    {duck_hll_ranked("event_type, ")},
     regs AS MATERIALIZED (
         SELECT event_type, register::BIGINT AS register,
                max(rank)::BIGINT AS max_rank
@@ -1073,7 +1003,7 @@ def profile_value_quantiles(vbins: DataFrame) -> DataFrame:
 
 QUERIES["dq_profile_events_sketch"] = dq_profile_events_sketch
 
-_HLL_VAL_H = "('0x' || substr(md5(val), 1, 8))::BIGINT"
+_HLL_VAL_H = DUCK_H.format(col="val")
 
 ORACLE["dq_profile_events_sketch"] = f"""
     WITH stacked AS (
@@ -1087,13 +1017,7 @@ ORACLE["dq_profile_events_sketch"] = f"""
         SELECT column_name, {_HLL_VAL_H} AS hv FROM stacked
         WHERE val IS NOT NULL
     ),
-    ranked AS (
-        SELECT column_name, hv % {HLL_M} AS register,
-               CASE WHEN hv // {HLL_M} = 0 THEN {HLL_VAL_BITS + 1}
-                    ELSE {HLL_VAL_BITS + 1} - length(bin(hv // {HLL_M}))
-               END AS rank
-        FROM h
-    ),
+    {duck_hll_ranked("column_name, ")},
     regs AS (
         SELECT column_name, register, max(rank) AS max_rank
         FROM ranked GROUP BY 1, 2
@@ -1182,13 +1106,7 @@ ORACLE["dq_hll_cumulative"] = f"""
         SELECT date_trunc('day', ts)::TIMESTAMP AS day, {_HLL_H} AS hv
         FROM events
     ),
-    ranked AS (
-        SELECT day, hv % {HLL_M} AS register,
-               CASE WHEN hv // {HLL_M} = 0 THEN {HLL_VAL_BITS + 1}
-                    ELSE {HLL_VAL_BITS + 1} - length(bin(hv // {HLL_M}))
-               END AS rank
-        FROM h
-    ),
+    {duck_hll_ranked("day, ")},
     daily AS (
         SELECT day, register, max(rank) AS max_rank
         FROM ranked GROUP BY 1, 2
@@ -1481,50 +1399,17 @@ ORACLE["dq_value_quantiles_by_type"] = (
 # ``text_heavy_hitters`` (Cormode & Muthukrishnan 2005), grouped like
 # hll_partial_registers so each day's counters are an independent,
 # ADDITIVELY mergeable O(depth × width) block (day blocks sum into
-# week/month blocks with no rescan).
+# week/month blocks with no rescan).  The blocks are
+# ``cms_partial_counters`` at its default shape.
 # ---------------------------------------------------------------------------
 
-CMS_DAY_DEPTH = 3    # independent hash rows (disjoint md5 slices)
-CMS_DAY_WIDTH = 64   # counters per row
+CMS_DAY_DEPTH = CMS_DEPTH  # 3 independent hash rows (disjoint md5 slices)
+CMS_DAY_WIDTH = CMS_WIDTH  # 64 counters per row
 CMS_DAY_DENOM = 32   # heavy iff est * 32 >= the day's event count
 
 
-def cms_partial_counters(
-    df: DataFrame, item_col: str,
-    group_cols: tuple[str, ...] = (),
-    depth: int = CMS_DAY_DEPTH, width: int = CMS_DAY_WIDTH,
-) -> DataFrame:
-    """(group..., r, b, cnt) count-min counters over ``df[item_col]``
-    — the shared counter constructor (md5 staged once per row; each of
-    the ``depth`` rows uses a disjoint 8-hex md5 slice, the
-    ``text_heavy_hitters`` idiom).  One map-side-combined aggregate to
-    at most ``depth × width`` slim rows per group."""
-    staged = df.withColumn(
-        "__s", F.expr(f"md5(cast({item_col} as string))")
-    )
-    arr = F.array(*[
-        F.struct(
-            F.lit(i).cast("long").alias("r"),
-            F.expr(
-                f"cast(conv(substr(__s, {1 + 8 * i}, 8), 16, 10)"
-                f" as bigint) % {width}"
-            ).alias("b"),
-        )
-        for i in range(depth)
-    ])
-    return (
-        staged.select(*group_cols, F.explode(arr).alias("p"))
-        .select(*group_cols, "p.r", "p.b")
-        .groupBy(*group_cols, "r", "b")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
 def _cms_day_pos_duck(i: int, item: str) -> str:
-    return (
-        f"('0x' || substr(md5({item}::VARCHAR), {1 + 8 * i}, 8))::BIGINT"
-        f" % {CMS_DAY_WIDTH}"
-    )
+    return f"{duck_md5_slice(f'{item}::VARCHAR', i)} % {CMS_DAY_WIDTH}"
 
 
 def dq_cms_user_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1579,16 +1464,9 @@ def dq_heavy_users_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("__s", F.expr("md5(cast(user_id as string))"))
         .select(
             "day", "user_id",
-            F.explode(F.array(*[
-                F.struct(
-                    F.lit(i).cast("long").alias("r"),
-                    F.expr(
-                        f"cast(conv(substr(__s, {1 + 8 * i}, 8), 16, 10)"
-                        f" as bigint) % {CMS_DAY_WIDTH}"
-                    ).alias("b"),
-                )
-                for i in range(CMS_DAY_DEPTH)
-            ])).alias("p"),
+            F.explode(
+                md5_slices("__s", CMS_DAY_DEPTH, CMS_DAY_WIDTH)
+            ).alias("p"),
         )
         .select("day", "user_id", "p.r", "p.b")
     )
@@ -1794,16 +1672,9 @@ def dq_heavy_users_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("__s", F.expr("md5(cast(user_id as string))"))
         .select(
             "user_id",
-            F.explode(F.array(*[
-                F.struct(
-                    F.lit(i).cast("long").alias("r"),
-                    F.expr(
-                        f"cast(conv(substr(__s, {1 + 8 * i}, 8), 16, 10)"
-                        f" as bigint) % {CMS_DAY_WIDTH}"
-                    ).alias("b"),
-                )
-                for i in range(CMS_DAY_DEPTH)
-            ])).alias("p"),
+            F.explode(
+                md5_slices("__s", CMS_DAY_DEPTH, CMS_DAY_WIDTH)
+            ).alias("p"),
         )
         .select("user_id", "p.r", "p.b")
     )

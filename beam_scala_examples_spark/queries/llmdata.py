@@ -9,10 +9,10 @@ screening, redaction, context-window chunking, deterministic mixture
 sampling) over ``documents``/``embeddings``.
 
 Cross-engine determinism: every hash bottoms out in ``md5`` (bit-identical
-in Spark and DuckDB); minhash permutations use seeded ``(a*h + b) % p``
-with values sized so ``a*h`` stays < 2^52 (no int64 overflow, no HUGEINT
-promotion); float math is float->double casts summed in array order on
-both engines.
+in Spark and DuckDB, spelled once in ``operators/sketches.py``); minhash
+permutations use seeded ``(a*h + b) % p`` with values sized so ``a*h``
+stays < 2^52 (no int64 overflow, no HUGEINT promotion); float math is
+float->double casts summed in array order on both engines.
 
 Scale notes (100 TB posture):
  - MinHash/SimHash signatures are fixed-width per doc: the shuffle carries
@@ -30,13 +30,25 @@ from __future__ import annotations
 import math
 import random
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators import ann
 from ..operators.carry import sharded_prefix_sum, sharded_row_number
 from ..operators.pairs import hamming_bands, overlap_pairs, self_pairs
+from ..operators.sketches import (
+    DUCK_H,
+    DUCK_H60,
+    HLL_M,
+    SPARK_H,
+    SPARK_H60,
+    cms_partial_counters,
+    duck_md5_slice,
+    hll_estimate,
+    hll_partial_registers,
+    md5_slices,
+)
 from ..operators.topk import top_k_per_key
 from ..session import hold, memo
 from ..tables import load
@@ -57,10 +69,6 @@ TOPK_NEIGHBORS = 5
 N_QUERY_VECS = 10
 EMB_DIM = 64
 LSH_DIMS = [1 + 8 * j for j in range(8)]  # 1-based dims for hyperplane signs
-
-# ``h(s)``: first 8 hex chars of md5 → bigint in [0, 2^32).
-_SPARK_H = "cast(conv(substr(md5({col}), 1, 8), 16, 10) as bigint)"
-_DUCK_H = "('0x' || substr(md5({col}), 1, 8))::BIGINT"
 
 # Tokens / 3-word shingles of the lowercased text.
 _SPARK_TOKS = r"filter(split(lower(text), '\\W+'), x -> x <> '')"
@@ -91,7 +99,7 @@ def _doc_shingles(docs: DataFrame, distinct: bool) -> DataFrame:
     )
     if distinct:
         sh = sh.distinct()
-    return sh.withColumn("h", F.expr(_SPARK_H.format(col="shingle")))
+    return sh.withColumn("h", F.expr(SPARK_H.format(col="shingle")))
 
 
 def _shingles(spark: SparkSession, sf_dir: str, distinct: bool = True) -> DataFrame:
@@ -112,7 +120,7 @@ def _duck_shingle_cte() -> str:
         toks AS (SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
         sh0 AS (SELECT doc_id, unnest({_DUCK_SHINGLES}) AS shingle FROM toks),
         sh AS (SELECT DISTINCT doc_id, shingle FROM sh0),
-        shh AS (SELECT doc_id, shingle, {_DUCK_H.format(col='shingle')} AS h FROM sh)
+        shh AS (SELECT doc_id, shingle, {DUCK_H.format(col='shingle')} AS h FROM sh)
     """
 
 
@@ -195,7 +203,7 @@ def _simhash60_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "doc_id", F.explode(F.expr(_SPARK_TOKS)).alias("word")
             )
             .distinct()
-            .withColumn("h", F.expr(_SPARK_H60.format(col="word")))
+            .withColumn("h", F.expr(SPARK_H60.format(col="word")))
         )
         return _simhash_signatures(toks, SIMHASH_PAIR_BITS).persist()
 
@@ -246,7 +254,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (
         docs.select("doc_id", F.explode(F.expr(_SPARK_TOKS)).alias("word"))
         .distinct()
-        .withColumn("h", F.expr(_SPARK_H.format(col="word")))
+        .withColumn("h", F.expr(SPARK_H.format(col="word")))
     )
     return _simhash_signatures(toks, 16).select(
         "doc_id", F.col("sig").alias("simhash")
@@ -284,8 +292,6 @@ def _simhash_signatures(toks: DataFrame, n_bits: int) -> DataFrame:
 SIMHASH_PAIR_BITS = 60
 SIMHASH_PAIR_BANDS = 4
 SIMHASH_HAMMING_MAX = 3
-_SPARK_H60 = "cast(conv(substr(md5({col}), 1, 15), 16, 10) as bigint)"
-_DUCK_H60 = "('0x' || substr(md5({col}), 1, 15))::BIGINT"
 
 
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -336,7 +342,7 @@ def data_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     document order.
     """
     docs = load(spark, sf_dir, "documents")
-    key = F.expr(_SPARK_H.format(col="cast(doc_id as string)"))
+    key = F.expr(SPARK_H.format(col="cast(doc_id as string)"))
     w = Window.partitionBy("shard").orderBy("key", "doc_id")
     return (
         docs.select(
@@ -466,13 +472,7 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     searches only its own bucket.
     """
     emb = load(spark, sf_dir, "embeddings")
-    bucket = sum(
-        (
-            F.when(F.element_at("embedding", d) > 0, F.lit(1 << j)).otherwise(F.lit(0))
-            for j, d in enumerate(LSH_DIMS)
-        ),
-        start=F.lit(0),
-    ).cast("long")
+    bucket = ann.sign_bucket(LSH_DIMS)
     norm = F.expr(ann.NORM)
     base = emb.select("vec_id", "embedding", bucket.alias("bucket"), norm.alias("nrm"))
     q = base.filter(F.col("vec_id") < N_QUERY_VECS).select(
@@ -522,24 +522,15 @@ def sim_lsh_multi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lsh_tabled(base: DataFrame) -> DataFrame:
     """(vec_id, tb, bucket): each vector's sign bucket in every one of
     the ``LSH_TABLES`` tables, one row per table."""
-
-    def bucket(t: int):
-        return sum(
-            (
-                F.when(
-                    F.element_at("embedding", d) > 0, F.lit(1 << j)
-                ).otherwise(F.lit(0))
-                for j, d in enumerate(MULTI_LSH_DIMS[t])
-            ),
-            start=F.lit(0),
-        ).cast("long")
-
     return base.select(
         "vec_id",
         F.explode(
             F.array(
                 *[
-                    F.struct(F.lit(t).alias("tb"), bucket(t).alias("bucket"))
+                    F.struct(
+                        F.lit(t).alias("tb"),
+                        ann.sign_bucket(MULTI_LSH_DIMS[t]).alias("bucket"),
+                    )
                     for t in range(LSH_TABLES)
                 ]
             )
@@ -705,23 +696,15 @@ def dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs share a hyperplane-sign bucket (the scale path — Σ|bucket|²,
     never all-pairs), then exact cosine filters at the threshold."""
     emb = load(spark, sf_dir, "embeddings")
-    bucket = sum(
-        (
-            F.when(F.element_at("embedding", d) > 0, F.lit(1 << j)).otherwise(F.lit(0))
-            for j, d in enumerate(LSH_DIMS)
-        ),
-        start=F.lit(0),
-    ).cast("long")
+    bucket = ann.sign_bucket(LSH_DIMS)
     norm = F.expr(ann.NORM)
     base = emb.select("vec_id", "embedding", bucket.alias("bucket"), norm.alias("nrm"))
-    dot = F.expr(ann.DOT.format(a="a.embedding", b="b.embedding"))
-    cos = dot / F.sqrt(F.col("a.nrm") * F.col("b.nrm"))
     return (
         self_pairs(base, "bucket", "vec_id")
         .select(
             F.col("a.vec_id").alias("v1"),
             F.col("b.vec_id").alias("v2"),
-            cos.alias("cos"),
+            ann.pair_cosine(),
         )
         .filter(F.col("cos") >= EMB_NEARDUP_THRESHOLD)
         .select("v1", "v2", F.round("cos", 6).alias("cosine"))
@@ -1180,7 +1163,7 @@ def sample_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     pairs = [x for kv in MIX_WEIGHTS.items() for x in kv]
     weights = F.create_map(*[F.lit(x) for x in pairs])
-    bucket = F.expr(_SPARK_H.format(col="cast(doc_id as string)")) % 100
+    bucket = F.expr(SPARK_H.format(col="cast(doc_id as string)")) % 100
     return (
         docs.withColumn("w", F.coalesce(weights[F.col("source")], F.lit(0)))
         .filter(bucket < F.col("w"))
@@ -1512,6 +1495,40 @@ SPLIT_TRAIN_PCT = 90
 SPLIT_VAL_PCT = 5  # hash buckets: [0,90) train, [90,95) val, [95,100) test
 
 
+def split_bucket(key: str = "doc_id") -> str:
+    """``h(key) % 100``: the split's md5 bucket, a Spark SQL expression."""
+    return f"{SPARK_H.format(col=f'cast({key} as string)')} % 100"
+
+
+def duck_split_bucket(key: str = "doc_id") -> str:
+    """DuckDB twin of :func:`split_bucket`."""
+    return f"({DUCK_H.format(col=f'{key}::VARCHAR')}) % 100"
+
+
+def split_label(key: str = "doc_id") -> Column:
+    """'train' / 'val' / 'test' by :func:`split_bucket`."""
+    bucket = F.expr(split_bucket(key))
+    return (
+        F.when(bucket < SPLIT_TRAIN_PCT, "train")
+        .when(bucket < SPLIT_TRAIN_PCT + SPLIT_VAL_PCT, "val")
+        .otherwise("test")
+    )
+
+
+def duck_split_label(key: str, indent: int) -> str:
+    """DuckDB twin of :func:`split_label`: a CASE laid out for a query
+    whose ``CASE`` keyword sits at column ``indent``."""
+    bucket = duck_split_bucket(key)
+    pad = " " * indent
+    return (
+        f"CASE WHEN {bucket}\n"
+        f"{pad}          < {SPLIT_TRAIN_PCT} THEN 'train'\n"
+        f"{pad}     WHEN {bucket}\n"
+        f"{pad}          < {SPLIT_TRAIN_PCT + SPLIT_VAL_PCT} THEN 'val'\n"
+        f"{pad}     ELSE 'test' END"
+    )
+
+
 def data_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic train/val/test assignment by content-stable hash —
     the split step of a training pipeline.  md5-derived buckets (portable
@@ -1519,13 +1536,7 @@ def data_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     run) give each source its proportional share, so the split is
     stratified in expectation without a per-source shuffle; map-only."""
     docs = load(spark, sf_dir, "documents")
-    bucket = F.expr(_SPARK_H.format(col="cast(doc_id as string)")) % 100
-    split = (
-        F.when(bucket < SPLIT_TRAIN_PCT, "train")
-        .when(bucket < SPLIT_TRAIN_PCT + SPLIT_VAL_PCT, "val")
-        .otherwise("test")
-    )
-    return docs.select("doc_id", "source", split.alias("split"))
+    return docs.select("doc_id", "source", split_label().alias("split"))
 
 
 PACK_CTX_TOKENS = 256
@@ -1681,6 +1692,8 @@ COSINE_TOPK_CTES = f"""ctk_base AS (
             FROM ctk_pairs
         )"""
 
+_FRAME_SIG_D = DUCK_H.format(col="substr(text, 1 + frame_idx * flen, flen)")
+
 ORACLE = {
     "multimodal_decode": """
         WITH b AS (SELECT doc_id, octet_length(encode(text)) AS n FROM documents)
@@ -1691,7 +1704,7 @@ ORACLE = {
                (n % 480)::BIGINT AS fake_height
         FROM b
     """,
-    "multimodal_frames": """
+    "multimodal_frames": f"""
         WITH b AS (
             SELECT doc_id, text, len(text) AS nc,
                    octet_length(encode(text)) AS nb
@@ -1716,8 +1729,7 @@ ORACLE = {
             FROM thumbs
         )
         SELECT doc_id, frame_idx::BIGINT AS frame_idx, flen::BIGINT AS frame_len,
-               ('0x' || substr(md5(substr(text, 1 + frame_idx * flen, flen)),
-                               1, 8))::BIGINT AS frame_sig,
+               {_FRAME_SIG_D} AS frame_sig,
                thumb_w::BIGINT AS thumb_w, thumb_h::BIGINT AS thumb_h
         FROM fr
     """,
@@ -1740,7 +1752,7 @@ ORACLE = {
             SELECT doc_id, unnest({_DUCK_TOKS}) AS word FROM documents
         ),
         toks AS (SELECT DISTINCT doc_id, word FROM toks0),
-        th AS (SELECT doc_id, {_DUCK_H.format(col='word')} AS h FROM toks),
+        th AS (SELECT doc_id, {DUCK_H.format(col='word')} AS h FROM toks),
         votes AS (
             SELECT doc_id, unnest(generate_series(0, 15)) AS pos, h FROM th
         ),
@@ -1759,7 +1771,7 @@ ORACLE = {
             SELECT doc_id, unnest({_DUCK_TOKS}) AS word FROM documents
         ),
         toks AS (SELECT DISTINCT doc_id, word FROM toks0),
-        th AS (SELECT doc_id, {_DUCK_H60.format(col='word')} AS h FROM toks),
+        th AS (SELECT doc_id, {DUCK_H60.format(col='word')} AS h FROM toks),
         votes AS (
             SELECT doc_id,
                    unnest(generate_series(0, {SIMHASH_PAIR_BITS - 1})) AS pos,
@@ -1785,7 +1797,7 @@ ORACLE = {
     "data_global_shuffle": f"""
         WITH keyed AS (
             SELECT doc_id,
-                   {_DUCK_H.format(col='doc_id::VARCHAR')} AS key
+                   {DUCK_H.format(col='doc_id::VARCHAR')} AS key
             FROM documents
         )
         SELECT doc_id,
@@ -2127,7 +2139,7 @@ _MIX_CASE = " ".join(
 )
 ORACLE["sample_by_source"] = f"""
     SELECT doc_id, source FROM documents
-    WHERE ({_DUCK_H.format(col='doc_id::VARCHAR')}) % 100
+    WHERE ({DUCK_H.format(col='doc_id::VARCHAR')}) % 100
           < (CASE source {_MIX_CASE} ELSE 0 END)
 """
 
@@ -2221,7 +2233,7 @@ ORACLE["sim_lsh_multi_recall"] = f"""
 ORACLE["data_split_assign"] = f"""
     WITH b AS (
         SELECT doc_id, source,
-               {_DUCK_H.format(col='doc_id::VARCHAR')} % 100 AS bucket
+               {DUCK_H.format(col='doc_id::VARCHAR')} % 100 AS bucket
         FROM documents
     )
     SELECT doc_id, source,
@@ -2748,7 +2760,7 @@ def sample_cap_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     crawl >> curated sets) are exactly the case the group-limit
     pushdown exists for."""
     docs = load(spark, sf_dir, "documents")
-    h = F.expr(_SPARK_H.format(col="cast(doc_id as string)"))
+    h = F.expr(SPARK_H.format(col="cast(doc_id as string)"))
     w = Window.partitionBy("source").orderBy(h.asc(), F.col("doc_id").asc())
     return (
         docs.withColumn("rn", F.row_number().over(w))
@@ -2795,7 +2807,7 @@ ORACLE["sample_cap_per_source"] = f"""
     FROM (
         SELECT doc_id, source, row_number() OVER (
             PARTITION BY source
-            ORDER BY {_DUCK_H.format(col="doc_id::VARCHAR")}, doc_id
+            ORDER BY {DUCK_H.format(col="doc_id::VARCHAR")}, doc_id
         ) AS rn
         FROM documents
     ) WHERE rn <= {SOURCE_CAP}
@@ -2887,7 +2899,7 @@ def sample_epoch_oversample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     pairs = [x for kv in EPOCH_WEIGHTS.items() for x in kv]
     weights = F.create_map(*[F.lit(x) for x in pairs])
-    bucket = F.expr(_SPARK_H.format(col="cast(doc_id as string)")) % 100
+    bucket = F.expr(SPARK_H.format(col="cast(doc_id as string)")) % 100
     n_copies = (F.col("w") / 100).cast("int") + (
         bucket < F.col("w") % 100
     ).cast("int")
@@ -2915,7 +2927,7 @@ ORACLE["sample_epoch_oversample"] = f"""
     WITH d AS (
         SELECT doc_id, source,
                CASE source {_EPOCH_W_CASE} ELSE 0 END AS w,
-               {_DUCK_H.format(col="doc_id::VARCHAR")} % 100 AS b
+               {DUCK_H.format(col="doc_id::VARCHAR")} % 100 AS b
         FROM documents
     ),
     c AS (
@@ -3697,7 +3709,7 @@ def sample_weighted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is never globally sorted.  u derives from the same md5 hash as
     every other sampling op; ties broken by doc_id."""
     docs = load(spark, sf_dir, "documents")
-    h = _SPARK_H.format(col="cast(doc_id as string)")
+    h = SPARK_H.format(col="cast(doc_id as string)")
     key = F.expr(f"-ln(({h} + 1) / 4294967296.0) / n_chars")
     return (
         docs.select("doc_id", "source", key.alias("wkey"))
@@ -3712,7 +3724,7 @@ QUERIES["sample_weighted_topk"] = sample_weighted_topk
 ORACLE["sample_weighted_topk"] = f"""
     SELECT doc_id, source FROM (
         SELECT doc_id, source,
-               -ln(({_DUCK_H.format(col='doc_id::VARCHAR')} + 1)
+               -ln(({DUCK_H.format(col='doc_id::VARCHAR')} + 1)
                    / 4294967296.0) / n_chars AS wkey
         FROM documents
     )
@@ -3785,14 +3797,7 @@ def data_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers.  No broadcast hints — both sides are corpus-sized
     and AQE must stay free to choose."""
     docs = load(spark, sf_dir, "documents")
-    bucket = F.expr(_SPARK_H.format(col="cast(doc_id as string)")) % 100
-    split = docs.select(
-        "doc_id",
-        F.when(bucket < SPLIT_TRAIN_PCT, "train")
-        .when(bucket < SPLIT_TRAIN_PCT + SPLIT_VAL_PCT, "val")
-        .otherwise("test")
-        .alias("split"),
-    )
+    split = docs.select("doc_id", split_label().alias("split"))
     sh = _shingles(spark, sf_dir).select("doc_id", "shingle")
     train_shingles = sh.join(
         split.filter(F.col("split") == "train").select("doc_id"),
@@ -3820,11 +3825,7 @@ QUERIES["data_split_leakage"] = data_split_leakage
 ORACLE["data_split_leakage"] = f"""
     WITH split AS (
         SELECT doc_id,
-               CASE WHEN ({_DUCK_H.format(col='doc_id::VARCHAR')}) % 100
-                         < {SPLIT_TRAIN_PCT} THEN 'train'
-                    WHEN ({_DUCK_H.format(col='doc_id::VARCHAR')}) % 100
-                         < {SPLIT_TRAIN_PCT + SPLIT_VAL_PCT} THEN 'val'
-                    ELSE 'test' END AS split
+               {duck_split_label('doc_id', 15)} AS split
         FROM documents
     ),
     {_duck_shingle_cte()},
@@ -3868,14 +3869,9 @@ def data_split_by_component(spark: SparkSession, sf_dir: str) -> DataFrame:
             "split_group", F.coalesce(F.col("component"), F.col("doc_id"))
         )
     )
-    bucket = F.expr(_SPARK_H.format(col="cast(split_group as string)")) % 100
-    split = (
-        F.when(bucket < SPLIT_TRAIN_PCT, "train")
-        .when(bucket < SPLIT_TRAIN_PCT + SPLIT_VAL_PCT, "val")
-        .otherwise("test")
-    )
     return base.select(
-        "doc_id", "source", "split_group", split.alias("split")
+        "doc_id", "source", "split_group",
+        split_label("split_group").alias("split"),
     )
 
 
@@ -3891,11 +3887,7 @@ ORACLE["data_split_by_component"] = f"""
         FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
     )
     SELECT doc_id, source, split_group,
-           CASE WHEN ({_DUCK_H.format(col='split_group::VARCHAR')}) % 100
-                     < {SPLIT_TRAIN_PCT} THEN 'train'
-                WHEN ({_DUCK_H.format(col='split_group::VARCHAR')}) % 100
-                     < {SPLIT_TRAIN_PCT + SPLIT_VAL_PCT} THEN 'val'
-                ELSE 'test' END AS split
+           {duck_split_label('split_group', 11)} AS split
     FROM base
 """
 
@@ -4220,7 +4212,7 @@ def data_mixture_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights = sample_temperature_weights(spark, sf_dir).select(
         "source", "weight_bp"
     )
-    h = F.expr(_SPARK_H.format(col="cast(doc_id as string)"))
+    h = F.expr(SPARK_H.format(col="cast(doc_id as string)"))
     ranked = sharded_row_number(
         docs.select("doc_id", "source", h.alias("h")),
         part="source",
@@ -4257,7 +4249,7 @@ ORACLE["data_mixture_order"] = f"""
         SELECT doc_id, source,
                row_number() OVER (
                    PARTITION BY source
-                   ORDER BY {_DUCK_H.format(col='doc_id::VARCHAR')}, doc_id
+                   ORDER BY {DUCK_H.format(col='doc_id::VARCHAR')}, doc_id
                )::BIGINT AS pos
         FROM documents
     )
@@ -4419,12 +4411,7 @@ def _corpus_build_plan(
         text_quality_filter(spark, sf_dir).filter("keep").select("doc_id")
     )
     survivors = dedup_survivors(spark, sf_dir).select("doc_id")
-    bucket = F.expr(_SPARK_H.format(col="cast(doc_id as string)")) % 100
-    split = (
-        F.when(bucket < SPLIT_TRAIN_PCT, "train")
-        .when(bucket < SPLIT_TRAIN_PCT + SPLIT_VAL_PCT, "val")
-        .otherwise("test")
-    )
+    split = split_label()
     kept = docs.join(quality_keep, "doc_id", "semi").join(
         survivors, "doc_id", "semi"
     )
@@ -4462,11 +4449,7 @@ ORACLE["data_corpus_build"] = f"""
     ),
     kept AS (
         SELECT d.doc_id, d.source,
-               CASE WHEN ({_DUCK_H.format(col='d.doc_id::VARCHAR')}) % 100
-                         < {SPLIT_TRAIN_PCT} THEN 'train'
-                    WHEN ({_DUCK_H.format(col='d.doc_id::VARCHAR')}) % 100
-                         < {SPLIT_TRAIN_PCT + SPLIT_VAL_PCT} THEN 'val'
-                    ELSE 'test' END AS split,
+               {duck_split_label('d.doc_id', 15)} AS split,
                t.n_tokens
         FROM documents d
         JOIN toksz t ON d.doc_id = t.doc_id
@@ -4576,21 +4559,10 @@ BLOOM_BITS = 1 << 16  # 65536-bit demo filter; size to ~10 bits/element in prod
 BLOOM_K = 3
 
 
-def _bloom_positions_spark(col: str) -> list[str]:
-    """K independent bit positions from disjoint md5 slices (exact same
-    integers in the DuckDB twin)."""
-    return [
-        f"cast(conv(substr(md5({col}), {1 + 8 * i}, 8), 16, 10) as bigint)"
-        f" % {BLOOM_BITS}"
-        for i in range(BLOOM_K)
-    ]
-
-
 def _bloom_positions_duck(col: str) -> list[str]:
-    return [
-        f"(('0x' || substr(md5({col}), {1 + 8 * i}, 8))::BIGINT) % {BLOOM_BITS}"
-        for i in range(BLOOM_K)
-    ]
+    """The K bit positions of ``md5_slices(md5(col), BLOOM_K,
+    BLOOM_BITS)`` in DuckDB."""
+    return [duck_md5_slice(col, i, BLOOM_BITS) for i in range(BLOOM_K)]
 
 
 def text_bloom_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4627,14 +4599,18 @@ def text_bloom_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    pos = [F.expr(e) for e in _bloom_positions_spark("shingle")]
+    cls = cls.withColumn("__s", F.md5("shingle"))
+    pos = F.explode(md5_slices("__s", BLOOM_K, BLOOM_BITS)).alias("p")
     bits = (
         cls.filter("in_train")
-        .select(F.explode(F.array(*pos)).alias("bit"))
+        .select(pos)
+        .select(F.col("p.b").alias("bit"))
         .distinct()
     )
-    probes = cls.filter("in_bench").select(
-        "shingle", "in_train", F.explode(F.array(*pos)).alias("bit")
+    probes = (
+        cls.filter("in_bench")
+        .select("shingle", "in_train", pos)
+        .select("shingle", "in_train", F.col("p.b").alias("bit"))
     )
     hits = (
         probes.join(F.broadcast(bits), "bit")
@@ -4715,20 +4691,12 @@ def emb_cosine_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE doubles both engines derive from identical float inputs — the
     established cosine discipline of the sim_* family."""
     emb = load(spark, sf_dir, "embeddings")
-    bucket = sum(
-        (
-            F.when(F.element_at("embedding", d) > 0, F.lit(1 << j)).otherwise(F.lit(0))
-            for j, d in enumerate(LSH_DIMS)
-        ),
-        start=F.lit(0),
-    ).cast("long")
+    bucket = ann.sign_bucket(LSH_DIMS)
     norm = F.expr(ann.NORM)
     base = emb.select(
         "vec_id", "embedding", bucket.alias("bucket"), norm.alias("nrm")
     )
-    dot = F.expr(ann.DOT.format(a="a.embedding", b="b.embedding"))
-    cos = dot / F.sqrt(F.col("a.nrm") * F.col("b.nrm"))
-    pairs = self_pairs(base, "bucket", "vec_id").select(cos.alias("cos"))
+    pairs = self_pairs(base, "bucket", "vec_id").select(ann.pair_cosine())
     aggs = [
         F.sum(F.when(F.col("cos") >= t / 100.0, 1).otherwise(0)).alias(
             f"pairs_c{t}"
@@ -5035,20 +5003,6 @@ CMS_WIDTH = 16   # deliberately tiny: 31 fixture tokens MUST collide, so
 CMS_HH_DENOM = 64  # heavy hitter iff est * 64 >= total occurrences
 
 
-def _cms_pos_spark(i: int) -> str:
-    return (
-        f"cast(conv(substr(md5(token), {1 + 8 * i}, 8), 16, 10) as bigint)"
-        f" % {CMS_WIDTH}"
-    )
-
-
-def _cms_pos_duck(i: int) -> str:
-    return (
-        f"(('0x' || substr(md5(token), {1 + 8 * i}, 8))::BIGINT)"
-        f" % {CMS_WIDTH}"
-    )
-
-
 def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min-sketch heavy hitters over the token stream: build a
     ``CMS_DEPTH x CMS_WIDTH`` counter sketch in ONE hash aggregate (each
@@ -5071,40 +5025,19 @@ def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the heavy-hitter decision itself uses est alone."""
     docs = load(spark, sf_dir, "documents")
     occ = docs.select(F.explode(F.expr(_SPARK_TOKS)).alias("token"))
-    inc = occ.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("r"),
-                        F.expr(_cms_pos_spark(i)).alias("b"),
-                    )
-                    for i in range(CMS_DEPTH)
-                ]
-            )
-        ).alias("rb")
-    )
-    sketch = (
-        inc.select("rb.r", "rb.b").groupBy("r", "b").agg(
-            F.count("*").alias("cnt")
-        )
+    sketch = cms_partial_counters(
+        occ, "token", depth=CMS_DEPTH, width=CMS_WIDTH
     )
     truth = occ.groupBy("token").agg(F.count("*").alias("true_count"))
-    probes = truth.select(
-        "token",
-        "true_count",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("r"),
-                        F.expr(_cms_pos_spark(i)).alias("b"),
-                    )
-                    for i in range(CMS_DEPTH)
-                ]
-            )
-        ).alias("rb"),
-    ).select("token", "true_count", "rb.r", "rb.b")
+    probes = (
+        truth.withColumn("__s", F.md5("token"))
+        .select(
+            "token",
+            "true_count",
+            F.explode(md5_slices("__s", CMS_DEPTH, CMS_WIDTH)).alias("rb"),
+        )
+        .select("token", "true_count", "rb.r", "rb.b")
+    )
     est = (
         probes.join(F.broadcast(sketch), ["r", "b"])
         .groupBy("token")
@@ -5127,11 +5060,12 @@ def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["text_heavy_hitters"] = text_heavy_hitters
 
 _CMS_DUCK_INC = " UNION ALL ".join(
-    f"SELECT {i} AS r, {_cms_pos_duck(i)} AS b FROM occ"
+    f"SELECT {i} AS r, {duck_md5_slice('token', i, CMS_WIDTH)} AS b FROM occ"
     for i in range(CMS_DEPTH)
 )
 _CMS_DUCK_PROBES = " UNION ALL ".join(
-    f"SELECT token, true_count, {i} AS r, {_cms_pos_duck(i)} AS b FROM truth"
+    f"SELECT token, true_count, {i} AS r,"
+    f" {duck_md5_slice('token', i, CMS_WIDTH)} AS b FROM truth"
     for i in range(CMS_DEPTH)
 )
 
@@ -5922,7 +5856,7 @@ def sample_multinomial(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "draw_id",
             (
-                F.expr(_SPARK_H60.format(col="cast(draw_id as string)"))
+                F.expr(SPARK_H60.format(col="cast(draw_id as string)"))
                 % F.col("total")
             ).alias("u"),
         )
@@ -5958,7 +5892,7 @@ ORACLE["sample_multinomial"] = f"""
     tot AS (SELECT sum(wt)::BIGINT AS total FROM w),
     draws AS (
         SELECT i AS draw_id,
-               ({_DUCK_H60.format(col='i::VARCHAR')}) % total AS u
+               ({DUCK_H60.format(col='i::VARCHAR')}) % total AS u
         FROM generate_series(0, {N_MULTINOMIAL_DRAWS - 1}) AS t(i), tot
     )
     SELECT draw_id, source
@@ -6258,8 +6192,6 @@ def data_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rescan at 100 TB — the estimate derives from these registers via
     # hll_estimate).  And the winnowing copy-region rates from
     # text_winnow_regions — where copies ARE, not just that they exist.
-    from .dq import hll_partial_registers
-
     src_regs = (
         hll_partial_registers(
             docs.select("source", "text"), id_col="text",
@@ -6450,10 +6382,10 @@ ORACLE["multimodal_decode_bmp"] = """
 GOPHER_LINE_TOKENS = 5
 GOPHER_MIN_STOPWORDS = 2   # Rae A1.1: >= 2 of the required stopword set
 
-_SALT_S = _SPARK_H.format(
+_SALT_S = SPARK_H.format(
     col="concat(cast(doc_id as string), ':', cast(j as string))"
 )
-_DK_S = _SPARK_H.format(col="concat('k:', cast(doc_id as string))")
+_DK_S = SPARK_H.format(col="concat('k:', cast(doc_id as string))")
 
 _SPARK_STRUCT_TEXT = f"""
 array_join(
@@ -6613,8 +6545,8 @@ def text_gopher_filter_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["text_structured"] = text_structured
 QUERIES["text_gopher_filter_full"] = text_gopher_filter_full
 
-_SALT_D = _DUCK_H.format(col="doc_id::VARCHAR || ':' || j::VARCHAR")
-_DK_D = _DUCK_H.format(col="'k:' || doc_id::VARCHAR")
+_SALT_D = DUCK_H.format(col="doc_id::VARCHAR || ':' || j::VARCHAR")
+_DK_D = DUCK_H.format(col="'k:' || doc_id::VARCHAR")
 
 _STRUCTURED_CTE = f"""
     toks AS (SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents),
@@ -6898,7 +6830,7 @@ def data_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile computation; readers range-partition on the key, the
     engine never globally sorts."""
     pct = text_quality_normalized(spark, sf_dir)
-    h = F.expr(_SPARK_H.format(col="cast(doc_id as string)"))
+    h = F.expr(SPARK_H.format(col="cast(doc_id as string)"))
     phase = F.expr(
         f"((10000 - quality_pct_bp) * {CURRICULUM_PHASES}) div 10001"
     )
@@ -6919,7 +6851,7 @@ ORACLE["data_curriculum_order"] = f"""
                AS phase,
            ((((10000 - quality_pct_bp) * {CURRICULUM_PHASES}) // 10001)
                 * 4294967296
-            + {_DUCK_H.format(col='doc_id::VARCHAR')})::BIGINT AS order_key
+            + {DUCK_H.format(col='doc_id::VARCHAR')})::BIGINT AS order_key
     FROM pct
 """
 
@@ -7811,20 +7743,24 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["text_winnow_fingerprints"] = text_winnow_fingerprints
 
-ORACLE["text_winnow_fingerprints"] = f"""
-    WITH toks AS (
+# toks, then hashed: (doc_id, hs), every k-gram's hash in gram order.
+_DUCK_GRAM = f"""array_to_string(
+                           toks[(j + 1)::INT : (j + {K_WINNOW})::INT],
+                           ' ')"""
+_DUCK_WINNOW_HASHED = f"""toks AS (
         SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents
     ),
     hashed AS (
         SELECT doc_id,
                CASE WHEN len(toks) >= {K_WINNOW} THEN
                    list_transform(range(0, len(toks) - {K_WINNOW} + 1),
-                       j -> ('0x' || substr(md5(array_to_string(
-                           toks[(j + 1)::INT : (j + {K_WINNOW})::INT],
-                           ' ')), 1, 8))::BIGINT)
+                       j -> {DUCK_H.format(col=_DUCK_GRAM)})
                ELSE [] END AS hs
         FROM toks
-    ),
+    )"""
+
+ORACLE["text_winnow_fingerprints"] = f"""
+    WITH {_DUCK_WINNOW_HASHED},
     sel AS (
         SELECT doc_id, len(hs)::BIGINT AS n_grams,
                CASE WHEN len(hs) >= 1 THEN
@@ -7905,19 +7841,7 @@ def winnow_pairs_from_prints(prints: DataFrame) -> DataFrame:
 QUERIES["text_winnow_pairs"] = text_winnow_pairs
 
 ORACLE["text_winnow_pairs"] = f"""
-    WITH toks AS (
-        SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents
-    ),
-    hashed AS (
-        SELECT doc_id,
-               CASE WHEN len(toks) >= {K_WINNOW} THEN
-                   list_transform(range(0, len(toks) - {K_WINNOW} + 1),
-                       j -> ('0x' || substr(md5(array_to_string(
-                           toks[(j + 1)::INT : (j + {K_WINNOW})::INT],
-                           ' ')), 1, 8))::BIGINT)
-               ELSE [] END AS hs
-        FROM toks
-    ),
+    WITH {_DUCK_WINNOW_HASHED},
     prints AS (
         SELECT DISTINCT doc_id, fp FROM (
             SELECT doc_id, unnest(
@@ -7971,7 +7895,7 @@ def winnow_print_positions(docs: DataFrame) -> DataFrame:
     each happen once per window and the whole selection stays scan-stage
     array codegen like the value-only twin.  Distinct because adjacent
     windows usually select the same (fp, pos)."""
-    gram_h = _SPARK_H.format(
+    gram_h = SPARK_H.format(
         col=f"array_join(slice(toks, cast(j + 1 as int), {K_WINNOW}), ' ')"
     )
     hs_expr = (
@@ -8127,19 +8051,7 @@ def text_winnow_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["text_winnow_regions"] = text_winnow_regions
 
 ORACLE["text_winnow_regions"] = f"""
-    WITH toks AS (
-        SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents
-    ),
-    hashed AS (
-        SELECT doc_id,
-               CASE WHEN len(toks) >= {K_WINNOW} THEN
-                   list_transform(range(0, len(toks) - {K_WINNOW} + 1),
-                       j -> ('0x' || substr(md5(array_to_string(
-                           toks[(j + 1)::INT : (j + {K_WINNOW})::INT],
-                           ' ')), 1, 8))::BIGINT)
-               ELSE [] END AS hs
-        FROM toks
-    ),
+    WITH {_DUCK_WINNOW_HASHED},
     posed AS (
         SELECT doc_id, hs, unnest(
             CASE WHEN len(hs) >= 1 THEN
@@ -8237,7 +8149,7 @@ def _phash_image_corpus(docs: DataFrame) -> DataFrame:
     base = docs.select(
         (F.col("doc_id") * 2).alias("img_id"), "doc_id", "text"
     )
-    sel = F.expr(_SPARK_H.format(col="cast(doc_id as string)"))
+    sel = F.expr(SPARK_H.format(col="cast(doc_id as string)"))
     variants = docs.filter(sel % PHASH_VARIANT_MOD == 0).select(
         (F.col("doc_id") * 2 + 1).alias("img_id"),
         "doc_id",
@@ -8307,7 +8219,7 @@ _PHASH_HASHES_D = f"""
         UNION ALL
         SELECT doc_id * 2 + 1, doc_id, {_PHASH_VARIANT_TEXT_D}
         FROM documents
-        WHERE ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT
+        WHERE {DUCK_H.format(col='doc_id::VARCHAR')}
               % {PHASH_VARIANT_MOD} = 0
     ),
     dims AS (
@@ -8402,7 +8314,6 @@ ORACLE["multimodal_phash_pairs"] = f"""
 # here, after ORACLE["text_winnow_regions"] exists, replacing the
 # pre-round-6 assignment above (later assignment wins — the dict is
 # flattened once at package import).
-from .dq import HLL_M as _HLL_M_CARD  # noqa: E402
 
 ORACLE["data_dataset_card"] = f"""
     WITH base AS (
@@ -8431,7 +8342,7 @@ ORACLE["data_dataset_card"] = f"""
     srcreg AS (
         SELECT source, count(*)::BIGINT AS n_regs FROM (
             SELECT DISTINCT source,
-                   ('0x' || substr(md5(text), 1, 8))::BIGINT % {_HLL_M_CARD}
+                   {DUCK_H.format(col='text')} % {HLL_M}
                        AS register
             FROM documents
         ) GROUP BY 1
@@ -8869,8 +8780,6 @@ def card_source_estimates(
     source.  The ±3σ accuracy test compares these against the exact
     per-source ``countDistinct(text)`` — completing the card's sketch
     story the way ``profile_estimates`` did for the profiler."""
-    from .dq import hll_estimate, hll_partial_registers
-
     docs = load(spark, sf_dir, "documents")
     regs = hll_partial_registers(
         docs.select("source", "text"), id_col="text",
@@ -8931,11 +8840,7 @@ ORACLE["data_corpus_build_copyaware"] = f"""
     ),
     kept AS (
         SELECT d.doc_id, d.source,
-               CASE WHEN ({_DUCK_H.format(col='d.doc_id::VARCHAR')}) % 100
-                         < {SPLIT_TRAIN_PCT} THEN 'train'
-                    WHEN ({_DUCK_H.format(col='d.doc_id::VARCHAR')}) % 100
-                         < {SPLIT_TRAIN_PCT + SPLIT_VAL_PCT} THEN 'val'
-                    ELSE 'test' END AS split,
+               {duck_split_label('d.doc_id', 15)} AS split,
                t.n_tokens
         FROM documents d
         JOIN toksz t ON d.doc_id = t.doc_id
@@ -9073,7 +8978,7 @@ def _video_corpus(docs: DataFrame) -> DataFrame:
     base = docs.select(
         (F.col("doc_id") * 2).alias("vid_id"), "doc_id", "text"
     )
-    sel = F.expr(_SPARK_H.format(col="cast(doc_id as string)"))
+    sel = F.expr(SPARK_H.format(col="cast(doc_id as string)"))
     variants = docs.filter(sel % VIDEO_VARIANT_MOD == 0).select(
         (F.col("doc_id") * 2 + 1).alias("vid_id"),
         "doc_id",
@@ -9130,13 +9035,17 @@ from ..operators.multimodal import Y4M_W_MOD as _Y4M_W_MOD  # noqa: E402
 # doc_id), vfr unnests sampled frames, vsad/vcut reuse the scene-cut
 # oracle's forms, vscn assigns each sampled frame its scene island, and
 # sigs hashes the keyframe luma string with the house md5-prefix idiom.
+_VIDEO_LUMA_D = """array_to_string(
+                   list_transform(range(0, d.np), i ->
+                       ((ord(substr(d.text, ((2 * s.kf + i) % d.nc) + 1,
+                           1)) % 256))::VARCHAR), ' ')"""
 _VIDEO_SIGS_D = f"""
     vcorp AS (
         SELECT doc_id * 2 AS vid_id, doc_id, text FROM documents
         UNION ALL
         SELECT doc_id * 2 + 1, doc_id, {_PHASH_VARIANT_TEXT_D}
         FROM documents
-        WHERE ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT
+        WHERE {DUCK_H.format(col='doc_id::VARCHAR')}
               % {VIDEO_VARIANT_MOD} = 0
     ),
     vd AS (
@@ -9182,10 +9091,7 @@ _VIDEO_SIGS_D = f"""
     sigs AS MATERIALIZED (
         SELECT s.vid_id, s.scene_idx, s.scene_len,
                d.np::BIGINT AS plane_px,
-               ('0x' || substr(md5(array_to_string(
-                   list_transform(range(0, d.np), i ->
-                       ((ord(substr(d.text, ((2 * s.kf + i) % d.nc) + 1,
-                           1)) % 256))::VARCHAR), ' ')), 1, 8))::BIGINT
+               {DUCK_H.format(col=_VIDEO_LUMA_D)}
                    AS sig
         FROM vsc s JOIN vd d USING (vid_id)
     )
@@ -9316,7 +9222,7 @@ def multimodal_video_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (both sides share geometry, so the gate is one predicate on the
     doc).  recall_bp = found/planted in exact basis points."""
     docs = load(spark, sf_dir, "documents")
-    sel = F.expr(_SPARK_H.format(col="cast(doc_id as string)"))
+    sel = F.expr(SPARK_H.format(col="cast(doc_id as string)"))
     plane = F.expr(
         f"(1 + length(text) % {_Y4M_W_MOD})"
         f" * (1 + doc_id % {_Y4M_H_MOD})"
@@ -9348,7 +9254,7 @@ ORACLE["multimodal_video_recall"] = f"""
     WITH planted AS (
         SELECT doc_id * 2 AS vid_a, doc_id * 2 + 1 AS vid_b
         FROM documents
-        WHERE ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT
+        WHERE {DUCK_H.format(col='doc_id::VARCHAR')}
               % {VIDEO_VARIANT_MOD} = 0
           AND (1 + (len(text) % {_Y4M_W_MOD}))
               * (1 + (doc_id % {_Y4M_H_MOD})) >= {VIDEO_MIN_PLANE_PX}
@@ -9405,7 +9311,7 @@ def _audio_corpus(docs: DataFrame) -> DataFrame:
     base = docs.select(
         (F.col("doc_id") * 2).alias("aud_id"), "doc_id", "text"
     )
-    sel = F.expr(_SPARK_H.format(col="cast(doc_id as string)"))
+    sel = F.expr(SPARK_H.format(col="cast(doc_id as string)"))
     variants = docs.filter(sel % AUDIO_VARIANT_MOD == 0).select(
         (F.col("doc_id") * 2 + 1).alias("aud_id"),
         "doc_id",
@@ -9464,7 +9370,7 @@ _AUDIO_CODES_D = f"""
         UNION ALL
         SELECT doc_id * 2 + 1, doc_id, {_PHASH_VARIANT_TEXT_D}
         FROM documents
-        WHERE ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT
+        WHERE {DUCK_H.format(col='doc_id::VARCHAR')}
               % {AUDIO_VARIANT_MOD} = 0
     ),
     asmp AS (
@@ -9607,7 +9513,7 @@ def multimodal_audio_recall(
     text functions — the changed character moves exactly one sample by
     |Δbyte|·257), and recall_bp = detected/true in basis points."""
     docs = load(spark, sf_dir, "documents")
-    sel = F.expr(_SPARK_H.format(col="cast(doc_id as string)"))
+    sel = F.expr(SPARK_H.format(col="cast(doc_id as string)"))
     # exact per-doc SAD and energy of the one-character change
     pos = F.expr("(doc_id % 105) % length(text)")
     orig_b = F.expr(
@@ -9661,7 +9567,7 @@ ORACLE["multimodal_audio_recall"] = f"""
                    abs(((ord(substr(text, (i + 1)::INT, 1)) % 256)
                        * 257) - 32768)))::BIGINT AS energy
         FROM documents
-        WHERE ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT
+        WHERE {DUCK_H.format(col='doc_id::VARCHAR')}
               % {AUDIO_VARIANT_MOD} = 0
           AND len(text) >= {AUDIO_MIN_SAMPLES}
     ),

@@ -13,7 +13,8 @@ replayed batch re-derives exactly its own partial from its own rows,
 so the served counters are replay-idempotent by construction.  The
 served view is pinned EXACTLY equal to the batch counters over the
 same corpus, which also pins every downstream estimate (per-day heavy
-hitters, the range top-talker rollup).
+hitters, the range top-talker rollup).  With no group columns it is the
+"top talkers" view: one counter block over the whole stream.
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..queries.dq import CMS_DAY_DEPTH, CMS_DAY_WIDTH, cms_partial_counters
+from ..operators.sketches import CMS_DEPTH, CMS_WIDTH, cms_partial_counters
 from .logio import read_log, write_log_partition
 
 
@@ -32,7 +33,7 @@ class CmsIngestSink:
 
     def __init__(self, log_path: str, item_col: str = "user_id",
                  group_cols: tuple[str, ...] = (),
-                 depth: int = CMS_DAY_DEPTH, width: int = CMS_DAY_WIDTH):
+                 depth: int = CMS_DEPTH, width: int = CMS_WIDTH):
         self.log_path = log_path
         self.item_col = item_col
         self.group_cols = tuple(group_cols)

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..queries.dq import hll_partial_registers
+from ..operators.sketches import hll_partial_registers
 from .logio import read_log, write_log_partition
 
 
@@ -31,7 +31,7 @@ class HllIngestSink:
     per-source / per-day registers, the production shape — with zero
     change to the merge law: registers still combine with a plain max,
     now keyed by (group..., register).  Register construction is the
-    batch queries' own :func:`~..queries.dq.hll_partial_registers`
+    batch queries' own :func:`~..operators.sketches.hll_partial_registers`
     (hash staged once per row), so the served view is pinned equal to
     ``dq_hll_registers`` / ``dq_hll_by_type`` by construction."""
 

@@ -35,9 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.sketches import hll_partial_registers
 from ..queries.dq import (
     PROFILE_COLUMNS,
-    hll_partial_registers,
     profile_pairs,
     profile_value_quantiles,
     vbin_partial_counts,

@@ -1,9 +1,10 @@
-"""Streaming sketch maintenance: an incrementally-updated distinct-reach
-view (HLL) in the same distributed foreachBatch shape as
-``cdc.LatestStateSink`` — this is the operational payoff of *mergeable*
-sketch state (``operators/sketches.py``): each micro-batch sketches only
-its own rows, and the serving view is a register-wise union of the
-per-batch parts, never a rescan of history.
+"""Streaming sketch maintenance: incrementally-updated DataSketches
+views (HLL reach, KLL quantiles) in the same distributed foreachBatch
+shape as ``cdc.LatestStateSink`` — this is the operational payoff of
+*mergeable* sketch state (``operators/sketches.py``): each micro-batch
+sketches only its own rows with the batch constructor, and the serving
+view merges the per-batch parts, never a rescan of history.  (The
+count-min view is ``cmsview.CmsIngestSink``.)
 
 Because HLL union is exact over sketch state (register-wise max), the
 streamed view is bit-identical to sketching the full table in one batch
@@ -18,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.sketches import HLL_LGK
+from ..operators.sketches import HLL_LGK, hll_reach, hll_rollup, kll_summary
 from .logio import read_log, write_log_partition
 
 
@@ -33,92 +34,16 @@ class ReachViewSink:
         self.lgk = lgk
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        contrib = (
-            batch_df.groupBy(
-                F.date_trunc("day", "ts").alias("day"), "event_type"
-            )
-            .agg(
-                F.hll_sketch_agg("user_id", F.lit(self.lgk)).alias(
-                    "reach_sketch"
-                )
-            )
-        )
+        groups = ["day", "event_type"]
+        contrib = hll_reach(
+            batch_df.select(
+                F.date_trunc("day", "ts").alias("day"), "event_type", "user_id"
+            ),
+            groups, "user_id", self.lgk,
+        ).drop("reach_est")
         schema = write_log_partition(contrib, batch_id, self.log_path)
         spark = batch_df.sparkSession
-        merged = F.hll_union_agg(F.col("reach_sketch"), F.lit(True))
-        view = (
-            read_log(spark, self.log_path, schema)
-            .groupBy("day", "event_type")
-            .agg(
-                merged.alias("reach_sketch"),
-                F.hll_sketch_estimate(merged).cast("long").alias("reach_est"),
-            )
-        )
-        view.write.mode("overwrite").parquet(self.out_path)
-
-
-CMS_VIEW_DEPTH = 3
-CMS_VIEW_WIDTH = 64
-
-
-def _cms_increments(df: DataFrame, key_expr: str,
-                    depth: int, width: int) -> DataFrame:
-    """(r, b) increment rows for a count-min sketch over ``key_expr`` —
-    depth disjoint md5 slices, the portable hash family shared with
-    ``queries/llmdata.py::text_heavy_hitters``."""
-    rb = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("r"),
-                    F.expr(
-                        f"cast(conv(substr(md5({key_expr}), {1 + 8 * i}, 8),"
-                        f" 16, 10) as bigint) % {width}"
-                    ).alias("b"),
-                )
-                for i in range(depth)
-            ]
-        )
-    )
-    return df.select(rb.alias("rb")).select("rb.r", "rb.b")
-
-
-class TopTalkersViewSink:
-    """foreachBatch sink maintaining a count-min sketch of per-user
-    event counts (the "top talkers" serving view).  CMS merge is exact
-    counter ADDITION, so the streamed view — per-batch partial counters
-    summed across the log — is BIT-IDENTICAL to sketching the whole
-    table in one pass, the same union-of-parts invariant as the HLL
-    reach view but over integer counters instead of registers.
-
-    Scale/replay posture matches ``ReachViewSink``: each batch writes
-    its own O(depth x width) counter partition (dynamic partition
-    overwrite => replay-idempotent), the serving view is one bounded
-    aggregation of the log, and a major compaction would fold the log
-    into a single partition with the identical sum."""
-
-    def __init__(self, log_path: str, out_path: str,
-                 depth: int = CMS_VIEW_DEPTH, width: int = CMS_VIEW_WIDTH):
-        self.log_path = log_path
-        self.out_path = out_path
-        self.depth = depth
-        self.width = width
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        contrib = (
-            _cms_increments(
-                batch_df, "cast(user_id as string)", self.depth, self.width
-            )
-            .groupBy("r", "b")
-            .agg(F.count("*").alias("cnt"))
-        )
-        schema = write_log_partition(contrib, batch_id, self.log_path)
-        spark = batch_df.sparkSession
-        view = (
-            read_log(spark, self.log_path, schema)
-            .groupBy("r", "b")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
+        view = hll_rollup(read_log(spark, self.log_path, schema), groups)
         view.write.mode("overwrite").parquet(self.out_path)
 
 
@@ -158,18 +83,9 @@ class LatencyQuantilesViewSink:
         schema = write_log_partition(contrib, batch_id, self.log_path)
         spark = batch_df.sparkSession
         merged = F.kll_merge_agg_double("kll")
-        qcols = [
-            F.kll_sketch_get_quantile_double(merged, F.lit(p)).alias(
-                f"q{str(p).replace('0.', '')}"
-            )
-            for p in KLL_VIEW_PROBS
-        ]
         view = (
             read_log(spark, self.log_path, schema)
             .groupBy("event_type")
-            .agg(
-                *qcols,
-                F.kll_sketch_get_n_double(merged).alias("n"),
-            )
+            .agg(*kll_summary(merged, KLL_VIEW_PROBS))
         )
         view.write.mode("overwrite").parquet(self.out_path)

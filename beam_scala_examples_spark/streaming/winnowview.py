@@ -7,9 +7,9 @@ family for the newest pair-generation method the way
 One batch_id-partitioned additive log (the house registry discipline):
 
  - ``winnow_prints``: (doc_id, fp) — each arriving document's DISTINCT
-   winnowed fingerprints, computed per batch with the exact selection
-   expressions the batch queries use (same k-gram hash, same window
-   min), O(batch × density) slim rows appended per batch.
+   winnowed fingerprints, the (doc_id, fp) set of the batch twin's
+   ``winnow_print_positions`` over the micro-batch (same k-gram hash,
+   same window min), O(batch × density) slim rows appended per batch.
 
 Per-batch work is O(batch) selection + one join against the log's
 EARLIER partitions to stamp an arrival-time tripwire: for every
@@ -35,42 +35,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries.llmdata import (
-    K_WINNOW,
-    W_WINNOW,
-    _SPARK_H,
-    _SPARK_TOKS,
     winnow_pairs_from_prints,
     winnow_print_positions,
     winnow_regions_from_prints,
 )
 from .logio import read_log, write_log_partition
-
-
-def _winnow_prints(batch_df: DataFrame) -> DataFrame:
-    """(doc_id, fp) distinct winnowed prints — the batch queries'
-    selection expressions applied to a (doc_id, text) relation."""
-    gram_h = _SPARK_H.format(
-        col=f"array_join(slice(toks, cast(j + 1 as int), {K_WINNOW}), ' ')"
-    )
-    hs_expr = (
-        f"case when size(toks) >= {K_WINNOW} then"
-        f" transform(sequence(cast(0 as bigint),"
-        f" cast(size(toks) as bigint) - {K_WINNOW}),"
-        f" j -> {gram_h}) else array() end"
-    )
-    sel_expr = (
-        f"case when size(hs) >= 1 then"
-        f" transform(sequence(cast(0 as bigint),"
-        f" cast(greatest(size(hs) - {W_WINNOW}, 0) as bigint)),"
-        f" j -> array_min(slice(hs, cast(j + 1 as int), {W_WINNOW})))"
-        f" else array() end"
-    )
-    return (
-        batch_df.select("doc_id", F.expr(_SPARK_TOKS).alias("toks"))
-        .select("doc_id", F.expr(hs_expr).alias("hs"))
-        .select("doc_id", F.explode(F.expr(sel_expr)).alias("fp"))
-        .distinct()
-    )
 
 
 class WinnowIngestSink:
@@ -93,7 +62,11 @@ class WinnowIngestSink:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        prints = _winnow_prints(batch_df)
+        # one selection per batch: the leftmost window minimum carries
+        # the minimum's value, so the positioned prints' (doc_id, fp)
+        # set is the distinct winnowed-print set
+        pos = winnow_print_positions(batch_df.select("doc_id", "text"))
+        prints = pos.select("doc_id", "fp").distinct()
 
         # arrival-time tripwire vs the corpus-so-far (earlier batches
         # only — a replay re-derives the identical flags)
@@ -139,7 +112,6 @@ class WinnowIngestSink:
                 F.lit(0).cast("long").alias("known_prints"),
                 F.lit(0).cast("long").alias("prior_docs"),
             )
-        pos = winnow_print_positions(batch_df.select("doc_id", "text"))
         for df, path in ((prints, self.prints_path),
                          (flags, self.flags_path),
                          (pos, self.prints_pos_path)):

@@ -570,6 +570,53 @@ def test_candidate_pairs_live_only_in_pairs():
     assert found == [("queries/llmdata.py", "dedup_fuzzy_pairs")]
 
 
+def test_portable_hash_lives_only_in_sketches():
+    """The portable md5-prefix hash, its disjoint-slice family and the
+    HLL / count-min constructors are written once, in
+    ``operators/sketches.py``: no other package module spells the Spark
+    prefix (``conv(substr(``) or the DuckDB one
+    (``'0x' || substr(md5``), and no module imports
+    ``hll_partial_registers``, ``cms_partial_counters`` or ``HLL_M``
+    from ``queries/dq.py``, so a streamed sketch view and its batch
+    twin hash and count the same way."""
+    import ast
+    import pathlib
+
+    import beam_scala_examples_spark as pkg
+
+    root = pathlib.Path(pkg.__path__[0])
+    repo = root.parent
+    spelled = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        src = path.read_text()
+        if rel != "operators/sketches.py" and (
+            "conv(substr(" in src or "'0x' || substr(md5" in src
+        ):
+            spelled.append(rel)
+    assert spelled == []
+
+    moved = {"hll_partial_registers", "cms_partial_counters", "HLL_M"}
+    sources = [
+        *root.rglob("*.py"),
+        *(repo / "tests").glob("*.py"),
+        *(repo / "tools").glob("*.py"),
+        *(repo / "perfbench").glob("*.py"),
+        repo / "bench.py",
+        repo / "__spark_entry__.py",
+    ]
+    from_dq = []
+    for path in sorted(sources):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.ImportFrom)
+                and (node.module or "").split(".")[-1] == "dq"
+                and moved & {a.name for a in node.names}
+            ):
+                from_dq.append(path.relative_to(repo).as_posix())
+    assert from_dq == []
+
+
 def test_bench_capture_hygiene_evidence():
     """Round-8 capture hygiene: the contention census must see this
     test's own Spark JVM as OURS (descendant), report foreign JVMs as a

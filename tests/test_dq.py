@@ -5,11 +5,11 @@ def test_hll_estimate_within_3_sigma(spark, sf_dir):
     3 standard errors (sigma = 1.04/sqrt(m)) — the Flajolet guarantee,
     checked against the exact count; merging the sketch with itself
     must be a no-op (max is idempotent)."""
-    from beam_scala_examples_spark.queries.dq import (
-        dq_hll_registers,
+    from beam_scala_examples_spark.operators.sketches import (
         hll_estimate,
         HLL_M,
     )
+    from beam_scala_examples_spark.queries.dq import dq_hll_registers
     from beam_scala_examples_spark.tables import load
 
     regs = dq_hll_registers(spark, sf_dir).collect()
@@ -38,11 +38,11 @@ def test_hll_estimate_within_3_sigma(spark, sf_dir):
 def test_hll_grouped_estimates_within_3_sigma(spark, sf_dir):
     """Round-6 grouped sketches: per-event_type register estimates hit
     the exact per-type distinct user counts within 3 sigma."""
-    from beam_scala_examples_spark.queries.dq import (
+    from beam_scala_examples_spark.operators.sketches import (
         HLL_M,
-        dq_hll_by_type,
         hll_estimate,
     )
+    from beam_scala_examples_spark.queries.dq import dq_hll_by_type
     from beam_scala_examples_spark.tables import load
     import pyspark.sql.functions as F
 
@@ -68,8 +68,8 @@ def test_profile_sketch_estimates_within_3_sigma(spark, sf_dir):
     """The sketch-backed profiler's per-column estimates (same stacked
     registers dq_profile_events_sketch hashes) land within 3 sigma of
     the exact profiler's n_distinct for EVERY profiled column."""
+    from beam_scala_examples_spark.operators.sketches import HLL_M
     from beam_scala_examples_spark.queries.dq import (
-        HLL_M,
         PROFILE_COLUMNS,
         dq_profile_events,
         profile_estimates,
@@ -93,11 +93,13 @@ def test_hll_cumulative_curve_within_3_sigma(spark, sf_dir):
     estimates the exact running distinct-user count within 3 sigma on
     EVERY day, and the final day's registers equal the corpus-global
     sketch exactly (merge law end-to-end)."""
-    from beam_scala_examples_spark.queries.dq import (
+    from beam_scala_examples_spark.operators.sketches import (
         HLL_M,
+        hll_estimate,
+    )
+    from beam_scala_examples_spark.queries.dq import (
         dq_hll_cumulative,
         dq_hll_registers,
-        hll_estimate,
     )
     from beam_scala_examples_spark.tables import load
     import pyspark.sql.functions as F
@@ -132,7 +134,7 @@ def test_card_source_estimates_within_3_sigma(spark, sf_dir):
     of the exact counts for EVERY source."""
     import pyspark.sql.functions as F
 
-    from beam_scala_examples_spark.queries.dq import HLL_M
+    from beam_scala_examples_spark.operators.sketches import HLL_M
     from beam_scala_examples_spark.queries.llmdata import (
         card_source_estimates,
     )
@@ -271,7 +273,9 @@ def test_cms_never_undercounts_and_no_heavy_hitter_missed(spark, sf_dir):
     whole = sorted(
         tuple(r) for r in dq_cms_user_by_day(spark, sf_dir).collect()
     )
-    from beam_scala_examples_spark.queries.dq import cms_partial_counters
+    from beam_scala_examples_spark.operators.sketches import (
+        cms_partial_counters,
+    )
 
     parts = cms_partial_counters(
         ev.filter(F.col("user_id") % 2 == 0), "user_id", ("day",)
@@ -295,8 +299,10 @@ def test_rollup_rungs_equal_direct_global_sketches(spark, sf_dir):
     bin relation, and (b) date-range heavy hitters served from summed
     per-day CMS blocks equal the probe against a directly-built global
     CMS — merging really is lossless for both sketch kinds."""
-    from beam_scala_examples_spark.queries.dq import (
+    from beam_scala_examples_spark.operators.sketches import (
         cms_partial_counters,
+    )
+    from beam_scala_examples_spark.queries.dq import (
         dq_heavy_users_rollup,
         dq_value_quantiles_cumulative,
         vbin_partial_counts,
@@ -435,11 +441,13 @@ def test_hll_overlap_inclusion_exclusion_tracks_exact(spark, sf_dir):
     exclusion estimate est(A)+est(B)-est(A∪B) must track the exact
     intersection within the compounded 3-sigma budget of its three
     estimate terms."""
-    from beam_scala_examples_spark.queries.dq import (
+    from beam_scala_examples_spark.operators.sketches import (
         HLL_M,
+        hll_estimate,
+    )
+    from beam_scala_examples_spark.queries.dq import (
         dq_hll_by_type,
         dq_hll_overlap,
-        hll_estimate,
     )
     from beam_scala_examples_spark.tables import load
     import pyspark.sql.functions as F

@@ -523,6 +523,56 @@ def test_bloom_screen_has_no_false_negatives(spark):
     assert all(all(p in bits for p in positions(s)) for s in train)
 
 
+def test_md5_slices_match_hashlib(spark):
+    """The disjoint-slice family behind the Bloom screen and the
+    count-min sketches: Spark's ``md5_slices`` and DuckDB's
+    ``duck_md5_slice`` both equal the ``hashlib`` twin — row ``r`` is
+    hex digits ``8r+1 .. 8r+8`` of the md5 modulo the width — on random
+    strings, non-ASCII and empty ones included."""
+    import hashlib
+    import random
+
+    import duckdb
+
+    from beam_scala_examples_spark.operators.sketches import (
+        duck_md5_slice,
+        md5_slices,
+    )
+
+    rng = random.Random(11)
+    words = ["", "é", "中文 token"] + [
+        "".join(rng.choice("ab xyzé中") for _ in range(rng.randrange(1, 16)))
+        for _ in range(300)
+    ]
+    docs = spark.createDataFrame([(w,) for w in words], "s string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (s VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?)", [(w,) for w in words])
+    for depth, mod in ((3, 16), (3, 64), (3, 65536)):
+        hexes = {w: hashlib.md5(w.encode()).hexdigest() for w in words}
+        want = sorted(
+            (w, r, int(hexes[w][8 * r: 8 * r + 8], 16) % mod)
+            for w in words
+            for r in range(depth)
+        )
+        got = sorted(
+            tuple(row)
+            for row in docs.withColumn("__s", F.md5("s"))
+            .select("s", F.explode(md5_slices("__s", depth, mod)).alias("p"))
+            .select("s", "p.r", "p.b")
+            .collect()
+        )
+        assert got == want, (depth, mod)
+        duck = sorted(
+            row
+            for r in range(depth)
+            for row in con.execute(
+                f"SELECT s, {r}, {duck_md5_slice('s', r, mod)} FROM t"
+            ).fetchall()
+        )
+        assert duck == want, (depth, mod)
+
+
 @given(
     pts=st.lists(
         st.tuples(st.integers(0, 50), st.integers(0, 50)),

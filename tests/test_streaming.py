@@ -1274,36 +1274,28 @@ def test_streaming_cms_view_equals_batch_sketch(spark, sf_dir, event_rows, tmpdi
     per-user estimate read off the maintained view must upper-bound the
     user's true event count (the sketch's one-sided guarantee survives
     incremental maintenance)."""
-    from beam_scala_examples_spark.streaming.sketchview import (
-        CMS_VIEW_DEPTH,
-        CMS_VIEW_WIDTH,
-        TopTalkersViewSink,
-        _cms_increments,
+    from beam_scala_examples_spark.operators.sketches import (
+        CMS_DEPTH,
+        CMS_WIDTH,
+        cms_partial_counters,
     )
+    from beam_scala_examples_spark.streaming.cmsview import CmsIngestSink
     from beam_scala_examples_spark.tables import load
 
     stream = _feed(spark, event_rows, tmpdir, chunk_size=300)
-    sink = TopTalkersViewSink(f"{tmpdir}/cms_log", f"{tmpdir}/cms_out")
+    sink = CmsIngestSink(f"{tmpdir}/cms_log", item_col="user_id")
     _run_stream(stream, "append", sink, tmpdir)
 
-    got = sorted(
-        (r.r, r.b, r.cnt)
-        for r in spark.read.parquet(f"{tmpdir}/cms_out").collect()
-    )
+    view = sink.serving_view(spark).collect()
+    got = sorted((r.r, r.b, r.cnt) for r in view)
     ev = load(spark, sf_dir, "events")
     expected = sorted(
         (r.r, r.b, r.cnt)
-        for r in _cms_increments(
-            ev, "cast(user_id as string)", CMS_VIEW_DEPTH, CMS_VIEW_WIDTH
-        )
-        .groupBy("r", "b")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
+        for r in cms_partial_counters(ev, "user_id").collect()
     )
     assert got == expected
 
-    sketch = {(r.r, r.b): r.cnt
-              for r in spark.read.parquet(f"{tmpdir}/cms_out").collect()}
+    sketch = {(r.r, r.b): r.cnt for r in view}
     truth = ev.groupBy("user_id").count().collect()
     import hashlib
 
@@ -1317,11 +1309,11 @@ def test_streaming_cms_view_equals_batch_sketch(spark, sf_dir, event_rows, tmpdi
                         .hexdigest()[8 * i: 8 * i + 8],
                         16,
                     )
-                    % CMS_VIEW_WIDTH,
+                    % CMS_WIDTH,
                 ),
                 0,
             )
-            for i in range(CMS_VIEW_DEPTH)
+            for i in range(CMS_DEPTH)
         )
         assert est >= row["count"], row
 
